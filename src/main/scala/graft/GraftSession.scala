@@ -11,13 +11,16 @@ import org.apache.spark.sql.SparkSession
  */
 object GraftSession {
 
-  /** InferFiltersFromGenerate synthesizes `size(g)>0 AND isnotnull(g)` from
-    * explode and InferFiltersFromConstraints re-adds the isnotnull — both
-    * get SUBSTITUTED through projections by predicate pushdown, re-running
-    * the expensive cell-cover UDF chain 1-2 extra times per row (measured:
-    * flagship join 25-40% slower with either rule on). Null/empty covers
-    * don't exist in this engine (cellCover of a valid geometry is non-empty)
-    * so the inferred filters buy nothing. See GeoFunctions.cellCoverUdf. */
+  /** The cover join explodes `st_cell_cover`. InferFiltersFromGenerate
+    * infers `size(cells) > 0 AND isnotnull(cells)` from that explode and
+    * InferFiltersFromConstraints re-adds the isnotnull; predicate pushdown
+    * then SUBSTITUTES the geometry parse + cover into a filter below the
+    * upstream exchange, running it 1-2 extra times per row (measured with the
+    * cover as a UDF: flagship join 25-40% slower with either rule on). The
+    * filters buy nothing: a null or empty geometry's cover explodes to no
+    * row anyway. A nondeterministic fence on the cover would also stop the
+    * substitution but kills column pruning through the projection (1.5×
+    * scan cost: the scan then reads the spans it doesn't need). */
   val ExcludedRules: String = Seq(
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints"

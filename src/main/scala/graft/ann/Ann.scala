@@ -16,17 +16,17 @@ import org.apache.spark.sql.functions._
  * the same state in primitive arrays without per-row tuple boxing.
  */
 class TopKAgg(k: Int) extends Aggregator[(Double, Long), Seq[(Double, Long)], Seq[(Double, Long)]] {
-  private def insert(buf: Seq[(Double, Long)], v: (Double, Long)): Seq[(Double, Long)] = {
-    if (buf.size >= k) {
-      val worst = buf.last
-      if (v._1 < worst._1 || (v._1 == worst._1 && v._2 >= worst._2)) return buf
-    }
-    ((buf :+ v).sortBy { case (s, id) => (-s, id) }).take(k)
-  }
+  // (score desc, id asc), scores in Double.compare's total order (NaN worst)
+  private val order: Ordering[(Double, Long)] =
+    Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) }(
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+  private def insert(buf: Seq[(Double, Long)], v: (Double, Long)): Seq[(Double, Long)] =
+    if (buf.size >= k && !order.lt(v, buf.last)) buf
+    else (buf :+ v).sorted(order).take(k)
   def zero: Seq[(Double, Long)] = Vector.empty
   def reduce(b: Seq[(Double, Long)], v: (Double, Long)): Seq[(Double, Long)] = insert(b, v)
   def merge(a: Seq[(Double, Long)], b: Seq[(Double, Long)]): Seq[(Double, Long)] =
-    (a ++ b).sortBy { case (s, id) => (-s, id) }.take(k)
+    (a ++ b).sorted(order).take(k)
   def finish(b: Seq[(Double, Long)]): Seq[(Double, Long)] = b
   def bufferEncoder: Encoder[Seq[(Double, Long)]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Double, Long)]]()

@@ -22,9 +22,13 @@ final class TopKBuf(val k: Int) {
   val scores = new Array[Double](k)
   val ids = new Array[Long](k)
 
-  /** Strictly-better-than-slot-(i) under (score desc, id asc). */
-  @inline private def beats(s: Double, id: Long, i: Int): Boolean =
-    s > scores(i) || (s == scores(i) && id < ids(i))
+  /** Strictly-better-than-slot-(i) under (score desc, id asc), scores in
+    * `Double.compare`'s total order ([[TopKAgg]]'s sort key): NaN ranks
+    * worst and 0.0 beats -0.0. */
+  @inline private def beats(s: Double, id: Long, i: Int): Boolean = {
+    val c = java.lang.Double.compare(-s, -scores(i))
+    c < 0 || (c == 0 && id < ids(i))
+  }
 
   def insert(s: Double, id: Long): Unit = {
     if (n == k) {

@@ -1,59 +1,26 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.geom.Geo
 import graft.cells.CellIndex
+import graft.plans.SpatialColumns
 
 /**
- * Column-level geo functions. These are the engine's UDF surface — kept
- * deliberately tiny so everything else stays inside whole-stage codegen:
- * only the cell encoder and the JTS refine predicates are opaque.
- *
- * Tile-side WKTs are parsed once per task via [[Geo.prepared]]'s LRU, so
- * refine cost is one WKT parse of the probe side per candidate pair.
+ * Column-level geo helpers with no native expression: point/rectangle WKT
+ * builders, the k-ring of a point's cell and the tie-stable point distance.
+ * Cell covers and intersects are the native `plans/` expressions
+ * ([[graft.plans.SpatialColumns]]).
  */
 object GeoFunctions {
 
-  /** cellCover(wkt, res): Array[Long] — the engine's Generator (SURVEY §2.9).
-    *
-    * NOTE: this UDF's result feeds `explode`; Catalyst's
-    * InferFiltersFromGenerate synthesizes `size(cells) > 0 AND
-    * isnotnull(cells)` from that, and predicate pushdown then SUBSTITUTES
-    * the whole UDF chain into a filter below the upstream exchange —
-    * evaluating WKT parse + cover 2 extra times per row, serially (measured
-    * 3-4× flagship wall cost). [[graft.GraftSession]] therefore excludes
-    * that optimizer rule; an `.asNondeterministic()` fence would also work
-    * but kills column pruning through the projection (the scan then reads
-    * the full spans array it doesn't need — measured 1.5× scan cost). */
-  val cellCoverUdf = udf((wkt: String, res: Int) =>
-    if (wkt == null || wkt.isEmpty) Array.empty[Long] else Geo.cellCoverWkt(wkt, res))
+  /** cellCover(wkt, res): Array[Long] — the native [[graft.plans.StCellCover]],
+    * under the name the `ardbench/` workloads import. */
+  def cellCoverUdf(wkt: Column, res: Column): Column = SpatialColumns.stCellCover(wkt, res)
 
-  /** WKB (binary, storage-side) variants: the doc table may carry geometry
-    * as WKB — ~5× cheaper to parse than WKT. */
-  val cellCoverWkbUdf = udf((wkb: Array[Byte], res: Int) =>
-    if (wkb == null || wkb.isEmpty) Array.empty[Long] else Geo.cellCoverWkb(wkb, res))
-  val stIntersectsWkbUdf = udf((dimWkt: String, probeWkb: Array[Byte]) =>
-    dimWkt != null && probeWkb != null && dimWkt.nonEmpty && probeWkb.nonEmpty &&
-      Geo.intersectsWkb(dimWkt, probeWkb))
-  val wktToWkbUdf = udf((wkt: String) => Geo.toWkb(Geo.fromWkt(wkt)))
-
-  /** Cell of a point. */
-  val cellOfPointUdf = udf((lon: Double, lat: Double, res: Int) => CellIndex.cell(lon, lat, res))
-
-  /** k-ring of a point's cell (explode-fed: see [[cellCoverUdf]] note). */
+  /** k-ring of a point's cell (explode-fed, like the cell cover). */
   val kRingOfPointUdf =
     udf((lon: Double, lat: Double, res: Int, k: Int) => CellIndex.kRing(CellIndex.cell(lon, lat, res), k))
-
-  /** JTS intersects; first arg is the cached/prepared (dimension) side.
-    * Null/empty geometry intersects nothing (dirty rows drop out of joins
-    * instead of failing the task at 10^12-doc scale). */
-  val stIntersectsUdf = udf((dimWkt: String, probeWkt: String) =>
-    dimWkt != null && probeWkt != null && dimWkt.nonEmpty && probeWkt.nonEmpty &&
-      Geo.intersects(dimWkt, probeWkt))
-
-  /** JTS euclidean distance in degrees (planar, as the reference's shapely distances). */
-  val stDistanceUdf = udf((aWkt: String, bWkt: String) => Geo.distance(aWkt, bWkt))
 
   /** Tie-stable point→geometry distance (see [[Geo.pointGeomDistance]]). */
   val pointDistanceUdf = udf((lon: Double, lat: Double, wkt: String) => Geo.pointGeomDistance(lon, lat, wkt))
@@ -64,16 +31,6 @@ object GeoFunctions {
 
   /** Point WKT. */
   val pointWktUdf = udf((lon: Double, lat: Double) => Geo.toWkt(Geo.point(lon, lat)))
-
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("cell_cover", (wkt: String, res: Int) => Geo.cellCoverWkt(wkt, res))
-    spark.udf.register("cell_of_point", (lon: Double, lat: Double, res: Int) => CellIndex.cell(lon, lat, res))
-    spark.udf.register("st_intersects", (a: String, b: String) => Geo.intersects(a, b))
-    spark.udf.register("st_distance", (a: String, b: String) => Geo.distance(a, b))
-    spark.udf.register("st_rect_wkt", (a: Double, b: Double, c: Double, d: Double) => Geo.rectWkt(a, b, c, d))
-    spark.udf.register("st_point_wkt", (lon: Double, lat: Double) => Geo.toWkt(Geo.point(lon, lat)))
-    spark.udf.register("uuid5", (name: String) => Uuid5.of(name))
-  }
 }
 
 /** RFC 4122 version-5 (SHA-1) UUID in the URL namespace, matching Python's

@@ -126,7 +126,7 @@ object Knn {
       .withColumn("__cell", explode(col("__ring")))
     val t = tiles
       .withColumnRenamed("wkt", "tile_wkt")
-      .withColumn("__tcells", cellCoverUdf(col("tile_wkt"), lit(res)))
+      .withColumn("__tcells", graft.plans.SpatialColumns.stCellCover(col("tile_wkt"), lit(res)))
       .withColumn("__cell", explode(col("__tcells")))
     val cand = p.join(t, "__cell")
       // shuffle-free dedup: keep the pair only on the min shared cell

@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.GeoFunctions._
+import graft.functions.GeoFunctions.pointWktUdf
+import graft.plans.SpatialColumns.stIntersects
 
 /**
  * Raster↔vector operators (SURVEY §3.3):
@@ -28,9 +29,9 @@ object Raster {
     * The AOI WKT is parsed ONCE on the driver; a rectangular AOI (the
     * overwhelmingly common case — scene footprints, tile extents, user
     * bboxes) lowers to pure codegen'd BETWEEN arithmetic instead of a
-    * per-row point-WKT build + JTS PIP UDF — boundary-inclusive either
+    * per-row point-WKT build + JTS PIP — boundary-inclusive either
     * way, so the two paths agree exactly. Non-rectangular geometries
-    * keep the prepared-geometry UDF. */
+    * keep the per-row prepared-geometry `st_intersects`. */
   def rasterizeMask(px: DataFrame, wkt: String,
                     x0: Double, y0: Double, dx: Double, dy: Double): DataFrame = {
     val cx = lit(x0) + col("px") * dx + dx / 2
@@ -40,7 +41,7 @@ object Raster {
       if (aoi.isRectangle) {
         val e = aoi.getEnvelopeInternal
         cx >= e.getMinX && cx <= e.getMaxX && cy >= e.getMinY && cy <= e.getMaxY
-      } else stIntersectsUdf(lit(wkt), pointWktUdf(cx, cy))
+      } else stIntersects(lit(wkt), pointWktUdf(cx, cy))
     px.withColumn("in_aoi", mask)
   }
 

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.GeoFunctions._
+import org.apache.spark.sql.types.BinaryType
+import graft.plans.SpatialColumns._
 
 /**
  * Cell-cover spatial join — the engine's core operator (SURVEY §2.3 J1/J2).
@@ -11,7 +12,10 @@ import graft.functions.GeoFunctions._
  * shapely loop, flagged "takes too long"
  * (`master_Search_Discover_example.ipynb` cells 10/63/157). Here both sides
  * are encoded to spatial cells at resolution `res`, equi-joined on the cell
- * id, then refined with an exact JTS intersects.
+ * id, then refined with an exact JTS intersects. Cover and refine are the
+ * native `st_cell_cover`/`st_intersects` expressions (`_wkb` forms for a
+ * WKB probe); the refine lands in the equi-join's condition, which
+ * [[graft.plans.SpatialJoinStrategy]] leaves to Catalyst.
  *
  * Scale design (100 TB posture):
  *  - The dimension side (tile grid, ≤ ~60k polygons) is `broadcast()` —
@@ -36,7 +40,7 @@ object SpatialJoin {
    * alongside lineage metrics for ops visibility).
    */
   def cellHistogram(df: DataFrame, wktCol: String, res: Int): DataFrame =
-    df.select(explode(cellCoverUdf(col(wktCol), lit(res))).as("cell"))
+    df.select(explode(stCellCover(col(wktCol), lit(res))).as("cell"))
       .groupBy("cell").count()
 
   /**
@@ -67,25 +71,13 @@ object SpatialJoin {
                     saltBuckets: Int = 1): DataFrame = {
     // probe geometry may be WKT (string) or WKB (binary, the storage-side
     // encoding — ~5× cheaper to parse); dimension side stays WKT (small,
-    // parsed once per task via the prepared-geometry LRU). The WKB (hot)
-    // path runs NATIVE expressions (graft.plans.StCellCoverWkb /
-    // StIntersectsWkb — no udf wrapper or result-encoder layers per row);
-    // they are distinct node types from StIntersects, so the
-    // SpatialJoinStrategy planning path is untouched.
-    val probeIsWkb = probe.schema(probeWkt).dataType ==
-      org.apache.spark.sql.types.BinaryType
-    val cover: (Column, Column) => Column =
-      if (probeIsWkb) graft.plans.SpatialColumns.stCellCoverWkb
-      else graft.plans.SpatialColumns.stCellCover
-    // WKT refine stays a UDF on purpose: a native StIntersects pushed into
-    // the join condition would be intercepted by SpatialJoinStrategy and
-    // replanned away from the cell equi-join; StIntersectsWkb is a distinct
-    // node, so the WKB path is native end to end.
-    val refine: (Column, Column) => Column =
-      if (probeIsWkb) graft.plans.SpatialColumns.stIntersectsWkb
-      else (d, p) => stIntersectsUdf(d, p)
+    // parsed once per task via the prepared-geometry LRU)
+    val probeIsWkb = probe.schema(probeWkt).dataType == BinaryType
+    val (cover, refine) =
+      if (probeIsWkb) (stCellCoverWkb _, stIntersectsWkb _)
+      else (stCellCover _, stIntersects _)
     val p = probe.withColumn("__cells", cover(col(probeWkt), lit(res)))
-    val d = dim.withColumn("__tcells", cellCoverUdf(col(dimWkt), lit(res)))
+    val d = dim.withColumn("__tcells", stCellCover(col(dimWkt), lit(res)))
 
     val (pk, dk) =
       if (saltBuckets <= 1)

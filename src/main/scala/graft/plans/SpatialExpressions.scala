@@ -1,8 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.types._
@@ -19,16 +21,17 @@ import org.apache.spark.unsafe.types.UTF8String
  * per-thread in [[graft.geom.Geo]].
  */
 object GeoCodegen {
-  // static forwarders — referenced from generated Java
+  // static forwarders — referenced from generated Java. An empty geometry
+  // intersects nothing and covers no cell (dirty rows drop out of joins and
+  // filters instead of failing the task)
   def intersects(a: UTF8String, b: UTF8String): Boolean =
-    graft.geom.Geo.intersects(a.toString, b.toString)
+    a.numBytes() > 0 && b.numBytes() > 0 && graft.geom.Geo.intersects(a.toString, b.toString)
   def distance(a: UTF8String, b: UTF8String): Double =
     graft.geom.Geo.distance(a.toString, b.toString)
   def cellCover(wkt: UTF8String, res: Int): ArrayData =
     if (wkt.numBytes() == 0) new GenericArrayData(Array.empty[Long])
     else new GenericArrayData(graft.geom.Geo.cellCoverWkt(wkt.toString, res))
-  // WKB (storage-encoding) variants; empty-geometry guards mirror the UDF
-  // forms (dirty rows drop out of joins instead of failing the task)
+  // WKB (storage-encoding) variants, same empty-geometry guards
   def cellCoverWkb(wkb: Array[Byte], res: Int): ArrayData =
     if (wkb.length == 0) new GenericArrayData(Array.empty[Long])
     else new GenericArrayData(graft.geom.Geo.cellCoverWkb(wkb, res))
@@ -38,16 +41,26 @@ object GeoCodegen {
 }
 
 /** `st_intersects(aWkt, bWkt)` — exact JTS intersects, prepared-geometry
-  * cached on the left argument. The [[SpatialJoinStrategy]] pattern-matches
+  * cached on the left argument. A null or empty geometry intersects nothing,
+  * so the result is never null. The [[SpatialJoinStrategy]] pattern-matches
   * this node in join conditions. */
 case class StIntersects(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[DataType] = Seq(StringType, StringType)
   override def dataType: DataType = BooleanType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    GeoCodegen.intersects(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.GeoCodegen.intersects($a, $b)")
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = (left.eval(input), right.eval(input)) match {
+    case (a: UTF8String, b: UTF8String) => GeoCodegen.intersects(a, b)
+    case _ => false
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (a, b) = (left.genCode(ctx), right.genCode(ctx))
+    ev.copy(code = code"""
+      ${a.code}
+      ${b.code}
+      boolean ${ev.value} = !${a.isNull} && !${b.isNull} &&
+        graft.plans.GeoCodegen.intersects(${a.value}, ${b.value});""", isNull = FalseLiteral)
+  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StIntersects =
     copy(left = l, right = r)
   override def prettyName: String = "st_intersects"
@@ -83,10 +96,7 @@ case class StCellCover(left: Expression, right: Expression)
 }
 
 /** `st_cell_cover_wkb(wkb, res)` — the cover generator over the storage-side
-  * WKB encoding: the flagship probe-side kernel as a native expression (no
-  * udf wrapper / result-encoder layers on the 10^12-row path). A DISTINCT
-  * node from [[StCellCover]]/[[StIntersects]], so [[SpatialJoinStrategy]]'s
-  * pattern matching is unaffected. */
+  * WKB encoding: the flagship probe-side kernel. */
 case class StCellCoverWkb(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType)

@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BindReferences, Expression, JoinedRow, PredicateHelper, UnsafeProjection}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.SparkPlan
@@ -27,14 +28,16 @@ import scala.jdk.CollectionConverters._
  * loop flagged "takes too long", `master_Search_Discover_example.ipynb`
  * cell 10). The R-tree probe makes it O(N·log M).
  *
- * For dimension sides too large to broadcast, use the shuffled cell-cover
- * equi-join ([[graft.ops.SpatialJoin.intersectJoin]] with `shuffled = true`)
- * — this strategy deliberately declines (returns Nil) when the smaller side
- * exceeds 8× the broadcast threshold, falling back to Catalyst's default.
+ * It declines (returns Nil, leaving Catalyst's default) any join with
+ * equi-join keys: that is no nested loop, Catalyst plans it as a hash join
+ * with `st_intersects` as residual — how the cell-cover join
+ * ([[graft.ops.SpatialJoin.intersectJoin]]) keeps its plan. It also declines
+ * when broadcasting is off or the smaller side exceeds 8× the threshold.
  */
 object SpatialJoinStrategy extends SparkStrategy with PredicateHelper {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case ExtractEquiJoinKeys(_, _, _, _, _, _, _, _) => Nil
     case Join(left, right, Inner, Some(cond), _) =>
       val conjuncts = splitConjunctivePredicates(cond)
       val matched = conjuncts.collectFirst {

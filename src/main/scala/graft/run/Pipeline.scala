@@ -32,8 +32,9 @@ object Pipeline {
                      inventory: DataFrame, aoiWkt: String,
                      base: String, commitId: String): DataFrame = {
     // AOI restriction: narrow predicate over the broadcast-free probe side —
-    // the footprint either touches the AOI cells or is skipped before any join
-    val aoiDocs = docs.where(graft.functions.GeoFunctions.stIntersectsUdf(lit(aoiWkt), col("wkt")))
+    // the footprint either touches the AOI or is skipped before any join (a null
+    // or empty footprint touches nothing)
+    val aoiDocs = docs.where(graft.plans.SpatialColumns.stIntersects(lit(aoiWkt), col("wkt")))
 
     // stage 1 (checkpointed): tile assignment carrying spans through
     val (_, _) = Checkpoint.runStage(spark, base, "assign", aoiDocs, "doc_id", commitId) {

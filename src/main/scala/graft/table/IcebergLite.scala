@@ -541,7 +541,7 @@ object IcebergLite {
       case "month" => date_format(src, "yyyy-MM")
       case "day" => date_format(src, "yyyy-MM-dd")
       case CellT(r) =>
-        array_min(graft.functions.GeoFunctions.cellCoverUdf(src, lit(r.toInt)))
+        array_min(graft.plans.SpatialColumns.stCellCover(src, lit(r.toInt)))
       case t => throw new IllegalArgumentException(s"unknown partition transform $t")
     }
   }
@@ -738,7 +738,7 @@ object IcebergLite {
     // uses) — [[readAoi]]'s pruning layer for spanning footprints
     val cellStatsExprs = spec.collect {
       case f @ PartitionField(_, src, CellT(r)) =>
-        val cover = graft.functions.GeoFunctions.cellCoverUdf(col(phys(src)), lit(r.toInt))
+        val cover = graft.plans.SpatialColumns.stCellCover(col(phys(src)), lit(r.toInt))
         s"cover_${f.name}" -> (array_min(cover), array_max(cover))
     }.toMap
     // Auto-stats (Iceberg's write.metadata.metrics default): a commit with
@@ -2068,7 +2068,7 @@ object IcebergLite {
       }
     }
     readFiles(spark, snap, files)
-      .where(graft.functions.GeoFunctions.stIntersectsUdf(lit(aoiWkt), col(f.source)))
+      .where(graft.plans.SpatialColumns.stIntersects(lit(aoiWkt), col(f.source)))
   }
 
   /** `points` carries the RAW typed equality constraints (each inner Seq is

@@ -2,7 +2,7 @@ package graft.table
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.GeoFunctions._
+import graft.plans.SpatialColumns._
 
 /**
  * Spatial partition layout for the doc table (SURVEY §4.3): data files are
@@ -29,7 +29,7 @@ object SpatialLayout {
     * world partitioning), replicating multi-cell footprints. */
   def writeByCell(docs: DataFrame, path: String, res: Int = 3): Unit = {
     docs
-      .withColumn(PartCol, explode(cellCoverUdf(col("wkt"), lit(res))))
+      .withColumn(PartCol, explode(stCellCover(col("wkt"), lit(res))))
       .repartition(col(PartCol))
       .sortWithinPartitions(col(PartCol), col("doc_id"))
       .write.mode("overwrite")
@@ -49,10 +49,10 @@ object SpatialLayout {
     val aoiCells = graft.geom.Geo.cellCoverWkt(aoiWkt, res)
     spark.read.parquet(path)
       .where(col(PartCol).isin(aoiCells: _*))
-      .where(stIntersectsUdf(lit(aoiWkt), col("wkt")))
+      .where(stIntersects(lit(aoiWkt), col("wkt")))
       .where(col(PartCol) ===
         array_min(array_intersect(
-          cellCoverUdf(col("wkt"), lit(res)),
+          stCellCover(col("wkt"), lit(res)),
           typedLit(aoiCells.toSeq))))
   }
 }

@@ -144,8 +144,8 @@ object Plans {
     // px_rasterize: rect AOI lowered to codegen'd BETWEEN — no UDF in the mask
     sections += (("px_rasterize (rectangular-AOI fast path)",
       "the AOI mask is pure Column arithmetic inside whole-stage codegen — " +
-        "no per-row point-WKT build / JTS PIP UDF for rectangular AOIs " +
-        "(general geometries keep the prepared-geometry UDF path; " +
+        "no per-row point-WKT build / JTS PIP for rectangular AOIs " +
+        "(general geometries keep the prepared-geometry st_intersects path; " +
         "RasterSpec proves the two agree bit-for-bit)",
       capture(graft.SparkEntry.queries("px_rasterize")(spark, sfDir))))
 

@@ -125,6 +125,49 @@ class AnnSpec extends AnyFunSuite {
     assert(flat(nat) == flat(ref))
   }
 
+  test("native top_k_rows ≡ udaf(TopKAgg) with NaN, ±0.0 and zero-norm scores; NaN ranks worst") {
+    // a zero-norm embedding's cosine is 0/0 = NaN. Under IEEE `>`/`==` such
+    // a NaN could enter a non-full buffer and never be displaced; both sides
+    // order scores by Double.compare, so NaN ranks worst and 0.0 beats -0.0
+    val k = 3
+    val rows = (0 until 1200).map { i =>
+      val (emb, raw) = i % 6 match {
+        case 0 => (Seq(0f, 0f), 0.0)                         // zero norm → NaN
+        case 1 => (Seq.empty[Float], Double.NaN)
+        case 2 => (Seq.empty[Float], -0.0)
+        case 3 => (Seq.empty[Float], 0.0)
+        case _ => (Seq((i % 7).toFloat - 3f, 1f), 0.0)       // ordinary cosines, tied
+      }
+      ((i % 29).toLong, i.toLong, emb, raw)
+    } ++ Seq( // groups with fewer than k ordinary scores: NaN must sort last
+      (100L, 1L, Seq.empty[Float], Double.NaN), (100L, 2L, Seq.empty[Float], -0.0),
+      (100L, 3L, Seq.empty[Float], 0.0), (100L, 4L, Seq(0f, 0f), 0.0),
+      (101L, 5L, Seq(0f, 0f), 0.0), (101L, 6L, Seq.empty[Float], 0.5))
+    val df = rows.toDF("probe_id", "neighbor_id", "emb", "raw").repartition(8)
+      .withColumn("sim",
+        when(size($"emb") > 0, Ann.cosine($"emb", typedLit(Seq(1f, 0f)))).otherwise($"raw"))
+    val ref = df.groupBy("probe_id")
+      .agg(udaf(new TopKAgg(k)).apply($"sim", $"neighbor_id").as("top"))
+    val nat = df.groupBy("probe_id")
+      .agg(TopKRows.topK(k, $"sim", $"neighbor_id").as("top"))
+    assert(nat.schema == ref.schema)
+    // compare raw bits: `==` on doubles would equate ±0.0 and reject NaN
+    def flat(d: org.apache.spark.sql.DataFrame) =
+      d.select($"probe_id", posexplode($"top").as(Seq("i", "t")))
+        .select($"probe_id", $"i", $"t._1".as("s"), $"t._2".as("id"))
+        .as[(Long, Int, Double, Long)].collect()
+        .map(r => (r._1, r._2, java.lang.Double.doubleToLongBits(r._3), r._4))
+        .sortBy(r => (r._1, r._2)).toSeq
+    val got = flat(nat)
+    assert(got == flat(ref))
+    def group(g: Long) = got.filter(_._1 == g).map(r => (r._3, r._4))
+    def bits(x: Double) = java.lang.Double.doubleToLongBits(x)
+    assert(group(100L) == Seq((bits(0.0), 3L), (bits(-0.0), 2L), (bits(Double.NaN), 1L)))
+    assert(group(101L) == Seq((bits(0.5), 6L), (bits(Double.NaN), 5L)))
+    // no group with k ordinary scores keeps a NaN in its top k
+    assert(!got.exists(r => r._1 < 29 && r._3 == bits(Double.NaN)))
+  }
+
   test("native kernels reject non-float arrays at analysis (no silent memory misread)") {
     // array<double> through getFloat would silently read garbage — the type
     // check must fail the query at analysis time instead

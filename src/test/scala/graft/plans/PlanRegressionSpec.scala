@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * that silently regress them fail CI:
  *
  *  1. the flagship count's parquet scan reads ONLY the geometry column
- *     (column pruning through the cover-UDF projection);
- *  2. no inferred filter re-evaluates the cover UDF below the Generate
+ *     (column pruning through the cover projection);
+ *  2. no inferred filter re-evaluates the cover below the Generate
  *     (the InferFiltersFromGenerate/Constraints exclusion, see GraftSession);
  *  3. the broadcast cover join has zero shuffle exchanges over the probe;
  *  4. the shuffled path really shuffles (no silent AQE broadcast demotion).
@@ -49,6 +49,18 @@ class PlanRegressionSpec extends AnyFunSuite {
     val filterConds = plan.linesIterator.filter(_.startsWith("Condition")).toSeq
     filterConds.foreach { c =>
       assert(!c.contains("UDF"), s"inferred filter re-evaluates a UDF: $c")
+      assert(!c.contains("st_cell_cover"), s"inferred filter re-evaluates the cover: $c")
+    }
+  }
+
+  test("WKT cover join keeps its cell equi-join plan with native cover and refine") {
+    GraftExtensions.register(spark) // SpatialJoinStrategy must see and decline it
+    for (shuffled <- Seq(false, true)) {
+      val plan = countPlan("wkt", shuffled)
+      assert(!plan.contains("BroadcastSpatialJoin"),
+        s"SpatialJoinStrategy replanned the cell equi-join (shuffled=$shuffled):\n$plan")
+      assert(plan.contains("st_cell_cover("), s"cover is not the native st_cell_cover:\n$plan")
+      assert(plan.contains("st_intersects("), s"refine is not the native st_intersects:\n$plan")
     }
   }
 

@@ -25,7 +25,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("jobs exclude inventory; spans transit verbatim (span-sequence invariant)") {
     val inv = graft.ops.TileAssign.assign(
-        docs.where(graft.functions.GeoFunctions.stIntersectsUdf(lit(aoi), col("wkt"))), tiles)
+        docs.where(graft.OracleUdfs.stIntersectsUdf(lit(aoi), col("wkt"))), tiles)
       .select("doc_id", "tile_id").limit(20).cache()
     val jobs = Pipeline.searchDiscover(spark, docs, tiles, inv, aoi,
       freshBase("a"), commitId = "c1").cache()
@@ -50,7 +50,7 @@ class PipelineSpec extends AnyFunSuite {
       Seq.empty[(String, String)]).toDF("doc_id", "tile_id")
 
     // attempt 1: only half the AOI docs "survive" before the crash
-    val aoiDocs = docs.where(graft.functions.GeoFunctions.stIntersectsUdf(lit(aoi), col("wkt")))
+    val aoiDocs = docs.where(graft.OracleUdfs.stIntersectsUdf(lit(aoi), col("wkt")))
     val half = aoiDocs.where(abs(xxhash64(col("doc_id"))) % 2 === 0)
     val (_, n1) = Checkpoint.runStage(spark, base, "assign", half, "doc_id", "c1") {
       todo => graft.ops.TileAssign.assign(todo, tiles).select("doc_id", "tile_id", "spans")
@@ -81,5 +81,20 @@ class PipelineSpec extends AnyFunSuite {
     assert(log.where(col("commit_id") === "c1").count() > 0)
     assert(log.where(col("commit_id") === "c2").count() > 0)
     assert(log.select("status").distinct().collect().map(_.getString(0)).toSeq == Seq("committed"))
+  }
+
+  test("dirty rows: a null or empty footprint drops out of the AOI filter without failing the task") {
+    val inv = Seq.empty[(String, String)].toDF("doc_id", "tile_id")
+    val dirty = docs.orderBy("doc_id").limit(2)
+      .withColumn("doc_id", concat(lit("dirty_"), col("doc_id")))
+    val nullId = dirty.select("doc_id").as[String].first()
+    val withDirty = docs.unionByName(dirty.withColumn("wkt",
+      when(col("doc_id") === nullId, lit(null).cast("string")).otherwise(lit(""))))
+    def pairs(d: org.apache.spark.sql.DataFrame, tag: String) =
+      Pipeline.searchDiscover(spark, d, tiles, inv, aoi, freshBase(tag), "c1")
+        .select("doc_id", "tile_id").as[(String, String)].collect().toSet
+    val got = pairs(withDirty, "d")
+    assert(got.nonEmpty && got.forall(!_._1.startsWith("dirty_")))
+    assert(got == pairs(docs, "e"))
   }
 }

@@ -109,7 +109,7 @@ class PartitionSpecSpec extends AnyFunSuite {
     val got = q.select($"doc_id").as[Long].collect().toSet
     // oracle: plain full-scan intersect filter
     val want = IcebergLite.read(spark, t)
-      .where(graft.functions.GeoFunctions.stIntersectsUdf(lit(aoi), $"wkt"))
+      .where(graft.OracleUdfs.stIntersectsUdf(lit(aoi), $"wkt"))
       .select($"doc_id").as[Long].collect().toSet
     assert(got == want && got.contains(0L))
     // the inputFiles proof: only partitions whose cell the AOI touches
