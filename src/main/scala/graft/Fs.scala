@@ -1,19 +1,57 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
-/** Tiny shared filesystem helpers (local-FS scope — test fixtures, model
-  * exports; production sinks talk to object stores instead). */
+/** Tiny shared filesystem helpers (local-FS scope — table pointers, test
+  * fixtures, model exports; production sinks talk to object stores
+  * instead). */
 object Fs {
 
   /** Delete a file tree, deepest first; missing paths are a no-op. */
   def deleteRecursively(root: Path): Unit = {
     if (!Files.exists(root)) return
     val walk = Files.walk(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    } finally walk.close()
+    try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    finally walk.close()
+  }
+
+  /** Atomically point `pointer` at `value`: write a dotted sibling tmp
+    * file, then ATOMIC_MOVE it over the pointer, so a reader sees either
+    * the old or the new value, never a torn one. The leading dot keeps a
+    * crash-orphaned tmp out of [[readPointers]]. Concurrent writers of the
+    * same pointer must serialize themselves (they share the tmp name). */
+  def writePointer(pointer: Path, value: String): Unit = {
+    if (pointer.getParent != null) Files.createDirectories(pointer.getParent)
+    val tmp = pointer.resolveSibling("." + pointer.getFileName.toString + ".tmp")
+    Files.writeString(tmp, value)
+    Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Every pointer file [[writePointer]] left in `dir`, by name, with the
+    * id it holds (dotted tmp names skipped; a missing dir is empty). */
+  def readPointers(dir: Path): Map[String, Long] =
+    if (!Files.exists(dir)) Map.empty
+    else {
+      val st = Files.list(dir)
+      try st.iterator().asScala
+        .filterNot(_.getFileName.toString.startsWith("."))
+        .map(p => p.getFileName.toString -> Files.readString(p).trim.toLong)
+        .toMap
+      finally st.close()
+    }
+
+  /** Root of a `/tmp` fixture cache:
+    * `<tmpdir>/graft_<kind>_<key>_<fingerprint of source>`. The
+    * fingerprint invalidates the cache whenever `source` is regenerated;
+    * the key (sanitized to `[a-zA-Z0-9_]`) keeps caches of different inputs
+    * apart, so reaping the stale fingerprints of this (kind, key) — done
+    * here — never touches another input's live cache. Not created. */
+  def fixtureRoot(kind: String, key: String, source: Path): Path = {
+    val prefix = s"graft_${kind}_${key.replaceAll("[^a-zA-Z0-9]", "_")}_"
+    val root = Paths.get(System.getProperty("java.io.tmpdir"), prefix + listingFingerprint(source))
+    reapStaleSiblings(root, prefix)
+    root
   }
 
   /** /tmp hygiene for fingerprint-keyed caches: delete sibling directories
@@ -28,7 +66,6 @@ object Fs {
     if (parent == null || !Files.exists(parent)) return
     val ls = Files.list(parent)
     try {
-      import scala.jdk.CollectionConverters._
       ls.iterator().asScala
         .filter { p =>
           val n = p.getFileName.toString
@@ -56,7 +93,6 @@ object Fs {
     if (Files.exists(root)) {
       val walk = Files.walk(root)
       try {
-        import scala.jdk.CollectionConverters._
         walk.iterator().asScala.toSeq
           .filter(Files.isRegularFile(_))
           .map(p => (root.relativize(p).toString, Files.size(p),

@@ -871,10 +871,7 @@ object GeoQueries {
     * cover-range pruning at read, exact st_intersects residual. */
   def tblPart(s: SparkSession, dir: String): DataFrame = {
     import graft.table.IcebergLite
-    val prefix = "graft_tbl_part_" + dir.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(dir, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("tbl_part", dir, java.nio.file.Paths.get(dir, "orders.parquet"))
     val table = root.resolve("t").toString
     if (IcebergLite.currentSnapshotId(table).isEmpty)
       IcebergLite.createPartitioned(s, scenesFromOrders(s, dir), table,
@@ -898,10 +895,7 @@ object GeoQueries {
     * half the files); the oracle pins exactness. */
   def tblZorder(s: SparkSession, dir: String): DataFrame = {
     import graft.table.IcebergLite
-    val prefix = "graft_tbl_zord_" + dir.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(dir, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("tbl_zord", dir, java.nio.file.Paths.get(dir, "orders.parquet"))
     val table = root.resolve("t").toString
     if (IcebergLite.currentSnapshotId(table).isEmpty) {
       IcebergLite.append(s, scenesFromOrders(s, dir)
@@ -1313,10 +1307,7 @@ object TrainQueries {
     * in media_decode and spec'd for PNG in PngNetcdfSpec.) */
   def mediaPng(s: SparkSession, d: String): DataFrame = {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
-    val prefix = "graft_media_png_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = JPaths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(JPaths.get(d, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("media_png", d, JPaths.get(d, "orders.parquet"))
     val dir = root.resolve("png").toString
     val manifestDir = root.resolve("manifest.parquet").toString
     val done = root.resolve("_DONE")
@@ -1356,10 +1347,7 @@ object TrainQueries {
     val grid = graft.ops.Pixels.pixels(s, d).groupBy(col("py"), col("px"))
       .agg(sum(when(col("red2") === -9999, 0).otherwise(col("red2")))
         .cast("double").as("v"))
-    val prefix = "graft_media_nc_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = JPaths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(JPaths.get(d, "lineitem.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("media_nc", d, JPaths.get(d, "lineitem.parquet"))
     JFiles.createDirectories(root)
     val f = root.resolve("grid.nc")
     graft.media.Media.exportGridNetcdf(grid, "py", "px", Seq("v"), f.toString)
@@ -1483,12 +1471,7 @@ object Relational {
     * removed and rebuilt rather than wedging every later call. */
   private def ensureCatalog(kind: String, d: String)(write: String => Unit): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val fp = graft.Fs.listingFingerprint(Paths.get(d, "orders.parquet"))
-    val prefix = s"graft_${kind}_catalog_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val dir = Paths.get(System.getProperty("java.io.tmpdir"), prefix + fp)
-    // stale fingerprints of this same (kind, sfDir) cache can never be read
-    // again — reap them so repeated runs keep a bounded /tmp footprint
-    graft.Fs.reapStaleSiblings(dir, prefix)
+    val dir = graft.Fs.fixtureRoot(s"${kind}_catalog", d, Paths.get(d, "orders.parquet"))
     if (!Files.exists(dir.resolve("_SUCCESS"))) {
       graft.Fs.deleteRecursively(dir) // crashed half-write: rebuild, don't wedge
       val stage = Paths.get(dir.toString + "_stage_" + ProcessHandle.current().pid())
@@ -1649,10 +1632,7 @@ object Relational {
     * guard and are metadata-only no-ops. */
   def tblMerge(s: SparkSession, d: String): DataFrame = {
     import graft.table.IcebergLite
-    val prefix = "graft_tbl_merge_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(d, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("tbl_merge", d, java.nio.file.Paths.get(d, "orders.parquet"))
     val table = root.resolve("t").toString
     val orders = t(s, d, "orders")
     if (IcebergLite.currentSnapshotId(table).isEmpty) {
@@ -1678,10 +1658,7 @@ object Relational {
     * distinct update recipe so the two queries can't mask each other. */
   def tblMor(s: SparkSession, d: String): DataFrame = {
     import graft.table.IcebergLite
-    val prefix = "graft_tbl_mor_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(d, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("tbl_mor", d, java.nio.file.Paths.get(d, "orders.parquet"))
     val table = root.resolve("t").toString
     val orders = t(s, d, "orders")
     if (IcebergLite.currentSnapshotId(table).isEmpty) {
@@ -1720,10 +1697,7 @@ object Relational {
     * snapshot ids oldest-first). */
   private def stagedIncrTable(s: SparkSession, d: String): (String, Seq[Long]) = {
     import graft.table.IcebergLite
-    val prefix = "graft_tbl_incr_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(d, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("tbl_incr", d, java.nio.file.Paths.get(d, "orders.parquet"))
     val table = root.resolve("t").toString
     val orders = t(s, d, "orders")
     def slice(m: Int) = orders.where(col("o_orderkey") % 11 === m)
@@ -1753,10 +1727,7 @@ object Relational {
     * no-ops. The query returns the CONSUMER's table. */
   def strIncr(s: SparkSession, d: String): DataFrame = {
     import graft.table.IcebergLite
-    val prefix = "graft_str_incr_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(d, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("str_incr", d, java.nio.file.Paths.get(d, "orders.parquet"))
     val src = root.resolve("src").toString
     val tgt = root.resolve("tgt").toString
     val cp = root.resolve("consumer.cp").toString
@@ -1809,10 +1780,7 @@ object Relational {
     * crash/re-runs land on the same content. */
   def tblMaintain(s: SparkSession, d: String): DataFrame = {
     import graft.table.IcebergLite
-    val prefix = "graft_tbl_maint_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(d, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("tbl_maint", d, java.nio.file.Paths.get(d, "orders.parquet"))
     val table = root.resolve("t").toString
     val orders = t(s, d, "orders")
     if (IcebergLite.currentSnapshotId(table).isEmpty) {
@@ -1846,10 +1814,7 @@ object Relational {
   def tblOrphans(s: SparkSession, d: String): DataFrame = {
     import graft.table.IcebergLite
     import java.nio.file.{Files, Paths}
-    val prefix = "graft_tbl_orph_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(Paths.get(d, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("tbl_orph", d, Paths.get(d, "orders.parquet"))
     val table = root.resolve("t").toString
     val orders = t(s, d, "orders")
     if (IcebergLite.currentSnapshotId(table).isEmpty) {
@@ -1893,10 +1858,7 @@ object Relational {
     * resurrect or a false-negative would drop. */
   def tblBloom(s: SparkSession, d: String): DataFrame = {
     import graft.table.IcebergLite
-    val prefix = "graft_tbl_bloom_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(d, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("tbl_bloom", d, java.nio.file.Paths.get(d, "orders.parquet"))
     val table = root.resolve("t").toString
     if (IcebergLite.currentSnapshotId(table).isEmpty)
       IcebergLite.append(s, t(s, d, "orders")
@@ -1929,10 +1891,7 @@ object Relational {
     * has partition directories to prune. Crash-resumable like its twin. */
   private def stagedIncrPartTable(s: SparkSession, d: String): (String, Seq[Long]) = {
     import graft.table.IcebergLite
-    val prefix = "graft_tbl_incrw_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(d, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("tbl_incrw", d, java.nio.file.Paths.get(d, "orders.parquet"))
     val table = root.resolve("t").toString
     def slice(m: Int) = t(s, d, "orders").where(col("o_orderkey") % 11 === m)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -1971,10 +1930,7 @@ object Relational {
     * only AFTER the publish. */
   def tblWap(s: SparkSession, d: String): DataFrame = {
     import graft.table.IcebergLite
-    val prefix = "graft_tbl_wap_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(d, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("tbl_wap", d, java.nio.file.Paths.get(d, "orders.parquet"))
     val table = root.resolve("t").toString
     def slice(m: Int) = t(s, d, "orders").where(col("o_orderkey") % 11 === m)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -2007,10 +1963,7 @@ object Relational {
     * commitId, staging by the snapshot count. */
   def tblDelete(s: SparkSession, d: String): DataFrame = {
     import graft.table.IcebergLite
-    val prefix = "graft_tbl_delete_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(d, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("tbl_delete", d, java.nio.file.Paths.get(d, "orders.parquet"))
     val table = root.resolve("t").toString
     val orders = t(s, d, "orders")
     if (IcebergLite.snapshots(table).isEmpty)
@@ -2031,10 +1984,7 @@ object Relational {
     * branch ledger, pick detection on the main ledger. */
   def tblCherry(s: SparkSession, d: String): DataFrame = {
     import graft.table.IcebergLite
-    val prefix = "graft_tbl_cherry_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(d, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("tbl_cherry", d, java.nio.file.Paths.get(d, "orders.parquet"))
     val table = root.resolve("t").toString
     def slice(m: Int) = t(s, d, "orders").where(col("o_orderkey") % 11 === m)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -2063,10 +2013,7 @@ object Relational {
     * re-expire finds nothing), so re-runs are metadata no-ops. */
   def tblTag(s: SparkSession, d: String): DataFrame = {
     import graft.table.IcebergLite
-    val prefix = "graft_tbl_tag_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(d, "orders.parquet")))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("tbl_tag", d, java.nio.file.Paths.get(d, "orders.parquet"))
     val table = root.resolve("t").toString
     def slice(m: Int) = t(s, d, "orders").where(col("o_orderkey") % 11 === m)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))

@@ -76,7 +76,7 @@ object Composites {
     px.groupBy(keys.map(col): _*).agg(max(mask.cast("int")).cast("boolean").as("any_mask"))
 
   /**
-   * DuckDB twin of the fixed-step geomedian ([[GeomedianAggP]] with
+   * DuckDB twin of the fixed-step geomedian ([[GeomedianVec]] with
    * `tol = 0`): one chained CTE per Weiszfeld iteration, each mirroring
    * GeomedianAgg.weiszfeld's arithmetic op for op — the 1/dist weights,
    * the Vardi–Zhang coincident-point correction (r̃ = num − den·cur,
@@ -281,9 +281,13 @@ object GmBuf {
  * `TypedImperativeAggregate[GmBuf]` whose `update` reads the band doubles
  * straight off the `InternalRow`. The `udaf(Aggregator)` bridge pays a
  * per-row deserialization (array construction + `Seq[Double]` boxing)
- * that measured ~1.1 s of px_geomedian's 1.4 s wall at sf0.1 (GmProbe:
- * skeleton 0.23 s, udaf-with-0-iterations 1.33 s — the Weiszfeld math
- * itself is <0.1 s); this expression removes that entire path. Identical
+ * that measured ~1.1 s of px_geomedian's 1.4 s wall at sf0.1 (skeleton
+ * groupBy 0.23 s, udaf-with-0-iterations 1.33 s — the Weiszfeld math
+ * itself is <0.1 s); this expression removes that entire path. A later
+ * warm sf0.1 decomposition: skeleton 0.23 s, native collect_list ~1.0 s,
+ * this expression at 32 iterations ~1.5 s, the udaf bridge at 32 ~1.9 s
+ * and at 0 ~1.8 s — what remains is the object-aggregation per-row
+ * machinery shared with collect_list, not buffer serialization. Identical
  * arithmetic: the same [[GeomedianAgg.weiszfeld]] (sorted, Vardi–Zhang
  * corrected) runs at eval, so results — and the DuckDB oracle hashes —
  * are bit-equal to the Aggregator form (kept for AggregatorSpec parity).
@@ -483,23 +487,6 @@ object GeomedoidVec {
     org.apache.spark.sql.GraftShims.column(
       new GeomedoidVec(bands.map(org.apache.spark.sql.GraftShims.expression),
         maxIter, tol).toAggregateExpression())
-}
-
-/** [[GeomedianAgg]] with explicit iteration control. `tol = 0` with a fixed
-  * `maxIter` gives a fixed-step Weiszfeld whose every arithmetic op has an
-  * ANSI-SQL twin ([[Composites.geomedianOracleSql]]) — the oracle-checkable
-  * parameterization. Converged fixed points freeze (a step from the optimum
-  * reproduces it), so extra iterations never drift. */
-class GeomedianAggP(maxIter: Int = 200, tol: Double = 1e-9)
-    extends Aggregator[Seq[Double], GmBuf, Seq[Double]] {
-  def zero: GmBuf = GmBuf.empty
-  def reduce(b: GmBuf, v: Seq[Double]): GmBuf =
-    if (v == null || v.exists(_ == -9999.0)) b else b.add(v)
-  def merge(a: GmBuf, b: GmBuf): GmBuf = a.absorb(b)
-  def finish(b: GmBuf): Seq[Double] = GeomedianAgg.weiszfeld(b.points, maxIter, tol)
-  def bufferEncoder: Encoder[GmBuf] = GmBuf.encoder
-  def outputEncoder: Encoder[Seq[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
 }
 
 object GeomedianAgg extends Aggregator[Seq[Double], GmBuf, Seq[Double]] {

@@ -54,28 +54,22 @@ object Checkpoint {
                dedupe: Boolean = true)
               (compute: DataFrame => DataFrame): (DataFrame, Long) = {
     val t0 = System.nanoTime()
-    // Crash-retry safety: if ANY snapshot (current or historical — old
-    // files stay readable for time travel after compaction) references
-    // files under data/<commitId>, this attempt fully committed —
-    // re-running it would overwrite referenced files with a fresh
-    // (possibly empty) write. Refuse before any IO.
-    val outTable = outputTable(base, stage)
-    val alreadyCommitted = IcebergLite.snapshots(outTable).exists(id =>
-      IcebergLite.snapshotAt(outTable, id)
-        .exists(_.files.exists(_.path.contains(s"/data/$commitId/"))))
-    if (alreadyCommitted) {
+    // Crash-retry safety: if the output table's commitId ledger holds
+    // `commitId`, this attempt fully committed — re-running it would
+    // overwrite referenced files with a fresh (possibly empty) write.
+    // Refuse before any IO. The ledger is one read of the current snapshot
+    // and survives compaction and snapshot expiry, which retire every
+    // snapshot that referenced data/<commitId>.
+    if (IcebergLite.alreadyCommitted(outputTable(base, stage), commitId)) {
       // A crash AFTER the output commit but BEFORE the commitlog append
       // leaves committed data with no lineage entry — and this guard would
       // otherwise freeze that divergence forever (log() never reconciling
-      // with committed()). Detect the gap via the log table's own snapshot
-      // metadata (no data read) and backfill the entry from the
-      // already-written data/<commitId> files. rows_in and wall_ms of the
-      // crashed attempt are unrecoverable — recorded as -1 with status
-      // "backfilled" rather than fabricated.
-      val logHasCommit = IcebergLite.snapshots(logTable(base, stage)).exists(id =>
-        IcebergLite.snapshotAt(logTable(base, stage), id)
-          .exists(_.files.exists(_.path.contains(s"/data/$commitId/"))))
-      if (!logHasCommit) {
+      // with committed()). Detect the gap via the log table's own ledger
+      // (no data read) and backfill the entry from the already-written
+      // data/<commitId> files. rows_in and wall_ms of the crashed attempt
+      // are unrecoverable — recorded as -1 with status "backfilled" rather
+      // than fabricated.
+      if (!IcebergLite.alreadyCommitted(logTable(base, stage), commitId)) {
         val metrics = partitionMetrics(spark, base, stage, keyCol, commitId,
           rowsIn = -1L, wallMs = -1L, status = "backfilled")
         IcebergLite.append(spark, metrics, logTable(base, stage), Seq("partition_id"), commitId)

@@ -168,13 +168,7 @@ object Streams {
     val tableDir =
       if (java.nio.file.Files.isDirectory(p)) tablePath
       else {
-        // fingerprint-keyed (invalidates on data regen) + path-keyed (so
-        // reaping never touches another sfDir's live cache); stale
-        // fingerprints of the SAME table are deleted — bounded /tmp
-        val prefix = s"graft_stream_src_${tablePath.replaceAll("[^a-zA-Z0-9]", "_")}_"
-        val stage = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-          prefix + graft.Fs.listingFingerprint(p))
-        graft.Fs.reapStaleSiblings(stage, prefix)
+        val stage = graft.Fs.fixtureRoot("stream_src", tablePath, p)
         val target = stage.resolve(p.getFileName)
         if (!java.nio.file.Files.exists(target)) {
           java.nio.file.Files.createDirectories(stage)
@@ -231,10 +225,7 @@ object Streams {
    * asserts they stay bounded — eviction really happens).
    */
   def dailyCountsAppendDurable(spark: SparkSession, tablePath: String): (DataFrame, Seq[Long]) = {
-    val prefix = s"graft_str_winapp_${tablePath.replaceAll("[^a-zA-Z0-9]", "_")}_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(tablePath)))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("str_winapp", tablePath, java.nio.file.Paths.get(tablePath))
     val srcDir = root.resolve("src")
     if (!java.nio.file.Files.exists(srcDir.resolve("_SUCCESS"))) {
       graft.Fs.deleteRecursively(srcDir) // crashed half-write: rebuild
@@ -285,10 +276,7 @@ object Streams {
    * are metadata-only no-ops — idempotence exercised on every Verify run.
    */
   def durableEventsIngest(spark: SparkSession, tablePath: String): DataFrame = {
-    val prefix = s"graft_str_append_${tablePath.replaceAll("[^a-zA-Z0-9]", "_")}_"
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      prefix + graft.Fs.listingFingerprint(java.nio.file.Paths.get(tablePath)))
-    graft.Fs.reapStaleSiblings(root, prefix)
+    val root = graft.Fs.fixtureRoot("str_append", tablePath, java.nio.file.Paths.get(tablePath))
     val srcDir = root.resolve("src")
     if (!java.nio.file.Files.exists(srcDir.resolve("_SUCCESS"))) {
       graft.Fs.deleteRecursively(srcDir) // crashed half-write: rebuild
@@ -339,15 +327,9 @@ object Streams {
                           registerAs: Option[String] = None, rebaseline: Boolean = false,
                           predicate: Option[Column] = None)
                          (process: (DataFrame, Long, Long) => Unit): Option[(Long, Long)] = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     val cp = Paths.get(checkpointFile)
-    if (cp.getParent != null) Files.createDirectories(cp.getParent)
     val inflight = cp.resolveSibling(cp.getFileName.toString + ".inflight")
-    def writeAtomic(target: java.nio.file.Path, v: String): Unit = {
-      val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-      Files.writeString(tmp, v)
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
     val last = if (Files.exists(cp)) Files.readString(cp).trim.toLong else -1L
     // The increment's upper bound is PINNED to a sidecar BEFORE processing:
     // if a previous call crashed after `process` but before the checkpoint
@@ -365,7 +347,7 @@ object Streams {
     var cur = pinned.getOrElse {
       val c = graft.table.IcebergLite.currentSnapshotId(source).getOrElse(return None)
       if (c == last) return None
-      writeAtomic(inflight, c.toString)
+      graft.Fs.writePointer(inflight, c.toString)
       c
     }
     // the floor must be in place BEFORE the read: registering only after a
@@ -392,7 +374,7 @@ object Streams {
           (predicate.fold(full)(full.where), -1L)
       }
     process(df, from, cur)
-    writeAtomic(cp, cur.toString)
+    graft.Fs.writePointer(cp, cur.toString)
     Files.deleteIfExists(inflight)
     registerAs.foreach(n => graft.table.IcebergLite.registerConsumer(source, n, cur))
     Some((last, cur))

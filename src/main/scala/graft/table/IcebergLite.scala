@@ -2,12 +2,16 @@ package graft.table
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.spark.sql.types.{DataType, StructType}
+import com.fasterxml.jackson.core.json.JsonWriteFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /**
  * Iceberg-format-inspired table layout (SURVEY §4.2): partitioned Parquet
- * data files + JSON snapshot manifests with per-file row counts and
+ * data files + JSON snapshot metadata with per-file row counts and
  * column min/max, committed by atomic pointer swap. No Iceberg runtime jar
  * exists in this environment (verified; coursier offline), so the layout is
  * implemented in-repo; the read path is plain `spark.read.parquet` over
@@ -16,10 +20,20 @@ import scala.jdk.CollectionConverters._
  *
  * Layout:
  * {{{
- *   <table>/data/<commit-uuid>/part-*.parquet
- *   <table>/_graft_meta/snapshot-<N>.json     // files + stats + schema
+ *   <table>/data/<commit-id>/part-*.parquet
+ *   <table>/_graft_meta/snapshot-<N>.json     // schema, spec, ledger, manifest paths
+ *   <table>/_graft_meta/manifest-<N>-<t>.json // immutable file lists + stats
  *   <table>/_graft_meta/CURRENT               // atomic pointer: "N"
+ *   <table>/_graft_meta/{consumers,tags,branches}/<name>  // pointers: "N"
  * }}}
+ *
+ * Each metadata mechanism has one implementation. The JSON codec is
+ * Jackson ([[renderSnapshot]]/[[parseSnapshot]]; ids, seqs and row counts
+ * decode as exact longs). Every lock — the table's commit lock and the
+ * per-commitId claims — is one O_EXCL lock file with a heartbeat
+ * ([[withLockFile]]). Every pointer — CURRENT and the refs — is written by
+ * [[graft.Fs.writePointer]]. "Was this commitId committed?" is one read of
+ * the current snapshot's cumulative ledger ([[alreadyCommitted]]).
  *
  * Scale notes: manifest min/max over the Morton cell id gives partition
  * pruning for spatial range scans (children of a parent cell are an id
@@ -120,6 +134,8 @@ object IcebergLite {
                       order: Option[SortOrder] = None,
                       manifests: Seq[String] = Nil) {
     def physical(logical: String): String = renames.getOrElse(logical, logical)
+    /** The schema this snapshot pins (decoded once per snapshot value). */
+    lazy val schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
 
   /** Snapshot-JSON parses since JVM start — a test-visible metadata-read
@@ -138,6 +154,10 @@ object IcebergLite {
     currentSnapshotId(table).map { id =>
       parseSnapshot(Files.readString(metaDir(table).resolve(s"snapshot-$id.json")))
     }
+
+  /** The current snapshot of a table that must have one. */
+  private def current(table: String): Snapshot = readSnapshot(table).getOrElse(
+    throw new IllegalStateException(s"no committed snapshot in $table"))
 
   /** A specific historical snapshot (None if it never existed). */
   def snapshotAt(table: String, id: Long): Option[Snapshot] = {
@@ -284,15 +304,13 @@ object IcebergLite {
 
   private def readFilesRaw(spark: SparkSession, snap: Snapshot,
                            files: Seq[FileEntry]): DataFrame = {
-    val schema = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = snap.schema
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else if (snap.renames.isEmpty)
       spark.read.schema(schema).parquet(files.map(_.path): _*)
     else {
-      val physSchema = org.apache.spark.sql.types.StructType(
-        schema.fields.map(f => f.copy(name = snap.physical(f.name))))
+      val physSchema = StructType(schema.fields.map(f => f.copy(name = snap.physical(f.name))))
       spark.read.schema(physSchema).parquet(files.map(_.path): _*)
         .select(schema.fields.map(f => col(snap.physical(f.name)).as(f.name)).toSeq: _*)
     }
@@ -337,10 +355,7 @@ object IcebergLite {
   private def alignForAppend(df: DataFrame, table: String): (DataFrame, String) =
     readSnapshot(table) match {
       case None => (df, df.schema.json)
-      case Some(snap) =>
-        val pinned = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        (alignToSchema(df, pinned, table, "append"), snap.schemaJson)
+      case Some(snap) => (alignToSchema(df, snap.schema, table, "append"), snap.schemaJson)
     }
 
   /** Validate a write batch against the table's pinned schema (matched BY
@@ -348,10 +363,9 @@ object IcebergLite {
     * order. Used by append and the merge pair — selecting by name alone
     * would let a type-drifted batch write parquet the pinned schema can't
     * read back. */
-  private def alignToSchema(df: DataFrame,
-                            pinned: org.apache.spark.sql.types.StructType,
+  private def alignToSchema(df: DataFrame, pinned: StructType,
                             table: String, op: String): DataFrame = {
-    def shape(s: org.apache.spark.sql.types.StructType) =
+    def shape(s: StructType) =
       s.fields.map(f => f.name -> f.dataType.catalogString).toMap
     require(shape(df.schema) == shape(pinned),
       s"$op schema mismatch for $table: table has " +
@@ -376,45 +390,26 @@ object IcebergLite {
     // commitIds still run fully in parallel. (Crash-orphaned claims age out
     // like the commit lock; sequential replays — the common path — pay one
     // create+delete.)
-    if (alreadyCommitted(table, commitId)) readSnapshot(table).get
-    else withClaim(table, commitId) {
-      if (alreadyCommitted(table, commitId)) readSnapshot(table).get
+    if (alreadyCommitted(table, commitId)) current(table)
+    else withLockFile(metaDir(table).resolve(
+        s"claim-${commitId.replaceAll("[^a-zA-Z0-9_.-]", "_")}.lock"), staleMs = 300000L) {
+      if (alreadyCommitted(table, commitId)) current(table)
       else append(spark, df, table, statsCols, commitId)
     }
   }
 
-  /** O_EXCL claim scoped to one commitId (see [[appendIdempotent]]). */
-  private def withClaim[T](table: String, commitId: String,
-                           staleMs: Long = 300000L)(body: => T): T = {
-    Files.createDirectories(metaDir(table))
-    val claim = metaDir(table).resolve(
-      s"claim-${commitId.replaceAll("[^a-zA-Z0-9_.-]", "_")}.lock")
-    var held = false
-    while (!held) {
-      try { Files.createFile(claim); held = true }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          try {
-            val age = System.currentTimeMillis() -
-              Files.getLastModifiedTime(claim).toMillis
-            if (age > staleMs) Files.deleteIfExists(claim) else Thread.sleep(20)
-          } catch { case _: java.nio.file.NoSuchFileException => () }
-      }
-    }
-    try body finally Files.deleteIfExists(claim)
-  }
-
   /** Has `commitId` ever been committed to `table`? O(1): one read of the
-    * current snapshot's cumulative commitId ledger. Pre-upgrade tables
-    * (snapshots without the ledger) fall back to the historical file-path
-    * scan — upgraded transparently by their next commit, which starts the
-    * ledger from the full history. */
+    * current snapshot's cumulative commitId ledger, which every commit
+    * carries forward — so the answer survives compaction, rollback and the
+    * expiry of the commit's own snapshots and files. */
   def alreadyCommitted(table: String, commitId: String): Boolean =
-    readSnapshot(table) match {
-      case None => false
-      case Some(s) if s.commitIds.nonEmpty => s.commitIds.contains(commitId)
-      case Some(_) => historicalCommitIds(table).contains(commitId)
-    }
+    readSnapshot(table).exists(ledgerOf(table, _).contains(commitId))
+
+  /** `s`'s cumulative commitId ledger. Pre-upgrade snapshots (no ledger)
+    * fall back to the historical file-path scan — upgraded transparently by
+    * their next commit, which starts the ledger from the full history. */
+  private def ledgerOf(table: String, s: Snapshot): Set[String] =
+    if (s.commitIds.nonEmpty) s.commitIds else historicalCommitIds(table)
 
   /** Commit ids recoverable from snapshot history's file paths (legacy
     * tables whose snapshots predate the ledger). */
@@ -470,9 +465,7 @@ object IcebergLite {
     // runs. Idempotent replays never reach here (appendIdempotent / merge /
     // mergeOnRead / deleteKeys / compact all pre-check alreadyCommitted).
     readSnapshot(table).foreach { cur =>
-      val mainLedger =
-        if (cur.commitIds.nonEmpty) cur.commitIds else historicalCommitIds(table)
-      require(!mainLedger.contains(commitId),
+      require(!ledgerOf(table, cur).contains(commitId),
         s"commitId $commitId is already committed on $table's main lineage; " +
           "replaying a committed id would overwrite its referenced files — " +
           "use appendIdempotent for crash-retries, or a different commitId")
@@ -579,10 +572,8 @@ object IcebergLite {
    * full-table job you schedule, not a side effect of changing the spec.
    */
   def evolveSpec(table: String, newSpec: Seq[PartitionField]): Snapshot = retryOnConflict() {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val snap = readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val snap = current(table)
+    val schema = snap.schema
     require(newSpec.map(_.name).distinct.size == newSpec.size,
       s"duplicate partition field names in ${newSpec.map(_.name)}")
     newSpec.foreach { f =>
@@ -606,13 +597,12 @@ object IcebergLite {
    * evolution. Pass `None` to clear.
    */
   def setSortOrder(table: String, order: Option[SortOrder]): Snapshot = retryOnConflict() {
-    import org.apache.spark.sql.types.{DataType, NumericType, StructType}
-    val snap = readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
+    import org.apache.spark.sql.types.NumericType
+    val snap = current(table)
     order.foreach { o =>
       require(o.cols.nonEmpty && o.cols.distinct.size == o.cols.size,
         s"bad sort-order columns ${o.cols}")
-      val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+      val schema = snap.schema
       o.cols.foreach { c =>
         val f = schema.fields.find(_.name == c).getOrElse(
           throw new IllegalArgumentException(s"sort-order column $c not in schema"))
@@ -644,9 +634,8 @@ object IcebergLite {
     // COMPLETED compact would lazily self-read the current snapshot's files
     // from data/<commitId>/ and then mode(overwrite) that same directory —
     // a read-from/overwrite-to-same-path corrupting the committed snapshot
-    if (alreadyCommitted(table, commitId)) return readSnapshot(table).get
-    val snap = readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
+    if (alreadyCommitted(table, commitId)) return current(table)
+    val snap = current(table)
     // explicit clustering args win; otherwise the table's declared
     // SortOrder (setSortOrder) decides — compact is where per-batch write
     // clustering gets unified table-wide
@@ -748,11 +737,12 @@ object IcebergLite {
     // Explicit statsCols/statsExprs keep full control when given;
     // autoStats = false opts out entirely (and models pre-auto-stats
     // tables in specs).
+    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
     val effStatsCols =
       if (statsCols.nonEmpty || statsExprs.nonEmpty || !autoStats) statsCols
       else {
         import org.apache.spark.sql.types._
-        DataType.fromJson(schemaJson).asInstanceOf[StructType].fields.collect {
+        schema.fields.collect {
           case f if f.dataType.isInstanceOf[NumericType] ||
             f.dataType == StringType || f.dataType == BooleanType ||
             f.dataType == DateType || f.dataType == TimestampType => f.name
@@ -772,10 +762,7 @@ object IcebergLite {
       }
     // explicit PHYSICAL schema: skips the footer-inference job every commit
     // would otherwise pay (data files store physical column names)
-    val physSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-        .fields.map(f => f.copy(name = phys(f.name))))
+    val physSchema = StructType(schema.fields.map(f => f.copy(name = phys(f.name))))
     val stats = spark.read.schema(physSchema).parquet(dataDir.toString)
       .groupBy(input_file_name().as("path"))
       .agg(count(lit(1)).as("rows"), statAggs: _*)
@@ -844,9 +831,7 @@ object IcebergLite {
     // cumulative commitId ledger: ALWAYS carried (even by replacing
     // commits) so the idempotence guard stays O(1) and survives expiry; a
     // legacy table's first post-upgrade commit seeds it from full history
-    val ledger = prev.map(s =>
-      if (s.commitIds.nonEmpty) s.commitIds else historicalCommitIds(table))
-      .getOrElse(Set.empty[String]) + commitId
+    val ledger = prev.map(ledgerOf(table, _)).getOrElse(Set.empty[String]) + commitId
     // A PURE append (carries the whole previous state, adds only this
     // commit's files) rebases mechanically onto a concurrently-advanced
     // table: restamp the new entries' seq, keep everything of the new
@@ -857,8 +842,7 @@ object IcebergLite {
     val rebase: Snapshot => Option[Snapshot] =
       if (!pureAppend) null
       else cur => {
-        val curLedger =
-          if (cur.commitIds.nonEmpty) cur.commitIds else historicalCommitIds(table)
+        val curLedger = ledgerOf(table, cur)
         if (curLedger.contains(commitId)) None // racing idempotent replay: done
         else if (cur.spec != spec) throw new CommitConflictException(
           s"$table partition spec changed while appending $commitId; re-run")
@@ -912,14 +896,22 @@ object IcebergLite {
     * against the new current snapshot. */
   class CommitConflictException(msg: String) extends RuntimeException(msg)
 
-  /** Serialize commits to one table via an O_EXCL lock file (the local-FS
-    * stand-in for an Iceberg catalog's atomic pointer CAS). A lock older
-    * than `staleMs` is presumed orphaned by a dead committer and broken —
-    * commits are short (write one JSON + rename), so a live holder never
-    * ages that much. */
-  private def withCommitLock[T](table: String, staleMs: Long = 60000L)(body: => T): T = {
-    Files.createDirectories(metaDir(table))
-    val lock = metaDir(table).resolve("COMMIT.lock")
+  /** Serialize commits to one table via its commit lock (the local-FS
+    * stand-in for an Iceberg catalog's atomic pointer CAS). */
+  private def withCommitLock[T](table: String)(body: => T): T =
+    withLockFile(metaDir(table).resolve("COMMIT.lock"), staleMs = 60000L)(body)
+
+  /** Run `body` holding an O_EXCL lock file — the one lock the table plane
+    * uses, for the commit lock and the per-commitId claims alike. A lock
+    * whose mtime is older than `staleMs` is presumed orphaned by a dead
+    * holder and broken. A live holder can legitimately run long (a claim
+    * spans a whole append; the amortized manifest merge and the stats/bloom
+    * passes are O(table files)), and a stolen lock lets two committers
+    * allocate the same snapshot id (lost commit) — so a heartbeat bumps the
+    * lock's mtime every staleMs/4 while `body` runs, and the stale-break
+    * fires only for genuinely dead holders. */
+  private[table] def withLockFile[T](lock: Path, staleMs: Long)(body: => T): T = {
+    Files.createDirectories(lock.getParent)
     var held = false
     while (!held) {
       try { Files.createFile(lock); held = true }
@@ -932,13 +924,6 @@ object IcebergLite {
           } catch { case _: java.nio.file.NoSuchFileException => () }
       }
     }
-    // live-holder heartbeat: the typical commit is "write one JSON + rename",
-    // but the amortized manifest merge (every ManifestMergeCount commits) and
-    // the stats/bloom passes are O(table files) — a holder legitimately
-    // exceeding staleMs would get its lock stolen and the steal lets two
-    // committers allocate the same snapshot id (lost commit). Bumping the
-    // lock's mtime every staleMs/4 keeps a LIVE holder's lock perpetually
-    // fresh, so the stale-break fires only for genuinely dead committers.
     val beat = new Thread(() => {
       try while (!Thread.currentThread().isInterrupted) {
         Thread.sleep(staleMs / 4)
@@ -948,7 +933,7 @@ object IcebergLite {
         case _: InterruptedException => () // normal release
         case _: java.io.IOException => () // lock gone: nothing left to guard
       }
-    }, s"graft-commit-lock-heartbeat")
+    }, "graft-lock-heartbeat")
     beat.setDaemon(true)
     beat.start()
     try body finally { beat.interrupt(); Files.deleteIfExists(lock) }
@@ -977,7 +962,7 @@ object IcebergLite {
 
   private def writeManifest(table: String, id: Long, entries: Seq[FileEntry]): String = {
     val mf = metaDir(table).resolve(s"manifest-$id-${System.nanoTime()}.json")
-    Files.writeString(mf, entries.map(renderFileEntry).mkString("[", ",", "]"))
+    Files.writeString(mf, Json.writeValueAsString(entries.map(fileEntryJson).asJava))
     manifestCache.put(mf.toString, entries)
     mf.toString
   }
@@ -1003,13 +988,8 @@ object IcebergLite {
     val canonical = snap.copy(files = canonicalFiles, manifests = refs)
     Files.writeString(metaDir(table).resolve(s"snapshot-${snap.id}.json"),
       renderSnapshot(canonical))
-    val pointer = pointerFile.getOrElse(metaDir(table).resolve("CURRENT"))
-    if (pointer.getParent != null) Files.createDirectories(pointer.getParent)
-    // dotted tmp name: a crash-orphaned tmp must not be listed as a branch
-    val tmp = pointer.resolveSibling("." + pointer.getFileName.toString + ".tmp")
-    Files.writeString(tmp, snap.id.toString)
-    Files.move(tmp, pointer,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    graft.Fs.writePointer(pointerFile.getOrElse(metaDir(table).resolve("CURRENT")),
+      snap.id.toString)
     canonical
   }
 
@@ -1086,10 +1066,8 @@ object IcebergLite {
    * snapshot reads the old schema (each snapshot pins its own).
    */
   def addColumn(table: String, name: String, sqlType: String): Snapshot = retryOnConflict() {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val snap = readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val snap = current(table)
+    val schema = snap.schema
     require(!schema.fieldNames.contains(name), s"column $name already exists")
     // The new column's default physical name is its logical name — but if
     // that physical name was EVER used by this table (current columns, or
@@ -1099,10 +1077,7 @@ object IcebergLite {
     // effect Iceberg gets from never reusing field IDs. The scan is
     // metadata-only (historical snapshot schemas, no file reads).
     val historicalPhysical = snapshots(table).flatMap(id =>
-      snapshotAt(table, id).toSeq.flatMap { s =>
-        val sch = DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
-        sch.fieldNames.map(s.physical).toSeq
-      }).toSet
+      snapshotAt(table, id).toSeq.flatMap(s => s.schema.fieldNames.map(s.physical))).toSet
     val widened = schema.add(name, sqlType, nullable = true)
     val newRenames =
       if (!historicalPhysical.contains(name)) snap.renames
@@ -1122,10 +1097,8 @@ object IcebergLite {
     * read schema simply stops projecting them, and time travel to a
     * pre-drop snapshot still sees the column. O(1) at any table size. */
   def dropColumn(table: String, name: String): Snapshot = retryOnConflict() {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val snap = readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val snap = current(table)
+    val schema = snap.schema
     require(schema.fieldNames.contains(name), s"no column $name")
     val narrowed = StructType(schema.fields.filterNot(_.name == name))
     require(narrowed.nonEmpty, "cannot drop the last column")
@@ -1147,10 +1120,8 @@ object IcebergLite {
     * table's files stay uniform. Time travel to a pre-rename snapshot sees
     * the old name. */
   def renameColumn(table: String, from: String, to: String): Snapshot = retryOnConflict() {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val snap = readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val snap = current(table)
+    val schema = snap.schema
     require(schema.fieldNames.contains(from), s"no column $from")
     require(!schema.fieldNames.contains(to), s"column $to already exists")
     val physicalName = snap.physical(from)
@@ -1197,11 +1168,9 @@ object IcebergLite {
    */
   def merge(spark: SparkSession, table: String, updates: DataFrame,
             keyCols: Seq[String], statsCols: Seq[String], commitId: String): Snapshot = {
-    if (alreadyCommitted(table, commitId)) return readSnapshot(table).get
-    val snap = readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val schema = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    if (alreadyCommitted(table, commitId)) return current(table)
+    val snap = current(table)
+    val schema = snap.schema
     val aligned = alignToSchema(updates, schema, table, "merge")
     val probeAggs = Seq(
       count(lit(1)).as("__n"),
@@ -1258,12 +1227,9 @@ object IcebergLite {
    */
   def mergeOnRead(spark: SparkSession, table: String, updates: DataFrame,
                   keyCols: Seq[String], statsCols: Seq[String], commitId: String): Snapshot = {
-    if (alreadyCommitted(table, commitId)) return readSnapshot(table).get
-    val snap = readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val schema = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val aligned = alignToSchema(updates, schema, table, "mergeOnRead")
+    if (alreadyCommitted(table, commitId)) return current(table)
+    val snap = current(table)
+    val aligned = alignToSchema(updates, snap.schema, table, "mergeOnRead")
     val nDup = updates.agg(count(lit(1)).as("__n"),
       countDistinct(struct(keyCols.map(col): _*)).as("__nd")).collect()(0)
     require(nDup.getAs[Long]("__n") == nDup.getAs[Long]("__nd"),
@@ -1297,12 +1263,10 @@ object IcebergLite {
     * would delete nothing); crash-retry idempotent by commitId. */
   def deleteKeys(spark: SparkSession, table: String, keys: DataFrame,
                  keyCols: Seq[String], commitId: String): Snapshot = retryOnConflict() {
-    if (alreadyCommitted(table, commitId)) readSnapshot(table).get
+    if (alreadyCommitted(table, commitId)) current(table)
     else {
-      val snap = readSnapshot(table).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot in $table"))
-      val schema = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val snap = current(table)
+      val schema = snap.schema
       require(keyCols.nonEmpty && keyCols.forall(schema.fieldNames.contains),
         s"delete keys ${keyCols.mkString(",")} not all in $table's schema")
       val sel = keys.select(keyCols.map(col): _*)
@@ -1356,8 +1320,7 @@ object IcebergLite {
       require(cids.size == 1,
         s"snapshot $stagedId of $table added ${cids.size} commitIds (expected 1)")
       val cid = cids.head
-      val cur = readSnapshot(table).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot in $table"))
+      val cur = current(table)
       if (cur.commitIds.contains(cid)) cur // already picked (or fast-forwarded)
       else {
         require(cur.schemaJson == s.schemaJson && cur.spec == s.spec
@@ -1449,27 +1412,11 @@ object IcebergLite {
     * closed here by making the consumer set part of table metadata). */
   def registerConsumer(table: String, name: String, snapshotId: Long): Unit = {
     require(name.matches("[A-Za-z0-9._-]+"), s"bad consumer name $name")
-    val d = consumersDir(table)
-    Files.createDirectories(d)
-    val tmp = d.resolve(s".$name.tmp")
-    Files.writeString(tmp, snapshotId.toString)
-    Files.move(tmp, d.resolve(name),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    graft.Fs.writePointer(consumersDir(table).resolve(name), snapshotId.toString)
   }
 
   /** Registered followers and their consumed positions. */
-  def consumers(table: String): Map[String, Long] = {
-    val d = consumersDir(table)
-    if (!Files.exists(d)) Map.empty
-    else {
-      val st = Files.list(d)
-      try st.iterator().asScala
-        .filterNot(_.getFileName.toString.startsWith("."))
-        .map(p => p.getFileName.toString -> Files.readString(p).trim.toLong)
-        .toMap
-      finally st.close()
-    }
-  }
+  def consumers(table: String): Map[String, Long] = graft.Fs.readPointers(consumersDir(table))
 
   /** Drop a follower from the retention floor (it no longer pins history). */
   def deregisterConsumer(table: String, name: String): Unit =
@@ -1488,27 +1435,11 @@ object IcebergLite {
     require(name.matches("[A-Za-z0-9._-]+"), s"bad tag name $name")
     require(snapshotAt(table, snapshotId).isDefined,
       s"no snapshot $snapshotId in $table to tag")
-    val d = tagsDir(table)
-    Files.createDirectories(d)
-    val tmp = d.resolve(s".$name.tmp")
-    Files.writeString(tmp, snapshotId.toString)
-    Files.move(tmp, d.resolve(name),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    graft.Fs.writePointer(tagsDir(table).resolve(name), snapshotId.toString)
   }
 
   /** All tags and the snapshot ids they pin. */
-  def tags(table: String): Map[String, Long] = {
-    val d = tagsDir(table)
-    if (!Files.exists(d)) Map.empty
-    else {
-      val st = Files.list(d)
-      try st.iterator().asScala
-        .filterNot(_.getFileName.toString.startsWith("."))
-        .map(p => p.getFileName.toString -> Files.readString(p).trim.toLong)
-        .toMap
-      finally st.close()
-    }
-  }
+  def tags(table: String): Map[String, Long] = graft.Fs.readPointers(tagsDir(table))
 
   /** Drop a tag; its snapshot becomes expirable again. */
   def dropTag(table: String, name: String): Unit =
@@ -1532,31 +1463,14 @@ object IcebergLite {
     * their snapshot against [[expireSnapshots]] like tags do. */
   def createBranch(table: String, name: String, fromId: Long = -1L): Unit = {
     require(name.matches("[A-Za-z0-9._-]+"), s"bad branch name $name")
-    val id = if (fromId >= 0L) fromId else currentSnapshotId(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
+    val id = if (fromId >= 0L) fromId else current(table).id
     require(snapshotAt(table, id).isDefined, s"no snapshot $id in $table to branch from")
     require(!branches(table).contains(name), s"branch $name already exists in $table")
-    val d = branchesDir(table)
-    Files.createDirectories(d)
-    val tmp = d.resolve(s".$name.tmp")
-    Files.writeString(tmp, id.toString)
-    Files.move(tmp, d.resolve(name),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    graft.Fs.writePointer(branchesDir(table).resolve(name), id.toString)
   }
 
   /** All branches and their head snapshot ids. */
-  def branches(table: String): Map[String, Long] = {
-    val d = branchesDir(table)
-    if (!Files.exists(d)) Map.empty
-    else {
-      val st = Files.list(d)
-      try st.iterator().asScala
-        .filterNot(_.getFileName.toString.startsWith("."))
-        .map(p => p.getFileName.toString -> Files.readString(p).trim.toLong)
-        .toMap
-      finally st.close()
-    }
-  }
+  def branches(table: String): Map[String, Long] = graft.Fs.readPointers(branchesDir(table))
 
   /** Abandon a branch; its staged snapshots stop being pinned (retention
     * and the orphan sweep reclaim them on their own schedules). */
@@ -1585,13 +1499,9 @@ object IcebergLite {
       throw new IllegalArgumentException(s"no branch $branch in $table"))
     val head = snapshotAt(table, headId).getOrElse(throw new IllegalStateException(
       s"branch $branch head $headId of $table is missing (expired?)"))
-    val ledger =
-      if (head.commitIds.nonEmpty) head.commitIds else historicalCommitIds(table)
-    require(!ledger.contains(commitId),
+    require(!ledgerOf(table, head).contains(commitId),
       s"commitId $commitId already committed on $table's $branch lineage")
-    val pinned = org.apache.spark.sql.types.DataType.fromJson(head.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val aligned = alignToSchema(df, pinned, table, s"appendToBranch($branch)")
+    val aligned = alignToSchema(df, head.schema, table, s"appendToBranch($branch)")
     writeDataSpec(aligned, table, commitId, head.spec, snapOverride = Some(head))
     commitWritten(spark, head.schemaJson, table, statsCols, commitId,
       basedOn = Some(head), toBranch = Some(branch))
@@ -1608,8 +1518,7 @@ object IcebergLite {
       throw new IllegalArgumentException(s"no branch $branch in $table"))
     val head = snapshotAt(table, headId).getOrElse(throw new IllegalStateException(
       s"branch $branch head $headId of $table is missing (expired?)"))
-    val cur = readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
+    val cur = current(table)
     var p = head
     while (p.id != cur.id && p.parent >= 0L)
       p = snapshotAt(table, p.parent).getOrElse(throw new IllegalStateException(
@@ -1618,11 +1527,7 @@ object IcebergLite {
     if (p.id != cur.id) throw new CommitConflictException(
       s"$table advanced past branch $branch's fork point (current ${cur.id} " +
         s"not on the branch lineage); re-stage against the new current and re-run")
-    val cf = metaDir(table).resolve("CURRENT")
-    val tmp = cf.resolveSibling(".CURRENT.tmp")
-    Files.writeString(tmp, headId.toString)
-    Files.move(tmp, cf,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    graft.Fs.writePointer(metaDir(table).resolve("CURRENT"), headId.toString)
     head
   }
 
@@ -1632,8 +1537,7 @@ object IcebergLite {
     * make the per-file counts an overcount; [[compact]] (or any
     * [[maintain]] tick that triggers it) restores the fast path. */
   def rowCount(table: String): Option[Long] = {
-    val snap = readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
+    val snap = current(table)
     if (snap.deletes.nonEmpty) None else Some(snap.files.map(_.rows).sum)
   }
 
@@ -1809,8 +1713,7 @@ object IcebergLite {
   def rollbackTo(table: String, id: Long): Snapshot = retryOnConflict() {
     val target = snapshotAt(table, id).getOrElse(
       throw new IllegalArgumentException(s"no snapshot $id in $table"))
-    val curSnap = readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
+    val curSnap = current(table)
     // ledger is the union: the rolled-back-over commits WERE committed, and
     // a crash-retry of one of them after the rollback must stay a no-op
     commitSnapshot(table, target.copy(id = curSnap.id + 1, parent = curSnap.id,
@@ -1876,8 +1779,7 @@ object IcebergLite {
   def read(spark: SparkSession, table: String,
            prune: Map[String, (Double, Double)] = Map.empty,
            pruneStr: Map[String, (String, String)] = Map.empty): DataFrame = {
-    val snap = readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
+    val snap = current(table)
     readFiles(spark, snap, surviving(snap, prune, pruneStr))
   }
 
@@ -1894,8 +1796,7 @@ object IcebergLite {
    * plain `read(...).where(predicate)`.
    */
   def readWhere(spark: SparkSession, table: String, predicate: Column): DataFrame =
-    readWhereSnap(spark, table, readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table")), predicate)
+    readWhereSnap(spark, table, current(table), predicate)
 
   /** [[readWhere]] at a retained historical snapshot — pruned time travel
     * (a tagged release + an AOI/key predicate opens only that release's
@@ -1928,7 +1829,7 @@ object IcebergLite {
     if (f.bloom.isEmpty || b.points.isEmpty) return true
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val schema = snap.schema
     def filterBytes(path: String): Option[Array[Byte]] =
       Option(bloomCache.computeIfAbsent(path, { p =>
         try {
@@ -1973,7 +1874,7 @@ object IcebergLite {
   private[table] def partitionPrune(snap: Snapshot, b: Bounds): PartPrune = {
     import org.apache.spark.sql.types._
     if (snap.spec.isEmpty) return PartPrune()
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val schema = snap.schema
     var in = Map.empty[String, Set[String]]
     var rn = Map.empty[String, (Double, Double)]
     var rs = Map.empty[String, (Option[String], Option[String])]
@@ -2049,8 +1950,7 @@ object IcebergLite {
    * surviving rows. Files without cover stats are conservatively kept.
    */
   def readAoi(spark: SparkSession, table: String, aoiWkt: String): DataFrame = {
-    val snap = readSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
+    val snap = current(table)
     val (f, res) = snap.spec.collectFirst {
       case pf @ PartitionField(_, _, CellT(r)) => (pf, r.toInt)
     }.getOrElse(throw new IllegalArgumentException(
@@ -2100,7 +2000,7 @@ object IcebergLite {
       AttributeReference, StartsWith}
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.types._
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val schema = snap.schema
     def fieldType(c: String) = schema.fields.find(_.name == c).map(_.dataType)
     val num = scala.collection.mutable.Map.empty[String, (Double, Double)]
     val str = scala.collection.mutable.Map.empty[String, (Option[String], Option[String])]
@@ -2223,59 +2123,60 @@ object IcebergLite {
     surviving(snap, prune, pruneStr).map(_.path)
   }
 
-  // --- minimal JSON (no external deps) -----------------------------------
+  // --- metadata codec (Jackson) ------------------------------------------
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"; case '\r' => "\\r"
-    case '\t' => "\\t"; case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+  /** Compact output with lowercase hex in control-character escapes, as
+    * earlier releases wrote them; only backspace and form feed now take
+    * their short escapes (`\b`, `\f`), which decode alike. */
+  private val Json = JsonMapper.builder().disable(JsonWriteFeature.WRITE_HEX_UPPER_CASE).build()
+
+  /** A JSON object with its fields in the given order: `None` omits the
+    * field, `Some(v)` writes `v`. */
+  private def obj(fields: (String, Any)*): java.util.Map[String, Any] = {
+    val o = new java.util.LinkedHashMap[String, Any]()
+    fields.foreach {
+      case (_, None) => ()
+      case (k, Some(v)) => o.put(k, v)
+      case (k, v) => o.put(k, v)
+    }
+    o
   }
 
-  private def jm(mm: Map[String, String]): String =
-    mm.toSeq.sortBy(_._1).map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")
+  private def sorted(m: Map[String, String]): java.util.Map[String, String] =
+    new java.util.TreeMap(m.asJava)
+  private def optMap(m: Map[String, String]) = if (m.isEmpty) None else Some(sorted(m))
+  private def optSeq(xs: Seq[Any]) = if (xs.isEmpty) None else Some(xs.asJava)
 
-  private def renderFileEntry(f: FileEntry): String = {
-    val part = if (f.partition.isEmpty) "" else s""","partition":${jm(f.partition)}"""
-    val blm = if (f.bloom.isEmpty) "" else s""","bloom":${jm(f.bloom)}"""
-    s"""{"path":"${esc(f.path)}","rows":${f.rows},"min":${jm(f.min)},"max":${jm(f.max)},"seq":${f.seq}$part$blm}"""
-  }
+  private def fileEntryJson(f: FileEntry): java.util.Map[String, Any] =
+    obj("path" -> f.path, "rows" -> f.rows, "min" -> sorted(f.min), "max" -> sorted(f.max),
+      "seq" -> f.seq, "partition" -> optMap(f.partition), "bloom" -> optMap(f.bloom))
 
-  private def renderSnapshot(s: Snapshot): String = {
-    def m(mm: Map[String, String]) = jm(mm)
-    // two-level layout: when the snapshot has a manifest plan, the file
-    // list lives in the (shared, immutable) manifest files and the
-    // snapshot carries only their paths
-    val files =
-      if (s.manifests.nonEmpty)
-        s""""manifests":${s.manifests.map(p => s""""${esc(p)}"""").mkString("[", ",", "]")}"""
-      else s""""files":${s.files.map(renderFileEntry).mkString("[", ",", "]")}"""
-    val ren = if (s.renames.isEmpty) "" else s""","renames":${m(s.renames)}"""
-    val del = if (s.deletes.isEmpty) "" else s.deletes.map(d =>
-      s"""{"path":"${esc(d.path)}","seq":${d.seq},"keys":${d.keys.map(k => s""""${esc(k)}"""").mkString("[", ",", "]")}}""")
-      .mkString(""","deletes":[""", ",", "]")
-    val cids = if (s.commitIds.isEmpty) "" else
-      s.commitIds.toSeq.sorted.map(c => s""""${esc(c)}"""")
-        .mkString(""","commit_ids":[""", ",", "]")
-    val spec = if (s.spec.isEmpty) "" else s.spec.map(f =>
-      s"""{"name":"${esc(f.name)}","source":"${esc(f.source)}","transform":"${esc(f.transform)}"}""")
-      .mkString(""","spec":[""", ",", "]")
-    val ord = s.order.map(o =>
-      s""","order":{"cols":${o.cols.map(c => s""""${esc(c)}"""").mkString("[", ",", "]")},"zorder":${o.zorder}}""")
-      .getOrElse("")
-    s"""{"id":${s.id},"parent":${s.parent},"schema":"${esc(s.schemaJson)}",$files$ren$del$cids$spec$ord}"""
-  }
+  /** Snapshot-file JSON. Two-level layout: when the snapshot has a
+    * manifest plan, the file list lives in the (shared, immutable) manifest
+    * files and the snapshot carries only their paths; otherwise the files
+    * are inline (the legacy form). */
+  private[table] def renderSnapshot(s: Snapshot): String = Json.writeValueAsString(obj(
+    "id" -> s.id, "parent" -> s.parent, "schema" -> s.schemaJson,
+    if (s.manifests.nonEmpty) "manifests" -> s.manifests.asJava
+    else "files" -> s.files.map(fileEntryJson).asJava,
+    "renames" -> optMap(s.renames),
+    "deletes" -> optSeq(s.deletes.map(d =>
+      obj("path" -> d.path, "seq" -> d.seq, "keys" -> d.keys.asJava))),
+    "commit_ids" -> optSeq(s.commitIds.toSeq.sorted),
+    "spec" -> optSeq(s.spec.map(f =>
+      obj("name" -> f.name, "source" -> f.source, "transform" -> f.transform))),
+    "order" -> s.order.map(o => obj("cols" -> o.cols.asJava, "zorder" -> o.zorder))))
 
-  private def parseFileEntry(fo: Any): FileEntry = {
-    val f = fo.asInstanceOf[Map[String, Any]]
-    FileEntry(f("path").asInstanceOf[String],
-      f("rows").asInstanceOf[Double].toLong,
-      f("min").asInstanceOf[Map[String, Any]].map { case (k, v) => k -> v.toString },
-      f("max").asInstanceOf[Map[String, Any]].map { case (k, v) => k -> v.toString },
-      f.get("seq").map(_.asInstanceOf[Double].toLong).getOrElse(0L),
-      f.get("partition").map(_.asInstanceOf[Map[String, Any]]
-        .map { case (k, v) => k -> v.toString }).getOrElse(Map.empty),
-      f.get("bloom").map(_.asInstanceOf[Map[String, Any]]
-        .map { case (k, v) => k -> v.toString }).getOrElse(Map.empty))
-  }
+  // absent fields read as empty: `path` yields a MissingNode, which has no
+  // properties and no elements
+  private def strMap(n: JsonNode): Map[String, String] =
+    n.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap
+  private def strs(n: JsonNode): List[String] = n.asScala.map(_.asText).toList
+
+  private def parseFileEntry(f: JsonNode): FileEntry =
+    FileEntry(f.get("path").asText, f.get("rows").asLong,
+      strMap(f.path("min")), strMap(f.path("max")), f.path("seq").asLong(0L),
+      strMap(f.path("partition")), strMap(f.path("bloom")))
 
   /** Manifest-file loads (cache misses) since JVM start — the metadata-read
     * meter for the two-level layout: re-reading a table whose manifests are
@@ -2291,100 +2192,24 @@ object IcebergLite {
     manifestCache.computeIfAbsent(path, { p =>
       manifestLoads.incrementAndGet()
       if (manifestCache.size > 4096) manifestCache.clear()
-      new JsonP(Files.readString(Paths.get(p))).parse()
-        .asInstanceOf[List[Any]].map(parseFileEntry)
+      Json.readTree(Paths.get(p).toFile).asScala.map(parseFileEntry).toList
     })
 
-  /** Tiny recursive-descent JSON parser for our own snapshot format. */
+  /** Parse a snapshot file, materializing its file list from the manifests
+    * (or the legacy inline `files`). Counted in [[metaParses]]. */
   private[table] def parseSnapshot(js: String): Snapshot = {
     metaParses.incrementAndGet()
-    val p = new JsonP(js)
-    val obj = p.parse().asInstanceOf[Map[String, Any]]
-    val manifests = obj.get("manifests")
-      .map(_.asInstanceOf[List[Any]].map(_.toString)).getOrElse(Nil)
-    val files = manifests.flatMap(loadManifest) ++
-      obj.get("files").map(_.asInstanceOf[List[Any]].map(parseFileEntry)).getOrElse(Nil)
-    val deletes = obj.get("deletes").map(_.asInstanceOf[List[Any]].map { dd =>
-      val d = dd.asInstanceOf[Map[String, Any]]
-      DeleteEntry(d("path").asInstanceOf[String], d("seq").asInstanceOf[Double].toLong,
-        d("keys").asInstanceOf[List[Any]].map(_.toString))
-    }).getOrElse(Nil)
-    Snapshot(obj("id").asInstanceOf[Double].toLong, obj("parent").asInstanceOf[Double].toLong,
-      obj("schema").asInstanceOf[String], files,
-      obj.get("renames").map(_.asInstanceOf[Map[String, Any]]
-        .map { case (k, v) => k -> v.toString }).getOrElse(Map.empty),
-      deletes,
-      obj.get("commit_ids").map(_.asInstanceOf[List[Any]].map(_.toString).toSet)
-        .getOrElse(Set.empty),
-      obj.get("spec").map(_.asInstanceOf[List[Any]].map { so =>
-        val f = so.asInstanceOf[Map[String, Any]]
-        PartitionField(f("name").asInstanceOf[String],
-          f("source").asInstanceOf[String], f("transform").asInstanceOf[String])
-      }).getOrElse(Nil),
-      obj.get("order").map { oo =>
-        val o = oo.asInstanceOf[Map[String, Any]]
-        SortOrder(o("cols").asInstanceOf[List[Any]].map(_.toString),
-          o("zorder").asInstanceOf[Boolean])
-      },
+    val o = Json.readTree(js)
+    val manifests = strs(o.path("manifests"))
+    Snapshot(o.get("id").asLong, o.get("parent").asLong, o.get("schema").asText,
+      manifests.flatMap(loadManifest) ++ o.path("files").asScala.map(parseFileEntry),
+      strMap(o.path("renames")),
+      o.path("deletes").asScala.map(d =>
+        DeleteEntry(d.get("path").asText, d.get("seq").asLong, strs(d.path("keys")))).toList,
+      strs(o.path("commit_ids")).toSet,
+      o.path("spec").asScala.map(f => PartitionField(f.get("name").asText,
+        f.get("source").asText, f.get("transform").asText)).toList,
+      Option(o.get("order")).map(ord => SortOrder(strs(ord.path("cols")), ord.get("zorder").asBoolean)),
       manifests)
-  }
-}
-
-/** Minimal JSON parser (objects/arrays/strings/numbers/bools/null). */
-private[table] class JsonP(s: String) {
-  private var i = 0
-  private def ws(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
-  def parse(): Any = { ws(); parseValue() }
-  private def parseValue(): Any = s.charAt(i) match {
-    case '{' =>
-      i += 1; ws()
-      val b = Map.newBuilder[String, Any]
-      if (s.charAt(i) == '}') { i += 1 }
-      else {
-        var done = false
-        while (!done) {
-          ws(); val k = parseString(); ws(); require(s.charAt(i) == ':'); i += 1; ws()
-          b += k -> parseValue(); ws()
-          if (s.charAt(i) == ',') i += 1 else { require(s.charAt(i) == '}'); i += 1; done = true }
-        }
-      }
-      b.result()
-    case '[' =>
-      i += 1; ws()
-      val b = List.newBuilder[Any]
-      if (s.charAt(i) == ']') { i += 1 }
-      else {
-        var done = false
-        while (!done) {
-          ws(); b += parseValue(); ws()
-          if (s.charAt(i) == ',') i += 1 else { require(s.charAt(i) == ']'); i += 1; done = true }
-        }
-      }
-      b.result()
-    case '"' => parseString()
-    case 't' => i += 4; true
-    case 'f' => i += 5; false
-    case 'n' => i += 4; null
-    case _ =>
-      val start = i
-      while (i < s.length && "-+.eE0123456789".indexOf(s.charAt(i)) >= 0) i += 1
-      s.substring(start, i).toDouble
-  }
-  private def parseString(): String = {
-    require(s.charAt(i) == '"'); i += 1
-    val sb = new StringBuilder
-    while (s.charAt(i) != '"') {
-      if (s.charAt(i) == '\\') {
-        i += 1
-        s.charAt(i) match {
-          case 'n' => sb += '\n'; case 'r' => sb += '\r'; case 't' => sb += '\t'
-          case 'u' => sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar; i += 4
-          case c => sb += c
-        }
-      } else sb += s.charAt(i)
-      i += 1
-    }
-    i += 1
-    sb.toString
   }
 }

@@ -124,4 +124,19 @@ class CheckpointSpec extends AnyFunSuite {
     val x2 = Checkpoint.log(spark, base2, "s").agg(expr("bit_xor(checksum)")).as[Long].head()
     assert(x1 == x2) // xor-of-xors is partition-layout independent
   }
+
+  test("replay after compaction and snapshot expiry is a no-op, not a refusal") {
+    val base = Files.createTempDirectory("graft_ckpt_expired").toString
+    val input = (0L until 40L).map(k => Tuple1(k)).toDF("k")
+    val out = Checkpoint.outputTable(base, "s")
+    Checkpoint.runStage(spark, base, "s", input.where($"k" < 20), "k", "c1")(stageCompute)
+    Checkpoint.runStage(spark, base, "s", input, "k", "c2")(stageCompute)
+    // compaction rewrites c1's rows under data/compactX, and expiry deletes
+    // every snapshot (and file) that still referenced data/c1
+    IcebergLite.compact(spark, out, Seq("k"), "compactX")
+    IcebergLite.expireSnapshots(out, keepLast = 1)
+    val (replayed, n) = Checkpoint.runStage(spark, base, "s", input, "k", "c1")(stageCompute)
+    assert(n == 0 && replayed.isEmpty)
+    assert(IcebergLite.read(spark, out).count() == 40)
+  }
 }

@@ -1272,4 +1272,58 @@ class IcebergLiteSpec extends AnyFunSuite {
     assert(IcebergLite.read(spark, t).select(sum($"k")).as[Long].head() ==
       (0 until 80).map(_.toLong).sum)
   }
+
+  // Literal metadata as the earlier hand-written renderer wrote it. The
+  // control-character escape is spliced in: a literal one would be decoded
+  // by the compiler.
+  private val u1 = "\\u0001"
+  private val everyField = raw"""{"id":7,"parent":6,"schema":"{\"type\":\"struct\",\"fields\":[{\"name\":\"k\",\"type\":\"long\",\"nullable\":true,\"metadata\":{}},{\"name\":\"s\",\"type\":\"string\",\"nullable\":true,\"metadata\":{\"comment\":\"naïve \\\"q\\\"\"}}]}","files":[{"path":"/t/data/c\"1\\x/p_p=a\nb/part-0\t.parquet","rows":12,"min":{"k":"-5","s":"é${u1}"},"max":{"k":"42","s":"ü—z"},"seq":6,"partition":{"p":"a\nb"},"bloom":{"k":"/t/blooms/c1/f0_k.bloom"}}],"renames":{"val":"v","ünï":"u\"q"},"deletes":[{"path":"/t/deletes/c2/part-0.parquet","seq":6,"keys":["k","k\\2"]}],"commit_ids":["c\"2","c1","c\\3","日本"],"spec":[{"name":"p","source":"s\tx","transform":"identity"},{"name":"b","source":"k","transform":"bucket[4]"}],"order":{"cols":["k","v"],"zorder":true}}"""
+  private val legacyInline = raw"""{"id":2,"parent":1,"schema":"{\"type\":\"struct\",\"fields\":[{\"name\":\"k\",\"type\":\"long\",\"nullable\":false,\"metadata\":{}}]}","files":[{"path":"/t/data/c1/part-0.parquet","rows":5,"min":{"k":"0"},"max":{"k":"4"}},{"path":"/t/data/c2/part-0.parquet","rows":3,"min":{"k":"5"},"max":{"k":"7"}}]}"""
+  private val manifestArray = raw"""[{"path":"/t/data/c3/p_r=EU/part-0.parquet","rows":9,"min":{"k":"1","r":"EU"},"max":{"k":"9","r":"EU"},"seq":3,"partition":{"r":"EU"}},{"path":"/t/data/c3/p_r=US/part-1.parquet","rows":4,"min":{},"max":{},"seq":3,"bloom":{"k":"/t/blooms/c3/f1_k.bloom"}}]"""
+
+  test("codec: metadata written by the earlier renderer parses, and renders back byte-identical") {
+    val schema = """{"type":"struct","fields":[{"name":"k","type":"long","nullable":true,""" +
+      """"metadata":{}},{"name":"s","type":"string","nullable":true,""" +
+      """"metadata":{"comment":"naïve \"q\""}}]}"""
+    val s = IcebergLite.parseSnapshot(everyField)
+    assert(s == IcebergLite.Snapshot(7, 6, schema,
+      Seq(IcebergLite.FileEntry("/t/data/c\"1\\x/p_p=a\nb/part-0\t.parquet", 12,
+        Map("k" -> "-5", "s" -> "é\u0001"), Map("k" -> "42", "s" -> "ü—z"), seq = 6,
+        partition = Map("p" -> "a\nb"), bloom = Map("k" -> "/t/blooms/c1/f0_k.bloom"))),
+      renames = Map("val" -> "v", "ünï" -> "u\"q"),
+      deletes = Seq(IcebergLite.DeleteEntry("/t/deletes/c2/part-0.parquet", 6, Seq("k", "k\\2"))),
+      commitIds = Set("c1", "c\"2", "c\\3", "日本"),
+      spec = Seq(IcebergLite.PartitionField("p", "s\tx", "identity"),
+        IcebergLite.PartitionField("b", "k", "bucket[4]")),
+      order = Some(IcebergLite.SortOrder(Seq("k", "v"), zorder = true))))
+    assert(IcebergLite.renderSnapshot(s) == everyField)
+
+    // pre-seq, pre-ledger inline snapshot: seq reads as 0, the ledger as empty
+    val legacy = IcebergLite.parseSnapshot(legacyInline)
+    assert(legacy.files.map(f => (f.path, f.rows, f.min, f.max, f.seq)) == Seq(
+      ("/t/data/c1/part-0.parquet", 5L, Map("k" -> "0"), Map("k" -> "4"), 0L),
+      ("/t/data/c2/part-0.parquet", 3L, Map("k" -> "5"), Map("k" -> "7"), 0L)))
+    assert(legacy.commitIds.isEmpty && legacy.manifests.isEmpty && legacy.deletes.isEmpty)
+
+    // a manifest file is loaded through the snapshot that references it
+    val mf = Files.createTempDirectory("graft_codec").resolve("manifest-3-1.json")
+    Files.writeString(mf, manifestArray)
+    val viaManifest = IcebergLite.parseSnapshot(
+      s"""{"id":3,"parent":2,"schema":"{}","manifests":["$mf"]}""")
+    assert(viaManifest.manifests == Seq(mf.toString))
+    assert(viaManifest.files == Seq(
+      IcebergLite.FileEntry("/t/data/c3/p_r=EU/part-0.parquet", 9,
+        Map("k" -> "1", "r" -> "EU"), Map("k" -> "9", "r" -> "EU"), seq = 3,
+        partition = Map("r" -> "EU")),
+      IcebergLite.FileEntry("/t/data/c3/p_r=US/part-1.parquet", 4, Map.empty, Map.empty,
+        seq = 3, bloom = Map("k" -> "/t/blooms/c3/f1_k.bloom"))))
+  }
+
+  test("codec: ids, seqs and row counts above 2^53 round-trip exactly") {
+    val big = (1L << 53) + 1
+    val s = IcebergLite.Snapshot(big, big - 1, "{}",
+      Seq(IcebergLite.FileEntry("/t/data/c/part-0.parquet", big, Map.empty, Map.empty, seq = big)),
+      deletes = Seq(IcebergLite.DeleteEntry("/t/deletes/c/part-0.parquet", big, Seq("k"))))
+    assert(IcebergLite.parseSnapshot(IcebergLite.renderSnapshot(s)) == s)
+  }
 }

@@ -42,4 +42,29 @@ class LockStressSpec extends AnyFunSuite {
     assert(maxInside.get == 1, s"double entry: maxInside=${maxInside.get}")
     assert(counter == 4000L, s"lost updates: $counter")
   }
+
+  test("lock heartbeat: a live holder outlasting staleMs still excludes a contender") {
+    val lock = Files.createTempDirectory("graft_lockbeat").resolve("COMMIT.lock")
+    val staleMs = 400L
+    val held = new java.util.concurrent.CountDownLatch(1)
+    @volatile var releasedAt = 0L
+    @volatile var contenderAt = 0L
+    val holder = new Thread(() => IcebergLite.withLockFile(lock, staleMs) {
+      held.countDown()
+      Thread.sleep(4 * staleMs) // ≥ 3× staleMs: only the heartbeat keeps the lock fresh
+      releasedAt = System.nanoTime()
+    })
+    holder.start()
+    held.await()
+    IcebergLite.withLockFile(lock, staleMs) { contenderAt = System.nanoTime() }
+    holder.join()
+    assert(contenderAt > releasedAt, "contender broke a live holder's lock")
+
+    // a dead holder's lock (no heartbeat) is still broken once stale
+    Files.createFile(lock)
+    Files.setLastModifiedTime(lock,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 10 * staleMs))
+    assert(IcebergLite.withLockFile(lock, staleMs)(42) == 42)
+    assert(!Files.exists(lock))
+  }
 }
