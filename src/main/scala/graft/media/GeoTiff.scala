@@ -548,9 +548,8 @@ object GeoTiff {
     errors.result()
   }
 
-  /** (ok, reason) classification for the validation query — same reason
-    * vocabulary as the synthetic-payload validator: header unreadable →
-    * truncated_header; tile data outside the file → body_length_mismatch;
+  /** (ok, reason) classification for the validation query: header
+    * unreadable → truncated_header; tile data outside the file → body_length_mismatch;
     * other structural COG violations verbatim. */
   def validate(bytes: Array[Byte]): (Boolean, String) = {
     if (bytes == null || bytes.length < 8) return (false, "truncated_header")

@@ -39,9 +39,6 @@ object Media {
     body
   }
 
-  val fakePayloadUdf = udf((ref: String) =>
-    fakePayload(ref, 16 + math.abs(ref.hashCode % 17), 16 + math.abs(ref.hashCode % 13), 3))
-
   case class MediaMeta(width: Int, height: Int, channels: Int, n_bytes: Long)
 
   /** Decode the SYNTHETIC payload header (the fakePayload format — kept
@@ -101,7 +98,6 @@ object Media {
     }
     out
   }
-  def resizeUdf(w2: Int, h2: Int) = udf((bytes: Array[Byte]) => resize(bytes, w2, h2))
 
   /** Sample n evenly-spaced "frames" (row blocks) — the frame-sample shape
     * for video-like payloads; returns the raw slices. */
@@ -115,7 +111,6 @@ object Media {
       java.util.Arrays.copyOfRange(bytes, from, math.min(from + rowBytes, bytes.length))
     }.toArray
   }
-  def frameSampleUdf(n: Int) = udf((bytes: Array[Byte]) => frameSample(bytes, n))
 
   /**
    * S8/S9's structural sink twin: write one payload file per (doc, band)
@@ -273,7 +268,7 @@ object Media {
     var i = 0
     while (i < out.length) { // same xorshift stream; Array.fill's per-cell
       s ^= s << 13; s ^= s >>> 7; s ^= s << 17 // closure call was ~half the
-      out(i) = (s & 0xFFFF).toInt // synth wall at 30M px (ProbeMultiband)
+      out(i) = (s & 0xFFFF).toInt // synth wall at 30M px
       i += 1
     }
     out
@@ -406,23 +401,6 @@ object Media {
        |      list_transform(generate_series(1, length($ref)), j -> ascii(substring($ref, j, 1))::bigint)),
        |    (acc, c) -> $wrap32)""".stripMargin
   }
-
-  /** Structural payload validation — the engine twin of the reference's
-    * `cog_validate` output checks (`utils/prep_utils.py:637-790`: tile
-    * layout / overview / header sanity of produced COGs): header bounds and
-    * header-vs-body length consistency of our payload format. Returns
-    * (ok, reason). */
-  def validatePayload(b: Array[Byte]): (Boolean, String) =
-    if (b == null || b.length < 5) (false, "truncated_header")
-    else {
-      val w = ((b(0) & 0xFF) << 8) | (b(1) & 0xFF)
-      val h = ((b(2) & 0xFF) << 8) | (b(3) & 0xFF)
-      val ch = b(4) & 0xFF
-      if (w <= 0 || h <= 0 || ch <= 0) (false, "bad_dims")
-      else if (b.length != 5 + w * h * ch) (false, "body_length_mismatch")
-      else (true, "ok")
-    }
-  val validatePayloadUdf = udf(validatePayload _)
 
   /**
    * Full pipeline over an interleaved-doc table: resolve band spans to media

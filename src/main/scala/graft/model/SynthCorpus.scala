@@ -142,11 +142,6 @@ object SynthCorpus {
     (graft.geom.Geo.toWkt(g), graft.geom.Geo.toWkb(g))
   }
 
-  /** Rect WKT that AM-splits wrapped boxes (xmin > xmax) into a MULTIPOLYGON. */
-  val amRectWktUdf = udf { (xmin: Double, ymin: Double, xmax: Double, ymax: Double) =>
-    graft.geom.Geo.toWkt(amRectGeom(xmin, ymin, xmax, ymax))
-  }
-
   /** Build the interleaved `spans` column: meta spans (platform, footprint)
     * then the per-platform ordered band spans with media_refs. Pure Column
     * ops — stays in codegen, no UDF. */

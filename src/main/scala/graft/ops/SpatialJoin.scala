@@ -61,9 +61,9 @@ object SpatialJoin {
    * @param dim     small side; must carry `dimWkt` column
    * @param res     cell resolution (2^res × 2^res world grid)
    * @param shuffled force the shuffle path (dimension too big to broadcast)
-   * @param saltBuckets >1 adds an explicit salt to the cell key on the probe
-   *                side and explodes the dim side ×S — skew insurance beyond
-   *                AQE's shuffle-granularity splitting
+   * @param saltBuckets >1 adds an explicit salt as a second join key on the
+   *                probe side and explodes the dim side ×S — skew insurance
+   *                beyond AQE's shuffle-granularity splitting
    */
   def intersectJoin(probe: DataFrame, probeWkt: String,
                     dim: DataFrame, dimWkt: String,
@@ -79,34 +79,27 @@ object SpatialJoin {
     val p = probe.withColumn("__cells", cover(col(probeWkt), lit(res)))
     val d = dim.withColumn("__tcells", stCellCover(col(dimWkt), lit(res)))
 
-    val (pk, dk) =
-      if (saltBuckets <= 1)
-        (p.withColumn("__cell", explode(col("__cells"))),
-         d.withColumn("__cell", explode(col("__tcells"))))
-      else {
-        // probe rows get one deterministic salt; dim rows replicate ×S
-        val salted = p.withColumn("__salt", pmod(xxhash64(col(probeWkt)), lit(saltBuckets)))
-          .withColumn("__cell0", explode(col("__cells")))
-          .withColumn("__cell", concat_ws(":", col("__cell0"), col("__salt")))
-        val dimRep = d.withColumn("__salt", explode(lit((0 until saltBuckets).toArray)))
-          .withColumn("__cell0", explode(col("__tcells")))
-          .withColumn("__cell", concat_ws(":", col("__cell0"), col("__salt")))
-        (salted.drop("__cell0", "__salt"), dimRep.drop("__cell0", "__salt"))
-      }
+    val pc = p.withColumn("__cell", explode(col("__cells")))
+    val dc = d.withColumn("__cell", explode(col("__tcells")))
+    val (pk, dk, keys) =
+      if (saltBuckets <= 1) (pc, dc, Seq("__cell"))
+      else
+        // probe rows get one deterministic salt; dim rows replicate ×S; both
+        // salts are longs, so (__cell, __salt) is a typed two-column key
+        (pc.withColumn("__salt", pmod(xxhash64(col(probeWkt)), lit(saltBuckets.toLong))),
+         dc.withColumn("__salt", explode(lit((0L until saltBuckets.toLong).toArray))),
+         Seq("__cell", "__salt"))
 
     // shuffle_hash hint: without it AQE converts the join back to broadcast
     // whenever the dim side is small (true at test scale, false at the
     // 60k-polygon+ scale this path exists for) — the hint keeps the
     // measured plan the one that actually runs at scale
     val dimSide = if (shuffled) dk.hint("shuffle_hash") else broadcast(dk)
-    pk.join(dimSide, "__cell")
+    pk.join(dimSide, keys)
       // shuffle-free dedup: emit the pair only on the min shared cell
-      .where(
-        (if (saltBuckets <= 1) col("__cell")
-         else split(col("__cell"), ":").getItem(0).cast("long"))
-          === array_min(array_intersect(col("__cells"), col("__tcells"))))
+      .where(col("__cell") === array_min(array_intersect(col("__cells"), col("__tcells"))))
       // exact geometric refine (reference: shapely intersects, cell 10)
       .where(refine(col(dimWkt), col(probeWkt)))
-      .drop("__cell", "__cells", "__tcells")
+      .drop("__cell", "__salt", "__cells", "__tcells")
   }
 }

@@ -160,11 +160,4 @@ object CleanMask {
 
   def s2Column(scl: Column): Column = scl.isin(s2Clearsky: _*)
   def s2Sql(sclCol: String): String = s"$sclCol IN (${s2Clearsky.mkString(", ")})"
-
-  /** landsat_clean_mask_invalid (`dc_clean_mask.py:103-121`): all bands in
-    * (0, 10000). */
-  def invalidColumn(bands: Seq[String]): Column =
-    bands.map(b => col(b) > 0 && col(b) < 10000).reduce(_ && _)
-  def invalidSql(bands: Seq[String]): String =
-    bands.map(b => s"($b > 0 AND $b < 10000)").mkString(" AND ")
 }

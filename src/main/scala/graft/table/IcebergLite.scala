@@ -33,7 +33,9 @@ import scala.jdk.CollectionConverters._
  * per-commitId claims — is one O_EXCL lock file with a heartbeat
  * ([[withLockFile]]). Every pointer — CURRENT and the refs — is written by
  * [[graft.Fs.writePointer]]. "Was this commitId committed?" is one read of
- * the current snapshot's cumulative ledger ([[alreadyCommitted]]).
+ * the current snapshot's cumulative ledger ([[alreadyCommitted]]). Every
+ * pruned read selects its files through [[surviving]], and every lineage
+ * question walks [[ancestry]].
  *
  * Scale notes: manifest min/max over the Morton cell id gives partition
  * pruning for spatial range scans (children of a parent cell are an id
@@ -165,6 +167,42 @@ object IcebergLite {
     if (Files.exists(p)) Some(parseSnapshot(Files.readString(p))) else None
   }
 
+  /** Snapshot `id` as named by a caller: one that does not exist is the
+    * caller's error. */
+  private def requireSnapshot(table: String, id: Long): Snapshot =
+    snapshotAt(table, id).getOrElse(
+      throw new IllegalArgumentException(s"no snapshot $id in $table"))
+
+  /** Snapshot `id` as named by table metadata (a parent link, a branch
+    * head): a missing one was expired — an IllegalStateException. */
+  private def retained(table: String, id: Long, why: String): Snapshot =
+    snapshotAt(table, id).getOrElse(throw new IllegalStateException(
+      s"snapshot $id of $table is missing (expired?) - $why"))
+
+  /** The lineage walk: `from`, then each ancestor by parent link, newest
+    * first. Lazy — an ancestor is parsed only when the walk reaches it, so
+    * a caller that stops early parses no further. A missing ancestor ends
+    * the walk, or throws ([[retained]]) when `why` says what it blocks. */
+  private def ancestry(table: String, from: Snapshot,
+                       why: Option[String] = None): Iterator[Snapshot] =
+    Iterator.iterate(Option(from))(_.flatMap { s =>
+      if (s.parent < 0) None
+      else why.fold(snapshotAt(table, s.parent))(w => Some(retained(table, s.parent, w)))
+    }).takeWhile(_.isDefined).map(_.get)
+
+  /** The append-delta check: the files `child` added over `parent`, or None
+    * when it dropped a parent file or changed the equality deletes (compared
+    * by (path, seq): swapping one delete for another passes a size check
+    * yet has no well-defined append delta). */
+  private def appendDelta(child: Snapshot, parent: Snapshot): Option[Seq[FileEntry]] = {
+    val childPaths = child.files.map(_.path).toSet
+    val parentPaths = parent.files.map(_.path).toSet
+    def deleteSet(s: Snapshot) = s.deletes.map(d => (d.path, d.seq)).toSet
+    if (parentPaths.subsetOf(childPaths) && deleteSet(child) == deleteSet(parent))
+      Some(child.files.filterNot(f => parentPaths.contains(f.path)))
+    else None
+  }
+
   /** All snapshot ids, oldest first — the table's commit lineage. */
   def snapshots(table: String): Seq[Long] = {
     val d = metaDir(table)
@@ -183,8 +221,7 @@ object IcebergLite {
   /** Time-travel read: the table exactly as of snapshot `id` (Iceberg's
     * `VERSION AS OF`). Files of later commits are invisible. */
   def readAt(spark: SparkSession, table: String, id: Long): DataFrame = {
-    val snap = snapshotAt(table, id).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $id in $table"))
+    val snap = requireSnapshot(table, id)
     readFiles(spark, snap, snap.files)
   }
 
@@ -221,54 +258,39 @@ object IcebergLite {
   def readIncrementalWhere(spark: SparkSession, table: String,
                            fromId: Long, toId: Long, predicate: Column): DataFrame = {
     val (to, delta) = incrementalDelta(table, fromId, toId)
-    val b = extractBounds(spark, to, predicate)
-    val files = surviving(to.copy(files = delta), b.num, Map.empty, b.inNum, b.inStr,
-      b.str, partitionPrune(to, b)).filter(bloomKeeps(to, _, b))
-    readFiles(spark, to, files).where(predicate)
+    readPruned(spark, to, delta, predicate)
   }
 
   /** Validate that every snapshot in `(fromId, toId]` is row-additive and
     * return `toId`'s snapshot plus the delta's file entries. */
   private def incrementalDelta(table: String, fromId: Long,
                                toId: Long): (Snapshot, Seq[FileEntry]) = {
-    val to = snapshotAt(table, toId).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $toId in $table"))
-    var cur = to
-    var done = false
-    while (!done) {
-      if (cur.id == fromId) done = true
+    val to = requireSnapshot(table, toId)
+    val walk = ancestry(table, to, Some("incremental range unreadable"))
+    val notAncestor = s"snapshot $fromId is not an ancestor of $toId in $table"
+    @annotation.tailrec
+    def check(cur: Snapshot): Unit = if (cur.id != fromId) {
+      require(cur.id > fromId, notAncestor)
+      if (!walk.hasNext) require(fromId == -1L, notAncestor)
       else {
-        require(cur.id > fromId, s"snapshot $fromId is not an ancestor of $toId in $table")
-        if (cur.parent < 0) {
-          require(fromId == -1L, s"snapshot $fromId is not an ancestor of $toId in $table")
-          done = true
-        } else {
-          val p = snapshotAt(table, cur.parent).getOrElse(throw new IllegalStateException(
-            s"snapshot ${cur.parent} of $table is missing (expired?) - incremental range unreadable"))
-          val curPaths = cur.files.map(_.path).toSet
-          // delete sets compared by ENTRY (path, seq), not count: a commit
-          // swapping one delete for another while carrying all parent files
-          // would pass a size check yet have no well-defined append delta
-          require(p.files.forall(f => curPaths.contains(f.path))
-              && cur.deletes.map(d => (d.path, d.seq)).toSet
-                == p.deletes.map(d => (d.path, d.seq)).toSet,
-            s"snapshot ${cur.id} of $table is a replacing or delete commit - incremental " +
-              "append scan is undefined across it; read the full snapshot instead")
-          // files ADDED at this commit must carry a seq inside the requested
-          // range, or the delta selection below would silently drop them —
-          // pre-upgrade manifests parse with seq 0, and a table whose
-          // lineage says otherwise must refuse loudly, not return an
-          // incomplete delta (the same conservatism replacing commits get)
-          val parentPaths = p.files.map(_.path).toSet
-          cur.files.filterNot(f => parentPaths.contains(f.path)).foreach { f =>
-            require(f.seq > fromId && f.seq <= toId,
-              s"file ${f.path} added by snapshot ${cur.id} of $table records seq ${f.seq} " +
-                s"outside ($fromId, $toId] - pre-upgrade manifest; read the full snapshot instead")
-          }
-          cur = p
+        val p = walk.next()
+        val added = appendDelta(cur, p).getOrElse(throw new IllegalArgumentException(
+          s"snapshot ${cur.id} of $table is a replacing or delete commit - incremental " +
+            "append scan is undefined across it; read the full snapshot instead"))
+        // files ADDED at this commit must carry a seq inside the requested
+        // range, or the delta selection below would silently drop them —
+        // pre-upgrade manifests parse with seq 0, and a table whose
+        // lineage says otherwise must refuse loudly, not return an
+        // incomplete delta (the same conservatism replacing commits get)
+        added.foreach { f =>
+          require(f.seq > fromId && f.seq <= toId,
+            s"file ${f.path} added by snapshot ${cur.id} of $table records seq ${f.seq} " +
+              s"outside ($fromId, $toId] - pre-upgrade manifest; read the full snapshot instead")
         }
+        check(p)
       }
     }
+    check(walk.next())
     (to, to.files.filter(f => f.seq > fromId && f.seq <= toId))
   }
 
@@ -479,16 +501,7 @@ object IcebergLite {
     // cross-batch unification is compact's job, exactly as in Iceberg)
     def orderExprs(o: SortOrder): Seq[Column] =
       if (!o.zorder) o.cols.map(c => col(physFn(c)))
-      else {
-        val aggs = o.cols.flatMap(c => Seq(
-          min(col(physFn(c))).cast("double").as(s"lo_$c"),
-          max(col(physFn(c))).cast("double").as(s"hi_$c")))
-        val b = phys.agg(aggs.head, aggs.tail: _*).collect()(0)
-        def d(n: String): Double =
-          Option(b.getAs[java.lang.Double](n)).fold(Double.NaN)(_.doubleValue)
-        Seq(ZOrder.zvalue(o.cols.map(c =>
-          col(physFn(c)) -> (d(s"lo_$c"), d(s"hi_$c")))))
-      }
+      else Seq(zorderKey(phys, o.cols.map(physFn)))
     if (spec.isEmpty) {
       val out = order.fold(phys) { o =>
         val es = orderExprs(o)
@@ -510,6 +523,18 @@ object IcebergLite {
         .partitionBy(spec.map(partColName): _*)
         .parquet(dir)
     }
+  }
+
+  /** The z-order key over `cols` of `df`, quantized against `df`'s own
+    * bounds (one aggregation job). All-null or empty bounds degrade to a
+    * constant dimension (no NPE). */
+  private def zorderKey(df: DataFrame, cols: Seq[String]): Column = {
+    val aggs = cols.flatMap(c => Seq(
+      min(col(c)).cast("double").as(s"lo_$c"), max(col(c)).cast("double").as(s"hi_$c")))
+    val b = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    def d(n: String): Double =
+      Option(b.getAs[java.lang.Double](n)).fold(Double.NaN)(_.doubleValue)
+    ZOrder.zvalue(cols.map(c => col(c) -> (d(s"lo_$c"), d(s"hi_$c"))))
   }
 
   /** The hidden-partition derivation for one spec field (logical `source`
@@ -673,15 +698,7 @@ object IcebergLite {
         // pass, then range-partition + sort on the interleaved key — every
         // zorderBy column gets ~multiplicatively tight per-file min/max, so
         // conjunctive range reads (AOI scans) prune on ALL of them at once.
-        val aggs = effZ.flatMap(c => Seq(
-          min(col(c)).cast("double").as(s"lo_$c"),
-          max(col(c)).cast("double").as(s"hi_$c")))
-        val b = cur.agg(aggs.head, aggs.tail: _*).collect()(0)
-        // all-null/empty bounds degrade to a constant dimension (no NPE)
-        def d(n: String): Double =
-          Option(b.getAs[java.lang.Double](n)).fold(Double.NaN)(_.doubleValue)
-        val z = ZOrder.zvalue(effZ.map(c =>
-          col(c) -> (d(s"lo_$c"), d(s"hi_$c"))))
+        val z = zorderKey(cur, effZ)
         cur.repartitionByRange(target, z).sortWithinPartitions(z)
       }
       else if (effSort.nonEmpty)
@@ -1023,8 +1040,7 @@ object IcebergLite {
           // branch commits CAS the BRANCH pointer, never CURRENT; no
           // mechanical rebase — staging branches are single-writer,
           // conflicts are loud
-          val headId = branches(table).getOrElse(b,
-            throw new IllegalArgumentException(s"no branch $b in $table"))
+          val headId = branchHead(table, b)
           if (headId != snap.parent) throw new CommitConflictException(
             s"branch $b of $table advanced to $headId while committing " +
               s"against ${snap.parent}; re-run")
@@ -1181,27 +1197,22 @@ object IcebergLite {
     val pr = updates.agg(probeAggs.head, probeAggs.tail: _*).collect()(0)
     require(pr.getAs[Long]("__n") == pr.getAs[Long]("__nd"),
       s"merge updates contain duplicate ${keyCols.mkString(",")} keys")
-    val numericKey = keyCols.map(c => c -> schema.fields.find(_.name == c)
-      .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])).toMap
-    val range = keyCols.flatMap { c =>
+    // the batch's key ranges as scan bounds: a file can hold a matched key
+    // tuple only if EVERY key column's stored range overlaps the batch's
+    // (numeric keys compare as numbers, others by their string form)
+    val keyBounds = keyCols.foldLeft(Bounds()) { (b, c) =>
       (Option(pr.getAs[String](s"__min_$c")), Option(pr.getAs[String](s"__max_$c"))) match {
-        case (Some(lo), Some(hi)) => Some(c -> (lo, hi))
-        case _ => None // all-null key column in updates: no range to prune on
+        case (Some(lo), Some(hi)) if schema.fields.find(_.name == c)
+            .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]) =>
+          b.copy(num = b.num + (c -> (lo.toDouble, hi.toDouble)))
+        case (Some(lo), Some(hi)) => b.copy(str = b.str + (c -> (Some(lo), Some(hi))))
+        case _ => b // all-null key column in updates: no range to prune on
       }
-    }.toMap
-    // a file can hold a matched key tuple only if EVERY key column's stored
-    // range overlaps the batch range — one provably-disjoint column clears it
-    def disjoint(f: FileEntry, c: String): Boolean =
-      (f.min.get(c), f.max.get(c), range.get(c)) match {
-        case (Some(mn), Some(mx), Some((lo, hi))) if mn != "null" && mx != "null" =>
-          if (numericKey(c)) mx.toDouble < lo.toDouble || mn.toDouble > hi.toDouble
-          else mx < lo || mn > hi
-        case _ => false // stat or range missing: conservatively touched
-      }
-    val (carried, touched) = snap.files.partition(f => keyCols.exists(disjoint(f, _)))
-    val retained = readFiles(spark, snap, touched) // applies pending deletes
+    }
+    val (touched, carried) = snap.files.partition(f => keyBounds.admits(f.min, f.max))
+    val kept = readFiles(spark, snap, touched) // applies pending deletes
       .join(aligned.select(keyCols.map(col): _*), keyCols, "left_anti")
-    writeData(retained.unionByName(aligned), table, commitId)
+    writeData(kept.unionByName(aligned), table, commitId)
     commitWritten(spark, snap.schemaJson, table, (statsCols ++ keyCols).distinct,
       commitId, keepPrev = false, carryFiles = carried,
       // carried files were not rewritten, so deletes pending against them
@@ -1234,24 +1245,26 @@ object IcebergLite {
       countDistinct(struct(keyCols.map(col): _*)).as("__nd")).collect()(0)
     require(nDup.getAs[Long]("__n") == nDup.getAs[Long]("__nd"),
       s"merge updates contain duplicate ${keyCols.mkString(",")} keys")
-    // delete file: the batch's key tuples under stable PHYSICAL names —
-    // written BEFORE the snapshot swap, so a crash leaves both unreferenced
-    val delDir = Paths.get(table, "deletes", commitId)
-    toPhysical(updates.select(keyCols.map(col): _*), table)
-      .coalesce(1).write.mode("overwrite").parquet(delDir.toString)
-    val delFile = {
-      val st = Files.list(delDir)
-      try st.iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".parquet")).toSeq.sorted.head
-      finally st.close()
-    }
+    // the delete file is written BEFORE the snapshot swap, so a crash
+    // leaves it and the update rows unreferenced
+    val del = writeDeletes(table, snap, updates, keyCols, commitId)
     writeData(aligned, table, commitId)
-    val physKeys = keyCols.map(snap.physical)
-    val nextId = snap.id + 1
     commitWritten(spark, snap.schemaJson, table, (statsCols ++ keyCols).distinct,
-      commitId, keepPrev = true,
-      carryDeletes = Seq(DeleteEntry(delFile, nextId, physKeys)),
-      basedOn = Some(snap))
+      commitId, keepPrev = true, carryDeletes = Seq(del), basedOn = Some(snap))
+  }
+
+  /** Write the `keyCols` tuples of `keys` as the equality-delete file of
+    * the commit after `snap`, under stable PHYSICAL column names. */
+  private def writeDeletes(table: String, snap: Snapshot, keys: DataFrame,
+                           keyCols: Seq[String], commitId: String): DeleteEntry = {
+    val delDir = Paths.get(table, "deletes", commitId)
+    toPhysical(keys.select(keyCols.map(col): _*), table)
+      .coalesce(1).write.mode("overwrite").parquet(delDir.toString)
+    val st = Files.list(delDir)
+    val delFile = try st.iterator().asScala.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSeq.sorted.head
+    finally st.close()
+    DeleteEntry(delFile, snap.id + 1, keyCols.map(snap.physical))
   }
 
   /** Row-level DELETE (Iceberg's `DELETE FROM ... WHERE key IN ...`, the
@@ -1275,18 +1288,8 @@ object IcebergLite {
       require(got == want,
         s"deleteKeys type mismatch for $table: table has ${want.toSeq.sorted
           .mkString(", ")} but the batch has ${got.toSeq.sorted.mkString(", ")}")
-      val delDir = Paths.get(table, "deletes", commitId)
-      toPhysical(sel.distinct(), table)
-        .coalesce(1).write.mode("overwrite").parquet(delDir.toString)
-      val delFile = {
-        val st = Files.list(delDir)
-        try st.iterator().asScala.map(_.toString)
-          .filter(_.endsWith(".parquet")).toSeq.sorted.head
-        finally st.close()
-      }
-      val physKeys = keyCols.map(snap.physical)
       commitSnapshot(table, snap.copy(id = snap.id + 1, parent = snap.id,
-        deletes = snap.deletes :+ DeleteEntry(delFile, snap.id + 1, physKeys),
+        deletes = snap.deletes :+ writeDeletes(table, snap, sel.distinct(), keyCols, commitId),
         commitIds = snap.commitIds + commitId))
     }
   }
@@ -1305,17 +1308,11 @@ object IcebergLite {
     * diverged (the files' layout is the staged lineage's). */
   def cherryPick(spark: SparkSession, table: String, stagedId: Long): Snapshot =
     retryOnConflict() {
-      val s = snapshotAt(table, stagedId).getOrElse(
-        throw new IllegalArgumentException(s"no snapshot $stagedId in $table"))
-      val p = snapshotAt(table, s.parent).getOrElse(throw new IllegalStateException(
-        s"snapshot ${s.parent} of $table is missing (expired?) - cannot verify " +
-          "the staged delta"))
-      val sPaths = s.files.map(_.path).toSet
-      require(p.files.forall(f => sPaths.contains(f.path))
-          && s.deletes.map(d => (d.path, d.seq)).toSet
-            == p.deletes.map(d => (d.path, d.seq)).toSet,
+      val s = requireSnapshot(table, stagedId)
+      val p = retained(table, s.parent, "cannot verify the staged delta")
+      val delta = appendDelta(s, p).getOrElse(throw new IllegalArgumentException(
         s"snapshot $stagedId of $table is not a pure append over its parent - " +
-          "only append increments can be cherry-picked")
+          "only append increments can be cherry-picked"))
       val cids = s.commitIds -- p.commitIds
       require(cids.size == 1,
         s"snapshot $stagedId of $table added ${cids.size} commitIds (expected 1)")
@@ -1327,7 +1324,6 @@ object IcebergLite {
             && cur.renames == s.renames,
           s"$table's schema/spec/renames diverged from the staged lineage; " +
             "re-stage against the current snapshot instead")
-        val delta = s.files.filter(_.seq == s.id)
         commitSnapshot(table, Snapshot(cur.id + 1, cur.id, cur.schemaJson,
           cur.files ++ delta.map(_.copy(seq = cur.id + 1)), cur.renames,
           cur.deletes, cur.commitIds + cid, cur.spec, cur.order))
@@ -1480,8 +1476,12 @@ object IcebergLite {
   /** The audit read: the branch head's full state (fork-point data plus
     * everything staged since). */
   def readBranch(spark: SparkSession, table: String, name: String): DataFrame =
-    readAt(spark, table, branches(table).getOrElse(name,
-      throw new IllegalArgumentException(s"no branch $name in $table")))
+    readAt(spark, table, branchHead(table, name))
+
+  /** Branch `name`'s head snapshot id. */
+  private def branchHead(table: String, name: String): Long =
+    branches(table).getOrElse(name,
+      throw new IllegalArgumentException(s"no branch $name in $table"))
 
   /** [[append]] onto a branch: same schema check, layout (the branch
     * lineage's spec + declared SortOrder), stats, and commit protocol, but
@@ -1495,10 +1495,7 @@ object IcebergLite {
   def appendToBranch(spark: SparkSession, df: DataFrame, table: String,
                      branch: String, statsCols: Seq[String],
                      commitId: String): Snapshot = {
-    val headId = branches(table).getOrElse(branch,
-      throw new IllegalArgumentException(s"no branch $branch in $table"))
-    val head = snapshotAt(table, headId).getOrElse(throw new IllegalStateException(
-      s"branch $branch head $headId of $table is missing (expired?)"))
+    val head = retained(table, branchHead(table, branch), s"head of branch $branch")
     require(!ledgerOf(table, head).contains(commitId),
       s"commitId $commitId already committed on $table's $branch lineage")
     val aligned = alignToSchema(df, head.schema, table, s"appendToBranch($branch)")
@@ -1514,20 +1511,13 @@ object IcebergLite {
     * The branch pointer survives (drop it when done); re-running after
     * success is a no-op swap to the same id. */
   def fastForward(table: String, branch: String): Snapshot = withCommitLock(table) {
-    val headId = branches(table).getOrElse(branch,
-      throw new IllegalArgumentException(s"no branch $branch in $table"))
-    val head = snapshotAt(table, headId).getOrElse(throw new IllegalStateException(
-      s"branch $branch head $headId of $table is missing (expired?)"))
+    val head = retained(table, branchHead(table, branch), s"head of branch $branch")
     val cur = current(table)
-    var p = head
-    while (p.id != cur.id && p.parent >= 0L)
-      p = snapshotAt(table, p.parent).getOrElse(throw new IllegalStateException(
-        s"snapshot ${p.parent} of $table is missing (expired?) - " +
-          s"branch $branch lineage unverifiable"))
-    if (p.id != cur.id) throw new CommitConflictException(
-      s"$table advanced past branch $branch's fork point (current ${cur.id} " +
-        s"not on the branch lineage); re-stage against the new current and re-run")
-    graft.Fs.writePointer(metaDir(table).resolve("CURRENT"), headId.toString)
+    if (!ancestry(table, head, Some(s"branch $branch lineage unverifiable")).exists(_.id == cur.id))
+      throw new CommitConflictException(
+        s"$table advanced past branch $branch's fork point (current ${cur.id} " +
+          s"not on the branch lineage); re-stage against the new current and re-run")
+    graft.Fs.writePointer(metaDir(table).resolve("CURRENT"), head.id.toString)
     head
   }
 
@@ -1566,15 +1556,9 @@ object IcebergLite {
     require(keepLast >= 1, "must keep at least the current snapshot")
     val all = snapshots(table)
     val floor = consumers(table).values.minOption
-    def lineage(from: Long): Set[Long] = {
-      var out = Set.empty[Long]
-      var id = from
-      while (id >= 0 && !out.contains(id)) {
-        out += id
-        id = snapshotAt(table, id).map(_.parent).getOrElse(-1L)
-      }
-      out
-    }
+    // retention stops at the first expired ancestor
+    def lineage(from: Long): Set[Long] =
+      snapshotAt(table, from).iterator.flatMap(ancestry(table, _)).map(_.id).toSet
     // Retention is REACHABILITY-based, not id-window-based: keep the newest
     // keepLast snapshots OF THE CURRENT LINEAGE, every tagged snapshot, and
     // every live branch's full lineage (fastForward's ancestor walk needs
@@ -1592,12 +1576,10 @@ object IcebergLite {
     val kept = all.filterNot(expired.contains)
     if (expired.isEmpty) return (Nil, 0)
     val keptSnaps = kept.flatMap(snapshotAt(table, _))
-    def paths(s: Snapshot): Seq[String] =
-      s.files.map(_.path) ++ s.deletes.map(_.path) ++ s.files.flatMap(_.bloom.values)
-    val referenced = keptSnaps.flatMap(paths).toSet
+    val referenced = keptSnaps.flatMap(referencedPaths).toSet
     // normalize: manifest paths may carry a file: scheme prefix
     def toFsPath(p: String) = Paths.get(p.stripPrefix("file:"))
-    val candidates = expired.flatMap(snapshotAt(table, _)).flatMap(paths).distinct
+    val candidates = expired.flatMap(snapshotAt(table, _)).flatMap(referencedPaths).distinct
       .filterNot(referenced.contains)
     var deleted = 0
     candidates.foreach { p =>
@@ -1646,8 +1628,7 @@ object IcebergLite {
   def removeOrphanFiles(table: String,
                         olderThanMillis: Long = 3L * 24 * 3600 * 1000,
                         nowMillis: Long = System.currentTimeMillis): (Int, Long) = {
-    val referenced = snapshots(table).flatMap(snapshotAt(table, _)).flatMap(s =>
-      s.files.map(_.path) ++ s.deletes.map(_.path) ++ s.files.flatMap(_.bloom.values))
+    val referenced = snapshots(table).flatMap(snapshotAt(table, _)).flatMap(referencedPaths)
       .map(p => Paths.get(p.stripPrefix("file:")).toAbsolutePath.normalize).toSet
     val cutoff = nowMillis - olderThanMillis
     var deleted = 0
@@ -1701,6 +1682,11 @@ object IcebergLite {
     (deleted, bytes)
   }
 
+  /** Every data, delete and Bloom sidecar file `s` references — what
+    * retention and the orphan sweep must keep while `s` is retained. */
+  private def referencedPaths(s: Snapshot): Seq[String] =
+    s.files.map(_.path) ++ s.deletes.map(_.path) ++ s.files.flatMap(_.bloom.values)
+
   /** Rollback (Iceberg's `rollback_to_snapshot`): a METADATA-ONLY commit
     * that restores the table to snapshot `id`'s exact state (files, schema,
     * renames, pending deletes) under a NEW snapshot id — history is never
@@ -1711,8 +1697,7 @@ object IcebergLite {
     * expired, or (explicitly, as an admin override) a staged branch
     * snapshot; the guarded publish path for branches is [[fastForward]]. */
   def rollbackTo(table: String, id: Long): Snapshot = retryOnConflict() {
-    val target = snapshotAt(table, id).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $id in $table"))
+    val target = requireSnapshot(table, id)
     val curSnap = current(table)
     // ledger is the union: the rolled-back-over commits WERE committed, and
     // a crash-retry of one of them after the rollback must stay a no-op
@@ -1720,56 +1705,14 @@ object IcebergLite {
       commitIds = curSnap.commitIds ++ target.commitIds))
   }
 
-  /** Per-file PARTITION-VALUE constraints — evaluated BEFORE column
-    * min/max stats ([[surviving]]); a partition value is a single exact
-    * value per file, so membership/range checks are exact, not ranges of
-    * ranges. Files without a value for a constrained field (pre-spec
-    * commits, null partitions) are conservatively kept. */
-  private[table] case class PartPrune(in: Map[String, Set[String]] = Map.empty,
-                                      rangeNum: Map[String, (Double, Double)] = Map.empty,
-                                      rangeStr: Map[String, (Option[String], Option[String])] = Map.empty) {
-    def isEmpty: Boolean = in.isEmpty && rangeNum.isEmpty && rangeStr.isEmpty
-    def keeps(f: FileEntry): Boolean =
-      in.forall { case (n, vs) => f.partition.get(n).forall(vs.contains) } &&
-        rangeNum.forall { case (n, (lo, hi)) =>
-          f.partition.get(n).forall { v => val d = v.toDouble; d >= lo && d <= hi } } &&
-        rangeStr.forall { case (n, (lo, hi)) =>
-          f.partition.get(n).forall(v => !(lo.exists(v < _) || hi.exists(v > _))) }
-  }
-
-  private def surviving(snap: Snapshot, prune: Map[String, (Double, Double)],
-                        pruneStr: Map[String, (String, String)],
-                        pruneInNum: Map[String, Seq[Double]] = Map.empty,
-                        pruneInStr: Map[String, Seq[String]] = Map.empty,
-                        pruneStrOpt: Map[String, (Option[String], Option[String])] = Map.empty,
-                        partPrune: PartPrune = PartPrune())
-      : Seq[FileEntry] =
-    snap.files.filter(partPrune.keeps).filter { f =>
-      def stats(c: String): Option[(String, String)] =
-        (f.min.get(c), f.max.get(c)) match {
-          case (Some(mn), Some(mx)) if mn != "null" && mx != "null" => Some((mn, mx))
-          case _ => None // stat missing or all-null file: conservatively kept
-        }
-      prune.forall { case (c, (lo, hi)) =>
-        stats(c).forall { case (mn, mx) => !(mx.toDouble < lo || mn.toDouble > hi) }
-      } && pruneStr.forall { case (c, (lo, hi)) =>
-        stats(c).forall { case (mn, mx) => !(mx < lo || mn > hi) } // lexicographic
-      } && pruneInNum.forall { case (c, vs) =>
-        // IN-list: kept iff ANY candidate value can be in the file's range —
-        // tighter than collapsing the set to its [min,max] envelope when the
-        // set has gaps spanning whole files
-        stats(c).forall { case (mn, mx) =>
-          val (lo, hi) = (mn.toDouble, mx.toDouble); vs.exists(v => v >= lo && v <= hi)
-        }
-      } && pruneInStr.forall { case (c, vs) =>
-        stats(c).forall { case (mn, mx) => vs.exists(v => v >= mn && v <= mx) }
-      } && pruneStrOpt.forall { case (c, (lo, hi)) =>
-        // one-sided lexicographic bounds are sound on their own: max < lo
-        // (or min > hi) proves every row misses, whatever the other side
-        stats(c).forall { case (mn, mx) =>
-          !(lo.exists(mx < _) || hi.exists(mn > _)) }
-      }
-    }
+  /** The file selection of every pruned read: a file survives iff its
+    * partition values can satisfy `part` ([[partitionPrune]]; evaluated
+    * first, each value the degenerate range [v, v]) and its manifest
+    * min/max can satisfy `b`. [[merge]]'s file targeting is the same
+    * [[Bounds.admits]] test on the batch's key ranges. */
+  private def surviving(files: Seq[FileEntry], b: Bounds,
+                        part: Bounds = Bounds()): Seq[FileEntry] =
+    files.filter(f => part.admits(f.partition, f.partition) && b.admits(f.min, f.max))
 
   /** Read the current snapshot, pruning files against manifest min/max:
     * `prune` takes numeric ranges, `pruneStr` lexicographic string ranges
@@ -1780,7 +1723,7 @@ object IcebergLite {
            prune: Map[String, (Double, Double)] = Map.empty,
            pruneStr: Map[String, (String, String)] = Map.empty): DataFrame = {
     val snap = current(table)
-    readFiles(spark, snap, surviving(snap, prune, pruneStr))
+    readFiles(spark, snap, surviving(snap.files, Bounds.closed(prune, pruneStr)))
   }
 
   /**
@@ -1795,8 +1738,10 @@ object IcebergLite {
    * expressions) simply contributes no pruning — results are always the
    * plain `read(...).where(predicate)`.
    */
-  def readWhere(spark: SparkSession, table: String, predicate: Column): DataFrame =
-    readWhereSnap(spark, table, current(table), predicate)
+  def readWhere(spark: SparkSession, table: String, predicate: Column): DataFrame = {
+    val snap = current(table)
+    readPruned(spark, snap, snap.files, predicate)
+  }
 
   /** [[readWhere]] at a retained historical snapshot — pruned time travel
     * (a tagged release + an AOI/key predicate opens only that release's
@@ -1804,16 +1749,19 @@ object IcebergLite {
     * and Bloom sidecars drive the pruning, so a historical read scales the
     * same way a current one does. */
   def readWhereAt(spark: SparkSession, table: String, id: Long,
-                  predicate: Column): DataFrame =
-    readWhereSnap(spark, table, snapshotAt(table, id).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $id in $table")), predicate)
+                  predicate: Column): DataFrame = {
+    val snap = requireSnapshot(table, id)
+    readPruned(spark, snap, snap.files, predicate)
+  }
 
-  private def readWhereSnap(spark: SparkSession, table: String, snap: Snapshot,
-                            predicate: Column): DataFrame = {
+  /** Prune-then-filter: `files` (of `snap`) through partition values,
+    * manifest min/max and Bloom sidecars, then the full predicate on the
+    * surviving rows. */
+  private def readPruned(spark: SparkSession, snap: Snapshot, files: Seq[FileEntry],
+                         predicate: Column): DataFrame = {
     val b = extractBounds(spark, snap, predicate)
-    val files = surviving(snap, b.num, Map.empty, b.inNum, b.inStr, b.str,
-      partitionPrune(snap, b)).filter(bloomKeeps(snap, _, b))
-    readFiles(spark, snap, files).where(predicate)
+    val kept = surviving(files, b, partitionPrune(snap, b)).filter(bloomKeeps(snap, _, b))
+    readFiles(spark, snap, kept).where(predicate)
   }
 
   /** Sidecar byte cache for [[bloomKeeps]] — filters are immutable once
@@ -1861,19 +1809,21 @@ object IcebergLite {
 
   /**
    * Map the predicate's per-SOURCE-column bounds ([[extractBounds]]) through
-   * the table's partition spec into per-FILE partition-value constraints —
-   * the layer Iceberg evaluates before any column stats. Each transform maps
-   * bounds conservatively: identity passes them through, `bucket[N]` maps
-   * equality points/IN-lists to their murmur3 bucket, `truncate[W]` floors
-   * numeric bounds (truncation is monotone), and `year`/`month`/`day` take
-   * the ISO-string prefix (also monotone). Value sets on numeric identity
-   * fields collapse to their envelope here — the stats layer still exploits
-   * the gaps per file. `cell[]` fields contribute nothing (spatial pruning
-   * is [[readAoi]]'s cover-range check).
+   * the table's partition spec into bounds on partition FIELDS, which
+   * [[surviving]] checks against each file's exact partition values — the
+   * layer Iceberg evaluates before any column stats (a file without a value
+   * for a field, from a pre-spec commit or a null partition, is kept). Each
+   * transform maps bounds conservatively: identity passes them through,
+   * `bucket[N]` maps equality points/IN-lists to their murmur3 bucket,
+   * `truncate[W]` floors numeric bounds (truncation is monotone), and
+   * `year`/`month`/`day` take the ISO-string prefix (also monotone). Value
+   * sets on numeric identity fields collapse to their envelope here — the
+   * stats layer still exploits the gaps per file. `cell[]` fields contribute
+   * nothing (spatial pruning is [[readAoi]]'s cover-range check).
    */
-  private[table] def partitionPrune(snap: Snapshot, b: Bounds): PartPrune = {
+  private[table] def partitionPrune(snap: Snapshot, b: Bounds): Bounds = {
     import org.apache.spark.sql.types._
-    if (snap.spec.isEmpty) return PartPrune()
+    if (snap.spec.isEmpty) return Bounds()
     val schema = snap.schema
     var in = Map.empty[String, Set[String]]
     var rn = Map.empty[String, (Double, Double)]
@@ -1926,7 +1876,7 @@ object IcebergLite {
         case _ => ()
       }
     }
-    PartPrune(in, rn, rs)
+    Bounds(rn, rs, inStr = in.map { case (n, vs) => n -> vs.toSeq })
   }
 
   /** The bucket a literal lands in — the same murmur3 (seed 42) + pmod the
@@ -1948,6 +1898,12 @@ object IcebergLite {
    * cells are stored once (min cell) but their file's cover range includes
    * every spanned cell, and the residual `st_intersects` filter runs on all
    * surviving rows. Files without cover stats are conservatively kept.
+   *
+   * The cover-range check stays outside [[surviving]] on purpose: it
+   * compares cell ids as exact longs, while [[Bounds.admits]] compares
+   * numeric stats as doubles. A cell id carries its resolution above bit
+   * 58, so every id is ≥ 2^58, where adjacent doubles are 64 apart —
+   * routing the check through `Bounds` would change which files open.
    */
   def readAoi(spark: SparkSession, table: String, aoiWkt: String): DataFrame = {
     val snap = current(table)
@@ -1976,11 +1932,45 @@ object IcebergLite {
     * membership probes — the num/str views above collapse types to the
     * stats domain, which is fine for ranges but loses the bits hashing
     * needs). */
-  private[table] case class Bounds(num: Map[String, (Double, Double)],
-                                   str: Map[String, (Option[String], Option[String])],
-                                   inNum: Map[String, Seq[Double]],
-                                   inStr: Map[String, Seq[String]],
-                                   points: Map[String, Seq[Seq[(Any, org.apache.spark.sql.types.DataType)]]] = Map.empty)
+  private[table] case class Bounds(num: Map[String, (Double, Double)] = Map.empty,
+                                   str: Map[String, (Option[String], Option[String])] = Map.empty,
+                                   inNum: Map[String, Seq[Double]] = Map.empty,
+                                   inStr: Map[String, Seq[String]] = Map.empty,
+                                   points: Map[String, Seq[Seq[(Any, org.apache.spark.sql.types.DataType)]]] = Map.empty) {
+    /** The min/max overlap test: can a file whose recorded per-column
+      * ranges are `min`/`max` hold a row inside these bounds? False only
+      * when a range PROVABLY misses; a missing stat or an all-null file is
+      * conservatively kept. One-sided string bounds are sound on their own:
+      * max < lo (or min > hi) proves every row misses, whatever the other
+      * side. */
+    def admits(min: Map[String, String], max: Map[String, String]): Boolean = {
+      def stats(c: String): Option[(String, String)] =
+        (min.get(c), max.get(c)) match {
+          case (Some(mn), Some(mx)) if mn != "null" && mx != "null" => Some((mn, mx))
+          case _ => None
+        }
+      num.forall { case (c, (lo, hi)) =>
+        stats(c).forall { case (mn, mx) => !(mx.toDouble < lo || mn.toDouble > hi) }
+      } && str.forall { case (c, (lo, hi)) =>
+        stats(c).forall { case (mn, mx) => !(lo.exists(mx < _) || hi.exists(mn > _)) }
+      } && inNum.forall { case (c, vs) =>
+        // IN-list: kept iff ANY candidate value can be in the file's range —
+        // tighter than collapsing the set to its [min,max] envelope when the
+        // set has gaps spanning whole files
+        stats(c).forall { case (mn, mx) =>
+          val (lo, hi) = (mn.toDouble, mx.toDouble); vs.exists(v => v >= lo && v <= hi)
+        }
+      } && inStr.forall { case (c, vs) =>
+        stats(c).forall { case (mn, mx) => vs.exists(v => v >= mn && v <= mx) }
+      }
+    }
+  }
+
+  private[table] object Bounds {
+    /** [[read]]'s public form: numeric ranges and closed lexicographic ones. */
+    def closed(num: Map[String, (Double, Double)], str: Map[String, (String, String)]): Bounds =
+      Bounds(num, str.map { case (c, (lo, hi)) => c -> (Some(lo), Some(hi)) })
+  }
 
   /** Conjunctive per-column bound extraction from an arbitrary predicate.
     * Handles literal-vs-attribute comparisons (either side), IN lists,
@@ -2116,12 +2106,11 @@ object IcebergLite {
     Bounds(num.toMap, str.toMap, inNum.toMap, inStr.toMap, points.toMap)
   }
 
-  /** Files selected under pruning (for tests/metrics). */
+  /** Files [[read]] selects under the same pruning (for tests/metrics). */
   def selectedFiles(table: String, prune: Map[String, (Double, Double)],
-                    pruneStr: Map[String, (String, String)] = Map.empty): Seq[String] = {
-    val snap = readSnapshot(table).getOrElse(return Nil)
-    surviving(snap, prune, pruneStr).map(_.path)
-  }
+                    pruneStr: Map[String, (String, String)] = Map.empty): Seq[String] =
+    readSnapshot(table).toSeq.flatMap(s =>
+      surviving(s.files, Bounds.closed(prune, pruneStr)).map(_.path))
 
   // --- metadata codec (Jackson) ------------------------------------------
 

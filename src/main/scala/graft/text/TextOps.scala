@@ -116,7 +116,6 @@ object TextOps {
 
   /** Content fingerprint: md5 (engine- and oracle-identical). */
   def fingerprint(text: Column): Column = md5(text.cast("binary"))
-  def fingerprintSql(c: String): String = s"md5($c)"
 
   /** 64-bit SimHash over whitespace tokens (engine-side; FNV-1a token hash,
     * majority vote per bit). Used by near-dup detection. */
@@ -136,14 +135,4 @@ object TextOps {
     out
   }
   val simhashUdf = udf(simhash64 _)
-
-  /** Rolling polynomial fingerprint (Rabin-style) — engine-side alternative
-    * to md5 for sketching; deterministic. */
-  def rollingHash(text: String): Long = {
-    var h = 0L
-    var i = 0
-    while (i < text.length) { h = h * 1000003L + text.charAt(i); i += 1 }
-    h
-  }
-  val rollingHashUdf = udf(rollingHash _)
 }

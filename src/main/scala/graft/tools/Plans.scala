@@ -50,7 +50,7 @@ object Plans {
 
     // shuffled + salted skew path
     sections += (("tile-assign shuffled + ×8 salted (skew path)",
-      "dimension exploded ×salt; shuffle on salted cell key; AQE skew split applies at runtime",
+      "dimension exploded ×salt; shuffle on the (cell, salt) key; AQE skew split applies at runtime",
       capture(graft.ops.TileAssign.assign(docs, tiles, shuffled = true, saltBuckets = 8))))
 
     // Catalyst strategy path

@@ -176,6 +176,24 @@ class BranchSpec extends AnyFunSuite {
     IcebergLite.dropBranch(t, "stage")
   }
 
+  test("cherryPick refuses a non-append snapshot: a compact and a mergeOnRead commit") {
+    val t = tmpTable()
+    IcebergLite.append(spark, (0L until 10L).map(i => (i, s"a$i")).toDF("k", "v"), t, Seq("k"), "c0")
+    IcebergLite.append(spark, (10L until 20L).map(i => (i, s"b$i")).toDF("k", "v"), t, Seq("k"), "c1")
+    val compacted = IcebergLite.compact(spark, t, Seq("k"), "cmp")
+    val mor = IcebergLite.mergeOnRead(spark, t, Seq((3L, "u3"), (30L, "n30")).toDF("k", "v"),
+      Seq("k"), Seq("k"), "mor")
+    val head = IcebergLite.currentSnapshotId(t).get
+    Seq(compacted.id, mor.id).foreach { id =>
+      val e = intercept[IllegalArgumentException](IcebergLite.cherryPick(spark, t, id))
+      assert(e.getMessage.contains("not a pure append"), e.getMessage)
+    }
+    // the refusals committed nothing
+    assert(IcebergLite.currentSnapshotId(t).contains(head))
+    val main = IcebergLite.read(spark, t).as[(Long, String)].collect().toMap
+    assert(main.size == 21 && main(3L) == "u3" && main(30L) == "n30")
+  }
+
   test("abandoned branch can never evict CURRENT: retention is reachability-based") {
     val t = tmpTable()
     IcebergLite.append(spark, (0L until 10L).map(i => (i, s"a$i")).toDF("k", "v"), t, Seq("k"), "c1")

@@ -238,6 +238,60 @@ class IcebergLiteSpec extends AnyFunSuite {
       && got(3L) == "lo3" && got(1005L) == "hi1005")
   }
 
+  test("merge on a string key and on a two-column key carries key-disjoint files by reference") {
+    def bytesOf(t: String, commit: String): Map[String, Seq[Byte]] =
+      IcebergLite.readSnapshot(t).get.files.filter(_.path.contains(s"/data/$commit/"))
+        .map(f => f.path ->
+          Files.readAllBytes(java.nio.file.Paths.get(f.path.stripPrefix("file:"))).toSeq).toMap
+    def assertCarried(before: Map[String, Seq[Byte]], after: IcebergLite.Snapshot): Unit = {
+      assert(before.size == 2)
+      val afterPaths = after.files.map(_.path).toSet
+      before.foreach { case (p, bytes) =>
+        assert(afterPaths.contains(p), s"carried file dropped: $p")
+        assert(Files.readAllBytes(java.nio.file.Paths.get(p.stripPrefix("file:"))).toSeq == bytes,
+          s"carried file rewritten: $p")
+      }
+    }
+
+    // string key: min/max compare lexicographically
+    val s = tmpTable()
+    IcebergLite.append(spark, (0 until 100).map(i => (f"a$i%03d", i.toLong)).toDF("k", "n")
+      .repartitionByRange(2, $"k"), s, Seq("k"), "c1")
+    IcebergLite.append(spark, (0 until 100).map(i => (f"m$i%03d", i.toLong)).toDF("k", "n")
+      .repartitionByRange(2, $"k"), s, Seq("k"), "c2")
+    val sLo = bytesOf(s, "c1")
+    val sAfter = IcebergLite.merge(spark, s, Seq(("m003", -1L), ("z999", -2L)).toDF("k", "n"),
+      Seq("k"), Seq("k"), "m1")
+    assertCarried(sLo, sAfter)
+    assert(!sAfter.files.exists(_.path.contains("/data/c2/")))
+    val sGot = IcebergLite.read(spark, s).as[(String, Long)].collect().toMap
+    assert(sGot.size == 201 && sGot("m003") == -1L && sGot("z999") == -2L
+      && sGot("a003") == 3L && sGot("m005") == 5L)
+
+    // two-column key: one provably-disjoint column clears a file — c1 on
+    // the string column, c2 on the numeric one; only c3 overlaps on both
+    val t = tmpTable()
+    def rows(r: String, from: Long) = (from until from + 100L).map(i => (r, i, s"$r$i"))
+    IcebergLite.append(spark, rows("east", 0L).toDF("r", "id", "v")
+      .repartitionByRange(2, $"id"), t, Seq("r", "id"), "c1")
+    IcebergLite.append(spark, rows("west", 0L).toDF("r", "id", "v")
+      .repartitionByRange(2, $"id"), t, Seq("r", "id"), "c2")
+    IcebergLite.append(spark, rows("west", 1000L).toDF("r", "id", "v")
+      .repartitionByRange(2, $"id"), t, Seq("r", "id"), "c3")
+    val (east, west) = (bytesOf(t, "c1"), bytesOf(t, "c2"))
+    val after = IcebergLite.merge(spark, t,
+      Seq(("west", 1003L, "NEW"), ("west", 2000L, "NEW2")).toDF("r", "id", "v"),
+      Seq("r", "id"), Seq("r", "id"), "m1")
+    assertCarried(east, after)
+    assertCarried(west, after)
+    assert(!after.files.exists(_.path.contains("/data/c3/")))
+    val got = IcebergLite.read(spark, t).as[(String, Long, String)].collect()
+      .map { case (r, id, v) => (r, id) -> v }.toMap
+    assert(got.size == 301 && got(("west", 1003L)) == "NEW" && got(("west", 2000L)) == "NEW2"
+      && got(("west", 3L)) == "west3" && got(("east", 3L)) == "east3"
+      && got(("west", 1005L)) == "west1005")
+  }
+
   test("merge on a stat-less table is conservative but SELF-HEALING: rewrite collects key stats") {
     val t = tmpTable()
     // no key stats at all (autoStats off = a table written before stats
