@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
  * AQE on (skew-join splitting + partition coalescing are part of the skew
  * story, SURVEY §4.2), shuffle partitions sized to the machine rather than
  * the 200 default, UTC sessions, and the graft Catalyst extensions
- * (native spatial expressions + SpatialJoinStrategy) installed.
+ * (native spatial expressions + the CellCoverJoin rule) installed.
  */
 object GraftSession {
 

@@ -285,7 +285,7 @@ object SparkEntry {
          |            ELSE '' END AS media_ref
          |FROM assign a CROSS JOIN sp""".stripMargin,
     // same semantics as geo_tile_assign, but planned through the Catalyst
-    // extension path: native st_intersects + SpatialJoinStrategy (STRtree)
+    // extension path: native st_intersects, lowered onto the cell-cover join
     "geo_sql_join" ->
       s"""WITH scenes AS (${SynthCorpus.scenesSql}), tiles AS (${SynthCorpus.tilesSql})
          |SELECT s.doc_id AS doc_id, t.tile_id AS tile_id
@@ -863,8 +863,8 @@ object GeoQueries {
   val TblPartAoi: (Double, Double, Double, Double) = (-60.0, -30.0, -20.0, 10.0)
 
   /** The flagship doc corpus in a `cell[4]`-partitioned IcebergLite table
-    * (hidden partitioning — the round-6 headline: SpatialLayout's
-    * cell-directory pruning unified into the snapshot/manifest plane), read
+    * (hidden partitioning — the round-6 headline: cell-directory pruning
+    * unified into the snapshot/manifest plane), read
     * back through [[graft.table.IcebergLite.readAoi]]'s partition-first
     * prune. The oracle is pure rectangle arithmetic on the same scene
     * lattice, so the result checks the whole path: hidden layout at write,
@@ -976,8 +976,9 @@ object GeoQueries {
   }
 
   /** Tile assignment through the Catalyst extension plane: native
-    * `st_intersects` expression + SpatialJoinStrategy plans the broadcast
-    * STRtree join (must agree with the cell-cover path, geo_tile_assign). */
+    * `st_intersects` expression in a join condition, which the CellCoverJoin
+    * rule lowers onto the cell-cover join (must agree with the DataFrame
+    * path, geo_tile_assign). */
   def sqlJoin(s: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftExtensions.register(s)
     val t = tiles(s).withColumnRenamed("wkt", "tile_wkt")

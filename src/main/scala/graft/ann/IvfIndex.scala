@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
  * every query (this was round-1's scale defect). The trained centers are
  * persisted with the posting lists, so probes never retrain.
  *
- * Same layout discipline as [[graft.table.SpatialLayout]] (write-once
- * partitioned table + pruned probe read).
+ * Same layout discipline as the `cell[r]`-partitioned doc table read by
+ * [[graft.table.IcebergLite.readAoi]] (write-once partitioned table +
+ * pruned probe read).
  */
 object IvfIndex {
 

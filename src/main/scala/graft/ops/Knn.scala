@@ -97,8 +97,9 @@ object Knn {
   def nearestTiles(points: DataFrame, tiles: DataFrame, k: Int,
                    res: Int = 3, ring: Int = 1): DataFrame = {
     val spark = points.sparkSession
-    // same guard as SpatialJoinStrategy: never driver-collect a side the user
-    // sized out of broadcasting (or disabled broadcasting for)
+    // kNN collects the tiles to the driver, so it keeps the engine's only
+    // hand-sized broadcast guard: never driver-collect a side the user sized
+    // out of broadcasting (or disabled broadcasting for)
     val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     val dimBytes = tiles.queryExecution.optimizedPlan.stats.sizeInBytes
     if (threshold <= 0 || dimBytes > BigInt(math.max(threshold, 10L << 20)) * 8)
@@ -121,7 +122,6 @@ object Knn {
   def nearestTilesShuffled(points: DataFrame, tiles: DataFrame, k: Int,
                            res: Int = 3, ring: Int = 1): DataFrame = {
     val p = points
-      .withColumn("pt_wkt", pointWktUdf(col("lon"), col("lat")))
       .withColumn("__ring", kRingOfPointUdf(col("lon"), col("lat"), lit(res), lit(ring)))
       .withColumn("__cell", explode(col("__ring")))
     val t = tiles
@@ -136,6 +136,6 @@ object Knn {
     val w = Window.partitionBy(col("doc_id")).orderBy(col("dist"), col("tile_id"))
     cand.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
-      .drop("tile_wkt", "pt_wkt")
+      .drop("tile_wkt")
   }
 }

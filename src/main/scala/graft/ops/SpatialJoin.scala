@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShims}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, JoinHint, LogicalPlan, SHUFFLE_HASH}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BinaryType
+import graft.plans.CellCoverJoin
 import graft.plans.SpatialColumns._
 
 /**
@@ -14,8 +15,10 @@ import graft.plans.SpatialColumns._
  * are encoded to spatial cells at resolution `res`, equi-joined on the cell
  * id, then refined with an exact JTS intersects. Cover and refine are the
  * native `st_cell_cover`/`st_intersects` expressions (`_wkb` forms for a
- * WKB probe); the refine lands in the equi-join's condition, which
- * [[graft.plans.SpatialJoinStrategy]] leaves to Catalyst.
+ * WKB probe), and the refine sits in the equi-join's condition. The plan is
+ * built by [[graft.plans.CellCoverJoin.build]], the same function that
+ * lowers SQL-form `JOIN … ON st_intersects` joins, so the DataFrame and SQL
+ * forms run one algorithm.
  *
  * Scale design (100 TB posture):
  *  - The dimension side (tile grid, ≤ ~60k polygons) is `broadcast()` —
@@ -57,8 +60,9 @@ object SpatialJoin {
   }
 
   /**
-   * @param probe   big side; must carry `probeWkt` column
-   * @param dim     small side; must carry `dimWkt` column
+   * @param probe   big side; must carry `probeWkt` column (WKT string or WKB
+   *                binary)
+   * @param dim     small side; must carry `dimWkt` column (WKT)
    * @param res     cell resolution (2^res × 2^res world grid)
    * @param shuffled force the shuffle path (dimension too big to broadcast)
    * @param saltBuckets >1 adds an explicit salt as a second join key on the
@@ -69,37 +73,17 @@ object SpatialJoin {
                     dim: DataFrame, dimWkt: String,
                     res: Int, shuffled: Boolean = false,
                     saltBuckets: Int = 1): DataFrame = {
-    // probe geometry may be WKT (string) or WKB (binary, the storage-side
-    // encoding — ~5× cheaper to parse); dimension side stays WKT (small,
-    // parsed once per task via the prepared-geometry LRU)
-    val probeIsWkb = probe.schema(probeWkt).dataType == BinaryType
-    val (cover, refine) =
-      if (probeIsWkb) (stCellCoverWkb _, stIntersectsWkb _)
-      else (stCellCover _, stIntersects _)
-    val p = probe.withColumn("__cells", cover(col(probeWkt), lit(res)))
-    val d = dim.withColumn("__tcells", stCellCover(col(dimWkt), lit(res)))
-
-    val pc = p.withColumn("__cell", explode(col("__cells")))
-    val dc = d.withColumn("__cell", explode(col("__tcells")))
-    val (pk, dk, keys) =
-      if (saltBuckets <= 1) (pc, dc, Seq("__cell"))
-      else
-        // probe rows get one deterministic salt; dim rows replicate ×S; both
-        // salts are longs, so (__cell, __salt) is a typed two-column key
-        (pc.withColumn("__salt", pmod(xxhash64(col(probeWkt)), lit(saltBuckets.toLong))),
-         dc.withColumn("__salt", explode(lit((0L until saltBuckets.toLong).toArray))),
-         Seq("__cell", "__salt"))
-
+    val (p, d) = (probe.queryExecution.analyzed, dim.queryExecution.analyzed)
+    val resolver = probe.sparkSession.sessionState.conf.resolver
+    def geom(plan: LogicalPlan, name: String) = plan.resolve(Seq(name), resolver)
+      .getOrElse(throw new IllegalArgumentException(s"no column $name in ${plan.schema.simpleString}"))
     // shuffle_hash hint: without it AQE converts the join back to broadcast
     // whenever the dim side is small (true at test scale, false at the
     // 60k-polygon+ scale this path exists for) — the hint keeps the
     // measured plan the one that actually runs at scale
-    val dimSide = if (shuffled) dk.hint("shuffle_hash") else broadcast(dk)
-    pk.join(dimSide, keys)
-      // shuffle-free dedup: emit the pair only on the min shared cell
-      .where(col("__cell") === array_min(array_intersect(col("__cells"), col("__tcells"))))
-      // exact geometric refine (reference: shapely intersects, cell 10)
-      .where(refine(col(dimWkt), col(probeWkt)))
-      .drop("__cell", "__salt", "__cells", "__tcells")
+    val strategy = if (shuffled) SHUFFLE_HASH else BROADCAST
+    GraftShims.dataFrame(probe.sparkSession,
+      CellCoverJoin.build(p, geom(p, probeWkt), d, geom(d, dimWkt), res,
+        JoinHint(None, Some(HintInfo(strategy = Some(strategy)))), saltBuckets))
   }
 }

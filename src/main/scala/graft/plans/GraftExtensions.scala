@@ -9,8 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  *
  *   - SQL functions `st_intersects`, `st_distance`, `st_cell_cover`
  *     (native expressions, codegen'd — SURVEY §2.8 geo)
- *   - [[SpatialJoinStrategy]]: joins on `st_intersects` plan as a broadcast
- *     STRtree join instead of a nested-loop cross product
+ *   - [[CellCoverJoin]], an optimizer rule: an inner join on `st_intersects`
+ *     with no equi-join keys is lowered onto the cell-cover equi-join
+ *     instead of a nested-loop cross product
  *
  * Enable at build time:
  *   `SparkSession.builder().config("spark.sql.extensions", "graft.plans.GraftExtensions")`
@@ -20,7 +21,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
-    ext.injectPlannerStrategy(_ => SpatialJoinStrategy)
+    ext.injectOptimizerRule(_ => CellCoverJoin)
   }
 }
 
@@ -53,16 +54,16 @@ object GraftExtensions {
       (c: Seq[Expression]) => graft.ann.QuantizedDot(c(0), c(1)))
   )
 
-  /** Retrofit the functions + strategy onto an already-built session (the
+  /** Retrofit the functions + rule onto an already-built session (the
     * driver owns session construction in Verify/Bench). Idempotent. Also
     * applies the engine's optimizer-rule exclusions (runtime-settable). */
   def register(spark: SparkSession): Unit = {
     functions.foreach { case (id, inf, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, inf, builder)
     }
-    if (!spark.experimental.extraStrategies.contains(SpatialJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ SpatialJoinStrategy
+    if (!spark.experimental.extraOptimizations.contains(CellCoverJoin))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ CellCoverJoin
     // merge with (never clobber) exclusions the host application already set
     val existing = spark.conf.getOption("spark.sql.optimizer.excludedRules")
       .toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)

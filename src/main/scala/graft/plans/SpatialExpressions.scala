@@ -42,8 +42,8 @@ object GeoCodegen {
 
 /** `st_intersects(aWkt, bWkt)` — exact JTS intersects, prepared-geometry
   * cached on the left argument. A null or empty geometry intersects nothing,
-  * so the result is never null. The [[SpatialJoinStrategy]] pattern-matches
-  * this node in join conditions. */
+  * so the result is never null. [[CellCoverJoin]] lowers a join whose
+  * condition holds this node onto the cell-cover join. */
 case class StIntersects(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[DataType] = Seq(StringType, StringType)
@@ -135,6 +135,4 @@ object SpatialColumns {
     GraftShims.column(StCellCover(GraftShims.expression(a), GraftShims.expression(res)))
   def stCellCoverWkb(a: Column, res: Column): Column =
     GraftShims.column(StCellCoverWkb(GraftShims.expression(a), GraftShims.expression(res)))
-  def stIntersectsWkb(dimWkt: Column, probeWkb: Column): Column =
-    GraftShims.column(StIntersectsWkb(GraftShims.expression(dimWkt), GraftShims.expression(probeWkb)))
 }

@@ -53,11 +53,12 @@ object Plans {
       "dimension exploded ×salt; shuffle on the (cell, salt) key; AQE skew split applies at runtime",
       capture(graft.ops.TileAssign.assign(docs, tiles, shuffled = true, saltBuckets = 8))))
 
-    // Catalyst strategy path
+    // SQL-form spatial join: the CellCoverJoin optimizer rule
     graft.plans.GraftExtensions.register(spark)
     val t2 = tiles.withColumnRenamed("wkt", "tile_wkt")
-    sections += (("st_intersects join via SpatialJoinStrategy",
-      "planned as BroadcastSpatialJoinExec (partition-local STRtree), not BroadcastNestedLoopJoin",
+    sections += (("st_intersects join lowered onto the cell-cover join",
+      "CellCoverJoin rewrites it to the cell equi-join (cover, explode, hash join on the cell, " +
+        "min-shared-cell dedup, refine); Catalyst picks broadcast vs shuffle; no BroadcastNestedLoopJoin",
       capture(docs.join(t2, graft.plans.SpatialColumns.stIntersects(col("tile_wkt"), col("wkt"))))))
 
     // pushdown / pruning over the driver tables

@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
  *  2. no inferred filter re-evaluates the cover below the Generate
  *     (the InferFiltersFromGenerate/Constraints exclusion, see GraftSession);
  *  3. the broadcast cover join has zero shuffle exchanges over the probe;
- *  4. the shuffled path really shuffles (no silent AQE broadcast demotion).
+ *  4. the shuffled path really shuffles (no silent AQE broadcast demotion);
+ *  5. the SQL-form `st_intersects` join, lowered by CellCoverJoin, gets
+ *     Catalyst's own broadcast and no probe-side shuffle either.
  */
 class PlanRegressionSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -92,5 +94,25 @@ class PlanRegressionSpec extends AnyFunSuite {
     val s = countPlan("wkb", shuffled = true)
     assert(shuffles(s) >= 3, s"shuffled path was demoted to broadcast:\n$s")
     assert(broadcasts(s) == 0)
+  }
+
+  test("SQL st_intersects join: Catalyst's broadcast keeps the probe side shuffle-free") {
+    GraftExtensions.register(spark)
+    spark.read.parquet(corpus).createOrReplaceTempView("pr_docs")
+    tiles.withColumnRenamed("wkt", "tile_wkt").createOrReplaceTempView("pr_tiles")
+    val job = spark.sql(
+      "SELECT count(*) FROM pr_docs d JOIN pr_tiles t ON st_intersects(t.tile_wkt, d.wkt)")
+    job.collect()
+    // the final executed tree only (AQE repeats nodes under "Initial Plan");
+    // (?<![A-Za-z]) keeps "Exchange" from matching inside "BroadcastExchange"
+    val formatted = job.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    val plan = formatted.split("== Initial Plan ==")(0)
+    def nodes(name: String) = s"""(?<![A-Za-z])$name \\(\\d+\\)""".r.findAllIn(plan).size
+    assert(nodes("BroadcastExchange") + nodes("BroadcastQueryStage") >= 1, s"no broadcast in:\n$plan")
+    // only the final single-partition count aggregation may exchange
+    assert(nodes("Exchange") <= 1, s"unexpected shuffles:\n$plan")
+    assert(formatted.contains("st_cell_cover("),
+      s"join was not lowered onto the cell cover:\n$formatted")
   }
 }

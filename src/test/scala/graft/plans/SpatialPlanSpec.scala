@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
- * The Catalyst plane: native spatial expressions + the SparkStrategy that
- * plans `st_intersects` joins as a broadcast STRtree join.
+ * The Catalyst plane: native spatial expressions + the CellCoverJoin
+ * optimizer rule that lowers `st_intersects` joins onto the cell-cover join.
  *
  * Oracle: the DataFrame-API cell-cover join (itself oracle-checked against
  * brute force in SpatialJoinSpec) and direct JTS brute force.
@@ -24,6 +24,21 @@ class SpatialPlanSpec extends AnyFunSuite {
 
   private def tiles = graft.model.SynthCorpus.tileGrid(spark)
     .select(col("tile_id"), col("wkt").as("tile_wkt"))
+
+  private def pairs(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+    df.select("doc_id", "tile_id").collect().map(r => (r.getString(0), r.getString(1))).toSet
+
+  private lazy val assigned =
+    pairs(graft.ops.TileAssign.assign(scenes, tiles.withColumnRenamed("tile_wkt", "wkt")))
+
+  /** The join was lowered onto the cell-cover join: no nested loop, no
+    * cartesian product, and the cover is in the plan. */
+  private def assertLowered(df: org.apache.spark.sql.DataFrame): Unit = {
+    val physical = df.queryExecution.executedPlan.toString
+    assert(!physical.contains("BroadcastNestedLoopJoin") && !physical.contains("CartesianProduct"),
+      s"spatial join planned as a nested loop:\n$physical")
+    assert(physical.contains("st_cell_cover("), s"no cell cover in plan:\n$physical")
+  }
 
   test("st_intersects expression: eval == codegen == JTS") {
     withExtensions {
@@ -73,9 +88,7 @@ class SpatialPlanSpec extends AnyFunSuite {
     withExtensions {
       val joined = scenes.join(tiles,
         SpatialColumns.stIntersects(col("tile_wkt"), col("wkt")))
-      val physical = joined.queryExecution.executedPlan.toString
-      assert(physical.contains("BroadcastSpatialJoinExec"),
-        s"expected spatial exec in plan:\n$physical")
+      assertLowered(joined)
 
       val viaStrategy = joined.select("doc_id", "tile_id").collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
@@ -95,7 +108,7 @@ class SpatialPlanSpec extends AnyFunSuite {
       val all = scenes.join(tiles, SpatialColumns.stIntersects(col("tile_wkt"), col("wkt")))
         .where(col("tile_id") > "T11")
       assert(joined.count() == all.count())
-      assert(joined.queryExecution.executedPlan.toString.contains("BroadcastSpatialJoinExec"))
+      assertLowered(joined)
     }
   }
 
@@ -113,9 +126,53 @@ class SpatialPlanSpec extends AnyFunSuite {
           |SELECT a.doc_id, a.tile_id FROM assigned a
           |ANTI JOIN sd_inventory i
           |  ON a.doc_id = i.doc_id AND a.tile_id = i.tile_id""".stripMargin)
-      assert(remaining.queryExecution.executedPlan.toString.contains("BroadcastSpatialJoinExec"))
+      assertLowered(remaining)
       val total = graft.ops.TileAssign.assign(scenes, tiles.withColumnRenamed("tile_wkt", "wkt")).count()
       assert(remaining.count() == total - inv.count())
+    }
+  }
+
+  test("SQL join: both argument orders, scenes on either side == TileAssign.assign") {
+    withExtensions {
+      scenes.createOrReplaceTempView("fo_scenes")
+      tiles.createOrReplaceTempView("fo_tiles")
+      for {
+        from <- Seq("fo_scenes s JOIN fo_tiles t", "fo_tiles t JOIN fo_scenes s")
+        on <- Seq("st_intersects(t.tile_wkt, s.wkt)", "st_intersects(s.wkt, t.tile_wkt)")
+      } {
+        val joined = spark.sql(s"SELECT s.doc_id, t.tile_id FROM $from ON $on")
+        assertLowered(joined)
+        assert(pairs(joined) == assigned, s"$from ON $on")
+      }
+      assert(assigned.size > 2000)
+      // a conjunct over both sides cannot be pushed below the join: it stays
+      // in the lowered join's condition
+      val residual = spark.sql("""SELECT s.doc_id, t.tile_id FROM fo_scenes s JOIN fo_tiles t
+          |ON st_intersects(t.tile_wkt, s.wkt)
+          |AND substring(s.doc_id, -1, 1) < substring(t.tile_id, -1, 1)""".stripMargin)
+      assertLowered(residual)
+      val want = pairs(graft.ops.SpatialJoin.intersectJoin(scenes, "wkt", tiles, "tile_wkt", 5)
+        .where(substring(col("doc_id"), -1, 1) < substring(col("tile_id"), -1, 1)))
+      assert(want.nonEmpty && want.size < assigned.size)
+      assert(pairs(residual) == want)
+    }
+  }
+
+  test("SQL join: null and empty geometries on either side drop out") {
+    withExtensions {
+      import spark.implicits._
+      val dirtyScenes = scenes.union(
+        Seq(("dirty_null", null: String), ("dirty_empty", "")).toDF("doc_id", "wkt"))
+      val dirtyTiles = tiles.union(
+        Seq(("T_null", null: String), ("T_empty", "")).toDF("tile_id", "tile_wkt"))
+      dirtyScenes.createOrReplaceTempView("dirty_scenes")
+      dirtyTiles.createOrReplaceTempView("dirty_tiles")
+      for (on <- Seq("st_intersects(t.tile_wkt, s.wkt)", "st_intersects(s.wkt, t.tile_wkt)")) {
+        val joined = spark.sql(
+          s"SELECT s.doc_id, t.tile_id FROM dirty_scenes s JOIN dirty_tiles t ON $on")
+        assertLowered(joined)
+        assert(pairs(joined) == assigned, on)
+      }
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.table
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import graft.table.IcebergLite.PartitionField
@@ -11,9 +12,9 @@ import java.nio.file.Files
  * is table metadata, writers derive layout values automatically, and reads
  * prune on partition values BEFORE column min/max stats. The cell[] case
  * is the spatial unification the round-5 verdict asked for: the
- * SpatialLayout cell-directory idea inside the snapshot/manifest plane,
- * with snapshot isolation and an inputFiles proof that an AOI read opens
- * only matching partitions.
+ * cell-directory layout inside the snapshot/manifest plane, with snapshot
+ * isolation and an inputFiles proof that an AOI read opens only matching
+ * partitions.
  */
 class PartitionSpecSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -128,6 +129,38 @@ class PartitionSpecSpec extends AnyFunSuite {
       t, Seq("doc_id"), "c2")
     assert(IcebergLite.readAoi(spark, t, aoi).count() == got.size + 1)
     assert(IcebergLite.readAt(spark, t, 0).count() == 61)
+  }
+
+  /** SynthCorpus docs written under a cell[3] spec, with the AOI the two corpus cases read. */
+  private def cellCorpus(): (String, DataFrame, String) = {
+    val t = tmpTable()
+    val docs = graft.model.SynthCorpus.docs(spark, 1500, seed = 9L).cache()
+    IcebergLite.createPartitioned(spark, docs, t,
+      Seq(PartitionField("cell", "wkt", "cell[3]")), Seq("doc_id"), "c1")
+    (t, docs, graft.geom.Geo.rectWkt(170.0, -25.0, 179.0, -10.0))
+  }
+
+  test("cell partition on the doc corpus: readAoi == brute force, doc once") {
+    val (t, docs, aoi) = cellCorpus()
+    val ids = IcebergLite.readAoi(spark, t, aoi).select($"doc_id").as[String].collect().toSeq
+    assert(ids.distinct.size == ids.size, "duplicated docs across partitions")
+    val want = docs.collect().filter { r =>
+      graft.geom.Geo.intersects(aoi, r.getAs[String]("wkt"))
+    }.map(_.getAs[String]("doc_id")).toSet
+    assert(want.nonEmpty && ids.toSet == want)
+    docs.unpersist()
+  }
+
+  test("cell partition on the doc corpus: spans survive the write byte-equal") {
+    val (t, docs, aoi) = cellCorpus()
+    // the interleaved span sequence survives the partitioned write byte-equal
+    val got = IcebergLite.readAoi(spark, t, aoi)
+    val back = got.select($"doc_id", to_json($"spans").as("s_out"))
+    val orig = docs.select($"doc_id", to_json($"spans").as("s_in"))
+    val j = back.join(orig, "doc_id")
+    val n = got.count()
+    assert(n > 0 && j.count() == n && j.where($"s_out" =!= $"s_in").count() == 0)
+    docs.unpersist()
   }
 
   test("partition spec survives rename of its source and refuses its drop") {
