@@ -191,25 +191,73 @@ object Geo {
   }
 
   /**
-   * Cell cover of an arbitrary geometry at `res`: AM-split, bbox-enumerate,
-   * keep cells whose rectangle intersects the geometry (tight cover for
-   * non-rectangular footprints). Distinct + sorted.
+   * Cell cover of an arbitrary geometry at `res`: AM-split, bbox-enumerate
+   * each part's candidate cells, keep the cells whose closed rectangle meets
+   * the geometry (tight cover for non-rectangular footprints). Distinct +
+   * sorted.
+   *
+   * A part with ≤ 4 candidates keeps them all (bbox ≈ geometry at this res).
+   * Otherwise each candidate is decided leaf by leaf (the polygons, lines and
+   * points of a multi-geometry or collection): a leaf whose envelope misses
+   * the cell is skipped, an axis-aligned rectangle is decided by that
+   * envelope test alone (exact for a closed box), and only the other leaves
+   * are prepared — lazily, once each — for a JTS intersects. An AM-crossing
+   * box stored as a MULTIPOLYGON spans −180…180, so its 32–64 candidates at
+   * res 5 cost envelope tests, not one JTS predicate each. Cells collect in
+   * a primitive array, sorted and deduplicated in place.
    */
   def cellCover(g: Geometry, res: Int): Array[Long] = {
-    val parts = splitAntimeridian(g)
-    val out = scala.collection.mutable.SortedSet.empty[Long]
-    parts.foreach { p =>
+    var out = new Array[Long](8)
+    var n = 0
+    def add(c: Long): Unit = {
+      if (n == out.length) out = java.util.Arrays.copyOf(out, 2 * n)
+      out(n) = c
+      n += 1
+    }
+    splitAntimeridian(g).foreach { p =>
       val env = p.getEnvelopeInternal
       val cand = CellIndex.coverBBox(env.getMinX, env.getMinY, env.getMaxX, env.getMaxY, res)
-      if (cand.length <= 4) out ++= cand // bbox ≈ geometry at this res; skip refine
+      if (cand.length <= 4) cand.foreach(add) // bbox ≈ geometry at this res; skip refine
       else {
-        val prep = PreparedGeometryFactory.prepare(p)
+        val leaves = leavesOf(p)
+        val isRect = leaves.map(_.isRectangle)
+        val prep = new Array[PreparedGeometry](leaves.length)
         cand.foreach { c =>
           val (x0, y0, x1, y1) = CellIndex.bounds(c)
-          if (prep.intersects(rect(x0, y0, x1, y1))) out += c
+          val cell = new Envelope(x0, x1, y0, y1)
+          var hit = false
+          var i = 0
+          while (!hit && i < leaves.length) {
+            if (leaves(i).getEnvelopeInternal.intersects(cell)) {
+              hit = isRect(i) || {
+                if (prep(i) == null) prep(i) = PreparedGeometryFactory.prepare(leaves(i))
+                prep(i).intersects(gf.toGeometry(cell))
+              }
+            }
+            i += 1
+          }
+          if (hit) add(c)
         }
       }
     }
+    java.util.Arrays.sort(out, 0, n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (m == 0 || out(i) != out(m - 1)) { out(m) = out(i); m += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(out, m)
+  }
+
+  /** The non-collection parts of `g` (a leaf geometry is its own part). */
+  private def leavesOf(g: Geometry): Array[Geometry] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Geometry]
+    def walk(h: Geometry): Unit = h match {
+      case gc: GeometryCollection => (0 until gc.getNumGeometries).foreach(i => walk(gc.getGeometryN(i)))
+      case leaf => out += leaf
+    }
+    walk(g)
     out.toArray
   }
 

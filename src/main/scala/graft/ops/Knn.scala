@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.Envelope
 import org.locationtech.jts.index.strtree.STRtree
 
+import graft.cells.CellIndex
 import graft.functions.GeoFunctions._
+import graft.plans.SpatialColumns.{firstSharedCell, stCellCover}
 
 /**
  * k-nearest-tile matching (SURVEY §2.3 J8) — gap-filling for scenes whose
@@ -26,7 +28,8 @@ import graft.functions.GeoFunctions._
  *
  * Fallback ([[nearestTilesShuffled]]): the original cell-ring equi-join +
  * window ranking, for dimension sides too large to broadcast. Costs one
- * shuffle of ~|ring|·tiles-per-cell candidates per doc.
+ * shuffle of ~|ring|·tiles-per-cell candidates per doc. It returns the
+ * primary path's rows or fails the job; it never returns short.
  */
 object Knn {
 
@@ -118,7 +121,12 @@ object Knn {
   }
 
   /** Shuffled fallback: cell-ring candidate equi-join + window ranking —
-    * for tile sides beyond broadcast size. Same output contract. */
+    * for tile sides beyond broadcast size. Same output contract, or the job
+    * fails: the ring proves a point's top-k only when it holds k tiles and
+    * the k-th distance is ≤ ring × min(cell width, cell height) at `res`
+    * (every tile outside the ring's cells lies at least that far away). A
+    * point without that proof raises an error instead of returning short
+    * or misranked rows. */
   def nearestTilesShuffled(points: DataFrame, tiles: DataFrame, k: Int,
                            res: Int = 3, ring: Int = 1): DataFrame = {
     val p = points
@@ -126,16 +134,25 @@ object Knn {
       .withColumn("__cell", explode(col("__ring")))
     val t = tiles
       .withColumnRenamed("wkt", "tile_wkt")
-      .withColumn("__tcells", graft.plans.SpatialColumns.stCellCover(col("tile_wkt"), lit(res)))
-      .withColumn("__cell", explode(col("__tcells")))
-    val cand = p.join(t, "__cell")
-      // shuffle-free dedup: keep the pair only on the min shared cell
-      .where(col("__cell") === array_min(array_intersect(col("__ring"), col("__tcells"))))
-      .drop("__cell", "__ring", "__tcells")
-      .withColumn("dist", pointDistanceUdf(col("lon"), col("lat"), col("tile_wkt")))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("dist"), col("tile_id"))
+      .withColumn("__tcells", stCellCover(col("tile_wkt"), lit(res)))
+      .withColumn("__tcell", explode(col("__tcells")))
+    // left outer: a point whose ring meets no tile keeps a null row, so the
+    // completeness check below sees it. Shuffle-free dedup: keep the pair
+    // only on the min shared cell (both arrays are sorted and distinct)
+    val cand = p.join(t, col("__cell") === col("__tcell") &&
+        firstSharedCell(col("__cell"), col("__ring"), col("__tcells")), "left_outer")
+      .drop("__cell", "__ring", "__tcells", "__tcell")
+      .withColumn("dist", when(col("tile_id").isNotNull,
+        pointDistanceUdf(col("lon"), col("lat"), col("tile_wkt"))))
+    // cell height 180/2^res is the smaller side (width is 360/2^res)
+    val bound = ring * 180.0 / CellIndex.width(res)
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("dist").asc_nulls_last, col("tile_id"))
     cand.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .drop("tile_wkt")
+      .withColumn("__dk", nth_value(col("dist"), k)
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .where(when(col("__dk") <= bound, col("rank") <= k).otherwise(raise_error(concat(
+        lit(s"kNN ring fallback (res=$res, ring=$ring) cannot prove the $k nearest tiles of doc "),
+        col("doc_id"), lit(s": fewer than $k tiles within $bound degrees")))))
+      .drop("__dk", "tile_wkt")
   }
 }

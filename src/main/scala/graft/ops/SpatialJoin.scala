@@ -27,9 +27,10 @@ import graft.plans.SpatialColumns._
  *    **Zero shuffles** over the big side.
  *  - Candidate-pair dedup (a pair sharing k cells appears k times) is done
  *    *without* a shuffle: a pair is kept only on the smallest shared cell
- *    (`cell == array_min(array_intersect(cells, tcells))`), the classic
- *    reporting-cell trick. `dropDuplicates` (an exchange over the full join
- *    output) is never needed.
+ *    (`first_shared_cell(cell, cells, tcells)`, an allocation-free merge
+ *    walk over the two sorted covers), the classic reporting-cell trick.
+ *    `dropDuplicates` (an exchange over the full join output) is never
+ *    needed.
  *  - If the dimension side outgrows broadcast, `shuffled = true` switches to
  *    a shuffle hash/SMJ equi-join on the cell id; AQE skew-join splitting
  *    plus optional explicit salting (`saltBuckets > 1`) handle dense

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, ArrayIntersect, ArrayMin, Attribute, AttributeReference, EqualTo, Explode, Expression, Literal, Pmod, PredicateHelper, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, EqualTo, Explode, Expression, Literal, Pmod, PredicateHelper, XxHash64}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, JoinHint, LogicalPlan, Project}
@@ -38,6 +38,12 @@ object CellCoverJoin extends Rule[LogicalPlan] with PredicateHelper {
    * cover → explode → cell equi-join → min-shared-cell dedup → exact refine.
    * Output: `probe.output ++ dim.output`.
    *
+   * Two per-row kernels run here. The cover (`Geo.cellCover`) decides each
+   * candidate cell per leaf part of the geometry, with an envelope test for
+   * rectangles and a JTS intersects only for other leaves. The dedup
+   * ([[FirstSharedCell]]) is one merge walk over the two sorted covers that
+   * keeps a pair only on its smallest shared cell.
+   *
    * @param probeGeom probe geometry: WKT (string) or WKB (binary, the
    *                  storage-side encoding — ~5× cheaper to parse)
    * @param dimGeom   dimension geometry, WKT (small, parsed once per task via
@@ -67,8 +73,9 @@ object CellCoverJoin extends Rule[LogicalPlan] with PredicateHelper {
           Seq(EqualTo(pCell, dCell), EqualTo(pSalt.toAttribute, dSalt)))
       }
     // shuffle-free dedup: a pair sharing k cells is emitted only on its
-    // smallest shared cell (the reporting-cell trick), never dropDuplicates
-    val dedup = EqualTo(pCell, ArrayMin(ArrayIntersect(pCells.toAttribute, dCells.toAttribute)))
+    // smallest shared cell (the reporting-cell trick), never dropDuplicates;
+    // one allocation-free merge walk over the two sorted covers
+    val dedup = FirstSharedCell(pCell, pCells.toAttribute, dCells.toAttribute)
     // exact geometric refine (reference: shapely intersects, cell 10)
     val refine =
       if (probeWkb) StIntersectsWkb(dimGeom, probeGeom) else StIntersects(dimGeom, probeGeom)

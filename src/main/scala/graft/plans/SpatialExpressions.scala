@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -38,6 +38,24 @@ object GeoCodegen {
   def intersectsWkb(dimWkt: UTF8String, probeWkb: Array[Byte]): Boolean =
     dimWkt.numBytes() > 0 && probeWkb.length > 0 &&
       graft.geom.Geo.intersectsWkb(dimWkt.toString, probeWkb)
+  /** Merge walk over two sorted, distinct cell arrays: is `cell` their
+    * smallest shared id? Stops at the first shared id, or as soon as either
+    * side passes `cell`; reads in place, allocates nothing. */
+  def firstSharedCell(cell: Long, a: ArrayData, b: ArrayData): Boolean = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0
+    var j = 0
+    while (i < na && j < nb) {
+      val x = a.getLong(i)
+      val y = b.getLong(j)
+      if (x > cell || y > cell) return false
+      if (x < y) i += 1
+      else if (x > y) j += 1
+      else return x == cell
+    }
+    false
+  }
 }
 
 /** `st_intersects(aWkt, bWkt)` — exact JTS intersects, prepared-geometry
@@ -125,6 +143,45 @@ case class StIntersectsWkb(left: Expression, right: Expression)
   override def prettyName: String = "st_intersects_wkb"
 }
 
+/** `first_shared_cell(cell, cells, tcells)` — the cover join's shuffle-free
+  * dedup: a pair sharing k cells meets in k equi-join rows and is kept only
+  * on its smallest shared cell (the reporting-cell trick). Equal to
+  * `cell = array_min(array_intersect(cells, tcells))` wherever that is
+  * non-null, and false where it is null (no shared cell, or a null input).
+  *
+  * Precondition: `cells` and `tcells` are sorted ascending, distinct and
+  * null-free — what `st_cell_cover`/`st_cell_cover_wkb` (and
+  * `CellIndex.kRing`) return. The merge walk reads them in place and
+  * allocates nothing per pair. */
+case class FirstSharedCell(cell: Expression, cells: Expression, tcells: Expression)
+    extends TernaryExpression with ExpectsInputTypes {
+  override def first: Expression = cell
+  override def second: Expression = cells
+  override def third: Expression = tcells
+  override def inputTypes: Seq[DataType] = Seq(LongType, ArrayType(LongType), ArrayType(LongType))
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any =
+    (cell.eval(input), cells.eval(input), tcells.eval(input)) match {
+      case (c: Long, a: ArrayData, b: ArrayData) => GeoCodegen.firstSharedCell(c, a, b)
+      case _ => false
+    }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (c, a, b) = (cell.genCode(ctx), cells.genCode(ctx), tcells.genCode(ctx))
+    ev.copy(code = code"""
+      ${c.code}
+      ${a.code}
+      ${b.code}
+      boolean ${ev.value} = !${c.isNull} && !${a.isNull} && !${b.isNull} &&
+        graft.plans.GeoCodegen.firstSharedCell(${c.value}, ${a.value}, ${b.value});""",
+      isNull = FalseLiteral)
+  }
+  override protected def withNewChildrenInternal(
+      c: Expression, a: Expression, b: Expression): FirstSharedCell =
+    copy(cell = c, cells = a, tcells = b)
+  override def prettyName: String = "first_shared_cell"
+}
+
 /** Column-API sugar over the native expressions. */
 object SpatialColumns {
   def stIntersects(a: Column, b: Column): Column =
@@ -135,4 +192,7 @@ object SpatialColumns {
     GraftShims.column(StCellCover(GraftShims.expression(a), GraftShims.expression(res)))
   def stCellCoverWkb(a: Column, res: Column): Column =
     GraftShims.column(StCellCoverWkb(GraftShims.expression(a), GraftShims.expression(res)))
+  def firstSharedCell(cell: Column, cells: Column, tcells: Column): Column =
+    GraftShims.column(FirstSharedCell(GraftShims.expression(cell),
+      GraftShims.expression(cells), GraftShims.expression(tcells)))
 }

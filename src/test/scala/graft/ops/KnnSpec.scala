@@ -67,4 +67,24 @@ class KnnSpec extends AnyFunSuite {
     assert(norm(Knn.nearestTiles(df, tiles, k = 3)) ==
       norm(Knn.nearestTilesShuffled(df, tiles, k = 3, res = 3, ring = 1)))
   }
+
+  test("sparse tiles: the shuffled fallback returns the broadcast rows or fails, never short") {
+    // four tiles spanning (0..5, 0..1) and one at (100, 50); the point's
+    // res-3 ring (45° × 22.5° cells) reaches only t4, its 2nd and 3rd nearest
+    // tiles are ~150° away
+    val sparse = ((0 until 4).map(i => (s"t$i", Geo.rectWkt(i, 0, i + 2, 1))) :+
+      ("t4", Geo.rectWkt(100, 50, 101, 51))).toDF("tile_id", "wkt")
+    val df = Seq(("p", 150.0, 60.0)).toDF("doc_id", "lon", "lat")
+    def norm(r: org.apache.spark.sql.DataFrame) =
+      r.select($"doc_id", $"rank".cast("int"), $"tile_id").as[(String, Int, String)]
+        .collect().sortBy(_._2).toSeq
+    val viaBroadcast = norm(Knn.nearestTiles(df, sparse, k = 3))
+    assert(viaBroadcast.map(_._3) == Seq("t4", "t3", "t2"))
+    scala.util.Try(norm(Knn.nearestTilesShuffled(df, sparse, k = 3, res = 3, ring = 1))) match {
+      case scala.util.Success(rows) => assert(rows == viaBroadcast)
+      case scala.util.Failure(e) =>
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        assert(msgs.exists(m => m != null && m.contains("cannot prove the 3 nearest tiles")), e)
+    }
+  }
 }

@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
  *  3. the broadcast cover join has zero shuffle exchanges over the probe;
  *  4. the shuffled path really shuffles (no silent AQE broadcast demotion);
  *  5. the SQL-form `st_intersects` join, lowered by CellCoverJoin, gets
- *     Catalyst's own broadcast and no probe-side shuffle either.
+ *     Catalyst's own broadcast and no probe-side shuffle either;
+ *  6. every cover join dedups with the native `first_shared_cell` merge
+ *     walk, never an allocating `array_intersect`.
  */
 class PlanRegressionSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -56,11 +58,11 @@ class PlanRegressionSpec extends AnyFunSuite {
   }
 
   test("WKT cover join keeps its cell equi-join plan with native cover and refine") {
-    GraftExtensions.register(spark) // SpatialJoinStrategy must see and decline it
+    GraftExtensions.register(spark) // the lowering rule must see it and leave it as is
     for (shuffled <- Seq(false, true)) {
       val plan = countPlan("wkt", shuffled)
       assert(!plan.contains("BroadcastSpatialJoin"),
-        s"SpatialJoinStrategy replanned the cell equi-join (shuffled=$shuffled):\n$plan")
+        s"the cell equi-join was replanned as a spatial-join operator (shuffled=$shuffled):\n$plan")
       assert(plan.contains("st_cell_cover("), s"cover is not the native st_cell_cover:\n$plan")
       assert(plan.contains("st_intersects("), s"refine is not the native st_intersects:\n$plan")
     }
@@ -114,5 +116,32 @@ class PlanRegressionSpec extends AnyFunSuite {
     assert(nodes("Exchange") <= 1, s"unexpected shuffles:\n$plan")
     assert(formatted.contains("st_cell_cover("),
       s"join was not lowered onto the cell cover:\n$formatted")
+  }
+
+  test("cover joins dedup with native first_shared_cell, never array_intersect") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    GraftExtensions.register(spark)
+    val docs = spark.read.parquet(corpus)
+    docs.createOrReplaceTempView("pr_dedup_docs")
+    tiles.withColumnRenamed("wkt", "tile_wkt").createOrReplaceTempView("pr_dedup_tiles")
+    val joins = Seq(
+      "broadcast" -> graft.ops.TileAssign.assign(docs, tiles, geomCol = "wkb"),
+      "shuffled" -> graft.ops.TileAssign.assign(docs, tiles, shuffled = true),
+      "salted x4" -> graft.ops.TileAssign.assign(docs, tiles, shuffled = true, saltBuckets = 4),
+      "SQL-lowered" -> spark.sql(
+        "SELECT * FROM pr_dedup_docs d JOIN pr_dedup_tiles t ON st_intersects(t.tile_wkt, d.wkt)"))
+    for ((name, df) <- joins) {
+      val conds = df.queryExecution.optimizedPlan.collect {
+        case Join(_, _, _, Some(c), _)
+            if c.exists(e => e.isInstanceOf[StIntersects] || e.isInstanceOf[StIntersectsWkb]) => c
+      }
+      assert(conds.size == 1, s"$name: expected one cover join, got ${conds.size}")
+      assert(conds.head.exists(_.isInstanceOf[FirstSharedCell]),
+        s"$name: no first_shared_cell in ${conds.head.sql}")
+      assert(!conds.head.exists(_.isInstanceOf[ArrayIntersect]),
+        s"$name: array_intersect in ${conds.head.sql}")
+      assert(df.count() > 0, name)
+    }
   }
 }

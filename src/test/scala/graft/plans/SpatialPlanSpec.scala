@@ -55,6 +55,59 @@ class SpatialPlanSpec extends AnyFunSuite {
     }
   }
 
+  test("first_shared_cell expression: eval == codegen == array_min(array_intersect)") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, ArrayMin, BoundReference, EqualTo}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val (c, a, b) = (BoundReference(0, LongType, nullable = true),
+      BoundReference(1, ArrayType(LongType, containsNull = false), nullable = true),
+      BoundReference(2, ArrayType(LongType, containsNull = false), nullable = true))
+    val native = FirstSharedCell(c, a, b)
+    val reference = EqualTo(c, ArrayMin(ArrayIntersect(a, b)))
+    val compiled = GenerateUnsafeProjection.generate(Seq(native))
+    def check(cell: java.lang.Long, xs: Array[Long], ys: Array[Long]): Unit = {
+      // both ArrayData layouts the join can hand the kernel
+      val row = InternalRow(cell, Option(xs).map(UnsafeArrayData.fromPrimitiveArray).orNull,
+        Option(ys).map(new GenericArrayData(_)).orNull)
+      val interpreted = native.eval(row)
+      val generated = compiled(row).getBoolean(0)
+      val expected = reference.eval(row) == true
+      val what = s"cell=$cell a=${Option(xs).map(_.mkString(","))} b=${Option(ys).map(_.mkString(","))}"
+      assert(interpreted == expected && generated == expected, what)
+    }
+    val rnd = new scala.util.Random(11)
+    val base = 5L << 58 // res-5 cell ids
+    def sortedDistinct(n: Int, universe: Int) =
+      Array.fill(n)(base + rnd.nextInt(universe)).distinct.sorted
+    val shapes = Seq[(String, () => (Array[Long], Array[Long]))](
+      "empty" -> (() => (Array.empty[Long], sortedDistinct(rnd.nextInt(6), 40))),
+      "disjoint" -> { () =>
+        val xs = sortedDistinct(1 + rnd.nextInt(8), 40)
+        (xs, sortedDistinct(1 + rnd.nextInt(8), 40).filterNot(xs.contains))
+      },
+      "identical" -> { () => val xs = sortedDistinct(1 + rnd.nextInt(8), 40); (xs, xs.clone()) },
+      "one shared" -> { () =>
+        val xs = sortedDistinct(1 + rnd.nextInt(8), 40)
+        val s = xs(rnd.nextInt(xs.length))
+        (xs, (sortedDistinct(rnd.nextInt(8), 40).filterNot(xs.contains) :+ s).sorted)
+      },
+      "random" -> (() => (sortedDistinct(rnd.nextInt(12), 30), sortedDistinct(rnd.nextInt(12), 30))))
+    for ((shape, draw) <- shapes; _ <- 0 until 200) withClue(s"$shape: ") {
+      val (xs, ys) = draw()
+      // every id of either side (the join only asks about shared ones), and
+      // ids outside both
+      (xs ++ ys ++ Seq(base - 1, base + 41)).foreach(cell => check(cell, xs, ys))
+      val shared: Long = xs.find(ys.contains).getOrElse(base)
+      check(null, xs, ys)
+      check(shared, null, ys)
+      check(shared, xs, null)
+    }
+    assert(!native.nullable)
+  }
+
   test("SQL cosine_sim / quantized_dot registered via extensions") {
     withExtensions {
       graft.SparkTestSession.spark.read
@@ -84,19 +137,19 @@ class SpatialPlanSpec extends AnyFunSuite {
     }
   }
 
-  test("strategy plans BroadcastSpatialJoinExec and matches the cell-cover join") {
+  test("SQL join lowered onto the cell-cover join matches TileAssign.assign") {
     withExtensions {
       val joined = scenes.join(tiles,
         SpatialColumns.stIntersects(col("tile_wkt"), col("wkt")))
       assertLowered(joined)
 
-      val viaStrategy = joined.select("doc_id", "tile_id").collect()
+      val viaLowering = joined.select("doc_id", "tile_id").collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
       val viaCoverJoin = graft.ops.TileAssign.assign(scenes, tiles.withColumnRenamed("tile_wkt", "wkt"))
         .select("doc_id", "tile_id").collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
-      assert(viaStrategy == viaCoverJoin)
-      assert(viaStrategy.size > 2000)
+      assert(viaLowering == viaCoverJoin)
+      assert(viaLowering.size > 2000)
     }
   }
 
