@@ -945,7 +945,10 @@ object GeoQueries {
   def knn(s: SparkSession, dir: String): DataFrame = {
     val pts = scenesFromOrders(s, dir)
       .withColumn("lon", col("xmin") + 0.75).withColumn("lat", col("ymin") + 0.5)
-    Knn.nearestTiles(pts, tiles(s), k = 3, res = 3, ring = 1)
+    // res 4 (22.5° × 11.25° cells): on the 15° × 10° tile grid ring 1
+    // proves almost every point's top 3; measured faster than res 3 (3× the
+    // candidates per point) and no slower than res 5 (one round more)
+    Knn.nearestTiles(pts, tiles(s), k = 3, res = 4)
       .select(col("doc_id"), col("tile_id"), col("rank").cast("long").as("rank"))
   }
 

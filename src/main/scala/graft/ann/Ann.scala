@@ -1,37 +1,7 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-
-/**
- * Bounded top-k aggregator over (score, id) pairs: keeps the k best
- * (score desc, id asc) per group IN THE PARTIAL BUFFER, so the per-probe
- * shuffle carries k rows instead of the full candidate set — the map-side
- * combine a window `row_number` ranking cannot do. Order is total
- * (ties by id), so results are deterministic and oracle-exact.
- *
- * This udaf-bridge form is the PARITY REFERENCE (AnnSpec pins the native
- * [[TopKRows]] against it); the query paths use [[TopKRows]], which keeps
- * the same state in primitive arrays without per-row tuple boxing.
- */
-class TopKAgg(k: Int) extends Aggregator[(Double, Long), Seq[(Double, Long)], Seq[(Double, Long)]] {
-  // (score desc, id asc), scores in Double.compare's total order (NaN worst)
-  private val order: Ordering[(Double, Long)] =
-    Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) }(
-      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
-  private def insert(buf: Seq[(Double, Long)], v: (Double, Long)): Seq[(Double, Long)] =
-    if (buf.size >= k && !order.lt(v, buf.last)) buf
-    else (buf :+ v).sorted(order).take(k)
-  def zero: Seq[(Double, Long)] = Vector.empty
-  def reduce(b: Seq[(Double, Long)], v: (Double, Long)): Seq[(Double, Long)] = insert(b, v)
-  def merge(a: Seq[(Double, Long)], b: Seq[(Double, Long)]): Seq[(Double, Long)] =
-    (a ++ b).sorted(order).take(k)
-  def finish(b: Seq[(Double, Long)]): Seq[(Double, Long)] = b
-  def bufferEncoder: Encoder[Seq[(Double, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Double, Long)]]()
-  def outputEncoder: Encoder[Seq[(Double, Long)]] = bufferEncoder
-}
 
 /**
  * Similarity search over an embedding column (`Array[Float]`).
@@ -106,7 +76,7 @@ object Ann {
 
   /** Top-k by stored-int8 dot: the corpus is quantized ONCE (in production:
     * written as the array<tinyint> storage column), probes broadcast, and
-    * candidates reduced map-side by [[TopKAgg]] like every ANN path. */
+    * candidates reduced map-side by [[TopKRows]] like every ANN path. */
   def i8TopK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val p = broadcast(probes.select(col("vec_id").as("probe_id"),
       quantizeI8(col("embedding")).as("pq")))
@@ -120,7 +90,7 @@ object Ann {
       .withColumn("dot", col("dot").cast("long"))
   }
 
-  /** Unpack a TopKAgg result column into (rank, neighbor_id, score) rows. */
+  /** Unpack a [[TopKRows]] result column into (rank, neighbor_id, score) rows. */
   private[ann] def explodeTopKPairs(df: DataFrame, scoreName: String): DataFrame =
     explodeTopK(df, scoreName)
 
@@ -131,7 +101,7 @@ object Ann {
 
   /** Exact cosine top-k of each probe against the corpus. Probes must be
     * small (broadcast); the corpus side is reduced MAP-SIDE to k candidates
-    * per probe per partition by [[TopKAgg]], so the only shuffle carries
+    * per probe per partition by [[TopKRows]], so the only shuffle carries
     * k·|probes| rows per partition — not |corpus|·|probes|. */
   def bruteForceTopK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val p = broadcast(probes.select(col("vec_id").as("probe_id"), col("embedding").as("pe")))
@@ -355,7 +325,7 @@ object Ann {
    * on a BOUNDED deterministic sample ([[IvfIndex.trainQuantizer]] — never
    * the full corpus at query time) partitions the corpus into `nlist` cells;
    * each probe searches only its `nprobe` nearest cells' posting lists
-   * (equi-join on cell id), exact cosine re-rank via [[TopKAgg]].
+   * (equi-join on cell id), exact cosine re-rank via [[TopKRows]].
    *
    * At 100 TB use the STORED form ([[IvfIndex.write]] / [[IvfIndex.probe]]):
    * posting lists written once `partitionBy(cell)` with the centers, probes
@@ -374,7 +344,7 @@ object Ann {
     // no per-pair dedup stage: every corpus row is assigned to exactly ONE
     // cell, so the cell equi-join can produce a given (probe, neighbor)
     // pair at most once — the former groupBy(probe_id, neighbor_id) was a
-    // full exchange of the candidate set for nothing. TopKAgg now combines
+    // full exchange of the candidate set for nothing. TopKRows now combines
     // map-side straight off the join (k rows per probe cross the shuffle).
     explodeTopK(
       posts.join(p, Seq("cell"))

@@ -145,7 +145,7 @@ object IvfIndex {
    * cells; the posting-list read is pruned to exactly those partitions
    * (`cell` is the physical partition column and the filter is a ≤ nlist
    * literal isin — provably static pruning, no full scan). Exact cosine
-   * re-rank among candidates via [[TopKAgg]].
+   * re-rank among candidates via [[TopKRows]].
    */
   def probe(spark: SparkSession, path: String, probes: DataFrame, k: Int,
             nprobe: Int = 4): DataFrame = {

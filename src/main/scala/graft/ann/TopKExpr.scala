@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 
 /**
  * Bounded top-k state: two parallel primitive arrays kept sorted by
- * (score desc, id asc) — the total order [[TopKAgg]] declares. All-primitive
+ * (score desc, id asc) — the total order of the `TopKAgg` udaf. All-primitive
  * and allocation-free per insert (one shift of ≤ k slots), vs the udaf
  * bridge's per-row boxed `(Double, Long)` decode + `(buf :+ v).sortBy.take(k)`
  * Vector rebuild per accepted candidate.
@@ -23,7 +23,7 @@ final class TopKBuf(val k: Int) {
   val ids = new Array[Long](k)
 
   /** Strictly-better-than-slot-(i) under (score desc, id asc), scores in
-    * `Double.compare`'s total order ([[TopKAgg]]'s sort key): NaN ranks
+    * `Double.compare`'s total order (the `TopKAgg` sort key): NaN ranks
     * worst and 0.0 beats -0.0. */
   @inline private def beats(s: Double, id: Long, i: Int): Boolean = {
     val c = java.lang.Double.compare(-s, -scores(i))
@@ -56,12 +56,13 @@ final class TopKBuf(val k: Int) {
 }
 
 /**
- * Native form of [[TopKAgg]]: keeps the k best (score desc, id asc)
- * candidates per group IN THE PARTIAL BUFFER (map-side combine — the
- * per-probe shuffle carries k rows, never the candidate set), hashed via
+ * Native form of the `TopKAgg` udaf (the parity reference in test sources):
+ * keeps the k best (score desc, id asc) candidates per group IN THE
+ * PARTIAL BUFFER (map-side combine — the per-probe shuffle carries k rows,
+ * never the candidate set), hashed via
  * ObjectHashAggregateExec. The order is total (ties by id), so the result
  * is independent of input order — deterministic and oracle-exact, exactly
- * the [[TopKAgg]] contract (AnnSpec pins parity, ties included).
+ * the `TopKAgg` contract (AnnSpec pins parity, ties included).
  *
  * Output is the same `array<struct<_1: double, _2: long>>` the udaf bridge
  * produced (field names/nullability preserved for schema identity); null

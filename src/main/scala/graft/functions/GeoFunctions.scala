@@ -3,13 +3,11 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.geom.Geo
-import graft.cells.CellIndex
 import graft.plans.SpatialColumns
 
 /**
  * Column-level geo helpers with no native expression: point/rectangle WKT
- * builders, the k-ring of a point's cell and the tie-stable point distance.
- * Cell covers and intersects are the native `plans/` expressions
+ * builders. Cell covers and intersects are the native `plans/` expressions
  * ([[graft.plans.SpatialColumns]]).
  */
 object GeoFunctions {
@@ -17,13 +15,6 @@ object GeoFunctions {
   /** cellCover(wkt, res): Array[Long] — the native [[graft.plans.StCellCover]],
     * under the name the `ardbench/` workloads import. */
   def cellCoverUdf(wkt: Column, res: Column): Column = SpatialColumns.stCellCover(wkt, res)
-
-  /** k-ring of a point's cell (explode-fed, like the cell cover). */
-  val kRingOfPointUdf =
-    udf((lon: Double, lat: Double, res: Int, k: Int) => CellIndex.kRing(CellIndex.cell(lon, lat, res), k))
-
-  /** Tie-stable point→geometry distance (see [[Geo.pointGeomDistance]]). */
-  val pointDistanceUdf = udf((lon: Double, lat: Double, wkt: String) => Geo.pointGeomDistance(lon, lat, wkt))
 
   /** Rectangle WKT from bounds — used by synthetic corpus + tests. */
   val rectWktUdf = udf((minLon: Double, minLat: Double, maxLon: Double, maxLat: Double) =>

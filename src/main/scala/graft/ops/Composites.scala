@@ -78,7 +78,7 @@ object Composites {
   /**
    * DuckDB twin of the fixed-step geomedian ([[GeomedianVec]] with
    * `tol = 0`): one chained CTE per Weiszfeld iteration, each mirroring
-   * GeomedianAgg.weiszfeld's arithmetic op for op — the 1/dist weights,
+   * [[Weiszfeld.weiszfeld]]'s arithmetic op for op — the 1/dist weights,
    * the Vardi–Zhang coincident-point correction (r̃ = num − den·cur,
    * ‖r̃‖ ≤ η ⇒ stay), and the den = 0 freeze. The start (per-band mean) is
    * integer-sum exact; the only cross-engine leak is float summation order
@@ -223,12 +223,6 @@ object WofsStatsAgg extends Aggregator[Double, WofsStatsBuf, WofsSummary] {
   def outputEncoder: Encoder[WofsSummary] = Encoders.product[WofsSummary]
 }
 
-/**
- * Geometric median (geomedian) composite — multi-band joint median per pixel
- * via Weiszfeld iteration (`utils/dc_mosaic.py:506-584`, hdstats
- * `nangeomedian`). Custom typed Aggregator: buffers the per-pixel band
- * vectors (bounded by time-series depth), runs Weiszfeld at finish.
- */
 /** Flat d-strided observation buffer for the geomedian aggregators: one
   * primitive `Array[Double]` per pixel (amortized-doubling growth, `used`
   * marks the live prefix) instead of a `Seq[Seq[Double]]` of boxed rows.
@@ -237,14 +231,6 @@ object WofsStatsAgg extends Aggregator[Double, WofsStatsBuf, WofsSummary] {
   * observation) to 8 contiguous bytes; the unused capacity tail (< 2×) is
   * still far below the boxed form's constant factor. */
 case class GmBuf(var d: Int, var used: Int, var data: Array[Double]) {
-  def add(v: Seq[Double]): GmBuf = {
-    if (d == 0) d = v.length
-    reserve(used + d)
-    var i = 0
-    while (i < d) { data(used + i) = v(i); i += 1 }
-    used += d
-    this
-  }
   def addRaw(v: Array[Double]): GmBuf = {
     if (d == 0) d = v.length
     reserve(used + d)
@@ -265,15 +251,10 @@ case class GmBuf(var d: Int, var used: Int, var data: Array[Double]) {
       System.arraycopy(data, 0, grown, 0, used)
       data = grown
     }
-  /** The buffered observations as row vectors (finish-time only). */
-  def points: Seq[Seq[Double]] =
-    (0 until (if (d == 0) 0 else used / d)).map(p =>
-      (0 until d).map(i => data(p * d + i)): Seq[Double])
 }
 
 object GmBuf {
   def empty: GmBuf = GmBuf(0, 0, Array.emptyDoubleArray)
-  val encoder: Encoder[GmBuf] = Encoders.product[GmBuf]
 }
 
 /**
@@ -288,9 +269,10 @@ object GmBuf {
  * this expression at 32 iterations ~1.5 s, the udaf bridge at 32 ~1.9 s
  * and at 0 ~1.8 s — what remains is the object-aggregation per-row
  * machinery shared with collect_list, not buffer serialization. Identical
- * arithmetic: the same [[GeomedianAgg.weiszfeld]] (sorted, Vardi–Zhang
+ * arithmetic: the same [[Weiszfeld.weiszfeld]] (sorted, Vardi–Zhang
  * corrected) runs at eval, so results — and the DuckDB oracle hashes —
- * are bit-equal to the Aggregator form (kept for AggregatorSpec parity).
+ * are bit-equal to the Aggregator form (the `GeomedianAgg` parity
+ * reference in test sources, AggregatorSpec).
  */
 case class GeomedianVec(bands: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
                         maxIter: Int, tol: Double,
@@ -355,7 +337,7 @@ case class GeomedianVec(bands: Seq[org.apache.spark.sql.catalyst.expressions.Exp
 
   override def eval(b: GmBuf): Any =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      GeomedianAgg.weiszfeldFlat(b.data, b.d, b.used, maxIter, tol))
+      Weiszfeld.weiszfeldFlat(b.data, b.d, b.used, maxIter, tol))
 
   override def serialize(b: GmBuf): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(8 + 8 * b.used)
@@ -434,7 +416,7 @@ case class GeomedoidVec(bands: Seq[org.apache.spark.sql.catalyst.expressions.Exp
 
   override def eval(b: GmBuf): Any = {
     if (b.used == 0 || b.d == 0) return null
-    val gm = GeomedianAgg.weiszfeldFlat(b.data, b.d, b.used, maxIter, tol)
+    val gm = Weiszfeld.weiszfeldFlat(b.data, b.d, b.used, maxIter, tol)
     val d = b.d
     val c = new Array[Double](d)
     var i = 0
@@ -489,16 +471,13 @@ object GeomedoidVec {
         maxIter, tol).toAggregateExpression())
 }
 
-object GeomedianAgg extends Aggregator[Seq[Double], GmBuf, Seq[Double]] {
-  def zero: GmBuf = GmBuf.empty
-  def reduce(b: GmBuf, v: Seq[Double]): GmBuf =
-    if (v == null || v.exists(_ == -9999.0)) b else b.add(v)
-  def merge(a: GmBuf, b: GmBuf): GmBuf = a.absorb(b)
-  def finish(b: GmBuf): Seq[Double] = weiszfeld(b.points)
-  def bufferEncoder: Encoder[GmBuf] = GmBuf.encoder
-  def outputEncoder: Encoder[Seq[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
-
+/**
+ * Geometric median (geomedian) — multi-band joint median per pixel via
+ * Weiszfeld iteration (`utils/dc_mosaic.py:506-584`, hdstats
+ * `nangeomedian`): the arithmetic [[GeomedianVec]] and [[GeomedoidVec]] run
+ * at finish over their buffered band vectors.
+ */
+object Weiszfeld {
   /** Deterministic Weiszfeld with the Vardi–Zhang (2000) correction for
     * iterates landing on a data point. Points are sorted first so the result
     * is independent of partition merge order. */

@@ -76,7 +76,8 @@ object Streams {
         // recovery) and keeps layers 1-2 — the standard idempotent-by-
         // batchId foreachBatch contract, at O(batch) instead of
         // O(committed-table) per micro-batch (measured 9.2x → ~2x of a
-        // plain batch write at 5M events; tools.StreamScale)
+        // plain batch write at 5M events; measured by `tools.StreamScale` at
+        // ab677c1, since deleted)
         graft.run.Checkpoint.runStage(batch.sparkSession, base, stage, batch,
           keyCol, f"b${epoch}_$batchId%06d", dedupe = dedupeKeys)(identity)
         onBatchCommitted(batchId)

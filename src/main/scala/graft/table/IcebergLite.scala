@@ -1168,10 +1168,10 @@ object IcebergLite {
    * carried BY REFERENCE into the new snapshot (same path, same bytes). A
    * daily upsert of 0.1% of a 100 TB table therefore rewrites only the
    * files holding those keys, not the table — cost scales with touched
-   * files (tools.MergeScale measures this). Files lacking key stats are
-   * conservatively rewritten; the rewrite commit always collects stats for
-   * `keyCols`, so any table maintained by merge becomes prunable even if
-   * its original appends never indexed the keys.
+   * files (measured by `tools.MergeScale` at ab677c1, since deleted). Files
+   * lacking key stats are conservatively rewritten; the rewrite commit
+   * always collects stats for `keyCols`, so any table maintained by merge
+   * becomes prunable even if its original appends never indexed the keys.
    *
    * One probe job over the (small) updates side computes BOTH the
    * duplicate-key refusal (duplicate keys in one batch make "upsert"
@@ -1333,9 +1333,9 @@ object IcebergLite {
   /** When to fold pending merge-on-read state back into clean data files.
     * Every stacked equality-delete commit taxes subsequent reads with one
     * more broadcast anti-join per older file group ([[readFiles]]); the
-    * MorScale probe measures the degradation curve. Thresholds are in
-    * pending delete FILES and BYTES — the two quantities that grow with
-    * unmaintained upsert streams. */
+    * `tools.MorScale` probe (at ab677c1, since deleted) measured the
+    * degradation curve. Thresholds are in pending delete FILES and BYTES —
+    * the two quantities that grow with unmaintained upsert streams. */
   case class MaintenancePolicy(maxPendingDeleteFiles: Int = 8,
                                maxPendingDeleteBytes: Long = 64L << 20,
                                sortBy: Seq[String] = Nil,

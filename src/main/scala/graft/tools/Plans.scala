@@ -72,12 +72,14 @@ object Plans {
       "partial_ functions before the exchange (map-side combine), final after",
       capture(graft.SparkEntry.queries("q1_agg")(spark, sfDir))))
 
-    // kNN zero-shuffle
+    // kNN: expanding-ring cell join
     val pts = graft.model.SynthCorpus.scenesFromOrders(spark, sfDir)
       .withColumn("lon", col("xmin") + 0.75).withColumn("lat", col("ymin") + 0.5)
-    sections += (("broadcast-STRtree kNN",
-      "no exchange except the probe-side spread; top-k computed per row against the broadcast tree",
-      capture(graft.ops.Knn.nearestTiles(pts, tiles, k = 3))))
+    sections += (("expanding-ring cell kNN",
+      "one round per ring (1, 2, 4, 8, 15 at res 4): k-ring explode, left-outer broadcast hash " +
+        "join on the cell with first_shared_cell, row_number window; a partial WindowGroupLimit " +
+        "before the one doc_id exchange keeps ≤ k rows per point; later rounds add no exchange",
+      capture(graft.ops.Knn.nearestTiles(pts, tiles, k = 3, res = 4))))
 
     // minhash-LSH candidate generation: band exchanges must be text-free
     val docsTbl = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,7 +1,8 @@
 package graft.tools
 
 /** Time one `SparkEntry.queries` entry N times in a warm session:
-  * `sbt "runMain graft.tools.TimeQuery <name> [sfDir] [reps]"`.
+  * `sbt "runMain graft.tools.TimeQuery <name> [sfDir] [reps]"`, on
+  * `local[SPARK_GRAFT_CPUS]` (default 32).
   * Separates first-query JVM/codegen warmup from the operator's own cost —
   * the per-round bench runs queries alphabetically, so whichever sorts
   * first absorbs the session warmup. */
@@ -14,7 +15,7 @@ object TimeQuery {
     // column alive) or "count" (lets Catalyst prune unreferenced columns,
     // INCLUDING deterministic UDFs — times the skeleton, not the work)
     val mode = if (args.length > 3) args(3) else "noop"
-    val spark = graft.GraftSession.local(32)
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val fn = graft.SparkEntry.queries(name)
     (1 to reps).foreach { r =>
       val t0 = System.nanoTime()
