@@ -939,7 +939,7 @@ object GeoQueries {
   def pip(s: SparkSession, dir: String): DataFrame = {
     val pts = scenesFromOrders(s, dir)
       .withColumn("pt_wkt", GeoFunctions.pointWktUdf(col("xmin") + 0.75, col("ymin") + 0.5))
-    TileAssign.assignPoint(pts, tiles(s)).select(col("doc_id"), col("tile_id"))
+    TileAssign.assign(pts, tiles(s), geomCol = "pt_wkt").select(col("doc_id"), col("tile_id"))
   }
 
   def knn(s: SparkSession, dir: String): DataFrame = {

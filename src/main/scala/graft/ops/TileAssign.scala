@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, JoinHint, LogicalPlan, SHUFFLE_HASH}
 import org.apache.spark.sql.functions._
+import graft.plans.CellCoverJoin
 
 /**
  * Tile assignment (SURVEY §2.3 J2): which output tile(s) does each scene
@@ -79,21 +81,46 @@ object TileAssign {
     named.join(geom, Seq(nameCol, "tile_id"), "left_anti")
   }
 
-  /** Geometric assignment: footprint × tile polygons via the cell-cover join.
-    * `geomCol` may be WKT (string) or WKB (binary). */
+  /**
+   * Geometric assignment: footprint × tile polygons via the cell-cover join
+   * ([[graft.plans.CellCoverJoin.build]]). Also point-in-polygon assignment
+   * (`geomCol` holding point WKT; reference: `rasterio.features.rasterize`
+   * PIP at `utils/genprepWater.py:274-279`, generalized): JTS intersects is
+   * boundary-inclusive, matching closed-set `<=` range predicates.
+   *
+   * Scale design (100 TB posture): the tile grid (≤ ~60k polygons) is
+   * broadcast, so the scenes are touched only by narrow operators — a cover
+   * projection, an explode, a broadcast hash join and its codegen'd
+   * condition (the `first_shared_cell` dedup and the refine): zero shuffles
+   * over the big side. `shuffled = true` is for a grid too big to broadcast:
+   * a shuffle-hash join on the cell id, split by AQE's skew join and
+   * `saltBuckets > 1` (see [[SpatialJoin.suggestSaltBuckets]]).
+   *
+   * @param scenes   carries `geomCol`, WKT (string) or WKB (binary)
+   * @param tiles    carries `tile_id` and `wkt` (WKT); the tile `wkt` is not
+   *                 in the output
+   * @param res      cell resolution (2^res × 2^res world grid)
+   * @param shuffled shuffle-hash join instead of broadcasting the tiles
+   * @param saltBuckets >1 adds a deterministic salt as a second join key on
+   *                 the scene side and replicates the tiles ×S
+   */
   def assign(scenes: DataFrame, tiles: DataFrame, res: Int = 5,
              shuffled: Boolean = false, saltBuckets: Int = 1,
-             geomCol: String = "wkt"): DataFrame =
-    SpatialJoin.intersectJoin(scenes, geomCol, tiles.withColumnRenamed("wkt", "tile_wkt"),
-      "tile_wkt", res, shuffled, saltBuckets)
+             geomCol: String = "wkt"): DataFrame = {
+    val p = scenes.queryExecution.analyzed
+    val d = tiles.withColumnRenamed("wkt", "tile_wkt").queryExecution.analyzed
+    val resolver = scenes.sparkSession.sessionState.conf.resolver
+    def geom(plan: LogicalPlan, name: String) =
+      plan.resolve(Seq(name), resolver).getOrElse(
+        throw new IllegalArgumentException(s"no column $name in ${plan.schema.simpleString}"))
+    // shuffle_hash hint: without it AQE converts the join back to broadcast
+    // whenever the tiles are small (true at test scale, false at the
+    // 60k-polygon+ scale this path exists for) — the hint keeps the
+    // measured plan the one that actually runs at scale
+    val strategy = if (shuffled) SHUFFLE_HASH else BROADCAST
+    val hint = JoinHint(None, Some(HintInfo(strategy = Some(strategy))))
+    GraftShims.dataFrame(scenes.sparkSession,
+      CellCoverJoin.build(p, geom(p, geomCol), d, geom(d, "tile_wkt"), res, hint, saltBuckets))
       .drop("tile_wkt")
-
-  /** Point-in-polygon assignment of scene center points (reference:
-    * `rasterio.features.rasterize` PIP at `utils/genprepWater.py:274-279`,
-    * generalized). JTS intersects is boundary-inclusive, matching closed-set
-    * `<=` range predicates. */
-  def assignPoint(points: DataFrame, tiles: DataFrame, res: Int = 5): DataFrame =
-    SpatialJoin.intersectJoin(points, "pt_wkt", tiles.withColumnRenamed("wkt", "tile_wkt"),
-      "tile_wkt", res)
-      .drop("tile_wkt")
+  }
 }

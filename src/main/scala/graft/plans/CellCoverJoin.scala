@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern.JOIN
-import org.apache.spark.sql.types.BinaryType
 
 /**
  * The engine's one spatial join algorithm, as a logical plan (SURVEY §2.3
@@ -15,19 +14,19 @@ import org.apache.spark.sql.types.BinaryType
  * without a shuffle and refined with an exact JTS intersects.
  *
  * [[build]] is the only place that plan is written.
- * [[graft.ops.SpatialJoin.intersectJoin]] calls it with an explicit
- * broadcast or shuffle-hash hint; this object, installed as an optimizer
- * rule by [[GraftExtensions]], calls it for SQL-form joins. Without the rule
+ * [[graft.ops.TileAssign.assign]] calls it with an explicit broadcast or
+ * shuffle-hash hint; this object, installed as an optimizer rule by
+ * [[GraftExtensions]], calls it for SQL-form joins. Without the rule
  * Catalyst can only plan `a JOIN b ON st_intersects(...)` as a
  * BroadcastNestedLoopJoin (O(N·M) — exactly the reference's per-row shapely
  * loop flagged "takes too long", `master_Search_Discover_example.ipynb`
  * cell 10).
  *
  * The rule rewrites an inner join with no equi-join keys whose condition
- * holds an [[StIntersects]] linking its two sides; the other conjuncts stay
- * in the join condition. Broadcast vs shuffle is left to Catalyst's
- * JoinSelection and AQE. A join that already has equi-join keys (the cell
- * join itself included) is left as it is.
+ * holds an [[StIntersects]] linking its two sides, over WKT or WKB; the
+ * other conjuncts stay in the join condition. Broadcast vs shuffle is left
+ * to Catalyst's JoinSelection and AQE. A join that already has equi-join
+ * keys (the cell join itself included) is left as it is.
  */
 object CellCoverJoin extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -46,8 +45,9 @@ object CellCoverJoin extends Rule[LogicalPlan] with PredicateHelper {
    *
    * @param probeGeom probe geometry: WKT (string) or WKB (binary, the
    *                  storage-side encoding — ~5× cheaper to parse)
-   * @param dimGeom   dimension geometry, WKT (small, parsed once per task via
-   *                  the prepared-geometry LRU)
+   * @param dimGeom   dimension geometry, WKT or WKB; at most one of the two
+   *                  is WKB. The refine prepares the WKT one (the dim side
+   *                  when both are WKT) once per task via the LRU
    * @param saltBuckets >1 adds a deterministic salt as a second join key on
    *                  the probe side and explodes the dim side ×S
    * @param rest      extra conjuncts kept in the join condition
@@ -56,9 +56,7 @@ object CellCoverJoin extends Rule[LogicalPlan] with PredicateHelper {
             res: Int, hint: JoinHint, saltBuckets: Int = 1,
             rest: Option[Expression] = None): LogicalPlan = {
     val r = Literal(res)
-    val probeWkb = probeGeom.dataType == BinaryType
-    val pCells = Alias(if (probeWkb) StCellCoverWkb(probeGeom, r) else StCellCover(probeGeom, r),
-      "__cells")()
+    val pCells = Alias(StCellCover(probeGeom, r), "__cells")()
     val dCells = Alias(StCellCover(dimGeom, r), "__tcells")()
     val (pc, pCell) = explode(pCells.toAttribute, "__cell", Project(probe.output :+ pCells, probe))
     val (dc, dCell) = explode(dCells.toAttribute, "__cell", Project(dim.output :+ dCells, dim))
@@ -77,8 +75,7 @@ object CellCoverJoin extends Rule[LogicalPlan] with PredicateHelper {
     // one allocation-free merge walk over the two sorted covers
     val dedup = FirstSharedCell(pCell, pCells.toAttribute, dCells.toAttribute)
     // exact geometric refine (reference: shapely intersects, cell 10)
-    val refine =
-      if (probeWkb) StIntersectsWkb(dimGeom, probeGeom) else StIntersects(dimGeom, probeGeom)
+    val refine = StIntersects(dimGeom, probeGeom)
     Project(probe.output ++ dim.output,
       Join(pk, dk, Inner, Some((Seq(dedup, refine) ++ rest ++ keys).reduce(And)), hint))
   }

@@ -32,20 +32,16 @@ object GraftExtensions {
 
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("st_intersects"),
-      info("st_intersects", "st_intersects(aWkt, bWkt) - exact geometry intersection test"),
+      info("st_intersects",
+        "st_intersects(a, b) - exact intersection of two WKT or WKB geometries (not both WKB)"),
       (c: Seq[Expression]) => StIntersects(c(0), c(1))),
     (FunctionIdentifier("st_distance"),
       info("st_distance", "st_distance(aWkt, bWkt) - planar distance in degrees"),
       (c: Seq[Expression]) => StDistance(c(0), c(1))),
     (FunctionIdentifier("st_cell_cover"),
-      info("st_cell_cover", "st_cell_cover(wkt, res) - AM-safe hierarchical cell cover"),
+      info("st_cell_cover",
+        "st_cell_cover(geom, res) - AM-safe hierarchical cell cover of a WKT or WKB geometry"),
       (c: Seq[Expression]) => StCellCover(c(0), c(1))),
-    (FunctionIdentifier("st_cell_cover_wkb"),
-      info("st_cell_cover_wkb", "st_cell_cover_wkb(wkb, res) - cell cover over WKB geometry"),
-      (c: Seq[Expression]) => StCellCoverWkb(c(0), c(1))),
-    (FunctionIdentifier("st_intersects_wkb"),
-      info("st_intersects_wkb", "st_intersects_wkb(dimWkt, probeWkb) - exact intersection, WKB probe"),
-      (c: Seq[Expression]) => StIntersectsWkb(c(0), c(1))),
     (FunctionIdentifier("cosine_sim"),
       info("cosine_sim", "cosine_sim(a, b) - exact cosine similarity of float embeddings"),
       (c: Seq[Expression]) => graft.ann.CosineSim(c(0), c(1))),

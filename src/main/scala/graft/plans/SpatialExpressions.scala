@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -16,28 +17,29 @@ import org.apache.spark.unsafe.types.UTF8String
  * These are real `Expression`s with `doGenCode` (static-call codegen, no
  * lambda boxing), so filters/joins built on them stay inside whole-stage
  * codegen — the preference order the engine follows over opaque Scala UDFs.
- * Geometry transits as WKT strings (the reference's boundary representation,
- * `utils/query_utils.py:24-27`); parsed/prepared geometries are cached
- * per-thread in [[graft.geom.Geo]].
+ * A geometry argument is WKT (string, the reference's boundary
+ * representation, `utils/query_utils.py:24-27`) or WKB (binary, the
+ * storage-side encoding, ~5× cheaper to parse); parsed/prepared geometries
+ * are cached per-thread in [[graft.geom.Geo]].
  */
 object GeoCodegen {
-  // static forwarders — referenced from generated Java. An empty geometry
-  // intersects nothing and covers no cell (dirty rows drop out of joins and
-  // filters instead of failing the task)
+  // static forwarders — referenced from generated Java, which picks the
+  // overload by the argument's Java type (UTF8String for WKT, byte[] for
+  // WKB). An empty geometry intersects nothing and covers no cell (dirty
+  // rows drop out of joins and filters instead of failing the task)
   def intersects(a: UTF8String, b: UTF8String): Boolean =
     a.numBytes() > 0 && b.numBytes() > 0 && graft.geom.Geo.intersects(a.toString, b.toString)
+  def intersects(wkt: UTF8String, wkb: Array[Byte]): Boolean =
+    wkt.numBytes() > 0 && wkb.length > 0 && graft.geom.Geo.intersectsWkb(wkt.toString, wkb)
+  def intersects(wkb: Array[Byte], wkt: UTF8String): Boolean = intersects(wkt, wkb)
   def distance(a: UTF8String, b: UTF8String): Double =
     graft.geom.Geo.distance(a.toString, b.toString)
   def cellCover(wkt: UTF8String, res: Int): ArrayData =
     if (wkt.numBytes() == 0) new GenericArrayData(Array.empty[Long])
     else new GenericArrayData(graft.geom.Geo.cellCoverWkt(wkt.toString, res))
-  // WKB (storage-encoding) variants, same empty-geometry guards
-  def cellCoverWkb(wkb: Array[Byte], res: Int): ArrayData =
+  def cellCover(wkb: Array[Byte], res: Int): ArrayData =
     if (wkb.length == 0) new GenericArrayData(Array.empty[Long])
     else new GenericArrayData(graft.geom.Geo.cellCoverWkb(wkb, res))
-  def intersectsWkb(dimWkt: UTF8String, probeWkb: Array[Byte]): Boolean =
-    dimWkt.numBytes() > 0 && probeWkb.length > 0 &&
-      graft.geom.Geo.intersectsWkb(dimWkt.toString, probeWkb)
   /** Merge walk over two sorted, distinct cell arrays: is `cell` their
     * smallest shared id? Stops at the first shared id, or as soon as either
     * side passes `cell`; reads in place, allocates nothing. */
@@ -58,17 +60,25 @@ object GeoCodegen {
   }
 }
 
-/** `st_intersects(aWkt, bWkt)` — exact JTS intersects, prepared-geometry
-  * cached on the left argument. A null or empty geometry intersects nothing,
-  * so the result is never null. [[CellCoverJoin]] lowers a join whose
+/** `st_intersects(a, b)` — exact JTS intersects of two geometries, each WKT
+  * or WKB but not both WKB. The WKT argument (the left one when both are
+  * WKT) is prepared and kept in the per-thread LRU; the other is parsed
+  * through a one-slot memo. A null or empty geometry intersects nothing, so
+  * the result is never null. [[CellCoverJoin]] lowers a join whose
   * condition holds this node onto the cell-cover join. */
-case class StIntersects(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType, StringType)
+case class StIntersects(left: Expression, right: Expression) extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (_: StringType, (_: StringType) | BinaryType) | (BinaryType, _: StringType) =>
+      TypeCheckResult.TypeCheckSuccess
+    case (a, b) => TypeCheckResult.TypeCheckFailure("st_intersects takes WKT (string) or WKB " +
+      s"(binary) geometries, at most one of them WKB; got (${a.simpleString}, ${b.simpleString})")
+  }
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = false
   override def eval(input: InternalRow): Any = (left.eval(input), right.eval(input)) match {
     case (a: UTF8String, b: UTF8String) => GeoCodegen.intersects(a, b)
+    case (a: UTF8String, b: Array[Byte]) => GeoCodegen.intersects(a, b)
+    case (a: Array[Byte], b: UTF8String) => GeoCodegen.intersects(a, b)
     case _ => false
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -98,49 +108,24 @@ case class StDistance(left: Expression, right: Expression)
   override def prettyName: String = "st_distance"
 }
 
-/** `st_cell_cover(wkt, res)` — AM-safe hierarchical cell cover (the engine's
-  * Generator input: `explode(st_cell_cover(...))`). */
-case class StCellCover(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType, IntegerType)
+/** `st_cell_cover(geom, res)` — AM-safe hierarchical cell cover of a WKT or
+  * WKB geometry (the engine's Generator input: `explode(st_cell_cover(...))`). */
+case class StCellCover(left: Expression, right: Expression) extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case ((_: StringType) | BinaryType, IntegerType) => TypeCheckResult.TypeCheckSuccess
+    case (g, r) => TypeCheckResult.TypeCheckFailure("st_cell_cover takes a WKT (string) or WKB " +
+      s"(binary) geometry and an int resolution; got (${g.simpleString}, ${r.simpleString})")
+  }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(a: Any, b: Any): Any =
-    GeoCodegen.cellCover(a.asInstanceOf[UTF8String], b.asInstanceOf[Int])
+  override def nullSafeEval(a: Any, b: Any): Any = a match {
+    case wkt: UTF8String => GeoCodegen.cellCover(wkt, b.asInstanceOf[Int])
+    case wkb: Array[Byte] => GeoCodegen.cellCover(wkb, b.asInstanceOf[Int])
+  }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b) => s"graft.plans.GeoCodegen.cellCover($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StCellCover =
     copy(left = l, right = r)
   override def prettyName: String = "st_cell_cover"
-}
-
-/** `st_cell_cover_wkb(wkb, res)` — the cover generator over the storage-side
-  * WKB encoding: the flagship probe-side kernel. */
-case class StCellCoverWkb(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(a: Any, b: Any): Any =
-    GeoCodegen.cellCoverWkb(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.GeoCodegen.cellCoverWkb($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StCellCoverWkb =
-    copy(left = l, right = r)
-  override def prettyName: String = "st_cell_cover_wkb"
-}
-
-/** `st_intersects_wkb(dimWkt, probeWkb)` — the exact refine over a WKB probe
-  * (prepared-geometry LRU on the dim side, WKB parse memo on the probe). */
-case class StIntersectsWkb(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType, BinaryType)
-  override def dataType: DataType = BooleanType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    GeoCodegen.intersectsWkb(a.asInstanceOf[UTF8String], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.GeoCodegen.intersectsWkb($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StIntersectsWkb =
-    copy(left = l, right = r)
-  override def prettyName: String = "st_intersects_wkb"
 }
 
 /** `first_shared_cell(cell, cells, tcells)` — the cover join's shuffle-free
@@ -150,9 +135,8 @@ case class StIntersectsWkb(left: Expression, right: Expression)
   * non-null, and false where it is null (no shared cell, or a null input).
   *
   * Precondition: `cells` and `tcells` are sorted ascending, distinct and
-  * null-free — what `st_cell_cover`/`st_cell_cover_wkb` (and
-  * `CellIndex.kRing`) return. The merge walk reads them in place and
-  * allocates nothing per pair. */
+  * null-free — what `st_cell_cover` (and `CellIndex.kRing`) return. The
+  * merge walk reads them in place and allocates nothing per pair. */
 case class FirstSharedCell(cell: Expression, cells: Expression, tcells: Expression)
     extends TernaryExpression with ExpectsInputTypes {
   override def first: Expression = cell
@@ -190,8 +174,8 @@ object SpatialColumns {
     GraftShims.column(StDistance(GraftShims.expression(a), GraftShims.expression(b)))
   def stCellCover(a: Column, res: Column): Column =
     GraftShims.column(StCellCover(GraftShims.expression(a), GraftShims.expression(res)))
-  def stCellCoverWkb(a: Column, res: Column): Column =
-    GraftShims.column(StCellCoverWkb(GraftShims.expression(a), GraftShims.expression(res)))
+  /** Alias of [[stCellCover]], which takes WKB as well as WKT. */
+  def stCellCoverWkb(a: Column, res: Column): Column = stCellCover(a, res)
   def firstSharedCell(cell: Column, cells: Column, tcells: Column): Column =
     GraftShims.column(FirstSharedCell(GraftShims.expression(cell),
       GraftShims.expression(cells), GraftShims.expression(tcells)))

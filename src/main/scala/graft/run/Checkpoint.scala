@@ -50,8 +50,7 @@ object Checkpoint {
    * the wrong job.
    */
   def runStage(spark: SparkSession, base: String, stage: String,
-               input: DataFrame, keyCol: String, commitId: String,
-               dedupe: Boolean = true)
+               input: DataFrame, keyCol: String, commitId: String)
               (compute: DataFrame => DataFrame): (DataFrame, Long) = {
     val t0 = System.nanoTime()
     // Crash-retry safety: if the output table's commitId ledger holds
@@ -76,14 +75,7 @@ object Checkpoint {
       }
       return (spark.emptyDataFrame, 0L)
     }
-    // `dedupe = false` skips the anti-join against the accumulated done-set
-    // — an O(committed-table) read per stage run. Safe whenever the CALLER
-    // already guarantees each commitId covers a disjoint input slice (e.g.
-    // a stream checkpoint assigning batch ids): the alreadyCommitted guard
-    // above still makes same-commitId replays metadata-only no-ops. Keep
-    // the default (true) when input slices can overlap across commitIds —
-    // the SAC_DONE re-scan semantics.
-    val todo = (if (dedupe) committedKeys(spark, base, stage, keyCol) else None) match {
+    val todo = committedKeys(spark, base, stage, keyCol) match {
       case None => input
       case Some(done) => input.join(done.withColumnRenamed(keyCol, "__done_key"),
         col(keyCol) === col("__done_key"), "left_anti")

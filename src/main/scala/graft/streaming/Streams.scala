@@ -56,8 +56,7 @@ object Streams {
    */
   def appendToTable(df: DataFrame, base: String, stage: String, keyCol: String,
                     checkpointDir: String,
-                    onBatchCommitted: Long => Unit = _ => (),
-                    dedupeKeys: Boolean = true): org.apache.spark.sql.streaming.StreamingQuery = {
+                    onBatchCommitted: Long => Unit = _ => ()): org.apache.spark.sql.streaming.StreamingQuery = {
     // commitIds must be unique PER CHECKPOINT EPOCH: a lost/recreated
     // checkpoint restarts batchIds at 0, and bare `b<batchId>` ids would
     // collide with already-committed batches — the metadata guard would
@@ -72,14 +71,8 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // dedupeKeys = false drops exactly-once layer 3 (checkpoint-loss
-        // recovery) and keeps layers 1-2 — the standard idempotent-by-
-        // batchId foreachBatch contract, at O(batch) instead of
-        // O(committed-table) per micro-batch (measured 9.2x → ~2x of a
-        // plain batch write at 5M events; measured by `tools.StreamScale` at
-        // ab677c1, since deleted)
         graft.run.Checkpoint.runStage(batch.sparkSession, base, stage, batch,
-          keyCol, f"b${epoch}_$batchId%06d", dedupe = dedupeKeys)(identity)
+          keyCol, f"b${epoch}_$batchId%06d")(identity)
         onBatchCommitted(batchId)
         (): Unit
       }
@@ -396,24 +389,6 @@ object Streams {
   // --- stateful lease tracking (mapGroupsWithState) ----------------------
 
   case class Lease(itemId: String, ts: Long, event: String) // lease | complete
-  case class LeaseState(leases: Long, completes: Long)
-  case class LeaseStatus(itemId: String, leases: Long, completes: Long, state: String)
-
-  /** Per-item running lease/complete counters — the two-queue protocol's
-    * observable state (items leased more than completed are in-flight or
-    * lost-lease retries). */
-  def leaseTracker(events: org.apache.spark.sql.Dataset[Lease]): org.apache.spark.sql.Dataset[LeaseStatus] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.itemId)
-      .mapGroupsWithState[LeaseState, LeaseStatus](GroupStateTimeout.NoTimeout()) {
-        (id: String, batch: Iterator[Lease], state: GroupState[LeaseState]) =>
-          val prev = state.getOption.getOrElse(LeaseState(0, 0))
-          var l = prev.leases; var c = prev.completes
-          batch.foreach { e => if (e.event == "lease") l += 1 else c += 1 }
-          state.update(LeaseState(l, c))
-          LeaseStatus(id, l, c, if (c >= l) "done" else "in_flight")
-      }
-  }
 
   case class LeaseTtlStatus(itemId: String, leases: Long, completes: Long,
                             requeues: Long, state: String)

@@ -61,6 +61,16 @@ object Plans {
         "min-shared-cell dedup, refine); Catalyst picks broadcast vs shuffle; no BroadcastNestedLoopJoin",
       capture(docs.join(t2, graft.plans.SpatialColumns.stIntersects(col("tile_wkt"), col("wkt"))))))
 
+    // the same SQL join over the WKB corpus: lowered by the same rule
+    spark.read.parquet(wkbDir).createOrReplaceTempView("plans_wkb_docs")
+    t2.createOrReplaceTempView("plans_tiles")
+    sections += (("SQL st_intersects join over the WKB corpus (count)",
+      "`JOIN … ON st_intersects(t.tile_wkt, d.wkb)` is lowered like the WKT form: " +
+        "st_cell_cover over the binary column, broadcast cell equi-join, " +
+        "st_intersects(tile_wkt, wkb) refine; no BroadcastNestedLoopJoin",
+      capture(spark.sql("SELECT count(*) FROM plans_wkb_docs d JOIN plans_tiles t " +
+        "ON st_intersects(t.tile_wkt, d.wkb)"))))
+
     // pushdown / pruning over the driver tables
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     sections += (("filter + projection pushdown (lineitem)",

@@ -47,6 +47,12 @@ class KnnSpec extends AnyFunSuite {
       val expected = byDist.take(3).map(_._1).toSeq
       assert(got(id) == expected, s"doc $id at ($lon,$lat)")
     }
+
+    // k = 1: one row per point, the (distance, tile_id)-first tile
+    val nearest = Knn.nearestTiles(df, tiles, k = 1, res = 3)
+      .select($"doc_id", $"rank", $"tile_id").as[(String, Int, String)].collect()
+    assert(nearest.length == pts.length)
+    assert(nearest.toSet == bruteForce(pts, tileSeq.toSeq, k = 1))
   }
 
   /** kNN rows of `pts` with broadcast joins on and off: both equal brute force. */

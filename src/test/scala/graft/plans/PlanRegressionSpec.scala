@@ -70,10 +70,10 @@ class PlanRegressionSpec extends AnyFunSuite {
 
   test("WKB hot path runs the native kernel expressions, not udf wrappers") {
     val plan = countPlan("wkb")
-    assert(plan.contains("st_cell_cover_wkb"),
-      "probe cover is not the native st_cell_cover_wkb expression")
-    assert(plan.contains("st_intersects_wkb"),
-      "refine is not the native st_intersects_wkb expression")
+    assert("""st_cell_cover\(wkb#\d+, 5\)""".r.findFirstIn(plan).nonEmpty,
+      s"probe cover is not the native st_cell_cover over the wkb column:\n$plan")
+    assert("""st_intersects\(tile_wkt#\d+, wkb#\d+\)""".r.findFirstIn(plan).nonEmpty,
+      s"refine is not the native st_intersects over the wkb column:\n$plan")
   }
 
   test("broadcast path: no shuffle over the probe side; shuffled path: real exchange") {
@@ -133,8 +133,7 @@ class PlanRegressionSpec extends AnyFunSuite {
         "SELECT * FROM pr_dedup_docs d JOIN pr_dedup_tiles t ON st_intersects(t.tile_wkt, d.wkt)"))
     for ((name, df) <- joins) {
       val conds = df.queryExecution.optimizedPlan.collect {
-        case Join(_, _, _, Some(c), _)
-            if c.exists(e => e.isInstanceOf[StIntersects] || e.isInstanceOf[StIntersectsWkb]) => c
+        case Join(_, _, _, Some(c), _) if c.exists(_.isInstanceOf[StIntersects]) => c
       }
       assert(conds.size == 1, s"$name: expected one cover join, got ${conds.size}")
       assert(conds.head.exists(_.isInstanceOf[FirstSharedCell]),

@@ -22,6 +22,10 @@ class SpatialPlanSpec extends AnyFunSuite {
   private def scenes = graft.model.SynthCorpus.docs(spark, 2000, seed = 7L)
     .select(col("doc_id"), col("wkt"))
 
+  /** The same scenes with their geometry as WKB (`doc_id`, `wkb`). */
+  private def wkbScenes = graft.model.SynthCorpus.docs(spark, 2000, seed = 7L)
+    .select(col("doc_id"), col("wkb"))
+
   private def tiles = graft.model.SynthCorpus.tileGrid(spark)
     .select(col("tile_id"), col("wkt").as("tile_wkt"))
 
@@ -53,6 +57,47 @@ class SpatialPlanSpec extends AnyFunSuite {
         assert(r.getAs[Boolean]("hit") == expect, s"${r.getAs[String]("doc_id")}")
       }
     }
+  }
+
+  test("st_intersects over (WKT, WKB) and (WKB, WKT): eval == codegen == JTS, null and empty included") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val (wkt, wkb) = (BoundReference(0, StringType, nullable = true),
+      BoundReference(1, BinaryType, nullable = true))
+    val forms = Seq(StIntersects(wkt, wkb), StIntersects(wkb, wkt))
+    val compiled = GenerateUnsafeProjection.generate(forms)
+    def check(t: String, d: Array[Byte], expected: Boolean): Unit = {
+      val row = InternalRow(Option(t).map(UTF8String.fromString).orNull, d)
+      val generated = compiled(row)
+      forms.zipWithIndex.foreach { case (f, i) =>
+        assert(f.eval(row) == expected && generated.getBoolean(i) == expected,
+          s"${f.prettyName}(${f.left.dataType.simpleString}, ${f.right.dataType.simpleString}) " +
+            s"on tile ${Option(t).map(_.take(60))}, doc ${Option(d).map(_.length)} bytes")
+      }
+    }
+    val tileWkts = tiles.limit(20).collect().map(_.getString(1))
+    val docWkbs = wkbScenes.limit(200).collect().map(_.getAs[Array[Byte]]("wkb"))
+    var hits = 0
+    for (t <- tileWkts; d <- docWkbs) {
+      val jts = graft.geom.Geo.fromWkt(t).intersects(graft.geom.Geo.fromWkb(d))
+      if (jts) hits += 1
+      check(t, d, jts)
+    }
+    assert(hits > 0 && hits < tileWkts.length * docWkbs.length)
+    // a null or empty geometry on either side intersects nothing
+    for (t <- Seq(tileWkts.head, null, ""); d <- Seq(docWkbs.head, null, Array.empty[Byte])
+         if t == null || t.isEmpty || d == null || d.isEmpty) check(t, d, expected = false)
+    assert(forms.forall(!_.nullable))
+  }
+
+  test("st_intersects over two WKB geometries fails analysis") {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      wkbScenes.select(SpatialColumns.stIntersects(col("wkb"), col("wkb"))).collect()
+    }
+    assert(e.getMessage.contains("at most one of them WKB"), e.getMessage)
   }
 
   test("first_shared_cell expression: eval == codegen == array_min(array_intersect)") {
@@ -204,7 +249,7 @@ class SpatialPlanSpec extends AnyFunSuite {
           |ON st_intersects(t.tile_wkt, s.wkt)
           |AND substring(s.doc_id, -1, 1) < substring(t.tile_id, -1, 1)""".stripMargin)
       assertLowered(residual)
-      val want = pairs(graft.ops.SpatialJoin.intersectJoin(scenes, "wkt", tiles, "tile_wkt", 5)
+      val want = pairs(graft.ops.TileAssign.assign(scenes, tiles.withColumnRenamed("tile_wkt", "wkt"))
         .where(substring(col("doc_id"), -1, 1) < substring(col("tile_id"), -1, 1)))
       assert(want.nonEmpty && want.size < assigned.size)
       assert(pairs(residual) == want)
@@ -237,6 +282,47 @@ class SpatialPlanSpec extends AnyFunSuite {
       rows.foreach { r =>
         val expect = graft.geom.Geo.cellCoverWkt(r.getAs[String]("wkt"), 5).toSeq
         assert(r.getSeq[Long](1).toSeq == expect)
+      }
+    }
+  }
+
+  test("st_cell_cover over WKB == Geo.cellCoverWkb") {
+    withExtensions {
+      val rows = wkbScenes.limit(100)
+        .select(col("wkb"), SpatialColumns.stCellCover(col("wkb"), lit(5)).as("cells"),
+          expr("st_cell_cover(wkb, 5)").as("sql_cells"))
+        .collect()
+      assert(rows.length == 100)
+      rows.foreach { r =>
+        val expect = graft.geom.Geo.cellCoverWkb(r.getAs[Array[Byte]]("wkb"), 5).toSeq
+        assert(expect.nonEmpty)
+        assert(r.getSeq[Long](1).toSeq == expect && r.getSeq[Long](2).toSeq == expect)
+      }
+      // a null geometry has a null cover, an empty one covers no cell
+      import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+      import org.apache.spark.sql.types.BinaryType
+      val cover = StCellCover(BoundReference(0, BinaryType, nullable = true), Literal(5))
+      assert(cover.eval(InternalRow(null)) == null)
+      assert(cover.eval(InternalRow(Array.empty[Byte])).asInstanceOf[
+        org.apache.spark.sql.catalyst.util.ArrayData].numElements() == 0)
+    }
+  }
+
+  test("SQL join over WKB: both argument orders, scenes on either side == TileAssign.assign(wkb)") {
+    withExtensions {
+      wkbScenes.createOrReplaceTempView("wkb_scenes")
+      tiles.createOrReplaceTempView("wkb_tiles")
+      val want = pairs(graft.ops.TileAssign.assign(wkbScenes,
+        tiles.withColumnRenamed("tile_wkt", "wkt"), geomCol = "wkb"))
+      assert(want == assigned) // the WKB and WKT encodings of one corpus
+      for {
+        from <- Seq("wkb_scenes s JOIN wkb_tiles t", "wkb_tiles t JOIN wkb_scenes s")
+        on <- Seq("st_intersects(t.tile_wkt, s.wkb)", "st_intersects(s.wkb, t.tile_wkt)")
+      } {
+        val joined = spark.sql(s"SELECT s.doc_id, t.tile_id FROM $from ON $on")
+        assertLowered(joined)
+        assert(pairs(joined) == want, s"$from ON $on")
       }
     }
   }

@@ -207,41 +207,6 @@ class StreamsSpec extends AnyFunSuite {
     assert(got.toSet == (first ++ extra).toSet)
   }
 
-  test("durable sink without key dedupe: batchId replay still exactly-once via metadata guard") {
-    val in = java.nio.file.Files.createTempDirectory("graft_durable2_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_durable2_ck").toString
-    val base = java.nio.file.Files.createTempDirectory("graft_durable2_tbl").toString
-    val rows = (0L until 200L).map(k => (k, s"v$k"))
-    rows.toDF("k", "v").repartition(4).write.mode("overwrite").parquet(in)
-    val schema = spark.read.parquet(in).schema
-    def stream = Streams.parquetStream(spark, in, schema, Map("maxFilesPerTrigger" -> "1"))
-    // crash after batch 0's commit but before the stream checkpoint advance,
-    // with the per-key anti-join DISABLED — the replay of batch 0 must be
-    // absorbed by the commitId metadata guard alone
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      Streams.appendToTable(stream, base, "ingest", "k", ckpt,
-        onBatchCommitted = id => if (id == 0) throw new RuntimeException("crash"),
-        dedupeKeys = false)
-    }
-    Streams.appendToTable(stream, base, "ingest", "k", ckpt, dedupeKeys = false)
-    val got = graft.run.Checkpoint.committed(spark, base, "ingest")
-      .select($"k", $"v").as[(Long, String)].collect()
-    assert(got.length == 200, s"exactly-once violated without dedupe: ${got.length}")
-    assert(got.toSet == rows.toSet)
-  }
-
-  test("stateful lease tracker accumulates across micro-batches (queue protocol state)") {
-    val events = Seq(
-      Streams.Lease("job1", 1, "lease"), Streams.Lease("job1", 2, "complete"),
-      Streams.Lease("job2", 1, "lease"), Streams.Lease("job2", 3, "lease"),
-      Streams.Lease("job3", 1, "lease"), Streams.Lease("job3", 2, "complete")
-    ).toDS()
-    val out = Streams.leaseTracker(events).collect().map(s => s.itemId -> s).toMap
-    assert(out("job1").state == "done")
-    assert(out("job2").state == "in_flight" && out("job2").leases == 2) // lost lease retried
-    assert(out("job3").state == "done")
-  }
-
   test("TTL lease tracker: lapsed leases requeue (rediswq lease_secs semantics)") {
     val ttl = 10L
     val events = Seq(
