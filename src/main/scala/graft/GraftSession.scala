@@ -48,7 +48,7 @@ object GraftSession {
   /** The object-aggregate hash-vs-sort posture for sessions the engine did
     * NOT build (the frozen driver mains construct their own sessions):
     * runtime-settable, so operators whose aggregation buffers are objects
-    * (geomedian's flat GmBuf, collect_list reassembly, summary stats) apply
+    * (geomedian's flat GmBuf, percentile, struct extrema, collect_list) apply
     * it at query-build time. Identical rationale to the builder config
     * above — with the 128-key default every partition of a
     * thousands-of-groups pixel aggregation abandons hashing and SORTS every

@@ -1032,28 +1032,25 @@ object PixelQueries {
       carried = Seq("l_orderkey", "l_linenumber", "red2"), v = "red2")
       .select("py", "px", "l_orderkey", "l_linenumber", "red2")
 
-  def maxNdvi(s: SparkSession, d: String): DataFrame =
-    Composites.maxNdviComposite(px(graft.GraftSession.tuneObjectAgg(s), d),
+  def maxNdvi(s: SparkSession, d: String): DataFrame = ndvi(s, d, greatest = true)
+  def minNdvi(s: SparkSession, d: String): DataFrame = ndvi(s, d, greatest = false)
+
+  private def ndvi(s: SparkSession, d: String, greatest: Boolean): DataFrame =
+    Composites.ndviComposite(px(graft.GraftSession.tuneObjectAgg(s), d),
       Seq("py", "px"),
-      tieBreak = Seq("l_orderkey", "l_linenumber"), bands = Seq("blue", "nir", "red"))
+      tieBreak = Seq("l_orderkey", "l_linenumber"), bands = Seq("blue", "nir", "red"), greatest)
       .select("py", "px", "best_ndvi", "blue", "nir", "red")
 
-  def minNdvi(s: SparkSession, d: String): DataFrame =
-    Composites.minNdviComposite(px(graft.GraftSession.tuneObjectAgg(s), d),
-      Seq("py", "px"),
-      tieBreak = Seq("l_orderkey", "l_linenumber"), bands = Seq("blue", "nir", "red"))
-      .select("py", "px", "best_ndvi", "blue", "nir", "red")
-
-  /** Geomedian of (blue, nir, red) vectors per pixel — Weiszfeld Aggregator
-    * (A9). Driver query runs the FIXED-STEP parameterization (32 iterations,
-    * tol 0) whose arithmetic has an exact SQL twin, so the oracle checks it
-    * row-for-row; converged-form parity vs the scalar oracle (default 200 /
-    * 1e-9) stays in AggregatorSpec. */
+  /** Geomedian of (blue, nir, red) vectors per pixel — the Weiszfeld
+    * aggregate [[GeomedianVec]] (A9). Driver query runs the FIXED-STEP
+    * parameterization (32 iterations, tol 0) whose arithmetic has an exact
+    * SQL twin, so the oracle checks it row-for-row; converged-form parity vs
+    * the scalar oracle (default 200 / 1e-9) stays in AggregatorSpec. */
   def geomedian(s: SparkSession, d: String): DataFrame = {
     graft.GraftSession.tuneObjectAgg(s)
     px(s, d).groupBy("py", "px")
-      .agg(GeomedianVec(32, 0.0)(col("blue").cast("double"), col("nir").cast("double"),
-        col("red").cast("double")).as("gm"))
+      .agg(GeomedianVec(32, 0.0, medoid = false)(col("blue").cast("double"),
+        col("nir").cast("double"), col("red").cast("double")).as("gm"))
       .select(col("py"), col("px"),
         round(element_at(col("gm"), 1), 6).as("gm_blue"),
         round(element_at(col("gm"), 2), 6).as("gm_nir"),
@@ -1086,13 +1083,22 @@ object PixelQueries {
     Raster.reassembleRows(px(s, d), rowKey = Seq("py"),
       orderCols = Seq("px", "l_orderkey", "l_linenumber"), v = "red2")
 
+  /** Per-pixel time-series summary (A6, `dc_utilities.py:126-174`): builtin
+    * sum/count/min/max over the valid `red2` values, as the oracle SQL
+    * writes it. The sum stays in the integer domain (exact, order-free);
+    * a pixel with no valid value reads 0.0 in every double field. The
+    * reference's `intermediate_product` merge is the partial/final split. */
   def summary(s: SparkSession, d: String): DataFrame = {
-    graft.GraftSession.tuneObjectAgg(s)
-    val agg = udaf(WofsStatsAgg)
-    px(s, d).groupBy("py", "px").agg(agg(col("red2").cast("double")).as("st"))
-      .select(col("py"), col("px"), col("st.total_data").as("total_data"),
-        col("st.total_clean").as("total_clean"), col("st.normalized").as("normalized"),
-        col("st.min").as("v_min"), col("st.max").as("v_max"))
+    val ok = Composites.valid(col("red2"))
+    px(s, d).groupBy("py", "px").agg(
+        sum(when(ok, col("red2")).otherwise(0)).cast("double").as("total_data"),
+        count(when(ok, 1)).as("total_clean"),
+        min(when(ok, col("red2"))).cast("double").as("mn"),
+        max(when(ok, col("red2"))).cast("double").as("mx"))
+      .select(col("py"), col("px"), col("total_data"), col("total_clean"),
+        when(col("total_clean") > 0, col("total_data") / col("total_clean"))
+          .otherwise(0.0).as("normalized"),
+        coalesce(col("mn"), lit(0.0)).as("v_min"), coalesce(col("mx"), lit(0.0)).as("v_max"))
   }
 }
 

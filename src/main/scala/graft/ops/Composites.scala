@@ -1,24 +1,26 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Encoder
-import org.apache.spark.sql.Encoders
 
 /**
  * Per-pixel temporal composites (SURVEY §2.4 A7–A11) — Spark-first forms of
- * `utils/dc_mosaic.py`:
+ * `utils/dc_mosaic.py`, one aggregate each:
  *  - mean (`:121-165`): `avg(when(valid, v))` — partial+final hash agg
  *  - median (`:168-212`): exact `percentile` (parity); `percentile_approx`
  *    is the documented 100 TB alternative
  *  - most-recent-valid (`:55-119`): `max_by`-style lexicographic struct max —
  *    no window shuffle, single agg
- *  - max-NDVI (`:215-345`): argmax via struct max carrying all bands
- *  - OR-fold of masks through time (`dc_clean_mask.py:44-64`): `bool_or`
+ *  - max/min-NDVI (`:215-345`): one argmax/argmin body over a
+ *    [[StructExtremum]] carrying all bands
+ *  - geomedian and geomedoid (`:506-584`): [[GeomedianVec]], one Weiszfeld
+ *    aggregate whose `medoid` mode returns the nearest observation
  *
- * All are algebraic aggregates: map-side partial combine keeps shuffle
- * volume at |pixels| regardless of time depth.
+ * Mean, most-recent and NDVI keep a bounded buffer per pixel, so map-side
+ * partial combine keeps shuffle volume at |pixels| regardless of time depth;
+ * median and the geomedian buffer every valid observation. The per-pixel
+ * summary (A6) is builtin sum/count/min/max (`PixelQueries.summary`) and the
+ * OR-fold of masks through time (A12) is Spark's builtin `bool_or`.
  */
 object Composites {
 
@@ -50,30 +52,18 @@ object Composites {
   def ndvi: Column = (col("nir") - col("red")).cast("double") / (col("nir") + col("red"))
   val ndviSql: String = "(cast(nir - red AS double) / (nir + red))"
 
-  /** Argmax-of-NDVI composite carrying all bands; ties broken by the carried
-    * key columns (lexicographic struct max ≡ ORDER BY ... DESC LIMIT 1). */
-  def maxNdviComposite(px: DataFrame, keys: Seq[String], tieBreak: Seq[String],
-                       bands: Seq[String]): DataFrame = {
+  /** Argmax (`greatest`) or argmin of NDVI composite carrying all bands
+    * (`dc_mosaic.py:215-345`, its min_ndvi kwarg picks the argmin); ties
+    * broken by the carried key columns (lexicographic struct max/min ≡
+    * ORDER BY ... DESC/ASC LIMIT 1). */
+  def ndviComposite(px: DataFrame, keys: Seq[String], tieBreak: Seq[String],
+                    bands: Seq[String], greatest: Boolean): DataFrame = {
     val packed = struct((ndvi.as("__ndvi") +: tieBreak.map(col)) ++ bands.map(col): _*)
     val agged = px.groupBy(keys.map(col): _*)
-      .agg(StructExtremum.structMax(packed).as("__top"))
+      .agg(StructExtremum.column(packed, greatest).as("__top"))
     bands.foldLeft(agged)((df, b) => df.withColumn(b, col(s"__top.$b")))
       .withColumn("best_ndvi", col("__top.__ndvi")).drop("__top")
   }
-
-  /** Argmin-of-NDVI composite (`dc_mosaic.py:215-345` min_ndvi kwarg). */
-  def minNdviComposite(px: DataFrame, keys: Seq[String], tieBreak: Seq[String],
-                       bands: Seq[String]): DataFrame = {
-    val packed = struct((ndvi.as("__ndvi") +: tieBreak.map(col)) ++ bands.map(col): _*)
-    val agged = px.groupBy(keys.map(col): _*)
-      .agg(StructExtremum.structMin(packed).as("__top"))
-    bands.foldLeft(agged)((df, b) => df.withColumn(b, col(s"__top.$b")))
-      .withColumn("best_ndvi", col("__top.__ndvi")).drop("__top")
-  }
-
-  /** OR-fold of boolean masks through time (A12). */
-  def anyThroughTime(px: DataFrame, keys: Seq[String], mask: Column): DataFrame =
-    px.groupBy(keys.map(col): _*).agg(max(mask.cast("int")).cast("boolean").as("any_mask"))
 
   /**
    * DuckDB twin of the fixed-step geomedian ([[GeomedianVec]] with
@@ -142,9 +132,10 @@ object Composites {
   /**
    * Geomedoid composite (A9's second variant, `utils/dc_mosaic.py:558-584`):
    * the OBSERVED band vector nearest the geomedian — guarantees the
-   * composite is a real spectrum, not a synthetic point. Two aggregations,
-   * both shuffled on the pixel key only: the fixed-step geomedian, then an
-   * argmin via lexicographic struct-min (no window, map-side combinable).
+   * composite is a real spectrum, not a synthetic point. One aggregation,
+   * shuffled on the pixel key only: [[GeomedianVec]] in medoid mode buffers
+   * the observations, runs the fixed-step geomedian over them at finish and
+   * returns the nearest buffered one (no re-join, no second scan).
    *
    * The center is rounded to 6 dp BEFORE the argmin (this is the operator's
    * defined parameterization, like the fixed-step iteration count): both
@@ -153,16 +144,9 @@ object Composites {
    */
   def geomedoidComposite(px: DataFrame, keys: Seq[String], bands: Seq[String],
                          iters: Int = 32): DataFrame = {
-    // ONE buffered aggregation: [[GeomedoidVec]] runs the fixed-step
-    // geomedian AND the argmin over the buffered observations at finish —
-    // the former two-aggregation form (geomedian agg → re-join the pixel
-    // table → struct-min agg) scanned the pixel table twice and shipped it
-    // through a second aggregation just to re-see the same observations the
-    // geomedian buffer already held. Arithmetic is replicated op for op
-    // (6-dp HALF_UP center, ((t0²+t1²)+t2²) association, (d², bands…) tie
-    // order), so results — and the DuckDB oracle hashes — are unchanged.
     val agged = px.groupBy(keys.map(col): _*)
-      .agg(GeomedoidVec(iters, 0.0)(bands.map(col(_).cast("double")): _*).as("__md"))
+      .agg(GeomedianVec(iters, 0.0, medoid = true)(bands.map(col(_).cast("double")): _*)
+        .as("__md"))
     bands.zipWithIndex.foldLeft(agged) { case (df, (b, i)) =>
       df.withColumn(s"md_$b",
         element_at(col("__md"), i + 1).cast(px.schema(b).dataType))
@@ -185,42 +169,6 @@ object Composites {
        |         row_number() OVER (PARTITION BY py, px ORDER BY d2, b, n, r) AS rn
        |  FROM cand) WHERE rn = 1""".stripMargin
   }
-}
-
-/**
- * WOfS per-pixel time-series summary (SURVEY §2.4 A6) — the algebraic form
- * of `perform_timeseries_analysis` (`utils/dc_utilities.py:126-174`):
- * total_data=Σv, total_clean=count, normalized=Σ/count, min, max. The
- * reference's `intermediate_product` incremental merge IS Spark's
- * partial/final aggregation contract; SummarySpec checks merge associativity
- * (two halves merged == one pass).
- */
-case class WofsObs(v: Double)
-case class WofsStatsBuf(var sum: Double, var cnt: Long, var mn: Double, var mx: Double)
-case class WofsSummary(total_data: Double, total_clean: Long,
-                       normalized: Double, min: Double, max: Double)
-
-object WofsStatsAgg extends Aggregator[Double, WofsStatsBuf, WofsSummary] {
-  def zero: WofsStatsBuf = WofsStatsBuf(0.0, 0L, Double.PositiveInfinity, Double.NegativeInfinity)
-  def reduce(b: WofsStatsBuf, v: Double): WofsStatsBuf = {
-    if (v != -9999.0) {
-      b.sum += v; b.cnt += 1
-      if (v < b.mn) b.mn = v
-      if (v > b.mx) b.mx = v
-    }
-    b
-  }
-  def merge(a: WofsStatsBuf, b: WofsStatsBuf): WofsStatsBuf = {
-    a.sum += b.sum; a.cnt += b.cnt
-    if (b.mn < a.mn) a.mn = b.mn
-    if (b.mx > a.mx) a.mx = b.mx
-    a
-  }
-  def finish(b: WofsStatsBuf): WofsSummary =
-    WofsSummary(b.sum, b.cnt, if (b.cnt == 0) 0.0 else b.sum / b.cnt,
-      if (b.cnt == 0) 0.0 else b.mn, if (b.cnt == 0) 0.0 else b.mx)
-  def bufferEncoder: Encoder[WofsStatsBuf] = Encoders.product[WofsStatsBuf]
-  def outputEncoder: Encoder[WofsSummary] = Encoders.product[WofsSummary]
 }
 
 /** Flat d-strided observation buffer for the geomedian aggregators: one
@@ -273,9 +221,17 @@ object GmBuf {
  * corrected) runs at eval, so results — and the DuckDB oracle hashes —
  * are bit-equal to the Aggregator form (the `GeomedianAgg` parity
  * reference in test sources, AggregatorSpec).
+ *
+ * `medoid = true` is the geomedoid (`dc_mosaic.py:558-584`) over the same
+ * buffer: after the geomedian, the center is rounded to 6 dp HALF_UP (Spark
+ * `round` semantics, the operator's defined parameterization) and the
+ * nearest buffered observation is returned — distance `((t0²+t1²)+t2²)` in
+ * the oracle SQL's association order, ties broken lexicographically on the
+ * band vector. An empty group gives an empty array as geomedian and null as
+ * geomedoid.
  */
 case class GeomedianVec(bands: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-                        maxIter: Int, tol: Double,
+                        maxIter: Int, tol: Double, medoid: Boolean,
                         mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
   extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[GmBuf] {
   import org.apache.spark.sql.catalyst.InternalRow
@@ -289,10 +245,13 @@ case class GeomedianVec(bands: Seq[org.apache.spark.sql.catalyst.expressions.Exp
     if (bands.forall(_.dataType == DoubleType))
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"geomedian expects DOUBLE bands, got ${bands.map(_.dataType.simpleString).mkString(", ")}")
-  override def nullable: Boolean = false
+      s"$prettyName expects DOUBLE bands, got ${bands.map(_.dataType.simpleString).mkString(", ")}")
+  override def nullable: Boolean = medoid
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "geomedian"
+  override def prettyName: String = if (medoid) "geomedoid" else "geomedian"
+  // the mode is in the name; plan strings list the remaining arguments
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(bands, maxIter, tol, mutableAggBufferOffset, inputAggBufferOffset)
 
   override def createAggregationBuffer(): GmBuf = GmBuf.empty
 
@@ -335,9 +294,45 @@ case class GeomedianVec(bands: Seq[org.apache.spark.sql.catalyst.expressions.Exp
 
   override def merge(a: GmBuf, b: GmBuf): GmBuf = a.absorb(b)
 
-  override def eval(b: GmBuf): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Weiszfeld.weiszfeldFlat(b.data, b.d, b.used, maxIter, tol))
+  override def eval(b: GmBuf): Any = {
+    val gm = Weiszfeld.weiszfeldFlat(b.data, b.d, b.used, maxIter, tol)
+    if (!medoid) new org.apache.spark.sql.catalyst.util.GenericArrayData(gm)
+    else if (gm.isEmpty) null
+    else new org.apache.spark.sql.catalyst.util.GenericArrayData(nearestObservation(b, gm))
+  }
+
+  /** The buffered observation nearest the 6-dp-rounded center `gm`, ties
+    * broken by the (d², bands…) order. */
+  private def nearestObservation(b: GmBuf, gm: Array[Double]): Array[Double] = {
+    val d = b.d
+    // Spark round(col, 6) on DoubleType: BigDecimal HALF_UP via valueOf
+    val c = gm.map(java.math.BigDecimal.valueOf(_)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
+    val n = b.used / d
+    var best = -1
+    var bestD2 = 0.0
+    var p = 0
+    while (p < n) {
+      var d2 = 0.0 // ascending accumulation ≡ ((t0²+t1²)+t2²)
+      var j = 0
+      while (j < d) { val t = b.data(p * d + j) - c(j); d2 += t * t; j += 1 }
+      val take =
+        if (best < 0) true
+        else if (d2 != bestD2) d2 < bestD2
+        else { // tie: lexicographic on the band vector (the oracle's ORDER BY d2, b, n, r)
+          var j2 = 0
+          var cmp = 0
+          while (j2 < d && cmp == 0) {
+            cmp = java.lang.Double.compare(b.data(p * d + j2), b.data(best * d + j2))
+            j2 += 1
+          }
+          cmp < 0
+        }
+      if (take) { best = p; bestD2 = d2 }
+      p += 1
+    }
+    java.util.Arrays.copyOfRange(b.data, best * d, best * d + d)
+  }
 
   override def serialize(b: GmBuf): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(8 + 8 * b.used)
@@ -367,115 +362,19 @@ case class GeomedianVec(bands: Seq[org.apache.spark.sql.catalyst.expressions.Exp
 
 object GeomedianVec {
   /** Column form: `geomedian(maxIter, tol)(blue, nir, red)` — an array of
-    * the band-space geometric median. */
-  def apply(maxIter: Int, tol: Double)(bands: Column*): Column =
+    * the band-space geometric median, or with `medoid` the observed band
+    * vector nearest its 6-dp rounding. */
+  def apply(maxIter: Int, tol: Double, medoid: Boolean)(bands: Column*): Column =
     org.apache.spark.sql.GraftShims.column(
       new GeomedianVec(bands.map(org.apache.spark.sql.GraftShims.expression),
-        maxIter, tol).toAggregateExpression())
-}
-
-/**
- * Geomedoid in ONE aggregation: same buffering as [[GeomedianVec]]
- * (nodata/null observations dropped on input — the pixel-plane bands carry
- * no −9999, so the candidate set equals the oracle's unfiltered `pts`);
- * at finish, the fixed-step geomedian runs over the buffer, the center is
- * rounded to 6 dp HALF_UP (Spark `round` semantics, the operator's defined
- * parameterization), and the argmin over the SAME buffered observations is
- * returned — distance `((t0²+t1²)+t2²)` in the Column form's association
- * order, ties broken lexicographically on the band vector. Replaces a
- * geomedian agg + pixel re-join + struct-min agg with one exchange and no
- * second scan; values are arithmetically identical (AggregatorSpec).
- */
-case class GeomedoidVec(bands: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-                        maxIter: Int, tol: Double,
-                        mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[GmBuf] {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.Expression
-  import org.apache.spark.sql.types._
-
-  override def children: Seq[Expression] = bands
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (bands.forall(_.dataType == DoubleType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"geomedoid expects DOUBLE bands, got ${bands.map(_.dataType.simpleString).mkString(", ")}")
-  override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "geomedoid"
-
-  override def createAggregationBuffer(): GmBuf = GmBuf.empty
-
-  // shared input path with GeomedianVec: a delegate instance provides the
-  // bound-reference getters and buffer ops, so the two stay bit-identical
-  @transient private lazy val in = GeomedianVec(bands, maxIter, tol)
-  override def update(b: GmBuf, row: InternalRow): GmBuf = in.update(b, row)
-  override def merge(a: GmBuf, b: GmBuf): GmBuf = a.absorb(b)
-  override def serialize(b: GmBuf): Array[Byte] = in.serialize(b)
-  override def deserialize(bytes: Array[Byte]): GmBuf = in.deserialize(bytes)
-
-  override def eval(b: GmBuf): Any = {
-    if (b.used == 0 || b.d == 0) return null
-    val gm = Weiszfeld.weiszfeldFlat(b.data, b.d, b.used, maxIter, tol)
-    val d = b.d
-    val c = new Array[Double](d)
-    var i = 0
-    while (i < d) {
-      // Spark round(col, 6) on DoubleType: BigDecimal HALF_UP via valueOf
-      c(i) = java.math.BigDecimal.valueOf(gm(i))
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-      i += 1
-    }
-    val n = b.used / d
-    var best = -1
-    var bestD2 = 0.0
-    var p = 0
-    while (p < n) {
-      var d2 = 0.0 // ascending accumulation ≡ the reduceLeft association
-      var j = 0
-      while (j < d) { val t = b.data(p * d + j) - c(j); d2 += t * t; j += 1 }
-      val take =
-        if (best < 0) true
-        else if (d2 != bestD2) d2 < bestD2
-        else { // tie: lexicographic on the band vector (the struct order)
-          var j2 = 0
-          var cmp = 0
-          while (j2 < d && cmp == 0) {
-            cmp = java.lang.Double.compare(b.data(p * d + j2), b.data(best * d + j2))
-            j2 += 1
-          }
-          cmp < 0
-        }
-      if (take) { best = p; bestD2 = d2 }
-      p += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array.tabulate(d)(j => b.data(best * d + j)))
-  }
-
-  override def withNewMutableAggBufferOffset(n: Int): GeomedoidVec =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): GeomedoidVec =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[org.apache.spark.sql.catalyst.expressions.Expression]): GeomedoidVec =
-    copy(bands = newChildren)
-}
-
-object GeomedoidVec {
-  /** Column form: `geomedoid(maxIter, tol)(blue, nir, red)` — the observed
-    * band vector nearest the 6-dp-rounded fixed-step geomedian. */
-  def apply(maxIter: Int, tol: Double)(bands: Column*): Column =
-    org.apache.spark.sql.GraftShims.column(
-      new GeomedoidVec(bands.map(org.apache.spark.sql.GraftShims.expression),
-        maxIter, tol).toAggregateExpression())
+        maxIter, tol, medoid).toAggregateExpression())
 }
 
 /**
  * Geometric median (geomedian) — multi-band joint median per pixel via
  * Weiszfeld iteration (`utils/dc_mosaic.py:506-584`, hdstats
- * `nangeomedian`): the arithmetic [[GeomedianVec]] and [[GeomedoidVec]] run
- * at finish over their buffered band vectors.
+ * `nangeomedian`): the arithmetic [[GeomedianVec]] runs at finish over its
+ * buffered band vectors, in both its geomedian and geomedoid modes.
  */
 object Weiszfeld {
   /** Deterministic Weiszfeld with the Vardi–Zhang (2000) correction for

@@ -101,15 +101,12 @@ case class StructExtremum(child: Expression, greatest: Boolean,
 }
 
 object StructExtremum {
-  /** Hashed drop-in for `max(struct(...))`. */
-  def structMax(c: Column): Column =
+  /** Hashed drop-in for `max(struct(...))` (`greatest`) or `min(struct(...))`. */
+  def column(c: Column, greatest: Boolean): Column =
     org.apache.spark.sql.GraftShims.column(
-      StructExtremum(org.apache.spark.sql.GraftShims.expression(c),
-        greatest = true).toAggregateExpression())
+      StructExtremum(org.apache.spark.sql.GraftShims.expression(c), greatest)
+        .toAggregateExpression())
 
-  /** Hashed drop-in for `min(struct(...))`. */
-  def structMin(c: Column): Column =
-    org.apache.spark.sql.GraftShims.column(
-      StructExtremum(org.apache.spark.sql.GraftShims.expression(c),
-        greatest = false).toAggregateExpression())
+  def structMax(c: Column): Column = column(c, greatest = true)
+  def structMin(c: Column): Column = column(c, greatest = false)
 }

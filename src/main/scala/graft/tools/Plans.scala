@@ -117,6 +117,13 @@ object Plans {
         "aggregate's finish over the same buffered observations",
       capture(graft.SparkEntry.queries("px_geomedoid")(spark, sfDir))))
 
+    // px_summary: builtin sum/count/min/max over the valid values
+    sections += (("px_summary (builtin per-pixel summary stats)",
+      "partial and final codegen'd HashAggregate around one pixel-key exchange: " +
+        "the sum stays in the integer domain, no ObjectHashAggregate and no " +
+        "sort-based fallback (PlanRegressionSpec locks this)",
+      capture(graft.SparkEntry.queries("px_summary")(spark, sfDir))))
+
     // ml_water: forest prediction as pure Column algebra
     sections += (("ml_water prediction (forest rendered as Column algebra)",
       "no ScalaUDF / Vector boxing in the predict plan — the trained trees are " +

@@ -144,4 +144,19 @@ class AggregatorSpec extends AnyFunSuite {
       .select($"py", $"px", $"red2").as[(Int, Int, Long)].collect().toSet
     assert(recent == Set((1, 1, 20L))) // ts tie broken by orderkey desc; -9999 excluded
   }
+
+  test("geomedian/geomedoid modes: an empty group gives an empty array and null") {
+    // pixel (1, 1)'s only observations carry nodata in some band, so its
+    // buffer stays empty; pixel (2, 2) has one valid observation
+    val df = Seq((1, 1, -9999L, 5L, 6L), (1, 1, 4L, -9999L, 6L), (2, 2, 7L, 8L, 9L))
+      .toDF("py", "px", "blue", "nir", "red").repartition(2)
+    val bands = Seq("blue", "nir", "red").map(col(_).cast("double"))
+    val agged = df.groupBy("py", "px").agg(
+      GeomedianVec(32, 0.0, medoid = false)(bands: _*).as("gm"),
+      GeomedianVec(32, 0.0, medoid = true)(bands: _*).as("md"))
+    assert(!agged.schema("gm").nullable && agged.schema("md").nullable)
+    val got = agged.as[(Int, Int, Seq[Double], Option[Seq[Double]])].collect().sortBy(_._1).toSeq
+    assert(got == Seq((1, 1, Seq.empty[Double], None),
+      (2, 2, Seq(7.0, 8.0, 9.0), Some(Seq(7.0, 8.0, 9.0)))))
+  }
 }

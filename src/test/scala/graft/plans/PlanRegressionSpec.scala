@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
  *  5. the SQL-form `st_intersects` join, lowered by CellCoverJoin, gets
  *     Catalyst's own broadcast and no probe-side shuffle either;
  *  6. every cover join dedups with the native `first_shared_cell` merge
- *     walk, never an allocating `array_intersect`.
+ *     walk, never an allocating `array_intersect`;
+ *  7. the per-pixel summary runs as builtin aggregates in a codegen'd
+ *     `HashAggregate`, not an object or sort-based aggregate.
  */
 class PlanRegressionSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -142,5 +144,21 @@ class PlanRegressionSpec extends AnyFunSuite {
         s"$name: array_intersect in ${conds.head.sql}")
       assert(df.count() > 0, name)
     }
+  }
+
+  test("px_summary plans as HashAggregate, never ObjectHashAggregate or SortAggregate") {
+    val job = graft.SparkEntry.queries("px_summary")(spark, "/root/testdata/sf0.001")
+    job.collect()
+    // the final executed tree only (AQE repeats nodes under "Initial Plan");
+    // (?<![A-Za-z]) keeps "HashAggregate" from matching inside "ObjectHashAggregate"
+    val plan = job.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      .split("== Initial Plan ==")(0)
+    def nodes(name: String) = s"""(?<![A-Za-z])$name \\(\\d+\\)""".r.findAllIn(plan).size
+    val codegened = """\* HashAggregate \(\d+\)""".r.findAllIn(plan).size
+    assert(nodes("HashAggregate") >= 2 && codegened == nodes("HashAggregate"),
+      s"no codegen'd partial/final HashAggregate in:\n$plan")
+    assert(nodes("ObjectHashAggregate") == 0 && nodes("SortAggregate") == 0,
+      s"summary fell back to an object or sort aggregate:\n$plan")
   }
 }
