@@ -39,8 +39,8 @@ object Streams {
    *     exactly as long as the offsets do); a batch replayed after a crash
    *     (stream checkpoint not yet advanced) hits
    *     [[graft.run.Checkpoint.runStage]]'s already-committed guard and is
-   *     skipped on METADATA alone (and the lineage log is backfilled if
-   *     the crash fell between the two commits);
+   *     skipped on METADATA alone (its lineage committed with its output
+   *     in the same pointer swap, so the log already holds it);
    *  2. a crash mid-batch leaves data files with no snapshot pointer —
    *     invisible, simply redone;
    *  3. if the stream checkpoint itself is lost and offsets replay under
@@ -100,26 +100,17 @@ object Streams {
     java.nio.file.Files.readString(marker).trim
   }
 
-  /** Tumbling event-time window counts with watermark (late data beyond
-    * `watermark` dropped). Batch-equivalent: groupBy(window(ts, w)). */
+  /** Event-time window counts with watermark (late data beyond `watermark`
+    * dropped). Tumbling by default; `slide` (the hop) makes them sliding.
+    * Batch-equivalent: groupBy(window(ts, w, slide)). */
   def windowedCounts(events: DataFrame, tsCol: String, window_ : String,
-                     watermark: String): DataFrame =
+                     watermark: String, slide: Option[String] = None): DataFrame =
     events
       // watermarks require TIMESTAMP (ltz); parquet NTZ columns are cast
       // (session TZ is pinned to UTC engine-wide, so this is lossless)
       .withColumn(tsCol, col(tsCol).cast("timestamp"))
       .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), window_).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("w_start"), col("event_type"), col("n"))
-
-  /** Sliding event-time window counts (window `window_`, hop `slide`). */
-  def slidingWindowedCounts(events: DataFrame, tsCol: String, window_ : String,
-                            slide: String, watermark: String): DataFrame =
-    events
-      .withColumn(tsCol, col(tsCol).cast("timestamp"))
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), window_, slide).as("w"), col("event_type"))
+      .groupBy(window(col(tsCol), window_, slide.getOrElse(window_)).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("w_start"), col("event_type"), col("n"))
 

@@ -425,7 +425,11 @@ object IcebergLite {
     * carries forward — so the answer survives compaction, rollback and the
     * expiry of the commit's own snapshots and files. */
   def alreadyCommitted(table: String, commitId: String): Boolean =
-    readSnapshot(table).exists(ledgerOf(table, _).contains(commitId))
+    committedIds(table).contains(commitId)
+
+  /** Every commitId on `table`'s current ledger (empty if never committed). */
+  def committedIds(table: String): Set[String] =
+    readSnapshot(table).map(ledgerOf(table, _)).getOrElse(Set.empty)
 
   /** `s`'s cumulative commitId ledger. Pre-upgrade snapshots (no ledger)
     * fall back to the historical file-path scan — upgraded transparently by

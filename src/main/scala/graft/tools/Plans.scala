@@ -18,6 +18,23 @@ object Plans {
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
   }
 
+  /** `plan` without run-to-run noise: `#N` and `[plan_id=N]` renumbered per
+    * section in order of first appearance; hashes, lambda and temp-dir
+    * suffixes, part-file UUIDs and `Statistics(sizeInBytes=…)` masked. */
+  private[tools] def stable(plan: String): String = {
+    def renumber(s: String, re: String, show: Int => String): String = {
+      val seen = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+      re.r.replaceAllIn(s, m => show(seen.getOrElseUpdate(m.group(1), seen.size + 1)))
+    }
+    val tmp = java.util.regex.Pattern.quote(System.getProperty("java.io.tmpdir").stripSuffix("/"))
+    renumber(renumber(plan, "#(\\d+)", n => s"#$n"), "\\[plan_id=(\\d+)\\]", n => s"[plan_id=$n]")
+      .replaceAll("(?<=[\\w$])@[0-9a-f]{4,}\\b", "@<hash>")
+      .replaceAll("\\$Lambda(\\$\\d+)?/0x[0-9a-f]+", "\\$Lambda")
+      .replaceAll("(Statistics\\(sizeInBytes=)[^,)]+", "$1<masked>")
+      .replaceAll(s"$tmp/(graft_plans_[a-z]+)\\d+", "<tmp>/$1")
+      .replaceAll("part-(\\d+)-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "part-$1-<uuid>")
+  }
+
   private def audit(plan: String): String = {
     def nodes(name: String) = s"""\\(\\d+\\) $name""".r.findAllIn(plan).size
     val broadcasts = nodes("BroadcastExchange")
@@ -247,8 +264,8 @@ object Plans {
     md.append("# PLANS — physical-plan audit (generated by graft.tools.Plans)\n\n")
     sections.foreach { case (title, why, plan) =>
       md.append(s"## $title\n\n$why\n\n")
-      md.append(audit(plan))
-      md.append("\n```\n").append(plan.trim).append("\n```\n\n")
+      md.append(audit(stable(plan)))
+      md.append("\n```\n").append(stable(plan).trim).append("\n```\n\n")
     }
     Files.writeString(Paths.get("PLANS.md"), md.toString)
     println(s"[plans] wrote PLANS.md with ${sections.size} sections")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import graft.table.IcebergLite
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
 /** Kill-after-stage resume semantics (SURVEY §5.2 item 5): re-running a
   * pipeline recomputes ONLY uncommitted keys and reproduces identical final
@@ -52,6 +52,10 @@ class CheckpointSpec extends AnyFunSuite {
     val rows = log.select($"stage", $"status", $"rows_out").as[(String, String, Long)].collect()
     assert(rows.nonEmpty && rows.forall { case (s, st, _) => s == "s1" && st == "committed" })
     assert(log.agg(sum($"rows_out")).as[Long].head() == 100)
+    // one commit point per stage: each committed run made one output
+    // snapshot, and lineage lives beside the output, not in a second table
+    assert(IcebergLite.snapshots(Checkpoint.outputTable(base, "s1")).size == 2)
+    assert(!Files.exists(Paths.get(base, "s1", "commitlog")))
   }
 
   test("re-running a fully committed commitId never rewrites referenced data") {
@@ -82,36 +86,35 @@ class CheckpointSpec extends AnyFunSuite {
       .select($"k", $"out").as[(Long, Long)].collect().toSet == before)
   }
 
-  test("crash between output commit and log append: retry backfills the missing lineage entry") {
+  test("crash between lineage write and output commit: the attempt stays invisible, retry commits it once") {
     val base = Files.createTempDirectory("graft_ckpt_gap").toString
     val input = (0L until 25L).map(k => Tuple1(k)).toDF("k")
-    // simulate the torn state: output fully committed under cG, but the
-    // process died before the commitlog append ran
-    IcebergLite.append(spark, stageCompute(input), Checkpoint.outputTable(base, "sg"),
-      Seq("k"), "cG")
-    assert(IcebergLite.currentSnapshotId(Checkpoint.logTable(base, "sg")).isEmpty)
-
-    // the retry must refuse to rewrite the data AND reconcile the log
-    val (_, n) = Checkpoint.runStage(spark, base, "sg", input, "k", "cG")(stageCompute)
-    assert(n == 0)
-    val log = Checkpoint.log(spark, base, "sg")
-    val entries = log.select($"commit_id", $"status", $"rows_out", $"rows_in")
-      .as[(String, String, Long, Long)].collect()
-    assert(entries.nonEmpty && entries.forall { case (c, st, _, ri) =>
-      c == "cG" && st == "backfilled" && ri == -1L })
-    assert(log.agg(sum($"rows_out")).as[Long].head() == 25)
-    // checksum must match a clean run of the same stage (backfill derives it
-    // from the committed files, so content divergence is still detectable)
     val cleanBase = Files.createTempDirectory("graft_ckpt_gap_ref").toString
     Checkpoint.runStage(spark, cleanBase, "sg", input, "k", "cG")(stageCompute)
-    val xGap = log.agg(expr("bit_xor(checksum)")).as[Long].head()
+    // simulate the torn state: cG's output and lineage written (lineage of
+    // a partial run, so a retry that appended instead of overwriting would
+    // show), but the process died before the output pointer swap
+    val tornBase = Files.createTempDirectory("graft_ckpt_gap_torn").toString
+    Checkpoint.runStage(spark, tornBase, "sg", input.where($"k" < 10), "k", "cG")(stageCompute)
+    IcebergLite.writeData(stageCompute(input), Checkpoint.outputTable(base, "sg"), "cG")
+    copyTree(Paths.get(tornBase, "sg", "lineage"), Paths.get(base, "sg", "lineage"))
+    assert(Files.isDirectory(Paths.get(base, "sg", "lineage", "cG")))
+    assert(IcebergLite.currentSnapshotId(Checkpoint.outputTable(base, "sg")).isEmpty)
+    assert(Checkpoint.log(spark, base, "sg").where($"commit_id" === "cG").isEmpty)
+
+    // the retry under cG redoes the whole attempt: one entry set, 25 rows
+    val (_, n) = Checkpoint.runStage(spark, base, "sg", input, "k", "cG")(stageCompute)
+    assert(n == 25)
+    val log = Checkpoint.log(spark, base, "sg")
+    val entries = log.select($"commit_id", $"status", $"rows_in")
+      .as[(String, String, Long)].collect()
+    assert(entries.nonEmpty && entries.forall { case (c, st, ri) =>
+      c == "cG" && st == "committed" && ri == 25L })
+    assert(log.agg(sum($"rows_out")).as[Long].head() == 25)
+    val xRetry = log.agg(expr("bit_xor(checksum)")).as[Long].head()
     val xClean = Checkpoint.log(spark, cleanBase, "sg")
       .agg(expr("bit_xor(checksum)")).as[Long].head()
-    assert(xGap == xClean)
-
-    // idempotent: a second retry must not duplicate the backfilled entry
-    Checkpoint.runStage(spark, base, "sg", input, "k", "cG")(stageCompute)
-    assert(Checkpoint.log(spark, base, "sg").agg(sum($"rows_out")).as[Long].head() == 25)
+    assert(xRetry == xClean)
   }
 
   test("checksum in lineage log detects key-set drift across equivalent runs") {
@@ -138,5 +141,25 @@ class CheckpointSpec extends AnyFunSuite {
     val (replayed, n) = Checkpoint.runStage(spark, base, "s", input, "k", "c1")(stageCompute)
     assert(n == 0 && replayed.isEmpty)
     assert(IcebergLite.read(spark, out).count() == 40)
+  }
+
+  test("lineage of every commit stays listed after compaction and snapshot expiry") {
+    val base = Files.createTempDirectory("graft_ckpt_lineage").toString
+    val input = (0L until 40L).map(k => Tuple1(k)).toDF("k")
+    val out = Checkpoint.outputTable(base, "s")
+    Checkpoint.runStage(spark, base, "s", input.where($"k" < 20), "k", "c1")(stageCompute)
+    Checkpoint.runStage(spark, base, "s", input, "k", "c2")(stageCompute)
+    IcebergLite.compact(spark, out, Seq("k"), "compactX")
+    IcebergLite.expireSnapshots(out, keepLast = 1)
+    val log = Checkpoint.log(spark, base, "s")
+    // compactX is on the ledger but has no lineage: skipped, not an error
+    assert(log.select($"commit_id").distinct().as[String].collect().toSet == Set("c1", "c2"))
+    assert(log.agg(sum($"rows_out")).as[Long].head() == 40)
+  }
+
+  private def copyTree(from: Path, to: Path): Unit = {
+    val paths = Files.walk(from)
+    try paths.forEach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
+    finally paths.close()
   }
 }

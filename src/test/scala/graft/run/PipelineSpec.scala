@@ -76,7 +76,7 @@ class PipelineSpec extends AnyFunSuite {
       .select("doc_id", "tile_id").collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(resumed == fresh)
 
-    // lineage: commit log has per-partition metrics rows for both attempts
+    // lineage: the log has per-partition metrics rows for both attempts
     val log = Checkpoint.log(spark, base, "assign")
     assert(log.where(col("commit_id") === "c1").count() > 0)
     assert(log.where(col("commit_id") === "c2").count() > 0)

@@ -85,8 +85,9 @@ class StreamsSpec extends AnyFunSuite {
     assert(emitted((t(0), "b")) == 1L)
 
     // sliding windows: one event lands in two 10-min/5-min-hop windows
-    val slide = Streams.slidingWindowedCounts(
-      Seq((t(7), "x")).toDF("ts", "event_type"), "ts", "10 minutes", "5 minutes", "0 seconds")
+    val slide = Streams.windowedCounts(
+      Seq((t(7), "x")).toDF("ts", "event_type"), "ts", "10 minutes", "0 seconds",
+      slide = Some("5 minutes"))
     val wins = slide.select($"w_start").as[java.sql.Timestamp].collect().toSet
     assert(wins == Set(t(0), t(5)))
   }
@@ -118,8 +119,8 @@ class StreamsSpec extends AnyFunSuite {
       .select($"k", $"v").as[(Long, String)].collect()
     assert(got.length == 400, s"exactly-once violated: ${got.length} rows")
     assert(got.toSet == rows.toSet)
-    // lineage log reconciled: the replayed batch's entry is backfilled, all
-    // four batches accounted for
+    // lineage log: the replayed batch's entry committed with its output in
+    // the first drain, so all four batches are accounted for exactly once
     val log = graft.run.Checkpoint.log(spark, base, "ingest")
     assert(log.agg(sum($"rows_out")).as[Long].head() == 400)
     assert(log.select($"commit_id").distinct().count() == 4)
