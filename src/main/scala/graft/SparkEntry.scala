@@ -344,10 +344,11 @@ object SparkEntry {
          |SELECT py, px,
          |       cast(sum(CASE WHEN red2 <> -9999 THEN red2 ELSE 0 END) AS double) AS total_data,
          |       count(CASE WHEN red2 <> -9999 THEN 1 END) AS total_clean,
-         |       cast(sum(CASE WHEN red2 <> -9999 THEN red2 ELSE 0 END) AS double)
-         |         / count(CASE WHEN red2 <> -9999 THEN 1 END) AS normalized,
-         |       cast(min(CASE WHEN red2 <> -9999 THEN red2 END) AS double) AS v_min,
-         |       cast(max(CASE WHEN red2 <> -9999 THEN red2 END) AS double) AS v_max
+         |       CASE WHEN count(CASE WHEN red2 <> -9999 THEN 1 END) > 0
+         |         THEN cast(sum(CASE WHEN red2 <> -9999 THEN red2 ELSE 0 END) AS double)
+         |           / count(CASE WHEN red2 <> -9999 THEN 1 END) ELSE 0.0 END AS normalized,
+         |       coalesce(cast(min(CASE WHEN red2 <> -9999 THEN red2 END) AS double), 0.0) AS v_min,
+         |       coalesce(cast(max(CASE WHEN red2 <> -9999 THEN red2 END) AS double), 0.0) AS v_max
          |FROM px GROUP BY py, px""".stripMargin,
     "dd_exact" ->
       """WITH d2 AS (SELECT doc_id, text FROM documents

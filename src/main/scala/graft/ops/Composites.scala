@@ -68,7 +68,7 @@ object Composites {
   /**
    * DuckDB twin of the fixed-step geomedian ([[GeomedianVec]] with
    * `tol = 0`): one chained CTE per Weiszfeld iteration, each mirroring
-   * [[Weiszfeld.weiszfeld]]'s arithmetic op for op — the 1/dist weights,
+   * [[Weiszfeld.weiszfeldFlat]]'s arithmetic op for op — the 1/dist weights,
    * the Vardi–Zhang coincident-point correction (r̃ = num − den·cur,
    * ‖r̃‖ ≤ η ⇒ stay), and the den = 0 freeze. The start (per-band mean) is
    * integer-sum exact; the only cross-engine leak is float summation order
@@ -208,19 +208,11 @@ object GmBuf {
 /**
  * Native Catalyst form of the fixed-step geomedian aggregate — a
  * `TypedImperativeAggregate[GmBuf]` whose `update` reads the band doubles
- * straight off the `InternalRow`. The `udaf(Aggregator)` bridge pays a
- * per-row deserialization (array construction + `Seq[Double]` boxing)
- * that measured ~1.1 s of px_geomedian's 1.4 s wall at sf0.1 (skeleton
- * groupBy 0.23 s, udaf-with-0-iterations 1.33 s — the Weiszfeld math
- * itself is <0.1 s); this expression removes that entire path. A later
- * warm sf0.1 decomposition: skeleton 0.23 s, native collect_list ~1.0 s,
- * this expression at 32 iterations ~1.5 s, the udaf bridge at 32 ~1.9 s
- * and at 0 ~1.8 s — what remains is the object-aggregation per-row
- * machinery shared with collect_list, not buffer serialization. Identical
- * arithmetic: the same [[Weiszfeld.weiszfeld]] (sorted, Vardi–Zhang
- * corrected) runs at eval, so results — and the DuckDB oracle hashes —
- * are bit-equal to the Aggregator form (the `GeomedianAgg` parity
- * reference in test sources, AggregatorSpec).
+ * straight off the `InternalRow` into one flat d-strided buffer per group
+ * (no per-row array or `Seq[Double]` boxing) and whose `eval` runs
+ * [[Weiszfeld.weiszfeldFlat]] over it. The `GeomedianAgg` udaf in test
+ * sources runs the same kernel through the `Aggregator` bridge and is pinned
+ * bit-equal to this form (AggregatorSpec).
  *
  * `medoid = true` is the geomedoid (`dc_mosaic.py:558-584`) over the same
  * buffer: after the geomedian, the center is rounded to 6 dp HALF_UP (Spark
@@ -378,70 +370,71 @@ object GeomedianVec {
  */
 object Weiszfeld {
   /** Deterministic Weiszfeld with the Vardi–Zhang (2000) correction for
-    * iterates landing on a data point. Points are sorted first so the result
-    * is independent of partition merge order. */
-  def weiszfeld(pts0: Seq[Seq[Double]], maxIter: Int = 200, tol: Double = 1e-9): Seq[Double] =
-    if (pts0.isEmpty) Seq.empty
-    else weiszfeldCore(pts0.map(_.toArray).toArray, maxIter, tol).toSeq
-
-  /** [[weiszfeld]] straight off a [[GmBuf]]'s flat d-strided buffer — the
-    * hot finish path: no per-observation `Seq[Double]` boxing (600k boxed
-    * rows per eval pass at sf0.1). Same sort key (`mkString(",")` over the
-    * same doubles) and the same arithmetic in the same order, so the result
-    * is bit-identical to the boxed form (AggregatorSpec pins the parity). */
+    * iterates landing on a data point, over a [[GmBuf]]'s flat d-strided
+    * buffer (`used / d` observations). The observations are first sorted by
+    * their `mkString(",")` key, so the result does not depend on partition
+    * merge order. Each key is built once and an index permutation is sorted
+    * stably, which gives the order of sorting the rows by that key; a
+    * numeric order would change the summation order, hence the bits. The
+    * iteration runs in primitive loops over one sorted copy. */
   def weiszfeldFlat(data: Array[Double], d: Int, used: Int,
                     maxIter: Int, tol: Double): Array[Double] = {
     if (used == 0 || d == 0) return Array.emptyDoubleArray
     val n = used / d
-    val pts = Array.tabulate(n) { p =>
-      val row = new Array[Double](d)
-      System.arraycopy(data, p * d, row, 0, d)
-      row
+    val keys = Array.tabulate(n)(p => data.slice(p * d, p * d + d).mkString(","))
+    val order = Array.range(0, n).sortBy(keys(_))
+    val pts = new Array[Double](n * d)
+    for (p <- 0 until n) System.arraycopy(data, order(p) * d, pts, p * d, d)
+    var cur = Array.tabulate(d) { i => // the per-band mean, summed left to right
+      var s = pts(i)
+      for (p <- 1 until n) s += pts(p * d + i)
+      s / n
     }
-    weiszfeldCore(pts, maxIter, tol)
-  }
-
-  private def weiszfeldCore(ptsIn: Array[Array[Double]],
-                            maxIter: Int, tol: Double): Array[Double] = {
-    val pts = ptsIn.sortBy(_.mkString(","))
-    val d = pts.head.length
-    var cur = Array.tabulate(d)(i => pts.map(_(i)).sum / pts.length)
+    var next = new Array[Double](d)
+    val num = new Array[Double](d)
     var it = 0
     var moved = Double.MaxValue
     while (it < maxIter && moved > tol) {
-      val num = new Array[Double](d)
+      java.util.Arrays.fill(num, 0.0)
       var den = 0.0
       var eta = 0 // multiplicity of data points coincident with cur
-      pts.foreach { p =>
+      var o = 0
+      while (o < pts.length) {
         var dist2 = 0.0
         var i = 0
-        while (i < d) { val dx = p(i) - cur(i); dist2 += dx * dx; i += 1 }
+        while (i < d) { val dx = pts(o + i) - cur(i); dist2 += dx * dx; i += 1 }
         val dist = math.sqrt(dist2)
         if (dist < 1e-12) eta += 1
         else {
           val w = 1.0 / dist
           i = 0
-          while (i < d) { num(i) += p(i) * w; i += 1 }
+          while (i < d) { num(i) += pts(o + i) * w; i += 1 }
           den += w
         }
+        o += d
       }
       if (den == 0.0) moved = 0.0 // all points coincide with cur
       else {
-        val tMap = num.map(_ / den) // plain Weiszfeld step over non-coincident points
-        val next =
-          if (eta == 0) tMap
+        var i = 0 // plain Weiszfeld step over non-coincident points
+        while (i < d) { next(i) = num(i) / den; i += 1 }
+        if (eta > 0) {
+          // r̃ = Σ_{p≠cur} (p−cur)/‖p−cur‖ ; ‖r̃‖ ≤ η ⇒ cur IS the geomedian
+          var r2 = 0.0
+          i = 0
+          while (i < d) { val r = num(i) - den * cur(i); r2 += r * r; i += 1 }
+          val rNorm = math.sqrt(r2)
+          if (rNorm <= eta) System.arraycopy(cur, 0, next, 0, d)
           else {
-            // r̃ = Σ_{p≠cur} (p−cur)/‖p−cur‖ ; ‖r̃‖ ≤ η ⇒ cur IS the geomedian
-            val rt = Array.tabulate(d)(i => num(i) - den * cur(i))
-            val rNorm = math.sqrt(rt.map(x => x * x).sum)
-            if (rNorm <= eta) cur
-            else {
-              val a = 1.0 - eta / rNorm
-              Array.tabulate(d)(i => a * tMap(i) + (eta / rNorm) * cur(i))
-            }
+            val a = 1.0 - eta / rNorm
+            i = 0
+            while (i < d) { next(i) = a * next(i) + (eta / rNorm) * cur(i); i += 1 }
           }
-        moved = math.sqrt(next.zip(cur).map { case (a, b) => (a - b) * (a - b) }.sum)
-        cur = next
+        }
+        var m2 = 0.0
+        i = 0
+        while (i < d) { val t = next(i) - cur(i); m2 += t * t; i += 1 }
+        moved = math.sqrt(m2)
+        val swap = cur; cur = next; next = swap
       }
       it += 1
     }

@@ -45,10 +45,10 @@ class AggregatorSpec extends AnyFunSuite {
 
   test("geomedian: 1-D geomedian == median; determinism across orderings") {
     val pts = Seq(Seq(1.0), Seq(2.0), Seq(3.0), Seq(10.0), Seq(4.0))
-    val gm = Weiszfeld.weiszfeld(pts)
+    val gm = WeiszfeldReference.viaFlat(pts)
     assert(math.abs(gm.head - 3.0) < 1e-6) // geometric median in 1D = median
     val shuffled = scala.util.Random.shuffle(pts)
-    assert(Weiszfeld.weiszfeld(shuffled) == gm) // sorted internally → identical
+    assert(WeiszfeldReference.viaFlat(shuffled) == gm) // sorted internally → identical
   }
 
   test("geomedian: symmetric cloud converges to its center; Spark agg matches scalar") {
@@ -56,7 +56,7 @@ class AggregatorSpec extends AnyFunSuite {
     val pts = (0 until 100).map { _ =>
       Seq(50.0 + rnd.nextGaussian(), -20.0 + rnd.nextGaussian(), 7.0 + rnd.nextGaussian())
     }
-    val scalar = Weiszfeld.weiszfeld(pts)
+    val scalar = WeiszfeldReference.viaFlat(pts)
     assert(math.abs(scalar(0) - 50.0) < 1.0 && math.abs(scalar(1) + 20.0) < 1.0)
     val df = pts.map(p => (1, p)).toDF("k", "v").repartition(5)
     val gmUdaf = udaf(GeomedianAgg)
@@ -86,13 +86,15 @@ class AggregatorSpec extends AnyFunSuite {
     assert(viaHashedMin == viaMin)
   }
 
+  // the boxed form is the frozen pre-rewrite kernel in test sources;
+  // WeiszfeldSpec covers it over random shapes and values
   test("geomedian: weiszfeldFlat on the flat d-strided buffer is bit-identical to the boxed form") {
     val rnd = new scala.util.Random(31)
     val pts = (0 until 137).map { _ =>
       Seq(rnd.nextInt(3000).toDouble, rnd.nextInt(3000).toDouble, rnd.nextInt(3000).toDouble)
     }
     for (iters <- Seq(1, 7, 32)) {
-      val boxed = Weiszfeld.weiszfeld(pts, maxIter = iters, tol = 0.0)
+      val boxed = WeiszfeldReference.weiszfeld(pts, maxIter = iters, tol = 0.0)
       val flat = pts.flatten.toArray
       val viaFlat = Weiszfeld.weiszfeldFlat(flat, 3, flat.length,
         maxIter = iters, tol = 0.0).toSeq
@@ -102,7 +104,7 @@ class AggregatorSpec extends AnyFunSuite {
     assert(Weiszfeld.weiszfeldFlat(Array.emptyDoubleArray, 0, 0, 32, 0.0).isEmpty)
     val same = Array(5.0, 6.0, 5.0, 6.0, 5.0, 6.0)
     assert(Weiszfeld.weiszfeldFlat(same, 2, 6, 32, 0.0).toSeq ==
-      Weiszfeld.weiszfeld(Seq(Seq(5.0, 6.0), Seq(5.0, 6.0), Seq(5.0, 6.0)), 32, 0.0))
+      WeiszfeldReference.weiszfeld(Seq(Seq(5.0, 6.0), Seq(5.0, 6.0), Seq(5.0, 6.0)), 32, 0.0))
   }
 
   test("geomedoid: returns an actual observation, the argmin to the rounded geomedian") {
@@ -120,7 +122,7 @@ class AggregatorSpec extends AnyFunSuite {
       val obs = byKey((py, px)).map(t => (t._3, t._4, t._5))
       assert(obs.contains((b, n, r)), s"medoid ($b,$n,$r) not an observation of ($py,$px)")
       // scalar argmin oracle against the same fixed-step rounded center
-      val c = Weiszfeld.weiszfeld(obs.map(o => Seq(o._1.toDouble, o._2.toDouble, o._3.toDouble)),
+      val c = WeiszfeldReference.viaFlat(obs.map(o => Seq(o._1.toDouble, o._2.toDouble, o._3.toDouble)),
         maxIter = 32, tol = 0.0).map(v => BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
       def d2(o: (Long, Long, Long)) = {
         val (t0, t1, t2) = (o._1 - c(0), o._2 - c(1), o._3 - c(2))

@@ -1,0 +1,52 @@
+package graft.ops
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
+import graft.SparkTestSession
+
+/** The two Weiszfeld driver queries, pinned end to end on the committed
+  * test data: row count, schema (nullability included) and an
+  * order-independent row hash. The pins were taken before the flat
+  * `weiszfeldFlat` kernel replaced the boxed one, so any drift in the
+  * kernel's rounding reaching the 6-dp outputs fails here. */
+class CompositeQueriesSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  /** (query, sf) → (rows, schema, row hash). */
+  private val pins: Map[(String, String), (Long, String, String)] = {
+    val gm = "py:bigint:true,px:bigint:true,gm_blue:double:true,gm_nir:double:true,gm_red:double:true"
+    val md = "py:bigint:true,px:bigint:true,md_blue:bigint:true,md_nir:bigint:true,md_red:bigint:true"
+    Map(
+      ("px_geomedian", "sf0.001") -> ((3155L, gm, "03b9f65c43fe2fdf")),
+      ("px_geomedian", "sf0.01") -> ((4096L, gm, "b39b803a0f8ccb61")),
+      ("px_geomedoid", "sf0.001") -> ((3155L, md, "0a30dd81fac18026")),
+      ("px_geomedoid", "sf0.01") -> ((4096L, md, "d947659cf331c01b")))
+  }
+
+  private def render(v: Any): String = v match {
+    case null => "null"
+    case d: Double => java.lang.Double.toString(d) // exact; keeps -0.0 apart from 0.0
+    case s: scala.collection.Seq[_] => s.map(render).mkString("[", ",", "]")
+    case r: Row => r.toSeq.map(render).mkString("(", ",", ")")
+    case x => x.toString
+  }
+
+  /** SHA-256 over the sorted rendered rows: independent of row order and
+    * partitioning, sensitive to every value and to duplicate rows. */
+  private def rowHash(df: DataFrame): (Long, String) = {
+    val rows = df.collect().map(render).sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    rows.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
+    (rows.length.toLong, md.digest().take(8).map(b => f"$b%02x").mkString)
+  }
+
+  for (q <- Seq("px_geomedian", "px_geomedoid"); sf <- Seq("sf0.001", "sf0.01"))
+    test(s"$q on $sf: row count, schema and row hash match the pins") {
+      val df = graft.SparkEntry.queries(q)(spark, s"/root/testdata/$sf")
+      val schema = df.schema.fields
+        .map(f => s"${f.name}:${f.dataType.simpleString}:${f.nullable}").mkString(",")
+      val (n, hash) = rowHash(df)
+      assert(pins.get((q, sf)).contains((n, schema, hash)),
+        s"$q on $sf: got ($n, \"$schema\", \"$hash\"), pinned ${pins.get((q, sf))}")
+    }
+}
