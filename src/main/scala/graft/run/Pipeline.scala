@@ -11,10 +11,11 @@ import graft.ops.TileAssign
  *   AOI filter → J1/J2 tile assignment → J6 anti-join against the product
  *   inventory (SAC_DONE) → deterministic job-document emission.
  *
- * Every stage is resumable: [[Checkpoint.runStage]] writes a stage's output
- * and its per-partition lineage metrics, then commits both with the output
- * table's one pointer swap; re-running after a crash recomputes only
- * uncommitted keys. Documents transit the whole pipeline with their `spans`
+ * Every stage is resumable: [[Checkpoint.runStage]] writes a stage's output,
+ * reads it back once for the commit's file stats and its per-file lineage
+ * metrics (lineage written on the Spark driver, no Spark job), then commits both
+ * with the output table's one pointer swap; re-running after a crash
+ * recomputes only uncommitted keys. Documents transit the whole pipeline with their `spans`
  * untouched (the BASELINE span-sequence invariant) — the engine joins and
  * routes docs, it never rewrites them.
  */

@@ -48,7 +48,10 @@ object Streams {
    *     the reference's SAC_DONE re-scan semantics
    *     (`utils/prep_utils.py:356-365`).
    * Layer 1 costs O(1) metadata per replay; layer 3's done-set read is
-   * keys-only (column-pruned) and only paid by batches that commit.
+   * keys-only (column-pruned) and only paid by batches that commit. A
+   * committing batch reads its written files back once: one aggregate per
+   * file gives the commit's stats and the batch's lineage rows, and the
+   * Spark driver writes the lineage file itself (no Spark write job).
    *
    * `onBatchCommitted` is the per-batch monitoring hook (batchId); tests
    * use it to inject crashes between the table commit and the stream

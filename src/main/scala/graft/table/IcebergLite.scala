@@ -1,6 +1,6 @@
 package graft.table
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import com.fasterxml.jackson.core.json.JsonWriteFeature
@@ -218,6 +218,11 @@ object IcebergLite {
     }
   }
 
+  /** The rows of a snapshot the caller already holds — for a caller that
+    * also reads the snapshot's metadata (its ledger) and parses it once. */
+  def readSnapshotRows(spark: SparkSession, snap: Snapshot): DataFrame =
+    readFiles(spark, snap, snap.files)
+
   /** Time-travel read: the table exactly as of snapshot `id` (Iceberg's
     * `VERSION AS OF`). Files of later commits are invisible. */
   def readAt(spark: SparkSession, table: String, id: Long): DataFrame = {
@@ -338,10 +343,10 @@ object IcebergLite {
     }
   }
 
-  /** Rename a DataFrame's logical columns to the table's physical names
+  /** Rename a DataFrame's logical columns to `snap`'s physical names
     * before writing (identity when the table has no renames). */
-  private def toPhysical(df: DataFrame, table: String): DataFrame =
-    readSnapshot(table).filter(_.renames.nonEmpty) match {
+  private def toPhysical(df: DataFrame, snap: Option[Snapshot]): DataFrame =
+    snap.filter(_.renames.nonEmpty) match {
       case Some(snap) =>
         df.select(df.columns.map(c => col(c).as(snap.physical(c))).toSeq: _*)
       case None => df
@@ -434,7 +439,7 @@ object IcebergLite {
   /** `s`'s cumulative commitId ledger. Pre-upgrade snapshots (no ledger)
     * fall back to the historical file-path scan — upgraded transparently by
     * their next commit, which starts the ledger from the full history. */
-  private def ledgerOf(table: String, s: Snapshot): Set[String] =
+  def ledgerOf(table: String, s: Snapshot): Set[String] =
     if (s.commitIds.nonEmpty) s.commitIds else historicalCommitIds(table)
 
   /** Commit ids recoverable from snapshot history's file paths (legacy
@@ -457,19 +462,24 @@ object IcebergLite {
     * A table with a partition spec lays this commit's files out by derived
     * partition value (HIDDEN partitioning — the caller passes raw rows). */
   def writeData(df: DataFrame, table: String, commitId: String): Unit =
-    writeDataSpec(df, table, commitId, readSnapshot(table).map(_.spec).getOrElse(Nil))
+    writeDataSpec(df, table, commitId)
 
   /** [[writeData]] without the declared-SortOrder pass — for [[compact]],
     * which owns its clustering AND its size-targeted file count. */
   private def writeDataRaw(df: DataFrame, table: String, commitId: String): Unit =
-    writeDataSpec(df, table, commitId,
-      readSnapshot(table).map(_.spec).getOrElse(Nil), applyOrder = false)
+    writeDataSpec(df, table, commitId, applyOrder = false)
 
+  /** The write behind [[writeData]]. The current snapshot is parsed once
+    * and serves the main-ledger guard and, unless `snapOverride` names
+    * another snapshot to lay out against (a branch head), the spec, the
+    * SortOrder and the physical names; `specOverride` replaces the spec
+    * (a table's first, partitioned commit). */
   private def writeDataSpec(df: DataFrame, table: String, commitId: String,
-                            spec: Seq[PartitionField],
+                            specOverride: Option[Seq[PartitionField]] = None,
                             applyOrder: Boolean = true,
                             snapOverride: Option[Snapshot] = None): Unit = {
     val dir = Paths.get(table, "data", commitId).toString
+    val cur = readSnapshot(table)
     // cross-lineage collision guard: data/<commitId>/ is one namespace, so
     // while branches are staged a commitId already on SOME branch's ledger
     // must not be written again from anywhere — mode(overwrite) would
@@ -490,15 +500,16 @@ object IcebergLite {
     // snapshot references, corrupting the table before any optimistic check
     // runs. Idempotent replays never reach here (appendIdempotent / merge /
     // mergeOnRead / deleteKeys / compact all pre-check alreadyCommitted).
-    readSnapshot(table).foreach { cur =>
-      require(!ledgerOf(table, cur).contains(commitId),
+    cur.foreach { c =>
+      require(!ledgerOf(table, c).contains(commitId),
         s"commitId $commitId is already committed on $table's main lineage; " +
           "replaying a committed id would overwrite its referenced files — " +
           "use appendIdempotent for crash-retries, or a different commitId")
     }
-    val snap = snapOverride.orElse(readSnapshot(table))
+    val snap = snapOverride.orElse(cur)
+    val spec = specOverride.getOrElse(snap.map(_.spec).getOrElse(Nil))
     val physFn = snap.map(s => s.physical _).getOrElse(identity[String] _)
-    val phys = toPhysical(df, table)
+    val phys = toPhysical(df, snap)
     val order = if (applyOrder) snap.flatMap(_.order) else None
     // the declared SortOrder's clustering expression(s), in PHYSICAL names;
     // z-order quantizes against THIS BATCH's bounds (per-batch locality —
@@ -583,7 +594,7 @@ object IcebergLite {
       require(!df.schema.fieldNames.contains(partColName(f)),
         s"column ${partColName(f)} collides with partition field ${f.name}")
     }
-    writeDataSpec(df, table, commitId, spec)
+    writeDataSpec(df, table, commitId, specOverride = Some(spec))
     commitWritten(spark, df.schema.json, table, statsCols, commitId,
       specOverride = Some(spec))
   }
@@ -723,7 +734,12 @@ object IcebergLite {
     * the snapshot pointer. Split out so a caller can inspect the write's
     * observed metrics (e.g. rows-in) before deciding to commit.
     * `keepPrev = false` makes the new snapshot reference only this commit's
-    * files (a replacing commit — compaction / overwrite semantics). */
+    * files (a replacing commit — compaction / overwrite semantics).
+    * `fileStats` hands in the per-file stats of a pass the caller already
+    * ran over `data/<commitId>` (one row per file: `path` as
+    * `input_file_name()` gives it, `rows`, and string `min_<c>`/`max_<c>`
+    * for every stats column); the commit then reads no data file. Without
+    * it the commit runs that pass itself. */
   def commitWritten(spark: SparkSession, schemaJson: String, table: String,
                     statsCols: Seq[String], commitId: String,
                     keepPrev: Boolean = true,
@@ -734,7 +750,8 @@ object IcebergLite {
                     specOverride: Option[Seq[PartitionField]] = None,
                     basedOn: Option[Snapshot] = None,
                     bloomCols: Seq[String] = Nil,
-                    toBranch: Option[String] = None): Snapshot = {
+                    toBranch: Option[String] = None,
+                    fileStats: Option[Seq[Row]] = None): Snapshot = {
     val dataDir = Paths.get(table, "data", commitId)
     // `basedOn` pins the snapshot an operation PLANNED against (merge's
     // file pruning, compact's self-read): building the commit from any
@@ -784,10 +801,19 @@ object IcebergLite {
     // explicit PHYSICAL schema: skips the footer-inference job every commit
     // would otherwise pay (data files store physical column names)
     val physSchema = StructType(schema.fields.map(f => f.copy(name = phys(f.name))))
-    val stats = spark.read.schema(physSchema).parquet(dataDir.toString)
-      .groupBy(input_file_name().as("path"))
-      .agg(count(lit(1)).as("rows"), statAggs: _*)
-      .collect()
+    val stats = fileStats match {
+      case Some(rows) =>
+        // the caller's pass read logical names: only a table without
+        // renames stores them as such
+        require(prev.forall(_.renames.isEmpty),
+          s"fileStats for $table: a table with renamed columns stats its own files")
+        rows
+      case None =>
+        spark.read.schema(physSchema).parquet(dataDir.toString)
+          .groupBy(input_file_name().as("path"))
+          .agg(count(lit(1)).as("rows"), statAggs: _*)
+          .collect().toSeq
+    }
     // parent MUST derive from the same `prev` the snapshot content is built
     // from: a separate CURRENT read here could see a concurrent commit that
     // `prev` predates, making the optimistic parent check pass on a
@@ -1262,7 +1288,7 @@ object IcebergLite {
   private def writeDeletes(table: String, snap: Snapshot, keys: DataFrame,
                            keyCols: Seq[String], commitId: String): DeleteEntry = {
     val delDir = Paths.get(table, "deletes", commitId)
-    toPhysical(keys.select(keyCols.map(col): _*), table)
+    toPhysical(keys.select(keyCols.map(col): _*), Some(snap))
       .coalesce(1).write.mode("overwrite").parquet(delDir.toString)
     val st = Files.list(delDir)
     val delFile = try st.iterator().asScala.map(_.toString)
@@ -1503,7 +1529,7 @@ object IcebergLite {
     require(!ledgerOf(table, head).contains(commitId),
       s"commitId $commitId already committed on $table's $branch lineage")
     val aligned = alignToSchema(df, head.schema, table, s"appendToBranch($branch)")
-    writeDataSpec(aligned, table, commitId, head.spec, snapOverride = Some(head))
+    writeDataSpec(aligned, table, commitId, snapOverride = Some(head))
     commitWritten(spark, head.schemaJson, table, statsCols, commitId,
       basedOn = Some(head), toBranch = Some(branch))
   }

@@ -3,9 +3,14 @@ package graft.run
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkTestSession
 import graft.table.IcebergLite
 import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Kill-after-stage resume semantics (SURVEY §5.2 item 5): re-running a
   * pipeline recomputes ONLY uncommitted keys and reproduces identical final
@@ -155,6 +160,82 @@ class CheckpointSpec extends AnyFunSuite {
     // compactX is on the ledger but has no lineage: skipped, not an error
     assert(log.select($"commit_id").distinct().as[String].collect().toSet == Set("c1", "c2"))
     assert(log.agg(sum($"rows_out")).as[Long].head() == 40)
+  }
+
+  test("multi-file commit: one read-back, one lineage row per data file, no Spark lineage write") {
+    val base = Files.createTempDirectory("graft_ckpt_files").toString
+    val table = Checkpoint.outputTable(base, "s")
+    val input = (0L until 200L).map(k => Tuple1(k)).toDF("k").repartition(4)
+    val seen = new QuerySpy
+    spark.listenerManager.register(seen)
+    try {
+      seen.drain()
+      seen.queries.clear()
+      Checkpoint.runStage(spark, base, "s", input.where($"k" < 120), "k", "c1")(stageCompute)
+      seen.drain()
+      val afterC1 = seen.queries.size
+      Checkpoint.runStage(spark, base, "s", input, "k", "c2")(stageCompute)
+      seen.drain()
+      for ((cid, qs) <- Seq("c1" -> seen.queries.take(afterC1), "c2" -> seen.queries.drop(afterC1)))
+        assert(qs.count(_._1.exists(_.endsWith(s"/data/$cid"))) == 1,
+          s"$cid: queries reading data/$cid: ${qs.filter(_._1.exists(_.endsWith(s"/data/$cid")))}")
+      assert(seen.queries.exists(_._2.exists(_.endsWith("/data/c2"))), "spy saw no data write")
+      assert(seen.queries.forall(_._2.forall(!_.contains("/lineage/"))),
+        s"Spark wrote lineage: ${seen.queries.flatMap(_._2)}")
+    } finally spark.listenerManager.unregister(seen)
+
+    val files = IcebergLite.readSnapshot(table).get.files
+    val log = Checkpoint.log(spark, base, "s")
+    for (cid <- Seq("c1", "c2")) {
+      val entries = files.filter(_.path.contains(s"/data/$cid/")).sortBy(_.path)
+      val onDisk = Files.list(Paths.get(table, "data", cid))
+      val parquet = try onDisk.filter(_.toString.endsWith(".parquet")).count() finally onDisk.close()
+      if (cid == "c1") assert(parquet == 4)
+      val rows = log.where($"commit_id" === cid)
+        .select($"partition_id", $"rows_out", $"key_lo", $"key_hi", $"checksum")
+        .as[(Int, Long, String, String, Long)].collect().sortBy(_._1)
+      assert(rows.length == parquet && entries.length == parquet)
+      assert(rows.map(_._1).toSeq == rows.indices)
+      rows.zip(entries).foreach { case ((_, n, lo, hi, x), e) =>
+        assert(n == e.rows && lo == e.min("k") && hi == e.max("k"), s"$cid ${e.path}")
+        assert(x == spark.read.parquet(e.path).agg(bit_xor(xxhash64($"k"))).as[Long].head(),
+          s"checksum of ${e.path}")
+      }
+    }
+    assert(log.agg(sum($"rows_out")).as[Long].head() == 200)
+  }
+
+  test("log of a fresh base is empty with the lineage schema") {
+    val base = Files.createTempDirectory("graft_ckpt_fresh").toString
+    val log = Checkpoint.log(spark, base, "s")
+    assert(log.isEmpty)
+    assert(log.schema == StructType.fromDDL(
+      "partition_id INT, key_lo STRING, key_hi STRING, rows_out BIGINT, checksum BIGINT, " +
+        "stage STRING, rows_in BIGINT, wall_ms BIGINT, status STRING, commit_id STRING"))
+  }
+
+  /** Records, per successful query, the file roots it reads and the paths
+    * it writes. [[drain]] waits for a marker query, so every query run
+    * before it has been delivered (the listener bus keeps their order). */
+  private class QuerySpy extends QueryExecutionListener {
+    val queries = new java.util.concurrent.CopyOnWriteArrayList[(Seq[String], Seq[String])]().asScala
+    @volatile private var marks = 0
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      if (qe.analyzed.toString.contains("__spy_marker__")) marks += 1
+      else queries += ((
+        qe.analyzed.collect { case l: LogicalRelation => l.relation }
+          .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.toString) }.flatten,
+        qe.analyzed.collect { case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toString }))
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    def drain(): Unit = {
+      val want = marks + 1
+      spark.range(1).select(lit("__spy_marker__")).collect()
+      val deadline = System.nanoTime() + 60000000000L
+      while (marks < want) {
+        assert(System.nanoTime() < deadline, "listener bus did not deliver the marker")
+        Thread.sleep(10)
+      }
+    }
   }
 
   private def copyTree(from: Path, to: Path): Unit = {
