@@ -28,6 +28,34 @@ object Fs {
     Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** Publish `target` once: if it exists, return it untouched; otherwise
+    * `write` fills a process-unique dotted sibling (a file or a directory)
+    * that is then moved onto `target`, so existence is the only completion
+    * mark. The move never replaces a target — `rename(2)` (`ATOMIC_MOVE`)
+    * silently REPLACES an existing file or empty directory — so a file is
+    * published by a no-replace hard link and a directory by a rename that
+    * fails on a non-empty target. A race's loser deletes its sibling and
+    * returns the winner's target; a `write` that throws leaves neither. A
+    * crash-orphaned sibling keeps its dot: Spark listings and
+    * [[reapStaleSiblings]] never see it. */
+  def publishOnce(target: Path)(write: Path => Unit): Path = {
+    if (Files.exists(target)) return target
+    Files.createDirectories(target.toAbsolutePath.getParent)
+    val stage = target.resolveSibling(s".${target.getFileName}.${java.util.UUID.randomUUID}.stage")
+    try {
+      write(stage)
+      if (Files.isDirectory(stage))
+        try Files.move(stage, target, StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: java.io.IOException if Files.exists(target) => deleteRecursively(stage) }
+      else {
+        try Files.createLink(target, stage)
+        catch { case _: java.nio.file.FileAlreadyExistsException => () }
+        Files.delete(stage)
+      }
+    } catch { case e: Throwable => deleteRecursively(stage); throw e }
+    target
+  }
+
   /** Every pointer file [[writePointer]] left in `dir`, by name, with the
     * id it holds (dotted tmp names skipped; a missing dir is empty). */
   def readPointers(dir: Path): Map[String, Long] =
@@ -70,9 +98,9 @@ object Fs {
         .filter { p =>
           val n = p.getFileName.toString
           // ONLY names of the exact cache shape `<prefix><hex fingerprint>`
-          // are reapable: a looser startsWith(prefix) would also delete a
-          // concurrent session's live `<prefix><fp>_stage_<pid>` staging
-          // dir mid-write (ensureCatalog's rename race support)
+          // are reapable: a looser match could also delete a concurrent
+          // session's live staging sibling mid-write ([[publishOnce]]'s
+          // `.<prefix><fp>.<uuid>.stage` does not even share the prefix)
           n.startsWith(prefix) && n != keep.getFileName.toString &&
             n.stripPrefix(prefix).matches("[0-9a-f]{1,16}")
         }

@@ -86,19 +86,12 @@ object Streams {
 
   /** Stable random identifier stored at `<checkpointDir>/_graft_epoch` —
     * created on first use, reused on resume, gone (new epoch) iff the
-    * checkpoint itself is gone. Crash-safe via unique-temp + ATOMIC_MOVE. */
+    * checkpoint itself is gone. Published once ([[graft.Fs.publishOnce]]),
+    * so racing creators all read the winner's epoch. */
   private def checkpointEpoch(checkpointDir: String): String = {
-    val dir = java.nio.file.Paths.get(checkpointDir)
-    val marker = dir.resolve("_graft_epoch")
-    if (!java.nio.file.Files.exists(marker)) {
-      java.nio.file.Files.createDirectories(dir)
-      val tmp = dir.resolve(s"._graft_epoch.${java.util.UUID.randomUUID}.tmp")
+    val marker = graft.Fs.publishOnce(java.nio.file.Paths.get(checkpointDir, "_graft_epoch")) { tmp =>
       java.nio.file.Files.writeString(tmp,
         java.util.UUID.randomUUID.toString.replace("-", "").take(12))
-      try java.nio.file.Files.move(tmp, marker, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmp) // concurrent creator won
-      }
     }
     java.nio.file.Files.readString(marker).trim
   }
@@ -149,38 +142,18 @@ object Streams {
     * GROUP BY exactly — which makes the streaming plane itself
     * DuckDB-oracle-checkable (driver query str_windows). */
   def dailyCountsViaStream(spark: SparkSession, tablePath: String): DataFrame = {
-    // file streams need a DIRECTORY; the driver tables are single parquet
-    // files — stage a copy once, keyed by content fingerprint (same
-    // invalidation rule as the catalog fixtures)
+    // file streams need a DIRECTORY: a single-file table is streamed from
+    // a copy staged once per content fingerprint
     val p = java.nio.file.Paths.get(tablePath)
     val tableDir =
       if (java.nio.file.Files.isDirectory(p)) tablePath
       else {
         val stage = graft.Fs.fixtureRoot("stream_src", tablePath, p)
-        val target = stage.resolve(p.getFileName)
-        if (!java.nio.file.Files.exists(target)) {
-          java.nio.file.Files.createDirectories(stage)
-          // crash-safe staging: copy to a process-unique temp name, then
-          // ATOMIC_MOVE into place (a direct copy crashed mid-write would
-          // leave a truncated parquet that the exists() check treats as
-          // complete forever — same rule as Relational.ensureCatalog)
-          val tmp = stage.resolve(s".${p.getFileName}.${java.util.UUID.randomUUID}.tmp")
-          java.nio.file.Files.copy(p, tmp)
-          try java.nio.file.Files.move(tmp, target,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException => // concurrent stager won
-            java.nio.file.Files.deleteIfExists(tmp)
-          }
-        }
+        graft.Fs.publishOnce(stage.resolve(p.getFileName))(java.nio.file.Files.copy(p, _))
         stage.toString
       }
     val schema = spark.read.parquet(tableDir).schema
-    val agg = parquetStream(spark, tableDir, schema)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
-        col("event_type"), col("n"))
+    val agg = dailyCounts(parquetStream(spark, tableDir, schema), None)
     val name = s"graft_str_windows_${drainSeq.incrementAndGet()}"
     drainToMemory(agg, name, OutputMode.Complete())
     // copy the result off the memory sink and drop the temp view so
@@ -214,17 +187,16 @@ object Streams {
    */
   def dailyCountsAppendDurable(spark: SparkSession, tablePath: String): (DataFrame, Seq[Long]) = {
     val root = graft.Fs.fixtureRoot("str_winapp", tablePath, java.nio.file.Paths.get(tablePath))
-    val srcDir = root.resolve("src")
-    if (!java.nio.file.Files.exists(srcDir.resolve("_SUCCESS"))) {
-      graft.Fs.deleteRecursively(srcDir) // crashed half-write: rebuild
+    val srcDir = graft.Fs.publishOnce(root.resolve("src")) { stage =>
       spark.read.parquet(tablePath).repartitionByRange(4, col("ts"))
-        .write.mode("overwrite").parquet(srcDir.toString)
+        .write.parquet(stage.toString)
       // FileStreamSource orders by (modificationTime, path): make the order
       // DETERMINISTICALLY ascend with the ts ranges (equal mtimes would
-      // leave the batch order to filesystem timing)
+      // leave the batch order to filesystem timing) before the directory
+      // becomes visible
       val parts = {
         import scala.jdk.CollectionConverters._
-        val st = java.nio.file.Files.list(srcDir)
+        val st = java.nio.file.Files.list(stage)
         try st.iterator().asScala.map(_.toString)
           .filter(p => p.contains("part-") && p.endsWith(".parquet")).toSeq.sorted
         finally st.close()
@@ -235,13 +207,9 @@ object Streams {
       }
     }
     val schema = spark.read.parquet(srcDir.toString).schema
-    val agg = parquetStream(spark, srcDir.toString, schema, Map("maxFilesPerTrigger" -> "1"))
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
-        col("event_type"), col("n"))
+    val agg = dailyCounts(
+      parquetStream(spark, srcDir.toString, schema, Map("maxFilesPerTrigger" -> "1")),
+      Some("1 hour"))
       .withColumn("wk", concat_ws("|", col("day"), col("event_type")))
     val base = root.resolve("tbl").toString
     val q = appendToTable(agg, base, "daily", "wk", root.resolve("ckpt").toString)
@@ -265,11 +233,8 @@ object Streams {
    */
   def durableEventsIngest(spark: SparkSession, tablePath: String): DataFrame = {
     val root = graft.Fs.fixtureRoot("str_append", tablePath, java.nio.file.Paths.get(tablePath))
-    val srcDir = root.resolve("src")
-    if (!java.nio.file.Files.exists(srcDir.resolve("_SUCCESS"))) {
-      graft.Fs.deleteRecursively(srcDir) // crashed half-write: rebuild
-      spark.read.parquet(tablePath).repartition(4)
-        .write.mode("overwrite").parquet(srcDir.toString)
+    val srcDir = graft.Fs.publishOnce(root.resolve("src")) { stage =>
+      spark.read.parquet(tablePath).repartition(4).write.parquet(stage.toString)
     }
     val schema = spark.read.parquet(srcDir.toString).schema
     val base = root.resolve("tbl").toString
@@ -378,6 +343,18 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
+  }
+
+  /** The daily window pipeline both daily-count drains share: `ts` cast to
+    * TIMESTAMP (watermarks need it), the optional watermark, then 1-day
+    * window × event_type counts keyed by their `yyyy-MM-dd` day. */
+  private def dailyCounts(events: DataFrame, watermark: Option[String]): DataFrame = {
+    val ts = events.withColumn("ts", col("ts").cast("timestamp"))
+    watermark.fold(ts)(ts.withWatermark("ts", _))
+      .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
+        col("event_type"), col("n"))
   }
 
   // --- stateful lease tracking (mapGroupsWithState) ----------------------

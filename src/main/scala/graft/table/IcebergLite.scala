@@ -623,7 +623,7 @@ object IcebergLite {
         s"column ${partColName(f)} collides with partition field ${f.name}")
       partitionExpr(f, schema, snap.physical) // validates the transform
     }
-    commitSnapshot(table, snap.copy(id = snap.id + 1, parent = snap.id, spec = newSpec))
+    commitSnapshot(table, Some(snap), snap.copy(id = snap.id + 1, parent = snap.id, spec = newSpec))
   }
 
   /**
@@ -652,7 +652,7 @@ object IcebergLite {
       if (o.zorder) require(o.cols.size >= 2 && o.cols.size <= 3,
         s"z-order takes 2 or 3 columns, got ${o.cols.size}")
     }
-    commitSnapshot(table, snap.copy(id = snap.id + 1, parent = snap.id, order = order))
+    commitSnapshot(table, Some(snap), snap.copy(id = snap.id + 1, parent = snap.id, order = order))
   }
 
   /**
@@ -900,7 +900,7 @@ object IcebergLite {
           cur.files ++ entries.map(_.copy(seq = cur.id + 1)),
           cur.renames, cur.deletes, curLedger + commitId, cur.spec, cur.order))
       }
-    commitSnapshot(table, Snapshot(parent + 1, parent, schemaJson,
+    commitSnapshot(table, prev, Snapshot(parent + 1, parent, schemaJson,
       prevFiles ++ carryFiles ++ entries, prev.map(_.renames).getOrElse(Map.empty),
       prevDeletes ++ carryDeletes, ledger, spec, prev.flatMap(_.order)),
       rebase, toBranch)
@@ -1014,9 +1014,9 @@ object IcebergLite {
     mf.toString
   }
 
-  private def persistSnapshot(table: String, snap: Snapshot,
-                              pointerFile: Option[Path] = None): Snapshot = {
-    val parentManifests = snapshotAt(table, snap.parent).map(_.manifests).getOrElse(Nil)
+  private def persistSnapshot(table: String, snap: Snapshot, parent: Option[Snapshot],
+                              pointerFile: Option[Path]): Snapshot = {
+    val parentManifests = parent.map(_.manifests).getOrElse(Nil)
     val byKey = snap.files.map(f => f.path -> f).toMap
     val reused = parentManifests.filter(p =>
       loadManifest(p).forall(e => byKey.get(e.path).contains(e)))
@@ -1047,8 +1047,11 @@ object IcebergLite {
     * rebasable — pure appends) recomputes the snapshot against the new
     * current (`None` = the commit turns out to be already applied, e.g. a
     * racing idempotent replay); otherwise the commit fails loudly with
-    * [[CommitConflictException]] and the caller re-runs. */
-  private def commitSnapshot(table: String, snap: Snapshot,
+    * [[CommitConflictException]] and the caller re-runs. `parent` is the
+    * snapshot `snap` was built from (None for a first commit): the check
+    * compares ids, and a snapshot is parsed only when the id moved (ids are
+    * allocated fresh under the lock, so a snapshot file never changes). */
+  private def commitSnapshot(table: String, parent: Option[Snapshot], snap: Snapshot,
                              rebase: Snapshot => Option[Snapshot] = null,
                              toBranch: Option[String] = None): Snapshot =
     withCommitLock(table) {
@@ -1058,12 +1061,12 @@ object IcebergLite {
       // a main commit must take 4, not overwrite 3). The commit's NEW file
       // entries are stamped seq = snap.id by the builder, so they remap
       // with the id.
-      def persistFresh(s: Snapshot, pointer: Option[Path]): Snapshot = {
+      def persistFresh(s: Snapshot, p: Option[Snapshot], pointer: Option[Path]): Snapshot = {
         val fresh = snapshots(table).lastOption.map(_ + 1L).getOrElse(0L)
         val out = if (fresh == s.id) s else s.copy(id = fresh,
           files = s.files.map(f => if (f.seq == s.id) f.copy(seq = fresh) else f),
           deletes = s.deletes.map(d => if (d.seq == s.id) d.copy(seq = fresh) else d))
-        persistSnapshot(table, out, pointer)
+        persistSnapshot(table, out, p, pointer)
       }
       toBranch match {
         case Some(b) =>
@@ -1074,14 +1077,16 @@ object IcebergLite {
           if (headId != snap.parent) throw new CommitConflictException(
             s"branch $b of $table advanced to $headId while committing " +
               s"against ${snap.parent}; re-run")
-          persistFresh(snap, Some(branchesDir(table).resolve(b)))
+          persistFresh(snap, parent, Some(branchesDir(table).resolve(b)))
         case None =>
-          val cur = readSnapshot(table)
-          val curId = cur.map(_.id).getOrElse(-1L)
-          if (curId == snap.parent) persistFresh(snap, None)
-          else if (rebase != null) rebase(cur.get) match {
-            case Some(s) => persistFresh(s, None)
-            case None => cur.get
+          val curId = currentSnapshotId(table).getOrElse(-1L)
+          if (curId == snap.parent) persistFresh(snap, parent, None)
+          else if (rebase != null) {
+            val cur = current(table)
+            rebase(cur) match {
+              case Some(s) => persistFresh(s, Some(cur), None)
+              case None => cur
+            }
           }
           else throw new CommitConflictException(
             s"$table advanced to snapshot $curId while committing against ${snap.parent}; re-run")
@@ -1134,7 +1139,7 @@ object IcebergLite {
       }
     // copy() so pending equality deletes and the commitId ledger survive a
     // schema-evolution commit (dropping them would resurrect MoR-deleted rows)
-    commitSnapshot(table, snap.copy(id = snap.id + 1, parent = snap.id,
+    commitSnapshot(table, Some(snap), snap.copy(id = snap.id + 1, parent = snap.id,
       schemaJson = widened.json, renames = newRenames))
   }
 
@@ -1154,7 +1159,7 @@ object IcebergLite {
       s"column $name is a partition source; drop the partition field first")
     require(!snap.order.exists(_.cols.contains(name)),
       s"column $name is in the table's sort order; setSortOrder first")
-    commitSnapshot(table, snap.copy(id = snap.id + 1, parent = snap.id,
+    commitSnapshot(table, Some(snap), snap.copy(id = snap.id + 1, parent = snap.id,
       schemaJson = narrowed.json, renames = snap.renames - name))
   }
 
@@ -1181,7 +1186,7 @@ object IcebergLite {
     // the sort order, like the spec, tracks LOGICAL names across renames
     val renamedOrder = snap.order.map(o =>
       o.copy(cols = o.cols.map(c => if (c == from) to else c)))
-    commitSnapshot(table, snap.copy(id = snap.id + 1, parent = snap.id,
+    commitSnapshot(table, Some(snap), snap.copy(id = snap.id + 1, parent = snap.id,
       schemaJson = renamed.json, renames = (snap.renames - from) + (to -> physicalName),
       spec = renamedSpec, order = renamedOrder))
   }
@@ -1318,7 +1323,7 @@ object IcebergLite {
       require(got == want,
         s"deleteKeys type mismatch for $table: table has ${want.toSeq.sorted
           .mkString(", ")} but the batch has ${got.toSeq.sorted.mkString(", ")}")
-      commitSnapshot(table, snap.copy(id = snap.id + 1, parent = snap.id,
+      commitSnapshot(table, Some(snap), snap.copy(id = snap.id + 1, parent = snap.id,
         deletes = snap.deletes :+ writeDeletes(table, snap, sel.distinct(), keyCols, commitId),
         commitIds = snap.commitIds + commitId))
     }
@@ -1354,7 +1359,7 @@ object IcebergLite {
             && cur.renames == s.renames,
           s"$table's schema/spec/renames diverged from the staged lineage; " +
             "re-stage against the current snapshot instead")
-        commitSnapshot(table, Snapshot(cur.id + 1, cur.id, cur.schemaJson,
+        commitSnapshot(table, Some(cur), Snapshot(cur.id + 1, cur.id, cur.schemaJson,
           cur.files ++ delta.map(_.copy(seq = cur.id + 1)), cur.renames,
           cur.deletes, cur.commitIds + cid, cur.spec, cur.order))
       }
@@ -1731,7 +1736,7 @@ object IcebergLite {
     val curSnap = current(table)
     // ledger is the union: the rolled-back-over commits WERE committed, and
     // a crash-retry of one of them after the rollback must stay a no-op
-    commitSnapshot(table, target.copy(id = curSnap.id + 1, parent = curSnap.id,
+    commitSnapshot(table, Some(curSnap), target.copy(id = curSnap.id + 1, parent = curSnap.id,
       commitIds = curSnap.commitIds ++ target.commitIds))
   }
 

@@ -161,6 +161,23 @@ class StreamsSpec extends AnyFunSuite {
     assert(stateRows.nonEmpty && stateRows.forall(_ <= allWindows))
     assert(stateRows.last < allWindows,
       s"final state ${stateRows.last} shows no eviction (total windows $allWindows)")
+    // the staged source's file mtimes (the file source's batch order)
+    // ascend with the files' ts ranges
+    val srcDir = graft.Fs.fixtureRoot("str_winapp", src, java.nio.file.Paths.get(src)).resolve("src")
+    val staged = {
+      import scala.jdk.CollectionConverters._
+      val st = java.nio.file.Files.list(srcDir)
+      try st.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toSeq
+      finally st.close()
+    }.map { f =>
+      val r = spark.read.parquet(f.toString)
+        .agg(min($"ts".cast("timestamp")), max($"ts".cast("timestamp"))).head()
+      (java.nio.file.Files.getLastModifiedTime(f).toMillis, r.getTimestamp(0), r.getTimestamp(1))
+    }.sortBy(_._1)
+    assert(staged.size == 4, s"expected 4 staged ts-range files, got ${staged.size}")
+    staged.sliding(2).foreach { case Seq((m0, _, hi0), (m1, lo1, _)) =>
+      assert(m0 < m1 && !hi0.after(lo1), s"batch order breaks ts order: $staged")
+    }
     // re-run against unchanged data: complete checkpoint, zero new batches
     val (again, _) =
       Streams.dailyCountsAppendDurable(spark, "/root/testdata/sf0.001/events.parquet")
