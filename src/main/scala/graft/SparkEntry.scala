@@ -1310,7 +1310,10 @@ object TrainQueries {
     * encoder → sink → source → decoder chain can set the boolean. Staging
     * is fingerprint-keyed, and the manifest is published last
     * ([[graft.Fs.publishOnce]]), so its existence marks a complete write and
-    * re-runs skip it.
+    * re-runs skip it. Each attempt writes its PNGs under a directory it owns
+    * (named after its stage sibling), so the manifest points only at files
+    * no other session rewrites; a race loser's directory stays until the
+    * fixture root is reaped.
     *
     * The read-back is MANIFEST-driven ([[graft.media.Media.readManifestFiles]]
     * over the manifest the sink returns), not a `binaryFile` glob: a glob
@@ -1328,7 +1331,7 @@ object TrainQueries {
         .select(col("doc_id"), col("m._1").as("width"), col("m._2").as("height"),
           col("m._3").as("pixels"))
       // the distributed write runs here; its manifest IS the read listing
-      graft.media.Media.writePngBrowse(rows, root.resolve("png").toString)
+      graft.media.Media.writePngBrowse(rows, s"$root/png/${stage.getFileName.toString.drop(1)}")
         .write.parquet(stage.toString)
     }
     graft.media.Media.readManifestFiles(s.read.parquet(manifest.toString))

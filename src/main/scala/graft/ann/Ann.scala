@@ -74,58 +74,60 @@ object Ann {
     GraftShims.column(I8Dot(GraftShims.expression(a), GraftShims.expression(b)))
   }
 
-  /** Top-k by stored-int8 dot: the corpus is quantized ONCE (in production:
-    * written as the array<tinyint> storage column), probes broadcast, and
-    * candidates reduced map-side by [[TopKRows]] like every ANN path. */
-  def i8TopK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val p = broadcast(probes.select(col("vec_id").as("probe_id"),
-      quantizeI8(col("embedding")).as("pq")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      quantizeI8(col("embedding")).as("cq"))
-    explodeTopK(
-      c.join(p, col("probe_id") =!= col("neighbor_id"))
-        .withColumn("dot", i8Dot(col("pq"), col("cq")).cast("double"))
-        .groupBy("probe_id").agg(TopKRows.topK(k, col("dot"), col("neighbor_id")).as("top")),
-      "dot")
-      .withColumn("dot", col("dot").cast("long"))
-  }
+  // ------- the candidate-and-rank pipeline of every top-k path -------
 
-  /** Unpack a [[TopKRows]] result column into (rank, neighbor_id, score) rows. */
-  private[ann] def explodeTopKPairs(df: DataFrame, scoreName: String): DataFrame =
-    explodeTopK(df, scoreName)
+  /** Probes as (probe_id, pe) and corpus rows as (neighbor_id, ce), `enc`
+    * applied to the embedding; the caller broadcasts the probe side once it
+    * carries its join key. */
+  private[ann] def probeSide(probes: DataFrame, enc: Column => Column = identity): DataFrame =
+    probes.select(col("vec_id").as("probe_id"), enc(col("embedding")).as("pe"))
+  private[ann] def corpusSide(corpus: DataFrame, enc: Column => Column = identity): DataFrame =
+    corpus.select(col("vec_id").as("neighbor_id"), enc(col("embedding")).as("ce"))
 
-  private def explodeTopK(df: DataFrame, scoreName: String): DataFrame =
-    df.select(col("probe_id"), posexplode(col("top")).as(Seq("i", "t")))
+  /** Rank each probe's candidates (probe_id, neighbor_id, `score`) and keep
+    * its top k as (probe_id, rank, neighbor_id, `score`) rows. [[TopKRows]]
+    * reduces MAP-SIDE to k candidates per probe per partition, so the only
+    * shuffle carries k·|probes| rows per partition, not the candidate set. */
+  private[ann] def topKPerProbe(cand: DataFrame, score: String, k: Int): DataFrame =
+    cand.groupBy("probe_id").agg(TopKRows.topK(k, col(score), col("neighbor_id")).as("top"))
+      .select(col("probe_id"), posexplode(col("top")).as(Seq("i", "t")))
       .select(col("probe_id"), (col("i") + 1).cast("long").as("rank"),
-        col("t._2").as("neighbor_id"), col("t._1").as(scoreName))
+        col("t._2").as("neighbor_id"), col("t._1").as(score))
 
-  /** Exact cosine top-k of each probe against the corpus. Probes must be
-    * small (broadcast); the corpus side is reduced MAP-SIDE to k candidates
-    * per probe per partition by [[TopKRows]], so the only shuffle carries
-    * k·|probes| rows per partition — not |corpus|·|probes|. */
-  def bruteForceTopK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val p = broadcast(probes.select(col("vec_id").as("probe_id"), col("embedding").as("pe")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    explodeTopK(
-      c.join(p, col("probe_id") =!= col("neighbor_id")) // all pairs except self
-        .withColumn("sim", cosine(col("pe"), col("ce")))
-        .groupBy("probe_id").agg(TopKRows.topK(k, col("sim"), col("neighbor_id")).as("top")),
-      "sim")
-  }
+  /** Exact cosine of each equi-joined candidate pair, a probe's pair with
+    * itself dropped. */
+  private[ann] def cosineCandidates(joined: DataFrame): DataFrame =
+    joined.where(col("probe_id") =!= col("neighbor_id"))
+      .withColumn("sim", cosine(col("pe"), col("ce")))
+
+  /** Exact top-k of each probe against every corpus row but itself, by
+    * `score(pe, ce)` over `enc`-ed embeddings. Probes must be small
+    * (broadcast); the corpus is never shuffled before the top-k. */
+  private def allPairsTopK(probes: DataFrame, corpus: DataFrame, k: Int, scoreName: String,
+                           enc: Column => Column = identity)
+                          (score: (Column, Column) => Column): DataFrame =
+    topKPerProbe(
+      corpusSide(corpus, enc).join(broadcast(probeSide(probes, enc)),
+        col("probe_id") =!= col("neighbor_id"))
+        .withColumn(scoreName, score(col("pe"), col("ce"))),
+      scoreName, k)
+
+  /** Top-k by stored-int8 dot: the corpus is quantized ONCE (in production:
+    * written as the array<tinyint> storage column), probes broadcast. */
+  def i8TopK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    allPairsTopK(probes, corpus, k, "dot", quantizeI8)((p, c) => i8Dot(p, c).cast("double"))
+      .withColumn("dot", col("dot").cast("long"))
+
+  /** Exact cosine top-k of each probe against the corpus. */
+  def bruteForceTopK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    allPairsTopK(probes, corpus, k, "sim")(cosine)
 
   /** Exact quantized-dot top-k (the oracle-checked variant). Quantized dots
     * are ≤ 64·1024² in magnitude — exactly representable as Double in the
     * aggregator's score slot. */
-  def quantizedDotTopK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val p = broadcast(probes.select(col("vec_id").as("probe_id"), col("embedding").as("pe")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    explodeTopK(
-      c.join(p, col("probe_id") =!= col("neighbor_id"))
-        .withColumn("dot", quantizedDot(col("pe"), col("ce")))
-        .groupBy("probe_id").agg(TopKRows.topK(k, col("dot"), col("neighbor_id")).as("top")),
-      "dot")
+  def quantizedDotTopK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    allPairsTopK(probes, corpus, k, "dot")(quantizedDot)
       .withColumn("dot", col("dot").cast("long"))
-  }
 
   /** Deterministic random hyperplanes: `tables` × `bitsPerTable` planes of
     * dimension `dim`, seeded — broadcast as a literal. */
@@ -201,23 +203,31 @@ object Ann {
     }
   }
 
-  /** DuckDB twin of [[lshTopK]]: `corpusSql` yields (vec_id, embedding);
-    * probes are the rows satisfying `probePred`. */
-  def lshOracleSql(corpusSql: String, probePred: String, k: Int, dim: Int,
-                   tables: Int, bits: Int, seed: Long = 42L): String = {
+  /** The oracles' head: the corpus CTE `e` (vec_id, embedding). */
+  private def corpusCteSql(corpusSql: String): String =
+    s"WITH e AS MATERIALIZED ($corpusSql),\n"
+
+  /** `e` plus the LSH bucket CTEs: `keys` (one key column per table) and
+    * `kt` (one (vec_id, t, bk) row per table). */
+  private def lshBucketCtesSql(corpusSql: String, dim: Int, tables: Int, bits: Int,
+                               seed: Long): String = {
     val keys = lshKeySqls(dim, tables, bits, seed, "embedding")
       .zipWithIndex.map { case (kk, t) => s"$kk AS k$t" }.mkString(",\n       ")
     val ks = (0 until tables).map(t => s"k$t").mkString("[", ", ", "]")
-    s"""WITH e AS MATERIALIZED ($corpusSql),
-       |keys AS MATERIALIZED (SELECT vec_id,
-       |       $keys
-       |       FROM e),
-       |kt AS (SELECT vec_id, t, $ks[cast(t AS int) + 1] AS bk
-       |       FROM keys CROSS JOIN range(0, $tables) AS u(t)),
-       |cand AS (SELECT DISTINCT p.vec_id AS probe_id, c.vec_id AS neighbor_id
-       |         FROM kt p JOIN kt c ON p.t = c.t AND p.bk = c.bk
-       |         WHERE ${probePred.replace("vec_id", "p.vec_id")} AND p.vec_id <> c.vec_id),
-       |sims AS (SELECT cd.probe_id, cd.neighbor_id,
+    corpusCteSql(corpusSql) +
+      s"""keys AS MATERIALIZED (SELECT vec_id,
+         |       $keys
+         |       FROM e),
+         |kt AS (SELECT vec_id, t, $ks[cast(t AS int) + 1] AS bk
+         |       FROM keys CROSS JOIN range(0, $tables) AS u(t)),
+         |""".stripMargin
+  }
+
+  /** The top-k oracles' tail over a `cand` (probe_id, neighbor_id) CTE:
+    * exact [[cosineSql]] per pair, then the first k by (sim desc,
+    * neighbor_id) — [[topKPerProbe]]'s order. */
+  private def rankTailSql(k: Int, dim: Int): String =
+    s"""sims AS (SELECT cd.probe_id, cd.neighbor_id,
        |                ${cosineSql("pe.embedding", "ce.embedding", dim)} AS sim
        |         FROM cand cd JOIN e pe ON pe.vec_id = cd.probe_id
        |                      JOIN e ce ON ce.vec_id = cd.neighbor_id)
@@ -226,27 +236,27 @@ object Ann {
        |         row_number() OVER (PARTITION BY probe_id
        |                            ORDER BY sim DESC, neighbor_id) AS rank
        |  FROM sims) WHERE rank <= $k""".stripMargin
-  }
+
+  /** DuckDB twin of [[lshTopK]]: `corpusSql` yields (vec_id, embedding);
+    * probes are the rows satisfying `probePred`. */
+  def lshOracleSql(corpusSql: String, probePred: String, k: Int, dim: Int,
+                   tables: Int, bits: Int, seed: Long = 42L): String =
+    lshBucketCtesSql(corpusSql, dim, tables, bits, seed) +
+      s"""cand AS (SELECT DISTINCT p.vec_id AS probe_id, c.vec_id AS neighbor_id
+         |         FROM kt p JOIN kt c ON p.t = c.t AND p.bk = c.bk
+         |         WHERE ${probePred.replace("vec_id", "p.vec_id")} AND p.vec_id <> c.vec_id),
+         |""".stripMargin + rankTailSql(k, dim)
 
   /** DuckDB twin of [[cosineNearDups]]. */
   def nearDupOracleSql(corpusSql: String, dim: Int, threshold: Double,
-                       tables: Int, bits: Int, seed: Long = 42L): String = {
-    val keys = lshKeySqls(dim, tables, bits, seed, "embedding")
-      .zipWithIndex.map { case (kk, t) => s"$kk AS k$t" }.mkString(",\n       ")
-    val ks = (0 until tables).map(t => s"k$t").mkString("[", ", ", "]")
-    s"""WITH e AS MATERIALIZED ($corpusSql),
-       |keys AS MATERIALIZED (SELECT vec_id,
-       |       $keys
-       |       FROM e),
-       |kt AS (SELECT vec_id, t, $ks[cast(t AS int) + 1] AS bk
-       |       FROM keys CROSS JOIN range(0, $tables) AS u(t)),
-       |cand AS (SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b
-       |         FROM kt l JOIN kt r ON l.t = r.t AND l.bk = r.bk AND l.vec_id < r.vec_id),
-       |sims AS (SELECT c.id_a, c.id_b,
-       |                ${cosineSql("a.embedding", "b.embedding", dim)} AS sim
-       |         FROM cand c JOIN e a ON a.vec_id = c.id_a JOIN e b ON b.vec_id = c.id_b)
-       |SELECT id_a, id_b, sim FROM sims WHERE sim >= $threshold""".stripMargin
-  }
+                       tables: Int, bits: Int, seed: Long = 42L): String =
+    lshBucketCtesSql(corpusSql, dim, tables, bits, seed) +
+      s"""cand AS (SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b
+         |         FROM kt l JOIN kt r ON l.t = r.t AND l.bk = r.bk AND l.vec_id < r.vec_id),
+         |sims AS (SELECT c.id_a, c.id_b,
+         |                ${cosineSql("a.embedding", "b.embedding", dim)} AS sim
+         |         FROM cand c JOIN e a ON a.vec_id = c.id_a JOIN e b ON b.vec_id = c.id_b)
+         |SELECT id_a, id_b, sim FROM sims WHERE sim >= $threshold""".stripMargin
 
   /** DuckDB twin of [[ivfTopK]]: the trained quantizer centers (themselves
     * deterministic — hash-ordered bounded sample + seeded driver-local
@@ -266,28 +276,20 @@ object Ann {
       s"$fold AS d$c"
     }.mkString(",\n       ")
     val dcase = (0 until n).map(c => s"WHEN $c THEN d$c").mkString("CASE cell ", " ", " END")
-    s"""WITH e AS MATERIALIZED ($corpusSql),
-       |dist0 AS MATERIALIZED (SELECT vec_id,
-       |       $dists
-       |       FROM e),
-       |dist AS (SELECT vec_id, cell, $dcase AS d
-       |         FROM dist0 CROSS JOIN range(0, $n) AS u(cell)),
-       |rk AS (SELECT vec_id, cell,
-       |              row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-       |       FROM dist),
-       |assign AS (SELECT vec_id, cell FROM rk WHERE rn = 1),
-       |pcells AS (SELECT vec_id, cell FROM rk WHERE rn <= $nprobe AND ($probePred)),
-       |cand AS (SELECT p.vec_id AS probe_id, a.vec_id AS neighbor_id
-       |         FROM pcells p JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.vec_id),
-       |sims AS (SELECT cd.probe_id, cd.neighbor_id,
-       |                ${cosineSql("pe.embedding", "ce.embedding", dim)} AS sim
-       |         FROM cand cd JOIN e pe ON pe.vec_id = cd.probe_id
-       |                      JOIN e ce ON ce.vec_id = cd.neighbor_id)
-       |SELECT probe_id, cast(rank AS bigint) AS rank, neighbor_id, sim FROM (
-       |  SELECT probe_id, neighbor_id, sim,
-       |         row_number() OVER (PARTITION BY probe_id
-       |                            ORDER BY sim DESC, neighbor_id) AS rank
-       |  FROM sims) WHERE rank <= $k""".stripMargin
+    corpusCteSql(corpusSql) +
+      s"""dist0 AS MATERIALIZED (SELECT vec_id,
+         |       $dists
+         |       FROM e),
+         |dist AS (SELECT vec_id, cell, $dcase AS d
+         |         FROM dist0 CROSS JOIN range(0, $n) AS u(cell)),
+         |rk AS (SELECT vec_id, cell,
+         |              row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+         |       FROM dist),
+         |assign AS (SELECT vec_id, cell FROM rk WHERE rn = 1),
+         |pcells AS (SELECT vec_id, cell FROM rk WHERE rn <= $nprobe AND ($probePred)),
+         |cand AS (SELECT p.vec_id AS probe_id, a.vec_id AS neighbor_id
+         |         FROM pcells p JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.vec_id),
+         |""".stripMargin + rankTailSql(k, dim)
   }
 
   /**
@@ -298,26 +300,19 @@ object Ann {
   def lshTopK(probes: DataFrame, corpus: DataFrame, k: Int, dim: Int,
               tables: Int = 8, bits: Int = 8, seed: Long = 42L): DataFrame = {
     val bu = lshKeysColumn(dim, tables, bits, seed) _
-    val p = broadcast(probes
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      .withColumn("bks", bu(col("pe")))
-      .select(col("probe_id"), col("pe"), posexplode(col("bks")).as(Seq("t", "bk"))))
-    val c = corpus
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-      .withColumn("bks", bu(col("ce")))
-      .select(col("neighbor_id"), col("ce"), posexplode(col("bks")).as(Seq("t", "bk")))
-    explodeTopK(
-      c.join(p, Seq("t", "bk"))
-        .where(col("probe_id") =!= col("neighbor_id"))
-        // sim computed MAP-SIDE (before the dedup shuffle): a multi-table hit
-        // recomputes a 64-dim cosine (~100 ns) instead of shipping two
-        // 256-byte embeddings through the exchange — the shuffle payload is
-        // (probe_id, neighbor_id, sim) only.
-        .withColumn("sim", cosine(col("pe"), col("ce")))
-        .groupBy(col("probe_id"), col("neighbor_id")) // dedup multi-table hits
-        .agg(first(col("sim")).as("sim"))
-        .groupBy("probe_id").agg(TopKRows.topK(k, col("sim"), col("neighbor_id")).as("top")),
-      "sim")
+    def bucketed(side: DataFrame, id: String, e: String) = side.withColumn("bks", bu(col(e)))
+      .select(col(id), col(e), posexplode(col("bks")).as(Seq("t", "bk")))
+    val p = broadcast(bucketed(probeSide(probes), "probe_id", "pe"))
+    // sim computed MAP-SIDE (before the dedup shuffle): a multi-table hit
+    // recomputes a 64-dim cosine (~100 ns) instead of shipping two 256-byte
+    // embeddings through the exchange — the shuffle payload is
+    // (probe_id, neighbor_id, sim) only.
+    val hits = cosineCandidates(
+      bucketed(corpusSide(corpus), "neighbor_id", "ce").join(p, Seq("t", "bk")))
+    topKPerProbe(
+      hits.groupBy(col("probe_id"), col("neighbor_id")) // dedup multi-table hits
+        .agg(first(col("sim")).as("sim")),
+      "sim", k)
   }
 
   /**
@@ -330,28 +325,14 @@ object Ann {
    * At 100 TB use the STORED form ([[IvfIndex.write]] / [[IvfIndex.probe]]):
    * posting lists written once `partitionBy(cell)` with the centers, probes
    * read only the pruned partitions. This inline form assigns cells on the
-   * fly (one corpus pass) for corpora that are not indexed yet; the two
-   * agree exactly (AnnSpec).
+   * fly (one corpus pass) for corpora that are not indexed yet; both run
+   * [[IvfIndex.probeTopK]], and they agree exactly (AnnSpec).
    */
   def ivfTopK(probes: DataFrame, corpus: DataFrame, k: Int, dim: Int,
               nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L,
               maxTrain: Int = 100000): DataFrame = {
     val centers = IvfIndex.trainQuantizer(corpus, nlist, seed, maxTrain)
-    val posts = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-      .withColumn("cell", IvfIndex.assignColumn(centers)(col("ce")))
-    val p = broadcast(probes.select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      .withColumn("cell", explode(IvfIndex.probeCellsUdf(centers, nprobe)(col("pe")))))
-    // no per-pair dedup stage: every corpus row is assigned to exactly ONE
-    // cell, so the cell equi-join can produce a given (probe, neighbor)
-    // pair at most once — the former groupBy(probe_id, neighbor_id) was a
-    // full exchange of the candidate set for nothing. TopKRows now combines
-    // map-side straight off the join (k rows per probe cross the shuffle).
-    explodeTopK(
-      posts.join(p, Seq("cell"))
-        .where(col("probe_id") =!= col("neighbor_id"))
-        .withColumn("sim", cosine(col("pe"), col("ce")))
-        .groupBy("probe_id").agg(TopKRows.topK(k, col("sim"), col("neighbor_id")).as("top")),
-      "sim")
+    IvfIndex.probeTopK(probes, centers, k, nprobe)(_ => IvfIndex.postings(corpus, centers))
   }
 
   /** Embedding-cosine near-duplicate pairs via LSH buckets + threshold.
@@ -364,15 +345,9 @@ object Ann {
   def cosineNearDups(df: DataFrame, dim: Int, threshold: Double,
                      tables: Int = 8, bits: Int = 10, seed: Long = 42L): DataFrame = {
     val e = df.select(col("vec_id"), col("embedding"))
-    val bu = lshKeysColumn(dim, tables, bits, seed) _
-    val bucketed = e.withColumn("bks", bu(col("embedding")))
+    val bucketed = e.withColumn("bks", lshKeysColumn(dim, tables, bits, seed)(col("embedding")))
       .select(col("vec_id"), posexplode(col("bks")).as(Seq("t", "bk")))
-    val l = bucketed.select(col("t"), col("bk"), col("vec_id").as("id_a"))
-    val r = bucketed.select(col("t"), col("bk"), col("vec_id").as("id_b"))
-    val cand = l.join(r, Seq("t", "bk"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("__nt")).drop("__nt")
-    cand
+    graft.dedup.Dedup.bucketPairs(bucketed, "vec_id", Seq("t", "bk"))
       .join(e.select(col("vec_id").as("id_a"), col("embedding").as("ea")), Seq("id_a"))
       .join(e.select(col("vec_id").as("id_b"), col("embedding").as("eb")), Seq("id_b"))
       .withColumn("sim", cosine(col("ea"), col("eb")))

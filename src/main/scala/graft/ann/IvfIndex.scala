@@ -124,9 +124,7 @@ object IvfIndex {
             seed: Long = 42L, maxTrain: Int = 100000): Array[Array[Double]] = {
     val spark = corpus.sparkSession
     val centers = trainQuantizer(corpus, nlist, seed, maxTrain)
-    corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-      .withColumn("cell", assignColumn(centers)(col("ce")))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/posts")
+    postings(corpus, centers).write.mode("overwrite").partitionBy("cell").parquet(s"$path/posts")
     import spark.implicits._
     centers.zipWithIndex.map { case (ctr, c) => (c, ctr.toSeq) }.toSeq
       .toDF("cell", "center")
@@ -140,31 +138,36 @@ object IvfIndex {
       .collect()
       .map(_.getAs[Seq[Double]]("center").toArray)
 
+  /** Corpus rows as posting-list entries (neighbor_id, ce, cell). */
+  private[ann] def postings(corpus: DataFrame, centers: Array[Array[Double]]): DataFrame =
+    Ann.corpusSide(corpus).withColumn("cell", assignColumn(centers)(col("ce")))
+
+  /** The one IVF probe, stored or inline: each probe fans out to its
+    * `nprobe` nearest cells and joins the posting lists on cell, then exact
+    * cosine re-rank and top-k. `posts` gets the broadcast probe cells and
+    * yields (neighbor_id, ce, cell) rows. Every corpus row sits in exactly
+    * ONE cell, so the cell join yields a (probe, neighbor) pair at most
+    * once: no dedup exchange, and [[TopKRows]] combines map-side straight
+    * off the join. */
+  private[ann] def probeTopK(probes: DataFrame, centers: Array[Array[Double]], k: Int,
+                             nprobe: Int)(posts: DataFrame => DataFrame): DataFrame = {
+    val p = broadcast(Ann.probeSide(probes)
+      .withColumn("cell", explode(probeCellsUdf(centers, nprobe)(col("pe")))))
+    Ann.topKPerProbe(Ann.cosineCandidates(posts(p).join(p, Seq("cell"))), "sim", k)
+  }
+
   /**
-   * Probe the stored index: each probe fans out to its `nprobe` nearest
-   * cells; the posting-list read is pruned to exactly those partitions
-   * (`cell` is the physical partition column and the filter is a ≤ nlist
-   * literal isin — provably static pruning, no full scan). Exact cosine
-   * re-rank among candidates via [[TopKRows]].
+   * Probe the stored index: [[probeTopK]] over a posting-list read pruned
+   * to exactly the probed cells (`cell` is the physical partition column
+   * and the filter is a ≤ nlist literal isin — provably static pruning, no
+   * full scan).
    */
   def probe(spark: SparkSession, path: String, probes: DataFrame, k: Int,
-            nprobe: Int = 4): DataFrame = {
-    val centers = readCenters(spark, path)
-    val p = broadcast(probes
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      .withColumn("cell", explode(probeCellsUdf(centers, nprobe)(col("pe")))))
-    // the probe cell set is bounded by nlist — collect it and push a literal
-    // partition filter (static pruning; DPP not required)
-    val cells = p.select("cell").distinct().collect().map(_.getInt(0)).sorted
-    val posts = spark.read.parquet(s"$path/posts")
-      .where(col("cell").isin(cells.map(Integer.valueOf): _*))
-    // one-cell-per-corpus-row ⇒ (probe, neighbor) pairs are already unique
-    // off the cell join; see Ann.ivfTopK — no dedup exchange needed
-    Ann.explodeTopKPairs(
-      posts.join(p, Seq("cell"))
-        .where(col("probe_id") =!= col("neighbor_id"))
-        .withColumn("sim", Ann.cosine(col("pe"), col("ce")))
-        .groupBy("probe_id").agg(TopKRows.topK(k, col("sim"), col("neighbor_id")).as("top")),
-      "sim")
-  }
+            nprobe: Int = 4): DataFrame =
+    probeTopK(probes, readCenters(spark, path), k, nprobe) { p =>
+      // the probe cell set is bounded by nlist — collect it and push a
+      // literal partition filter (static pruning; DPP not required)
+      val cells = p.select("cell").distinct().collect().map(_.getInt(0)).sorted
+      spark.read.parquet(s"$path/posts").where(col("cell").isin(cells.map(Integer.valueOf): _*))
+    }
 }

@@ -147,13 +147,21 @@ object Dedup {
       .select(col("id"), explode(sequence(lit(0), lit(bands - 1))).as("band"), col("sig"))
       .select(col("id"), col("band"),
         slice(col("sig"), col("band") * rowsPerBand + 1, lit(rowsPerBand)).as("bslice"))
-    val l = banded.select(col("band"), col("bslice"), col("id").as("id_a"))
-    val r = banded.select(col("band"), col("bslice"), col("id").as("id_b"))
-    l.join(r, Seq("band", "bslice"))
+    bucketPairs(banded, "id", Seq("band", "bslice"))
+  }
+
+  /** Candidate (id_a, id_b) pairs, id_a < id_b, of rows sharing ≥1 bucket:
+    * the bucket self-join of the MinHash and embedding-LSH near-dup paths.
+    * Both sides carry only the bucket `keys` and `idCol`, and pairs hit in
+    * several buckets dedup ids-only. */
+  private[graft] def bucketPairs(bucketed: DataFrame, idCol: String, keys: Seq[String]): DataFrame = {
+    val l = bucketed.select(keys.map(col) :+ col(idCol).as("id_a"): _*)
+    val r = bucketed.select(keys.map(col) :+ col(idCol).as("id_b"): _*)
+    l.join(r, keys)
       .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b") // dedup multi-band hits: ids-only shuffle
-      .agg(count(lit(1)).as("__nbands"))
-      .drop("__nbands")
+      .groupBy("id_a", "id_b") // dedup multi-bucket hits: ids-only shuffle
+      .agg(count(lit(1)).as("__n"))
+      .drop("__n")
   }
 
   // ---------------- DuckDB oracle renderings ----------------

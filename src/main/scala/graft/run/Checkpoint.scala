@@ -41,7 +41,9 @@ object Checkpoint {
    * Run `compute` over only the not-yet-committed slice of `input`
    * (left_anti on `keyCol` against the committed output), writing output +
    * lineage and committing both with the output table's one pointer swap.
-   * Returns (newly computed rows, number of input keys actually processed).
+   * Returns (the snapshot this call committed, None for a ledger replay or
+   * an empty slice; number of input keys processed). Read the output through
+   * that snapshot ([[IcebergLite.readSnapshotRows]]), never by re-running `compute`.
    *
    * The input is scanned exactly ONCE: rows-in is collected by an
    * `Observation` riding the write job (no pre-count — at 100 TB a
@@ -60,7 +62,7 @@ object Checkpoint {
    */
   def runStage(spark: SparkSession, base: String, stage: String,
                input: DataFrame, keyCol: String, commitId: String)
-              (compute: DataFrame => DataFrame): (DataFrame, Long) = {
+              (compute: DataFrame => DataFrame): (Option[IcebergLite.Snapshot], Long) = {
     val t0 = System.nanoTime()
     val table = outputTable(base, stage)
     // Crash-retry safety: a commitId on the output table's ledger committed
@@ -70,7 +72,7 @@ object Checkpoint {
     // compaction and expiry. An empty ledger: no keys yet.
     val snap = IcebergLite.readSnapshot(table)
     val ledger = snap.fold(Set.empty[String])(IcebergLite.ledgerOf(table, _))
-    if (ledger.contains(commitId)) return (spark.emptyDataFrame, 0L)
+    if (ledger.contains(commitId)) return (None, 0L)
     val todo = if (ledger.isEmpty) input else input.join(
       IcebergLite.readSnapshotRows(spark, snap.get).select(col(keyCol).as("__done_key")),
       col(keyCol) === col("__done_key"), "left_anti")
@@ -78,7 +80,7 @@ object Checkpoint {
     val out = compute(todo.observe(obs, count(lit(1)).as("rows_in")))
     IcebergLite.writeData(out, table, commitId)
     val todoCount = obs.get("rows_in").asInstanceOf[Long]
-    if (todoCount == 0) return (spark.emptyDataFrame, 0L)
+    if (todoCount == 0) return (None, 0L)
     // the one read-back of the files just written (no plan re-execution:
     // `out` must not be computed twice at 100 TB), grouped by file: the
     // commit's stats and the lineage rows, partition_id = path ordinal
@@ -99,9 +101,8 @@ object Checkpoint {
         f.getAs[Long]("checksum"), stage, todoCount, wallMs, "committed", commitId),
         LineageSchema).json + "\n"
     }.mkString)
-    IcebergLite.commitWritten(spark, out.schema.json, table, Seq(keyCol), commitId,
-      basedOn = snap, fileStats = Some(files))
-    (out, todoCount)
+    (Some(IcebergLite.commitWritten(spark, out.schema.json, table, Seq(keyCol), commitId,
+      basedOn = snap, fileStats = Some(files))), todoCount)
   }
 
   /** All committed output rows of a stage. */

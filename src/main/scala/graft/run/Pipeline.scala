@@ -39,10 +39,11 @@ object Pipeline {
     val aoiDocs = docs.where(graft.plans.SpatialColumns.stIntersects(lit(aoiWkt), col("wkt")))
 
     // stage 1 (checkpointed): tile assignment carrying spans through
-    val (_, _) = Checkpoint.runStage(spark, base, "assign", aoiDocs, "doc_id", commitId) {
+    val (snap, _) = Checkpoint.runStage(spark, base, "assign", aoiDocs, "doc_id", commitId) {
       todo => TileAssign.assign(todo, tiles).select("doc_id", "tile_id", "spans")
     }
-    val assigned = Checkpoint.committed(spark, base, "assign")
+    val assigned = snap.fold(Checkpoint.committed(spark, base, "assign"))(
+      graft.table.IcebergLite.readSnapshotRows(spark, _))
 
     // stage 2: done-set subtraction (the SAC_DONE anti-join, cells 29/38)
     val remaining = assigned.join(

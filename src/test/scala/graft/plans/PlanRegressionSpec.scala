@@ -19,7 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
  *  6. every cover join dedups with the native `first_shared_cell` merge
  *     walk, never an allocating `array_intersect`;
  *  7. the per-pixel summary runs as builtin aggregates in a codegen'd
- *     `HashAggregate`, not an object or sort-based aggregate.
+ *     `HashAggregate`, not an object or sort-based aggregate;
+ *  8. the similarity-plane queries keep their count of shuffle and
+ *     broadcast exchanges and of aggregates by kind.
  */
 class PlanRegressionSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -160,5 +162,32 @@ class PlanRegressionSpec extends AnyFunSuite {
       s"no codegen'd partial/final HashAggregate in:\n$plan")
     assert(nodes("ObjectHashAggregate") == 0 && nodes("SortAggregate") == 0,
       s"summary fell back to an object or sort aggregate:\n$plan")
+  }
+
+  test("similarity-plane queries keep their exchange and aggregate shapes") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    GraftExtensions.register(spark)
+    // (ShuffleExchange, BroadcastExchange, HashAggregate, ObjectHashAggregate,
+    // SortAggregate) in the final adaptive plan on sf0.001
+    val pins = Map(
+      "ann_topk" -> ((1, 1, 0, 2, 0)),
+      "ann_q8" -> ((1, 1, 0, 2, 0)),
+      "ann_lsh" -> ((2, 1, 2, 2, 0)),
+      "ann_neardup" -> ((2, 2, 2, 0, 0)),
+      "ann_ivf" -> ((1, 1, 0, 2, 0)),
+      "dd_minhash" -> ((2, 2, 2, 0, 0)))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val kinds = Seq("ShuffleExchangeExec", "BroadcastExchangeExec", "HashAggregateExec",
+      "ObjectHashAggregateExec", "SortAggregateExec")
+    val got = pins.keys.toSeq.sorted.map { name =>
+      val job = graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+      job.collect()
+      val names = helper.collect(job.queryExecution.executedPlan) { case p => p.getClass.getSimpleName }
+      val counts = kinds.map(k => names.count(_ == k))
+      name -> (counts, job.queryExecution.executedPlan)
+    }
+    for ((name, (counts, plan)) <- got)
+      assert(counts == pins(name).productIterator.toSeq,
+        s"$name: ${kinds.zip(counts)} != pinned ${pins(name)} in:\n$plan")
   }
 }
