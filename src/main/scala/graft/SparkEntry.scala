@@ -1409,8 +1409,9 @@ object TrainQueries {
   * (`genprepMLWater.py`, `dc_fractional_coverage_classifier.py`) over the
   * synthetic pixel table. Not SQL-expressible → rows-only driver check. */
 object MLQueries {
-  import graft.ml.{FracCover, MLWater}
+  import graft.ml.{FracCover, MLWater, RfForest}
   import graft.ops.Pixels
+  import org.apache.spark.ml.classification.RandomForestClassificationModel
 
   private val waterBands = Seq("green", "nir", "swir1")
 
@@ -1419,31 +1420,31 @@ object MLQueries {
     .withColumn("valid_img", col("pixel_qa") =!= 1)
     .withColumn("valid_lab", col("scene_classification") =!= 0)
 
-  /** The trained forest, extracted to plain data and memoized per sfDir:
-    * the ml_water query and its oracle rendering share ONE training run in
-    * the Verify process, so the SQL twin carries the exact leaf constants
-    * the prediction uses. (Training itself is seed-deterministic — the
+  /** The forest `ml_water` trains (training is seed-deterministic). */
+  private[graft] def waterModel(s: SparkSession, d: String): RandomForestClassificationModel =
+    MLWater.train(waterPx(s, d), waterBands, "pc",
+      col("valid_img"), col("valid_lab"), MLWater.Params(minPerClass = 200L))
+
+  /** The trained forest, memoized per sfDir: the ml_water query and its
+    * oracle rendering share ONE training run in the Verify process, so the
+    * SQL twin carries the exact leaf constants the prediction uses. (The
     * cache is consistency insurance plus a bench speedup, not a hidden
     * source of truth.) */
-  private val treeCache = scala.collection.concurrent.TrieMap[String, Seq[MLWater.RfTree]]()
-  private def waterTrees(s: SparkSession, d: String): Seq[MLWater.RfTree] =
-    treeCache.getOrElseUpdate(d, {
-      val model = MLWater.train(waterPx(s, d), waterBands, "pc",
-        col("valid_img"), col("valid_lab"), MLWater.Params(minPerClass = 200L))
-      MLWater.extractTrees(s, model)
-    })
+  private val treeCache = scala.collection.concurrent.TrieMap[String, RfForest]()
+  private def waterForest(s: SparkSession, d: String): RfForest =
+    treeCache.getOrElseUpdate(d, RfForest.fromModel(waterModel(s, d)))
 
   /** Label rule pc>=50 derives from a deterministic band predicate so the
     * scene is learnable; predictions over the img-valid mask. */
   def water(s: SparkSession, d: String): DataFrame =
-    MLWater.predictFromTrees(waterTrees(s, d), waterPx(s, d), waterBands,
+    MLWater.predictFromForest(waterForest(s, d), waterPx(s, d), waterBands,
       col("valid_img"), keys = Seq("l_orderkey", "l_linenumber"))
 
   /** DuckDB twin of [[water]] — the trained trees rendered as SQL CASE
     * cascades (`MLWater.oracleSql`); data-dependent, so merged into the
     * oracle dump by Verify with a live session. */
   def waterOracleSql(s: SparkSession, d: String): String =
-    MLWater.oracleSql(waterTrees(s, d), Pixels.pixelsSql,
+    MLWater.oracleSql(waterForest(s, d), Pixels.pixelsSql,
       validSql = "pixel_qa <> 1", bands = waterBands,
       keys = Seq("l_orderkey", "l_linenumber"))
 
@@ -1452,15 +1453,10 @@ object MLQueries {
     * the inner valid mask (`:281-283`), and the per-class training counts
     * that feed the >= minPerClass guard (`:299-302`). Only the RF fit/predict
     * (spark.ml internals) stays rows-only, in ml_water. */
-  def waterLabels(s: SparkSession, d: String): DataFrame = {
-    val px = Pixels.pixels(s, d)
-      .withColumn("pc", when(col("nir") < col("swir1"), 80.0).otherwise(10.0))
-      .withColumn("valid_img", col("pixel_qa") =!= 1)
-      .withColumn("valid_lab", col("scene_classification") =!= 0)
-    px.where(col("valid_img") && col("valid_lab"))
+  def waterLabels(s: SparkSession, d: String): DataFrame =
+    waterPx(s, d).where(col("valid_img") && col("valid_lab"))
       .withColumn("label", MLWater.waterLabel(col("pc")))
       .groupBy("label").agg(count(lit(1)).as("n_train"))
-  }
 
   def fracCover(s: SparkSession, d: String): DataFrame =
     FracCover.classify(Pixels.pixels(s, d),

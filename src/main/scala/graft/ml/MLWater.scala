@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.ml.classification.{RandomForestClassificationModel, RandomForestClassifier}
 import org.apache.spark.ml.feature.VectorAssembler
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -19,17 +19,18 @@ import org.apache.spark.sql.functions._
  *  - outputs: water_mask ∈ {0, 1}, water_prob = P(water)·100 as int,
  *    −9999 outside the image valid mask (`:329-358`)
  *
- * Prediction is NOT `model.transform`: the trained forest is extracted
- * (via the model's own persisted format — public, stable) and rendered as
- * pure Column algebra reproducing `predictRaw` + probability-normalize +
- * argmax arithmetic op for op. That buys three things at once:
+ * Prediction is NOT `model.transform`: the trained forest is read in
+ * memory from the fitted model into [[RfForest]]'s arrays
+ * ([[RfForest.fromModel]]), which a native expression evaluates with the
+ * `predictRaw` + probability-normalize + argmax arithmetic op for op. That
+ * buys three things at once:
  *  - whole-stage codegen on the hot path (no ScalaUDF, no Vector boxing);
  *  - no task-serialized model closure — spark.ml's transform UDF captures
  *    the model, whose trainingSummary drags the whole SparkSession (and its
  *    non-serializable ObservationManager once any `Dataset.observe` ran in
  *    the session) into the task binary;
- *  - the SAME rendering emits an ANSI-SQL twin, so the trained model's
- *    predictions are DuckDB-oracle-checkable bit for bit.
+ *  - the SAME arrays render an ANSI-SQL twin ([[oracleSql]]), so the
+ *    trained model's predictions are DuckDB-oracle-checkable bit for bit.
  */
 object MLWater {
 
@@ -46,13 +47,6 @@ object MLWater {
       trainPartitions: Int = 32)
 
   val Nodata: Int = -9999
-
-  /** One decision node: `left == -1` marks a leaf carrying the per-class
-    * impurity counts (c0, c1); internal nodes route on
-    * `feature <= threshold` (spark.ml ContinuousSplit.shouldGoLeft). */
-  final case class RfNode(feature: Int, threshold: Double,
-                          left: Int, right: Int, c0: Double, c1: Double)
-  type RfTree = Map[Int, RfNode]
 
   /** Reference `:286-289`: persistence ≥ thresh → 1.0 else 0.0 (NULL-safe). */
   def waterLabel(pc: Column, thresh: Double = 50.0): Column =
@@ -95,37 +89,6 @@ object MLWater {
     } finally labeled.unpersist()
   }
 
-  /** Extract the forest as plain data via the model's persisted form
-    * (`model.write` → `data/` parquet of (treeID, nodeData)) — the public,
-    * version-stable route to per-leaf class counts; no private tree API.
-    * Trees are returned in `treeID` order, the order `predictRaw` visits. */
-  def extractTrees(spark: SparkSession, model: RandomForestClassificationModel): Seq[RfTree] = {
-    // the export is tiny (trees × nodes rows) but the write/read jobs touch
-    // many small files — prefer the RAM-backed tmpfs when present
-    val tmpBase = java.nio.file.Paths.get("/dev/shm")
-    val tmp = (if (java.nio.file.Files.isWritable(tmpBase))
-      java.nio.file.Files.createTempDirectory(tmpBase, "graft_rf_export")
-    else java.nio.file.Files.createTempDirectory("graft_rf_export")).toString
-    model.write.overwrite().save(tmp)
-    val rows = spark.read.parquet(s"$tmp/data")
-      .select(col("treeID"), col("nodeData.id"), col("nodeData.impurityStats"),
-        col("nodeData.leftChild"), col("nodeData.rightChild"),
-        col("nodeData.split.featureIndex"),
-        col("nodeData.split.leftCategoriesOrThreshold"))
-      .collect()
-    val trees = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, ns) =>
-      ns.map { r =>
-        val stats = r.getAs[scala.collection.Seq[Double]](2)
-        val thr = r.getAs[scala.collection.Seq[Double]](6)
-        r.getInt(1) -> RfNode(r.getInt(5), if (thr.nonEmpty) thr.head else 0.0,
-          r.getInt(3), r.getInt(4), stats(0), stats(1))
-      }.toMap
-    }
-    // tidy the export (tiny, but tests train many models)
-    graft.Fs.deleteRecursively(java.nio.file.Paths.get(tmp))
-    trees
-  }
-
   /** Predict over the image-valid rows; invalid rows → −9999 on both
     * outputs (reference `:329-358`). Keeps `keys` passthrough columns.
     * water_mask = argmax(probability) (ties → class 0, Vector.argmax);
@@ -133,12 +96,12 @@ object MLWater {
     * outputs (MLWaterSpec proves bit-parity vs predictProbability).
     * The per-tree vote folds run inside [[RfForestVotes]] — a native
     * codegen'd expression (see its scaladoc for why not CASE cascades). */
-  def predictFromTrees(trees: Seq[RfTree], px: DataFrame, bands: Seq[String],
-                       validImg: Column, keys: Seq[String]): DataFrame = {
+  def predictFromForest(forest: RfForest, px: DataFrame, bands: Seq[String],
+                        validImg: Column, keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.GraftShims
     val feats = bands.map(b => col(b).cast("double"))
     val votesCol = GraftShims.column(
-      RfForestVotes(RfForest.fromTrees(trees), feats.map(GraftShims.expression)))
+      RfForestVotes(forest, feats.map(GraftShims.expression)))
     val v0 = col("__votes").getItem(0)
     val v1 = col("__votes").getItem(1)
     val prob1 = v1 / (v0 + v1) // normalizeToProbabilitiesInPlace
@@ -152,40 +115,39 @@ object MLWater {
         when(col("__valid"), (prob1 * 100).cast("int")).otherwise(Nodata).as("water_prob"): _*)
   }
 
-  /** [[predictFromTrees]] with extraction folded in (one-shot callers). */
+  /** [[predictFromForest]] with the forest read from `model` (one-shot callers). */
   def predict(model: RandomForestClassificationModel, px: DataFrame,
               bands: Seq[String], validImg: Column, keys: Seq[String]): DataFrame =
-    predictFromTrees(extractTrees(px.sparkSession, model), px, bands, validImg, keys)
+    predictFromForest(RfForest.fromModel(model), px, bands, validImg, keys)
 
   // ---------------- DuckDB oracle rendering ----------------
 
-  private def classTermSql(tree: RfTree, id: Int, feats: Seq[String], cls: Int): String = {
-    val n = tree(id)
-    if (n.left == -1) {
-      val total = (0.0 + n.c0) + n.c1
-      ((if (cls == 0) n.c0 else n.c1) / total).toString
-    } else
-      s"CASE WHEN ${feats(n.feature)} <= ${n.threshold} " +
-        s"THEN ${classTermSql(tree, n.left, feats, cls)} " +
-        s"ELSE ${classTermSql(tree, n.right, feats, cls)} END"
-  }
+  private def classTermSql(forest: RfForest, t: Int, id: Int, feats: Seq[String],
+                           cls: Int): String =
+    if (forest.left(t)(id) == -1) (if (cls == 0) forest.p0 else forest.p1)(t)(id).toString
+    else
+      s"CASE WHEN ${feats(forest.feature(t)(id))} <= ${forest.threshold(t)(id)} " +
+        s"THEN ${classTermSql(forest, t, forest.left(t)(id), feats, cls)} " +
+        s"ELSE ${classTermSql(forest, t, forest.right(t)(id), feats, cls)} END"
 
-  private def votesSql(trees: Seq[RfTree], feats: Seq[String], cls: Int): String =
-    trees.foldLeft("0.0")((acc, t) => s"($acc + ${classTermSql(t, 0, feats, cls)})")
+  private def votesSql(forest: RfForest, feats: Seq[String], cls: Int): String =
+    forest.feature.indices.foldLeft("0.0")((acc, t) =>
+      s"($acc + ${classTermSql(forest, t, 0, feats, cls)})")
 
-  /** ANSI-SQL twin of [[predictFromTrees]] over `pixelsSql`: tree CASE
-    * cascades with the identical leaf literals, the identical left-assoc
-    * vote folds, majority vote, truncated percent — bit-exact vs the
-    * engine because every double op matches in value and order. */
-  def oracleSql(trees: Seq[RfTree], pixelsSql: String, validSql: String,
+  /** ANSI-SQL twin of [[predictFromForest]] over `pixelsSql`: tree CASE
+    * cascades whose leaf literals are the forest's own `p0`/`p1`, the
+    * identical left-assoc vote folds, majority vote, truncated percent —
+    * bit-exact vs the engine because every double op matches in value and
+    * order. */
+  def oracleSql(forest: RfForest, pixelsSql: String, validSql: String,
                 bands: Seq[String], keys: Seq[String]): String = {
     val feats = bands.map(b => s"cast($b AS double)")
     val ks = keys.mkString(", ")
     val validAll = (s"($validSql)" +: bands.map(b => s"$b IS NOT NULL")).mkString(" AND ")
     s"""WITH px AS ($pixelsSql),
        |t AS (SELECT $ks, ($validAll) AS valid,
-       |  ${votesSql(trees, feats, 0)} AS v0,
-       |  ${votesSql(trees, feats, 1)} AS v1
+       |  ${votesSql(forest, feats, 0)} AS v0,
+       |  ${votesSql(forest, feats, 1)} AS v1
        |  FROM px)
        |SELECT $ks,
        |  CASE WHEN valid THEN (CASE WHEN v1 > v0 THEN 1 ELSE 0 END) ELSE -9999 END AS water_mask,

@@ -1,5 +1,8 @@
 package graft.ml
 
+import org.apache.spark.ml.GraftMlShims
+import org.apache.spark.ml.classification.RandomForestClassificationModel
+import org.apache.spark.ml.tree.{ContinuousSplit, InternalNode, Node}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -21,8 +24,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
  *
  * Arithmetic is bit-identical to `RandomForestClassificationModel.predictRaw`
  * (and to the DuckDB CASE-cascade oracle): per-tree leaf contributions
- * `p_c = stats_c / ((0.0 + s0) + s1)` are precomputed at construction with
- * that exact fold, and votes accumulate `v_c += p_c` in tree order.
+ * `p_c = stats_c / ((0.0 + s0) + s1)` are precomputed by [[RfForest.fromModel]]
+ * with that exact fold, and votes accumulate `v_c += p_c` in tree order. The
+ * oracle SQL renders its leaf literals from the same `p0`/`p1`.
  */
 final class RfForest(
     val feature: Array[Array[Int]], val threshold: Array[Array[Double]],
@@ -47,25 +51,47 @@ final class RfForest(
 }
 
 object RfForest {
-  /** Dense-array encoding of [[MLWater.RfTree]]s (node maps keyed by id). */
-  def fromTrees(trees: Seq[MLWater.RfTree]): RfForest = {
-    val enc = trees.map { tree =>
-      val n = tree.keys.max + 1
-      val fe = new Array[Int](n); val th = new Array[Double](n)
+  /** The trained forest, read in memory from each tree's `rootNode` in
+    * `model.trees` order (the order `predictRaw` visits). Nodes are numbered
+    * in preorder as spark.ml's own export (`NodeData.build`) numbers them:
+    * left = id + 1, right = last id of the left subtree + 1. Leaves carry
+    * feature −1, threshold 0.0 and children −1. Only a `ContinuousSplit`
+    * routes on `feature <= threshold`, so any other split kind throws
+    * instead of being misread as a threshold. */
+  def fromModel(model: RandomForestClassificationModel): RfForest = {
+    val enc = model.trees.zipWithIndex.map { case (tree, t) =>
+      val n = tree.numNodes
+      val fe = Array.fill(n)(-1); val th = new Array[Double](n)
       val lf = Array.fill(n)(-1); val rt = Array.fill(n)(-1)
       val a0 = new Array[Double](n); val a1 = new Array[Double](n)
-      tree.foreach { case (id, nd) =>
-        fe(id) = nd.feature; th(id) = nd.threshold; lf(id) = nd.left; rt(id) = nd.right
-        val total = (0.0 + nd.c0) + nd.c1 // Array[Double].sum fold order
+      // fills node `id` and its subtree; returns the subtree's last id
+      def walk(node: Node, id: Int): Int = {
+        val c = GraftMlShims.classCounts(node)
+        val total = (0.0 + c(0)) + c(1) // Array[Double].sum fold order
         // predictRaw skips trees whose leaf stats sum to 0 (adds nothing to
         // the votes) — a 0/0 here would instead poison the fold with NaN
-        a0(id) = if (total == 0.0) 0.0 else nd.c0 / total
-        a1(id) = if (total == 0.0) 0.0 else nd.c1 / total
+        a0(id) = if (total == 0.0) 0.0 else c(0) / total
+        a1(id) = if (total == 0.0) 0.0 else c(1) / total
+        node match {
+          case in: InternalNode =>
+            in.split match {
+              case s: ContinuousSplit => fe(id) = s.featureIndex; th(id) = s.threshold
+              case s => throw new IllegalArgumentException(
+                s"tree $t node $id: ${s.getClass.getSimpleName} on feature ${s.featureIndex}" +
+                  " (only continuous splits are supported)")
+            }
+            lf(id) = id + 1
+            val lastLeft = walk(in.leftChild, id + 1)
+            rt(id) = lastLeft + 1
+            walk(in.rightChild, lastLeft + 1)
+          case _ => id
+        }
       }
+      walk(tree.rootNode, 0)
       (fe, th, lf, rt, a0, a1)
     }
-    new RfForest(enc.map(_._1).toArray, enc.map(_._2).toArray, enc.map(_._3).toArray,
-      enc.map(_._4).toArray, enc.map(_._5).toArray, enc.map(_._6).toArray)
+    new RfForest(enc.map(_._1), enc.map(_._2), enc.map(_._3),
+      enc.map(_._4), enc.map(_._5), enc.map(_._6))
   }
 }
 

@@ -2,11 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The similarity plane's DuckDB oracle renderings, pinned by the SHA-256
-  * of their text with the arguments `SparkEntry.oracleSql` passes. The pins
-  * were taken before the renderers were refactored to share their CTEs, so
-  * any byte of drift in the emitted SQL fails here, not only at a DuckDB
-  * compare outside the suite. */
+/** DuckDB oracle renderings, pinned by the SHA-256 of their text: the
+  * similarity plane's, with the arguments `SparkEntry.oracleSql` passes, and
+  * `ml_water`'s on sf0.001 and sf0.01. The similarity pins were taken before
+  * the renderers were refactored to share their CTEs, and the `ml_water` pins
+  * before its forest was read from the model instead of from the model's
+  * export, so any byte of drift in the emitted SQL fails here, not only at a
+  * DuckDB compare outside the suite. */
 class OracleSqlPinSpec extends AnyFunSuite {
 
   private def sha256(s: String): String =
@@ -38,5 +40,16 @@ class OracleSqlPinSpec extends AnyFunSuite {
 
   for ((name, sql) <- rendered) test(s"$name oracle SQL renders byte-identically") {
     assert(sha256(sql) == pins(name), s"$name oracle text changed:\n$sql")
+  }
+
+  /** `ml_water`'s oracle is rendered from the forest trained on each data
+    * directory, so it needs a live session; Verify dumps the same text. */
+  private val waterPins: Seq[(String, String)] = Seq(
+    "sf0.001" -> "37eaa28aa58a45ade6c07ac0ffe80f88b2472731f4dcf5b91f9cebed29999502",
+    "sf0.01" -> "4da2f890cd16f10818b3faeb97a0bcbb916dcb86c337e808a944b7260ff0b3f3")
+
+  for ((sf, pin) <- waterPins) test(s"ml_water oracle SQL on $sf renders byte-identically") {
+    val sql = MLQueries.waterOracleSql(SparkTestSession.spark, s"/root/testdata/$sf")
+    assert(sha256(sql) == pin, s"ml_water oracle text on $sf changed:\n$sql")
   }
 }

@@ -85,13 +85,13 @@ class MLWaterSpec extends AnyFunSuite {
   test("null band values → nodata on both outputs (engine ≡ oracle rule)") {
     val px = scene
     val model = MLWater.train(px, bands, "pc", col("valid_img"), col("valid_lab"))
-    val trees = MLWater.extractTrees(spark, model)
+    val forest = RfForest.fromModel(model)
     val withNulls = Seq(
       (1L, Some(300), Some(2500), Some(1500), true),
       (2L, Some(300), None: Option[Int], Some(1500), true), // null nir
       (3L, None: Option[Int], Some(2500), Some(1500), true) // null green
     ).toDF("px", "green", "nir", "swir1", "valid_img")
-    val out = MLWater.predictFromTrees(trees, withNulls, bands, col("valid_img"), Seq("px"))
+    val out = MLWater.predictFromForest(forest, withNulls, bands, col("valid_img"), Seq("px"))
       .collect().map(r => r.getAs[Long]("px") ->
         (r.getAs[Int]("water_mask"), r.getAs[Int]("water_prob"))).toMap
     assert(out(1L)._1 != -9999 && out(1L)._2 != -9999)
