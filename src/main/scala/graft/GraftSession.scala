@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
  * AQE on (skew-join splitting + partition coalescing are part of the skew
  * story, SURVEY §4.2), shuffle partitions sized to the machine rather than
  * the 200 default, UTC sessions, and the graft Catalyst extensions
- * (native spatial expressions + the CellCoverJoin rule) installed.
+ * (native spatial expressions + the CellCoverJoin rule) installed. Other
+ * sessions get the runtime part from [[graft.plans.GraftExtensions.register]].
  */
 object GraftSession {
 
@@ -26,6 +27,17 @@ object GraftSession {
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints"
   ).mkString(",")
 
+  /** Object aggregates (geomedian, percentile, struct extrema,
+    * collect_list) fall back to SORT-based aggregation after 128 distinct
+    * keys per partition by default, sorting every input row by group key.
+    * The pixel plane has thousands of live groups per partition with compact
+    * flat buffers; keeping them hashed is faster (measured ~0.3 s on
+    * px_geomedian at sf0.1). The cost: the sort fallback is also
+    * ObjectHashAggregate's only spill path, so buffers stay in memory until
+    * a task holds this many groups. Purely physical: results are unaffected. */
+  val ObjectAggFallbackThresholdKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+  val ObjectAggFallbackThreshold = "65536"
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -35,30 +47,8 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.optimizer.excludedRules", ExcludedRules)
-      // object aggregates (geomedian, collect_list) fall back to SORT-based
-      // aggregation after 128 distinct keys per partition by default —
-      // sorting every input row by group key. The pixel plane has thousands
-      // of live groups per partition with compact flat buffers; keeping them
-      // hashed is both faster (measured ~0.3 s on px_geomedian at sf0.1)
-      // and the right 100 TB posture (buffer memory is bounded by
-      // groups-per-partition, not input rows)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+      .config(ObjectAggFallbackThresholdKey, ObjectAggFallbackThreshold)
       .config("spark.sql.session.timeZone", "UTC")
-
-  /** The object-aggregate hash-vs-sort posture for sessions the engine did
-    * NOT build (the frozen driver mains construct their own sessions):
-    * runtime-settable, so operators whose aggregation buffers are objects
-    * (geomedian's flat GmBuf, percentile, struct extrema, collect_list) apply
-    * it at query-build time. Identical rationale to the builder config
-    * above — with the 128-key default every partition of a
-    * thousands-of-groups pixel aggregation abandons hashing and SORTS every
-    * input row by group key; hashed buffers are bounded by
-    * groups-per-partition, the right posture at any scale. Purely physical:
-    * results are unaffected. */
-  def tuneObjectAgg(s: SparkSession): SparkSession = {
-    s.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-    s
-  }
 
   def local(cores: Int): SparkSession = {
     val s = builder(s"local[$cores]", cores).config("spark.ui.enabled", "false").getOrCreate()

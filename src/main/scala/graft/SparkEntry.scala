@@ -23,7 +23,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     GeoQueries.tileAssign(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private type Query = (SparkSession, String) => DataFrame
+
+  /** Each entry first applies [[graft.plans.GraftExtensions.register]], so a
+    * query plans the same whatever ran before it in its session. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Map[String, Query](
     // --- spatial core (SURVEY §2.3 J1/J2/J8) ---
     "geo_tile_assign" -> ((s, d) => GeoQueries.tileAssign(s, d)),
     "geo_name_assign" -> ((s, d) => GeoQueries.nameAssign(s, d)),
@@ -147,7 +151,9 @@ object SparkEntry {
     "px_bitmask" -> ((s, d) => PixelQueries.bitmask(s, d)),
     "px_rasterize" -> ((s, d) => PixelQueries.rasterize(s, d)),
     "px_reassemble" -> ((s, d) => PixelQueries.reassemble(s, d))
-  )
+  ).map { case (name, q) =>
+    name -> ((s: SparkSession, d: String) => { graft.plans.GraftExtensions.register(s); q(s, d) })
+  }
 
   /** DuckDB twin of TrainQueries.mutatedCorpus. */
   private val mutatedCorpusSql: String =
@@ -984,7 +990,6 @@ object GeoQueries {
     * rule lowers onto the cell-cover join (must agree with the DataFrame
     * path, geo_tile_assign). */
   def sqlJoin(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val t = tiles(s).withColumnRenamed("wkt", "tile_wkt")
     scenesFromOrders(s, dir)
       .join(t, graft.plans.SpatialColumns.stIntersects(col("tile_wkt"), col("wkt")))
@@ -1024,12 +1029,10 @@ object PixelQueries {
     Composites.meanComposite(px(s, d), Seq("py", "px"), "red2")
 
   def median(s: SparkSession, d: String): DataFrame =
-    Composites.medianComposite(
-      px(graft.GraftSession.tuneObjectAgg(s), d), Seq("py", "px"), "red2")
+    Composites.medianComposite(px(s, d), Seq("py", "px"), "red2")
 
   def recent(s: SparkSession, d: String): DataFrame =
-    Composites.mostRecentValid(px(graft.GraftSession.tuneObjectAgg(s), d),
-      Seq("py", "px"), "ts",
+    Composites.mostRecentValid(px(s, d), Seq("py", "px"), "ts",
       carried = Seq("l_orderkey", "l_linenumber", "red2"), v = "red2")
       .select("py", "px", "l_orderkey", "l_linenumber", "red2")
 
@@ -1037,8 +1040,7 @@ object PixelQueries {
   def minNdvi(s: SparkSession, d: String): DataFrame = ndvi(s, d, greatest = false)
 
   private def ndvi(s: SparkSession, d: String, greatest: Boolean): DataFrame =
-    Composites.ndviComposite(px(graft.GraftSession.tuneObjectAgg(s), d),
-      Seq("py", "px"),
+    Composites.ndviComposite(px(s, d), Seq("py", "px"),
       tieBreak = Seq("l_orderkey", "l_linenumber"), bands = Seq("blue", "nir", "red"), greatest)
       .select("py", "px", "best_ndvi", "blue", "nir", "red")
 
@@ -1047,8 +1049,7 @@ object PixelQueries {
     * parameterization (32 iterations, tol 0) whose arithmetic has an exact
     * SQL twin, so the oracle checks it row-for-row; converged-form parity vs
     * the scalar oracle (default 200 / 1e-9) stays in AggregatorSpec. */
-  def geomedian(s: SparkSession, d: String): DataFrame = {
-    graft.GraftSession.tuneObjectAgg(s)
+  def geomedian(s: SparkSession, d: String): DataFrame =
     px(s, d).groupBy("py", "px")
       .agg(GeomedianVec(32, 0.0, medoid = false)(col("blue").cast("double"),
         col("nir").cast("double"), col("red").cast("double")).as("gm"))
@@ -1056,13 +1057,11 @@ object PixelQueries {
         round(element_at(col("gm"), 1), 6).as("gm_blue"),
         round(element_at(col("gm"), 2), 6).as("gm_nir"),
         round(element_at(col("gm"), 3), 6).as("gm_red"))
-  }
 
   /** Geomedoid (A9's second variant, `dc_mosaic.py:558-584`): the observed
     * (blue, nir, red) vector nearest the fixed-step geomedian. */
   def geomedoid(s: SparkSession, d: String): DataFrame =
-    Composites.geomedoidComposite(
-      px(graft.GraftSession.tuneObjectAgg(s), d), Seq("py", "px"),
+    Composites.geomedoidComposite(px(s, d), Seq("py", "px"),
       bands = Seq("blue", "nir", "red"), iters = 32)
 
   /** True bitmask decode (`dc_utilities.py:199-215`): (qa & Σ2^b) ≠ 0. */
@@ -1278,7 +1277,6 @@ object TrainQueries {
     * the doc-level ref hash (DuckDB-computable); the pixel proof lives in
     * the booleans, which only the real codec round-tripping can set. */
   def mediaMultiband(s: SparkSession, d: String): DataFrame = {
-    graft.GraftSession.tuneObjectAgg(s)
     val scenes = graft.model.SynthCorpus.scenesFromOrders(s, d)
       .withColumn("platform", lit("SENTINEL_2"))
       .where(col("doc_id") % 30 === 0)

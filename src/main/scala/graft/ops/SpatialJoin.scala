@@ -31,12 +31,13 @@ object SpatialJoin {
    * Data-driven salt sizing: S = hottest-cell count / (rows-per-task
    * target), clamped to [1, 64]. A uniform corpus yields 1 (no salting
    * overhead); a hotspot corpus yields the replication factor that splits
-   * its densest cell into ~`targetPerBucket`-row buckets.
+   * its densest cell into ~`targetPerBucket`-row buckets. No rows, or no
+   * non-empty geometry, yields 1.
    */
   def suggestSaltBuckets(df: DataFrame, geomCol: String, res: Int,
                          targetPerBucket: Long = 500000L): Int = {
     val top = cellHistogram(df, geomCol, res)
-      .agg(max("count")).collect()(0).getLong(0)
+      .agg(coalesce(max("count"), lit(0L))).head().getLong(0)
     math.min(64L, math.max(1L, top / math.max(1L, targetPerBucket))).toInt
   }
 }

@@ -10,12 +10,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  *   - SQL functions `st_intersects`, `st_distance`, `st_cell_cover`
  *     (native expressions, codegen'd — SURVEY §2.8 geo)
  *   - [[CellCoverJoin]], an optimizer rule: an inner join on `st_intersects`
- *     with no equi-join keys is lowered onto the cell-cover equi-join
- *     instead of a nested-loop cross product
+ *     with no equi-join keys is lowered onto the cell-cover join instead of
+ *     a nested-loop cross product
  *
- * Enable at build time:
- *   `SparkSession.builder().config("spark.sql.extensions", "graft.plans.GraftExtensions")`
- * or retrofit onto a live session with [[GraftExtensions.register]].
+ * `graft.GraftSession.builder` installs them through `spark.sql.extensions`.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -50,20 +48,27 @@ object GraftExtensions {
       (c: Seq[Expression]) => graft.ann.QuantizedDot(c(0), c(1)))
   )
 
-  /** Retrofit the functions + rule onto an already-built session (the
-    * driver owns session construction in Verify/Bench). Idempotent. Also
-    * applies the engine's optimizer-rule exclusions (runtime-settable). */
+  /** The one place the engine writes session state: retrofits the engine's
+    * runtime settings onto a session it did not build (`graft.Verify` and
+    * `graft.Bench` build their own) — the functions, the rule unless the
+    * session's extensions already run it, the optimizer-rule exclusions
+    * merged with the host's own, and the object-aggregate threshold.
+    * Idempotent; on a `GraftSession.builder` session it changes nothing.
+    * `SparkEntry.queries` calls it before every query. */
   def register(spark: SparkSession): Unit = {
     functions.foreach { case (id, inf, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, inf, builder)
     }
-    if (!spark.experimental.extraOptimizations.contains(CellCoverJoin))
+    val installed = spark.sessionState.optimizer.extendedOperatorOptimizationRules ++
+      spark.experimental.extraOptimizations
+    if (!installed.contains(CellCoverJoin))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ CellCoverJoin
-    // merge with (never clobber) exclusions the host application already set
     val existing = spark.conf.getOption("spark.sql.optimizer.excludedRules")
       .toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     val merged = (existing ++ graft.GraftSession.ExcludedRules.split(",")).distinct
     spark.conf.set("spark.sql.optimizer.excludedRules", merged.mkString(","))
+    spark.conf.set(graft.GraftSession.ObjectAggFallbackThresholdKey,
+      graft.GraftSession.ObjectAggFallbackThreshold)
   }
 }

@@ -71,7 +71,6 @@ object Plans {
       capture(graft.ops.TileAssign.assign(docs, tiles, shuffled = true, saltBuckets = 8))))
 
     // SQL-form spatial join: the CellCoverJoin optimizer rule
-    graft.plans.GraftExtensions.register(spark)
     val t2 = tiles.withColumnRenamed("wkt", "tile_wkt")
     sections += (("st_intersects join lowered onto the cell-cover join",
       "CellCoverJoin rewrites it to the cell equi-join (cover, explode, hash join on the cell, " +

@@ -1,8 +1,7 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, Row}
-import graft.SparkTestSession
+import graft.{QueryDigest, SparkTestSession}
 
 /** The two Weiszfeld driver queries, pinned end to end on the committed
   * test data: row count, schema (nullability included) and an
@@ -27,29 +26,11 @@ class CompositeQueriesSpec extends AnyFunSuite {
       ("ml_water", "sf0.01") -> ((60000L, mw, "1d74dba9d12afdf2")))
   }
 
-  private def render(v: Any): String = v match {
-    case null => "null"
-    case d: Double => java.lang.Double.toString(d) // exact; keeps -0.0 apart from 0.0
-    case s: scala.collection.Seq[_] => s.map(render).mkString("[", ",", "]")
-    case r: Row => r.toSeq.map(render).mkString("(", ",", ")")
-    case x => x.toString
-  }
-
-  /** SHA-256 over the sorted rendered rows: independent of row order and
-    * partitioning, sensitive to every value and to duplicate rows. */
-  private def rowHash(df: DataFrame): (Long, String) = {
-    val rows = df.collect().map(render).sorted
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    rows.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
-    (rows.length.toLong, md.digest().take(8).map(b => f"$b%02x").mkString)
-  }
-
   for (q <- Seq("px_geomedian", "px_geomedoid", "ml_water"); sf <- Seq("sf0.001", "sf0.01"))
     test(s"$q on $sf: row count, schema and row hash match the pins") {
       val df = graft.SparkEntry.queries(q)(spark, s"/root/testdata/$sf")
-      val schema = df.schema.fields
-        .map(f => s"${f.name}:${f.dataType.simpleString}:${f.nullable}").mkString(",")
-      val (n, hash) = rowHash(df)
+      val schema = QueryDigest.schema(df)
+      val (n, hash) = QueryDigest.rowHash(df)
       assert(pins.get((q, sf)).contains((n, schema, hash)),
         s"$q on $sf: got ($n, \"$schema\", \"$hash\"), pinned ${pins.get((q, sf))}")
     }

@@ -108,6 +108,18 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(mHot > mUni * 5)
   }
 
+  test("salt sizing over no rows is 1 (no salt), not a null-max failure") {
+    val none = Seq.empty[(Long, String)].toDF("doc_id", "wkt")
+    assert(SpatialJoin.suggestSaltBuckets(none, "wkt", res = 5) == 1)
+  }
+
+  test("salt sizing over only empty geometries is 1 (no salt), not a null-max failure") {
+    val empty = Seq((1L, null.asInstanceOf[String]), (2L, ""), (3L, "POLYGON EMPTY"))
+      .toDF("doc_id", "wkt")
+    assert(SpatialJoin.cellHistogram(empty, "wkt", 5).isEmpty)
+    assert(SpatialJoin.suggestSaltBuckets(empty, "wkt", res = 5) == 1)
+  }
+
   test("synthetic docs generator: AM hotspot footprints get assigned on both seam sides") {
     val docs = SynthCorpus.docs(spark, 400, seed = 42L, hotspotFrac = 0.5, amFrac = 0.8)
     val assigned = TileAssign.assign(docs.select($"doc_id", $"wkt"), tiles, res = 5)
