@@ -18,6 +18,7 @@ import graft.functions.GeoFunctions
  * a pure-inequality SQL oracle.
  */
 object SparkEntry {
+  import TableFixtures.priceCSql
 
   /** Flagship: spatial-join tile assignment on sf0.001 (rows > 0). */
   def entry(spark: SparkSession): DataFrame =
@@ -658,7 +659,7 @@ object SparkEntry {
          |  AND ymin <= $aymax AND ymax >= $aymin""".stripMargin
     },
     "tbl_merge" ->
-      """WITH base AS (SELECT o_orderkey, o_custkey, o_totalprice
+      ("""WITH base AS (SELECT o_orderkey, o_custkey, o_totalprice
         |              FROM orders WHERE o_orderkey % 7 = 0),
         |upd AS (SELECT o_orderkey, o_custkey,
         |               cast(floor(o_totalprice) + 1 AS double) AS o_totalprice
@@ -668,14 +669,12 @@ object SparkEntry {
         |        FROM orders WHERE o_orderkey % 7 = 3),
         |merged AS (SELECT b.* FROM base b ANTI JOIN upd u USING (o_orderkey)
         |           UNION ALL SELECT * FROM upd)
-        |SELECT o_orderkey, o_custkey,
-        |       cast(floor(o_totalprice * 100) AS bigint) AS price_c
-        |FROM merged""".stripMargin,
+        |""".stripMargin + priceCSql("merged")),
     // merge-on-read: base %5, upsert batch 1 (%10, +1), then batch 2
     // (%20, +2 — SUPERSEDES half of batch 1 — plus %5=1 inserts); last
     // writer per key wins, exactly the sequence-number delete semantics
     "tbl_mor" ->
-      """WITH base AS (SELECT o_orderkey, o_custkey, o_totalprice
+      ("""WITH base AS (SELECT o_orderkey, o_custkey, o_totalprice
         |              FROM orders WHERE o_orderkey % 5 = 0),
         |up1 AS (SELECT o_orderkey, o_custkey,
         |               cast(floor(o_totalprice) + 1 AS double) AS o_totalprice
@@ -690,19 +689,11 @@ object SparkEntry {
         |       UNION ALL SELECT * FROM up1),
         |m2 AS (SELECT m.* FROM m1 m ANTI JOIN up2 u USING (o_orderkey)
         |       UNION ALL SELECT * FROM up2)
-        |SELECT o_orderkey, o_custkey,
-        |       cast(floor(o_totalprice * 100) AS bigint) AS price_c
-        |FROM m2""".stripMargin,
+        |""".stripMargin + priceCSql("m2")),
     // incremental append scan: rows of commits 2..3 only (slices %11 = 1, 2)
-    "tbl_incr" ->
-      """SELECT o_orderkey, o_custkey,
-        |       cast(floor(o_totalprice * 100) AS bigint) AS price_c
-        |FROM orders WHERE o_orderkey % 11 IN (1, 2)""".stripMargin,
+    "tbl_incr" -> priceCSql("orders WHERE o_orderkey % 11 IN (1, 2)"),
     // table-follow consumer: exactly-once union of the followed commits
-    "str_incr" ->
-      """SELECT o_orderkey, o_custkey,
-        |       cast(floor(o_totalprice * 100) AS bigint) AS price_c
-        |FROM orders WHERE o_orderkey % 11 IN (0, 1, 2)""".stripMargin,
+    "str_incr" -> priceCSql("orders WHERE o_orderkey % 11 IN (0, 1, 2)"),
     // lag()-replay twin of the TTL lease state machine: after a complete
     // the pending lease resets, so the previous EVENT being a lease is
     // exactly "a lease is pending"; the tie rule (complete before lease at
@@ -749,10 +740,7 @@ object SparkEntry {
         |FROM orders WHERE o_orderkey % 7 = 0""".stripMargin,
     // bloom point-lookup: the IN-list itself (absent keys return nothing)
     "tbl_bloom" ->
-      s"""SELECT o_orderkey, o_custkey,
-         |       cast(floor(o_totalprice * 100) AS bigint) AS price_c
-         |FROM orders
-         |WHERE o_orderkey IN (${Relational.TblBloomKeys.mkString(", ")})""".stripMargin,
+      priceCSql(s"orders\nWHERE o_orderkey IN (${Relational.TblBloomKeys.mkString(", ")})"),
     // base %9 slice with one MoR upsert (%18 keys bumped); crash residue is
     // injected and swept before the read — content must survive the sweep
     "tbl_orphans" ->
@@ -763,39 +751,21 @@ object SparkEntry {
         |  END AS price_c
         |FROM orders WHERE o_orderkey % 9 = 0""".stripMargin,
     // time travel to the second commit: slices %11 = 0, 1 (commit 3 invisible)
-    "tbl_travel" ->
-      """SELECT o_orderkey, o_custkey,
-        |       cast(floor(o_totalprice * 100) AS bigint) AS price_c
-        |FROM orders WHERE o_orderkey % 11 IN (0, 1)""".stripMargin,
+    "tbl_travel" -> priceCSql("orders WHERE o_orderkey % 11 IN (0, 1)"),
     // filtered incremental scan: the delta commits' rows, one region only
     // (partition-pruned Spark-side; row-level filter in the oracle)
-    "tbl_incr_where" ->
-      """SELECT o_orderkey, o_custkey,
-        |       cast(floor(o_totalprice * 100) AS bigint) AS price_c
-        |FROM orders WHERE o_orderkey % 11 IN (1, 2) AND o_orderkey % 7 = 3""".stripMargin,
+    "tbl_incr_where" -> priceCSql("orders WHERE o_orderkey % 11 IN (1, 2) AND o_orderkey % 7 = 3"),
     // row-level DELETE: the table minus the equality-deleted keys
-    "tbl_delete" ->
-      """SELECT o_orderkey, o_custkey,
-        |       cast(floor(o_totalprice * 100) AS bigint) AS price_c
-        |FROM orders WHERE o_orderkey % 11 < 2 AND o_orderkey % 13 <> 0""".stripMargin,
+    "tbl_delete" -> priceCSql("orders WHERE o_orderkey % 11 < 2 AND o_orderkey % 13 <> 0"),
     // cherry-pick: base + the advanced main commit + the picked staged
     // increment, published alone after fastForward became impossible
-    "tbl_cherry" ->
-      """SELECT o_orderkey, o_custkey,
-        |       cast(floor(o_totalprice * 100) AS bigint) AS price_c
-        |FROM orders WHERE o_orderkey % 11 IN (0, 1, 3)""".stripMargin,
+    "tbl_cherry" -> priceCSql("orders WHERE o_orderkey % 11 IN (0, 1, 3)"),
     // write-audit-publish: main after the atomic fast-forward = base +
     // both staged increments (invisible to main readers until publish)
-    "tbl_wap" ->
-      """SELECT o_orderkey, o_custkey,
-        |       cast(floor(o_totalprice * 100) AS bigint) AS price_c
-        |FROM orders WHERE o_orderkey % 11 IN (0, 1, 2)""".stripMargin,
+    "tbl_wap" -> priceCSql("orders WHERE o_orderkey % 11 IN (0, 1, 2)"),
     // tag time travel: the tagged (mid) snapshot = commits 1..2, readable
     // by name after keepLast=1 retention expired the untagged history
-    "tbl_tag" ->
-      """SELECT o_orderkey, o_custkey,
-        |       cast(floor(o_totalprice * 100) AS bigint) AS price_c
-        |FROM orders WHERE o_orderkey % 11 IN (0, 1)""".stripMargin,
+    "tbl_tag" -> priceCSql("orders WHERE o_orderkey % 11 IN (0, 1)"),
     "q23_asof" ->
       """WITH clicks AS (SELECT event_id AS probe_id, user_id, ts FROM events
         |                WHERE event_type = 'click'),
@@ -856,9 +826,60 @@ object SparkEntry {
   )
 }
 
+/** What the table-plane fixture queries (`tbl_*`, `str_incr`) share. Each
+  * fixture is an IcebergLite table under a `java.io.tmpdir` root keyed by
+  * the data dir and the fingerprint of its `orders.parquet`. One staging
+  * rule: every step is a commit keyed by its own commitId.
+  * `appendIdempotent`, `merge`, `mergeOnRead`, `deleteKeys` and `compact`
+  * skip a commitId already on the table's ledger; any other commit checks
+  * `alreadyCommitted` or, on a branch, the branch's ledger
+  * ([[appendToBranchOnce]]). So a re-run commits nothing, and a run after
+  * a crash resumes at the first missing commit. */
+private[graft] object TableFixtures {
+  import graft.table.IcebergLite
+
+  /** Table (or other entry) `sub` of fixture `kind` staged from `d`. */
+  def path(kind: String, d: String, sub: String = "t"): String =
+    Fs.fixtureRoot(kind, d, java.nio.file.Paths.get(d, "orders.parquet")).resolve(sub).toString
+
+  /** The orders columns every orders fixture stages. */
+  def orders(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(s"$d/orders.parquet")
+      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+
+  /** Slice `m` of 11 disjoint key classes: one commit of a multi-commit fixture. */
+  def slice(rows: DataFrame, m: Int): DataFrame = rows.where(col("o_orderkey") % 11 === m)
+
+  /** An update batch: `rows` priced at floor(price) + `bump`. */
+  def bumped(rows: DataFrame, bump: Int): DataFrame =
+    rows.withColumn("o_totalprice", (floor(col("o_totalprice")) + bump).cast("double"))
+
+  /** The read every orders fixture returns: the price in whole cents. */
+  def priceC(df: DataFrame): DataFrame =
+    df.select(col("o_orderkey"), col("o_custkey"), floor(col("o_totalprice") * 100).as("price_c"))
+
+  /** The oracle twin of [[priceC]] over the relation `from`. */
+  def priceCSql(from: String): String =
+    "SELECT o_orderkey, o_custkey,\n" +
+      "       cast(floor(o_totalprice * 100) AS bigint) AS price_c\n" +
+      s"FROM $from"
+
+  /** Stage `rows` on `branch` as commitId `cid` unless the branch's ledger
+    * holds it. A missing branch forks from main's current snapshot. */
+  def appendToBranchOnce(s: SparkSession, rows: DataFrame, table: String,
+                         branch: String, cid: String): Unit = {
+    if (!IcebergLite.branches(table).contains(branch)) IcebergLite.createBranch(table, branch)
+    val ledger = IcebergLite.snapshotAt(table, IcebergLite.branches(table)(branch))
+      .map(_.commitIds).getOrElse(Set.empty[String])
+    if (!ledger.contains(cid))
+      IcebergLite.appendToBranch(s, rows, table, branch, Seq("o_orderkey"), cid)
+  }
+}
+
 /** Geo query implementations over the exact-lattice synthetic scenes. */
 object GeoQueries {
   import SynthCorpus._
+  import graft.table.IcebergLite
 
   private def tiles(s: SparkSession) = tileGrid(s).drop("path", "row")
 
@@ -877,10 +898,8 @@ object GeoQueries {
     * lattice, so the result checks the whole path: hidden layout at write,
     * cover-range pruning at read, exact st_intersects residual. */
   def tblPart(s: SparkSession, dir: String): DataFrame = {
-    import graft.table.IcebergLite
-    val root = graft.Fs.fixtureRoot("tbl_part", dir, java.nio.file.Paths.get(dir, "orders.parquet"))
-    val table = root.resolve("t").toString
-    if (IcebergLite.currentSnapshotId(table).isEmpty)
+    val table = TableFixtures.path("tbl_part", dir)
+    if (!IcebergLite.alreadyCommitted(table, "c1"))
       IcebergLite.createPartitioned(s, scenesFromOrders(s, dir), table,
         Seq(IcebergLite.PartitionField("cell", "wkt", "cell[4]")),
         Seq("doc_id"), "c1")
@@ -901,17 +920,15 @@ object GeoQueries {
     * The in-query `require` pins the pruning (≈2% AOI must open well under
     * half the files); the oracle pins exactness. */
   def tblZorder(s: SparkSession, dir: String): DataFrame = {
-    import graft.table.IcebergLite
-    val root = graft.Fs.fixtureRoot("tbl_zord", dir, java.nio.file.Paths.get(dir, "orders.parquet"))
-    val table = root.resolve("t").toString
-    if (IcebergLite.currentSnapshotId(table).isEmpty) {
-      IcebergLite.append(s, scenesFromOrders(s, dir)
-        .select(col("doc_id"), col("xmin"), col("ymin"), col("xmax"), col("ymax")),
-        table, Seq("xmin", "ymin", "xmax", "ymax"), "c1")
+    val table = TableFixtures.path("tbl_zord", dir)
+    val bounds = Seq("xmin", "ymin", "xmax", "ymax")
+    IcebergLite.appendIdempotent(s, scenesFromOrders(s, dir)
+      .select(col("doc_id") +: bounds.map(col): _*), table, bounds, "c1")
+    if (!IcebergLite.alreadyCommitted(table, "z1")) { // sized from c1's files
       val bytes = IcebergLite.readSnapshot(table).get.files.map { f =>
         java.nio.file.Files.size(java.nio.file.Paths.get(f.path.stripPrefix("file:")))
       }.sum
-      IcebergLite.compact(s, table, Seq("xmin", "ymin", "xmax", "ymax"), "z1",
+      IcebergLite.compact(s, table, bounds, "z1",
         targetFileBytes = bytes / 48 + 1, zorderBy = Seq("xmin", "ymin"))
     }
     val (axmin, aymin, axmax, aymax) = TblZorderAoi
@@ -1466,6 +1483,8 @@ object MLQueries {
   * Aggregates stay on exactly-representable values (integer-valued doubles,
   * floor()ed cents) so Spark and DuckDB agree bit-for-bit. */
 object Relational {
+  import graft.table.IcebergLite
+  import TableFixtures._
   private def t(s: SparkSession, d: String, n: String) = s.read.parquet(s"$d/$n.parquet")
 
   def q1(s: SparkSession, d: String): DataFrame =
@@ -1609,26 +1628,16 @@ object Relational {
     * table from a deterministic base slice of `orders`, merge an
     * update+insert batch, read the COMMITTED table back. The oracle is the
     * merge's relational definition (anti-join ∪ updates) in plain SQL.
-    * Fingerprint-keyed under /tmp; re-runs hit the commitId idempotence
-    * guard and are metadata-only no-ops. */
+    * Staged by [[TableFixtures]]' commitId rule. */
   def tblMerge(s: SparkSession, d: String): DataFrame = {
-    import graft.table.IcebergLite
-    val root = graft.Fs.fixtureRoot("tbl_merge", d, java.nio.file.Paths.get(d, "orders.parquet"))
-    val table = root.resolve("t").toString
-    val orders = t(s, d, "orders")
-    if (IcebergLite.currentSnapshotId(table).isEmpty) {
-      val base = orders.where(col("o_orderkey") % 7 === 0)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      IcebergLite.append(s, base, table, Seq("o_orderkey"), "base")
-    }
-    val updates = orders.where(col("o_orderkey") % 14 === 0)
-      .select(col("o_orderkey"), col("o_custkey"),
-        (floor(col("o_totalprice")) + 1).cast("double").as("o_totalprice"))
-      .unionByName(orders.where(col("o_orderkey") % 7 === 3)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")))
+    val table = path("tbl_merge", d)
+    val rows = orders(s, d)
+    IcebergLite.appendIdempotent(s, rows.where(col("o_orderkey") % 7 === 0),
+      table, Seq("o_orderkey"), "base")
+    val updates = bumped(rows.where(col("o_orderkey") % 14 === 0), 1)
+      .unionByName(rows.where(col("o_orderkey") % 7 === 3))
     IcebergLite.merge(s, table, updates, Seq("o_orderkey"), Seq("o_orderkey"), "m1")
-    IcebergLite.read(s, table).select(col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100).as("price_c"))
+    priceC(IcebergLite.read(s, table))
   }
 
   /** The table plane's MERGE-ON-READ upsert as a driver-oracled query —
@@ -1638,63 +1647,42 @@ object Relational {
     * oracle as tbl_merge (the two strategies must agree on content);
     * distinct update recipe so the two queries can't mask each other. */
   def tblMor(s: SparkSession, d: String): DataFrame = {
-    import graft.table.IcebergLite
-    val root = graft.Fs.fixtureRoot("tbl_mor", d, java.nio.file.Paths.get(d, "orders.parquet"))
-    val table = root.resolve("t").toString
-    val orders = t(s, d, "orders")
-    if (IcebergLite.currentSnapshotId(table).isEmpty) {
-      val base = orders.where(col("o_orderkey") % 5 === 0)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      IcebergLite.append(s, base, table, Seq("o_orderkey"), "base")
-    }
+    val table = path("tbl_mor", d)
+    val rows = orders(s, d)
+    IcebergLite.appendIdempotent(s, rows.where(col("o_orderkey") % 5 === 0),
+      table, Seq("o_orderkey"), "base")
     // batch 1 updates existing keys; batch 2 later SUPERSEDES some of them
     // and inserts new keys — the read must resolve both by commit sequence
-    val up1 = orders.where(col("o_orderkey") % 10 === 0)
-      .select(col("o_orderkey"), col("o_custkey"),
-        (floor(col("o_totalprice")) + 1).cast("double").as("o_totalprice"))
-    val up2 = orders.where(col("o_orderkey") % 20 === 0)
-      .select(col("o_orderkey"), col("o_custkey"),
-        (floor(col("o_totalprice")) + 2).cast("double").as("o_totalprice"))
-      .unionByName(orders.where(col("o_orderkey") % 5 === 1)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")))
+    val up1 = bumped(rows.where(col("o_orderkey") % 10 === 0), 1)
+    val up2 = bumped(rows.where(col("o_orderkey") % 20 === 0), 2)
+      .unionByName(rows.where(col("o_orderkey") % 5 === 1))
     IcebergLite.mergeOnRead(s, table, up1, Seq("o_orderkey"), Seq("o_orderkey"), "mor1")
     IcebergLite.mergeOnRead(s, table, up2, Seq("o_orderkey"), Seq("o_orderkey"), "mor2")
-    IcebergLite.read(s, table).select(col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100).as("price_c"))
+    priceC(IcebergLite.read(s, table))
   }
 
-  /** Incremental append scan as a driver-oracled query (Iceberg's
-    * `incrementalAppendScan`, the process-only-new-data primitive of the
-    * reference's re-scan-driven pipeline runs): build an IcebergLite table
-    * in three append commits from disjoint deterministic `orders` slices,
-    * then read ONLY the rows added after the first commit. The delta is a
-    * metadata-only file selection (per-file commit seq), so the base
-    * commit's files are never opened. Crash-resumable: each append is
-    * guarded by the committed snapshot count, and appends are atomic. */
   /** The three-commit staged table shared by tbl_incr and tbl_travel:
     * disjoint deterministic `orders` slices (%11 = 0, 1, 2) appended as
-    * separate snapshots. Crash-resumable: each append is guarded by the
-    * committed snapshot count, and appends are atomic. Returns (table path,
+    * separate snapshots, each keyed by its commitId. Returns (table path,
     * snapshot ids oldest-first). */
   private def stagedIncrTable(s: SparkSession, d: String): (String, Seq[Long]) = {
-    import graft.table.IcebergLite
-    val root = graft.Fs.fixtureRoot("tbl_incr", d, java.nio.file.Paths.get(d, "orders.parquet"))
-    val table = root.resolve("t").toString
-    val orders = t(s, d, "orders")
-    def slice(m: Int) = orders.where(col("o_orderkey") % 11 === m)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    Seq(0, 1, 2).zip(Seq("base", "day1", "day2")).foreach { case (m, cid) =>
-      if (IcebergLite.snapshots(table).size <= m)
-        IcebergLite.append(s, slice(m), table, Seq("o_orderkey"), cid)
+    val table = path("tbl_incr", d)
+    val rows = orders(s, d)
+    Seq("base", "day1", "day2").zipWithIndex.foreach { case (cid, m) =>
+      IcebergLite.appendIdempotent(s, slice(rows, m), table, Seq("o_orderkey"), cid)
     }
     (table, IcebergLite.snapshots(table))
   }
 
+  /** Incremental append scan as a driver-oracled query (Iceberg's
+    * `incrementalAppendScan`, the process-only-new-data primitive of the
+    * reference's re-scan-driven pipeline runs): read ONLY the rows
+    * [[stagedIncrTable]] added after its first commit. The delta is a
+    * metadata-only file selection (per-file commit seq), so the base
+    * commit's files are never opened. */
   def tblIncr(s: SparkSession, d: String): DataFrame = {
     val (table, ids) = stagedIncrTable(s, d)
-    graft.table.IcebergLite.readIncremental(s, table, ids.head, ids.last)
-      .select(col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100).as("price_c"))
+    priceC(IcebergLite.readIncremental(s, table, ids.head, ids.last))
   }
 
   /** Incremental table-follow as a driver-oracled query (the streaming
@@ -1707,28 +1695,22 @@ object Relational {
     * copy); every step is crash-resumable and re-runs are metadata-only
     * no-ops. The query returns the CONSUMER's table. */
   def strIncr(s: SparkSession, d: String): DataFrame = {
-    import graft.table.IcebergLite
-    val root = graft.Fs.fixtureRoot("str_incr", d, java.nio.file.Paths.get(d, "orders.parquet"))
-    val src = root.resolve("src").toString
-    val tgt = root.resolve("tgt").toString
-    val cp = root.resolve("consumer.cp").toString
-    val orders = t(s, d, "orders")
-    def slice(m: Int) = orders.where(col("o_orderkey") % 11 === m)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+    val src = path("str_incr", d, "src")
+    val tgt = path("str_incr", d, "tgt")
+    val cp = path("str_incr", d, "consumer.cp")
+    val rows = orders(s, d)
     def drain(): Unit = graft.streaming.Streams.drainTableIncrement(s, src, cp) {
       (df, from, to) =>
         IcebergLite.appendIdempotent(s, df, tgt, Seq("o_orderkey"), s"inc_${from}_$to")
     }
-    if (IcebergLite.snapshots(src).isEmpty)
-      IcebergLite.append(s, slice(0), src, Seq("o_orderkey"), "c1")
+    def commit(m: Int): Unit =
+      IcebergLite.appendIdempotent(s, slice(rows, m), src, Seq("o_orderkey"), s"c${m + 1}")
+    commit(0)
     drain()
-    if (IcebergLite.snapshots(src).size <= 1)
-      IcebergLite.append(s, slice(1), src, Seq("o_orderkey"), "c2")
-    if (IcebergLite.snapshots(src).size <= 2)
-      IcebergLite.append(s, slice(2), src, Seq("o_orderkey"), "c3")
+    commit(1)
+    commit(2)
     drain()
-    IcebergLite.read(s, tgt).select(col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100).as("price_c"))
+    priceC(IcebergLite.read(s, tgt))
   }
 
   /** The full `rediswq` lease lifecycle as a driver-oracled query
@@ -1757,31 +1739,22 @@ object Relational {
     * keys), then [[graft.table.IcebergLite.maintain]] under a tight policy
     * compacts the debt — the returned read goes through the post-compact
     * snapshot, so a maintenance bug that loses or resurrects rows breaks
-    * the relational oracle. Every step is idempotent (commitId ledger), so
+    * the relational oracle. Every step is keyed by its commitId, so
     * crash/re-runs land on the same content. */
   def tblMaintain(s: SparkSession, d: String): DataFrame = {
-    import graft.table.IcebergLite
-    val root = graft.Fs.fixtureRoot("tbl_maint", d, java.nio.file.Paths.get(d, "orders.parquet"))
-    val table = root.resolve("t").toString
-    val orders = t(s, d, "orders")
-    if (IcebergLite.currentSnapshotId(table).isEmpty) {
-      val base = orders.where(col("o_orderkey") % 7 === 0)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      IcebergLite.append(s, base, table, Seq("o_orderkey"), "base")
-    }
-    def up(klass: Int, bump: Int) = orders
-      .where(col("o_orderkey") % 35 === klass)
-      .select(col("o_orderkey"), col("o_custkey"),
-        (floor(col("o_totalprice")) + bump).cast("double").as("o_totalprice"))
+    val table = path("tbl_maint", d)
+    val rows = orders(s, d)
+    IcebergLite.appendIdempotent(s, rows.where(col("o_orderkey") % 7 === 0),
+      table, Seq("o_orderkey"), "base")
     Seq((0, 1), (7, 2), (14, 3), (21, 4), (0, 99)).zipWithIndex.foreach {
       case ((klass, bump), i) =>
-        IcebergLite.mergeOnRead(s, table, up(klass, bump),
+        IcebergLite.mergeOnRead(s, table,
+          bumped(rows.where(col("o_orderkey") % 35 === klass), bump),
           Seq("o_orderkey"), Seq("o_orderkey"), s"m${i + 1}")
     }
     IcebergLite.maintain(s, table, Seq("o_orderkey"), "maint",
       IcebergLite.MaintenancePolicy(maxPendingDeleteFiles = 2))
-    IcebergLite.read(s, table).select(col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100).as("price_c"))
+    priceC(IcebergLite.read(s, table))
   }
 
   /** Orphan-file cleanup as a driver-oracled query (Iceberg's
@@ -1793,36 +1766,27 @@ object Relational {
     * referenced file (or misses the residue — the `require`s) breaks the
     * relational oracle. */
   def tblOrphans(s: SparkSession, d: String): DataFrame = {
-    import graft.table.IcebergLite
     import java.nio.file.{Files, Paths}
-    val root = graft.Fs.fixtureRoot("tbl_orph", d, Paths.get(d, "orders.parquet"))
-    val table = root.resolve("t").toString
-    val orders = t(s, d, "orders")
-    if (IcebergLite.currentSnapshotId(table).isEmpty) {
-      IcebergLite.append(s, orders.where(col("o_orderkey") % 9 === 0)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-        table, Seq("o_orderkey"), "base")
-      // live MoR state: its delete file shares deletes/ with the residue
-      // below and must survive the sweep for the oracle to match
-      IcebergLite.mergeOnRead(s, table, orders.where(col("o_orderkey") % 18 === 0)
-        .select(col("o_orderkey"), col("o_custkey"),
-          (floor(col("o_totalprice")) + 5).cast("double").as("o_totalprice")),
-        Seq("o_orderkey"), Seq("o_orderkey"), "up1")
-    }
+    val table = path("tbl_orph", d)
+    val rows = orders(s, d)
+    IcebergLite.appendIdempotent(s, rows.where(col("o_orderkey") % 9 === 0),
+      table, Seq("o_orderkey"), "base")
+    // live MoR state: its delete file shares deletes/ with the residue
+    // below and must survive the sweep for the oracle to match
+    IcebergLite.mergeOnRead(s, table, bumped(rows.where(col("o_orderkey") % 18 === 0), 5),
+      Seq("o_orderkey"), Seq("o_orderkey"), "up1")
     val orphData = Paths.get(table, "data", "crash_append")
     val orphDel = Paths.get(table, "deletes", "crash_upsert")
     if (!Files.exists(orphData)) // aborted append: files written, no snapshot swap
-      IcebergLite.writeData(orders.limit(10).select(
-        col("o_orderkey"), col("o_custkey"), col("o_totalprice")), table, "crash_append")
+      IcebergLite.writeData(rows.limit(10), table, "crash_append")
     if (!Files.exists(orphDel)) // aborted upsert's key file
-      orders.limit(5).select(col("o_orderkey")).coalesce(1)
+      rows.limit(5).select(col("o_orderkey")).coalesce(1)
         .write.mode("overwrite").parquet(orphDel.toString)
     val (nDeleted, _) = IcebergLite.removeOrphanFiles(table, olderThanMillis = 0)
     require(nDeleted > 0, "orphan sweep found nothing — injection or sweep broken")
     require(!Files.exists(orphData) && !Files.exists(orphDel),
       "orphan residue survived the sweep")
-    IcebergLite.read(s, table).select(col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100).as("price_c"))
+    priceC(IcebergLite.read(s, table))
   }
 
   /** The IN-list keys [[tblBloom]] and its oracle share. */
@@ -1838,20 +1802,15 @@ object Relational {
     * including keys that don't exist, which a broken filter would
     * resurrect or a false-negative would drop. */
   def tblBloom(s: SparkSession, d: String): DataFrame = {
-    import graft.table.IcebergLite
-    val root = graft.Fs.fixtureRoot("tbl_bloom", d, java.nio.file.Paths.get(d, "orders.parquet"))
-    val table = root.resolve("t").toString
-    if (IcebergLite.currentSnapshotId(table).isEmpty)
-      IcebergLite.append(s, t(s, d, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        .repartition(32, col("o_custkey")),
+    val table = path("tbl_bloom", d)
+    if (!IcebergLite.alreadyCommitted(table, "c1"))
+      IcebergLite.append(s, orders(s, d).repartition(32, col("o_custkey")),
         table, Seq("o_custkey"), "c1", bloomCols = Seq("o_orderkey"))
     val df = IcebergLite.readWhere(s, table, col("o_orderkey").isin(TblBloomKeys: _*))
     val total = IcebergLite.readSnapshot(table).get.files.size
     require(df.inputFiles.length < total / 2,
       s"bloom pruning regressed: opened ${df.inputFiles.length} of $total files")
-    df.select(col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100).as("price_c"))
+    priceC(df)
   }
 
   /** Snapshot time travel as a driver-oracled query (Iceberg's
@@ -1861,29 +1820,23 @@ object Relational {
     * commits 1..2, tbl_incr the complement 2..3. */
   def tblTravel(s: SparkSession, d: String): DataFrame = {
     val (table, ids) = stagedIncrTable(s, d)
-    graft.table.IcebergLite.readAt(s, table, ids(1))
-      .select(col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100).as("price_c"))
+    priceC(IcebergLite.readAt(s, table, ids(1)))
   }
 
   /** The partitioned twin of [[stagedIncrTable]]: same three disjoint
     * `orders` slices, laid out under an identity partition spec on a
     * derived `region` (o_orderkey % 7) so the filtered incremental scan
-    * has partition directories to prune. Crash-resumable like its twin. */
+    * has partition directories to prune. Staged by the same commitId rule. */
   private def stagedIncrPartTable(s: SparkSession, d: String): (String, Seq[Long]) = {
-    import graft.table.IcebergLite
-    val root = graft.Fs.fixtureRoot("tbl_incrw", d, java.nio.file.Paths.get(d, "orders.parquet"))
-    val table = root.resolve("t").toString
-    def slice(m: Int) = t(s, d, "orders").where(col("o_orderkey") % 11 === m)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        (col("o_orderkey") % 7).cast("int").as("region"))
-    if (IcebergLite.snapshots(table).isEmpty)
-      IcebergLite.createPartitioned(s, slice(0), table,
+    val table = path("tbl_incrw", d)
+    val rows = orders(s, d)
+    def regioned(m: Int) = slice(rows, m).withColumn("region", (col("o_orderkey") % 7).cast("int"))
+    if (!IcebergLite.alreadyCommitted(table, "base"))
+      IcebergLite.createPartitioned(s, regioned(0), table,
         Seq(IcebergLite.PartitionField("region", "region", "identity")),
         Seq("o_orderkey"), "base")
     Seq(1, 2).zip(Seq("day1", "day2")).foreach { case (m, cid) =>
-      if (IcebergLite.snapshots(table).size <= m)
-        IcebergLite.append(s, slice(m), table, Seq("o_orderkey"), cid)
+      IcebergLite.appendIdempotent(s, regioned(m), table, Seq("o_orderkey"), cid)
     }
     (table, IcebergLite.snapshots(table))
   }
@@ -1895,96 +1848,64 @@ object Relational {
     * with the predicate applied row-level. */
   def tblIncrWhere(s: SparkSession, d: String): DataFrame = {
     val (table, ids) = stagedIncrPartTable(s, d)
-    graft.table.IcebergLite.readIncrementalWhere(s, table, ids.head, ids.last,
-      col("region") === 3)
-      .select(col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100).as("price_c"))
+    priceC(IcebergLite.readIncrementalWhere(s, table, ids.head, ids.last,
+      col("region") === 3))
   }
 
   /** Write-audit-publish through a writable branch (Iceberg branch refs):
     * two increments are STAGED on an audit branch (main readers never see
     * them — asserted in the query itself), audited via readBranch, then
     * published atomically with fastForward; the branch is dropped after.
-    * Every step is crash-resumable: staging is keyed on the branch ledger,
-    * re-runs after publish detect the main ledger and skip straight to the
-    * read. The oracle is the union of all three slices — what main shows
-    * only AFTER the publish. */
+    * Staging checks the branch ledger, and a re-run after publish finds
+    * `w2` on main's ledger and skips straight to the read. The oracle is
+    * the union of all three slices — what main shows only AFTER the
+    * publish. */
   def tblWap(s: SparkSession, d: String): DataFrame = {
-    import graft.table.IcebergLite
-    val root = graft.Fs.fixtureRoot("tbl_wap", d, java.nio.file.Paths.get(d, "orders.parquet"))
-    val table = root.resolve("t").toString
-    def slice(m: Int) = t(s, d, "orders").where(col("o_orderkey") % 11 === m)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    if (IcebergLite.snapshots(table).isEmpty)
-      IcebergLite.append(s, slice(0), table, Seq("o_orderkey"), "base")
+    val table = path("tbl_wap", d)
+    val rows = orders(s, d)
+    IcebergLite.appendIdempotent(s, slice(rows, 0), table, Seq("o_orderkey"), "base")
     if (!IcebergLite.alreadyCommitted(table, "w2")) { // not yet published
-      if (!IcebergLite.branches(table).contains("audit"))
-        IcebergLite.createBranch(table, "audit")
-      def headLedger = IcebergLite.snapshotAt(table,
-        IcebergLite.branches(table)("audit")).map(_.commitIds)
-        .getOrElse(Set.empty[String])
-      if (!headLedger.contains("w1"))
-        IcebergLite.appendToBranch(s, slice(1), table, "audit", Seq("o_orderkey"), "w1")
-      if (!headLedger.contains("w2"))
-        IcebergLite.appendToBranch(s, slice(2), table, "audit", Seq("o_orderkey"), "w2")
+      appendToBranchOnce(s, slice(rows, 1), table, "audit", "w1")
+      appendToBranchOnce(s, slice(rows, 2), table, "audit", "w2")
       // audit: staged rows visible on the branch, invisible on main
       require(IcebergLite.readBranch(s, table, "audit").count() >
         IcebergLite.read(s, table).count(), "staged rows leaked to main")
       IcebergLite.fastForward(table, "audit")
     }
     IcebergLite.dropBranch(table, "audit") // deleteIfExists semantics
-    IcebergLite.read(s, table).select(col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100).as("price_c"))
+    priceC(IcebergLite.read(s, table))
   }
 
   /** Row-level DELETE as a driver query: an O(keys) equality-delete commit
     * ([[graft.table.IcebergLite.deleteKeys]]) removes every 13-divisible
     * key — no data files rewritten (the commit writes ONE delete file) —
-    * and the read anti-merges it. Idempotent: deleteKeys is keyed by
-    * commitId, staging by the snapshot count. */
+    * and the read anti-merges it. Both commits are keyed by commitId. */
   def tblDelete(s: SparkSession, d: String): DataFrame = {
-    import graft.table.IcebergLite
-    val root = graft.Fs.fixtureRoot("tbl_delete", d, java.nio.file.Paths.get(d, "orders.parquet"))
-    val table = root.resolve("t").toString
-    val orders = t(s, d, "orders")
-    if (IcebergLite.snapshots(table).isEmpty)
-      IcebergLite.append(s, orders.where(col("o_orderkey") % 11 < 2)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-        table, Seq("o_orderkey"), "base")
+    val table = path("tbl_delete", d)
+    val base = orders(s, d).where(col("o_orderkey") % 11 < 2)
+    IcebergLite.appendIdempotent(s, base, table, Seq("o_orderkey"), "base")
     IcebergLite.deleteKeys(s, table,
-      orders.where(col("o_orderkey") % 11 < 2 && col("o_orderkey") % 13 === 0)
-        .select(col("o_orderkey")), Seq("o_orderkey"), "d1")
-    IcebergLite.read(s, table).select(col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100).as("price_c"))
+      base.where(col("o_orderkey") % 13 === 0).select(col("o_orderkey")), Seq("o_orderkey"), "d1")
+    priceC(IcebergLite.read(s, table))
   }
 
-  /** Cherry-pick as a driver query: one increment staged on a branch while
-    * MAIN advances past the fork (fastForward impossible), then published
-    * alone by [[graft.table.IcebergLite.cherryPick]] — files adopted by
-    * reference into main's lineage. Crash-resumable: staging keys on the
-    * branch ledger, pick detection on the main ledger. */
+  /** Cherry-pick as a driver query: one increment (`w1`) is staged on a
+    * branch forked from `base`, then MAIN advances past the fork (`madv`),
+    * so fastForward is impossible, and [[graft.table.IcebergLite.cherryPick]]
+    * publishes the increment alone — files adopted by reference into main's
+    * lineage. Staging checks the branch ledger; a re-run after the pick
+    * finds `w1` on main's ledger and skips straight to the read. */
   def tblCherry(s: SparkSession, d: String): DataFrame = {
-    import graft.table.IcebergLite
-    val root = graft.Fs.fixtureRoot("tbl_cherry", d, java.nio.file.Paths.get(d, "orders.parquet"))
-    val table = root.resolve("t").toString
-    def slice(m: Int) = t(s, d, "orders").where(col("o_orderkey") % 11 === m)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    if (IcebergLite.snapshots(table).isEmpty)
-      IcebergLite.append(s, slice(0), table, Seq("o_orderkey"), "base")
-    IcebergLite.appendIdempotent(s, slice(3), table, Seq("o_orderkey"), "madv")
+    val table = path("tbl_cherry", d)
+    val rows = orders(s, d)
+    IcebergLite.appendIdempotent(s, slice(rows, 0), table, Seq("o_orderkey"), "base")
     if (!IcebergLite.alreadyCommitted(table, "w1")) { // not yet picked
-      if (!IcebergLite.branches(table).contains("stage"))
-        IcebergLite.createBranch(table, "stage")
-      val headLedger = IcebergLite.snapshotAt(table,
-        IcebergLite.branches(table)("stage")).map(_.commitIds)
-        .getOrElse(Set.empty[String])
-      if (!headLedger.contains("w1"))
-        IcebergLite.appendToBranch(s, slice(1), table, "stage", Seq("o_orderkey"), "w1")
+      appendToBranchOnce(s, slice(rows, 1), table, "stage", "w1")
+      IcebergLite.appendIdempotent(s, slice(rows, 3), table, Seq("o_orderkey"), "madv")
       IcebergLite.cherryPick(s, table, IcebergLite.branches(table)("stage"))
     }
     IcebergLite.dropBranch(table, "stage")
-    IcebergLite.read(s, table).select(col("o_orderkey"), col("o_custkey"),
-      floor(col("o_totalprice") * 100).as("price_c"))
+    priceC(IcebergLite.read(s, table))
   }
 
   /** Named-tag time travel under retention (Iceberg tag refs): the staged
@@ -1993,22 +1914,17 @@ object Relational {
     * step is idempotent (appendIdempotent ledger, atomic tag replace,
     * re-expire finds nothing), so re-runs are metadata no-ops. */
   def tblTag(s: SparkSession, d: String): DataFrame = {
-    import graft.table.IcebergLite
-    val root = graft.Fs.fixtureRoot("tbl_tag", d, java.nio.file.Paths.get(d, "orders.parquet"))
-    val table = root.resolve("t").toString
-    def slice(m: Int) = t(s, d, "orders").where(col("o_orderkey") % 11 === m)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    Seq(0, 1, 2).zip(Seq("base", "day1", "day2")).foreach { case (m, cid) =>
-      IcebergLite.appendIdempotent(s, slice(m), table, Seq("o_orderkey"), cid)
+    val table = path("tbl_tag", d)
+    val rows = orders(s, d)
+    Seq("base", "day1", "day2").zipWithIndex.foreach { case (cid, m) =>
+      IcebergLite.appendIdempotent(s, slice(rows, m), table, Seq("o_orderkey"), cid)
     }
     val ids = IcebergLite.snapshots(table)
     if (ids.size == 3) { // first run (pre-expire lineage intact)
       IcebergLite.setTag(table, "release", ids(1))
       IcebergLite.expireSnapshots(table, keepLast = 1)
     }
-    IcebergLite.readTag(s, table, "release")
-      .select(col("o_orderkey"), col("o_custkey"),
-        floor(col("o_totalprice") * 100).as("price_c"))
+    priceC(IcebergLite.readTag(s, table, "release"))
   }
 
   /** Multi-format timestamp fallback parsing (`utils/prepLS.py:210-218`:

@@ -28,4 +28,17 @@ object QueryDigest {
 
   def schema(df: DataFrame): String =
     df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}:${f.nullable}").mkString(",")
+
+  /** Query `q`'s digest line: `query⇥rows⇥schema⇥hash`. */
+  def line(q: String, df: DataFrame): String = {
+    val (n, hash) = rowHash(df)
+    s"$q\t$n\t${schema(df)}\t$hash"
+  }
+
+  /** The digest lines of test resource `file`, by query name (empty if absent). */
+  def pinned(file: String): Map[String, String] =
+    Option(getClass.getResourceAsStream(s"/$file"))
+      .map(in => try new String(in.readAllBytes(), "UTF-8") finally in.close())
+      .getOrElse("").linesIterator.filter(_.nonEmpty)
+      .map(l => l.takeWhile(_ != '\t') -> l).toMap
 }

@@ -20,12 +20,7 @@ class QueryDigestSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
   private val file = "query_digest_sf0.001.tsv"
 
-  private def line(q: String, n: Long, schema: String, hash: String) = s"$q\t$n\t$schema\t$hash"
-
-  private val pinned: Map[String, String] = Option(getClass.getResourceAsStream(s"/$file"))
-    .map(in => try new String(in.readAllBytes(), "UTF-8") finally in.close())
-    .getOrElse("").linesIterator.filter(_.nonEmpty)
-    .map(l => l.takeWhile(_ != '\t') -> l).toMap
+  private val pinned = QueryDigest.pinned(file)
 
   private val computed = scala.collection.mutable.Map.empty[String, String]
 
@@ -38,9 +33,7 @@ class QueryDigestSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   for (q <- names)
     test(s"$q on sf0.001: row count, schema and row hash match the digest") {
-      val df = SparkEntry.queries(q)(spark, sf)
-      val (n, hash) = QueryDigest.rowHash(df)
-      val got = line(q, n, QueryDigest.schema(df), hash)
+      val got = QueryDigest.line(q, SparkEntry.queries(q)(spark, sf))
       computed(q) = got
       assert(pinned.get(q).contains(got), s"\n got    $got\n pinned ${pinned.getOrElse(q, "-")}")
     }
