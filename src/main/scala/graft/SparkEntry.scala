@@ -1316,37 +1316,37 @@ object TrainQueries {
         col("m._5").as("cog_ok"))
   }
 
-  /** S14's browse-PNG export as a driver-oracled query: per doc, RGB bytes
-    * flow through the REAL distributed file sink ([[Media.writePngBrowse]]:
-    * one PNG per doc, mapPartitions, no shuffle) and back through the REAL
-    * binaryFile source + CRC-checked decode ([[Media.decodePngFiles]]);
-    * roundtrip_ok compares the decoded bytes against the generator. Dims
-    * derive from the doc ref hash (DuckDB-computable); only a correct
-    * encoder → sink → source → decoder chain can set the boolean. Staging
-    * is fingerprint-keyed, and the manifest is published last
-    * ([[graft.Fs.publishOnce]]), so its existence marks a complete write and
-    * re-runs skip it. Each attempt writes its PNGs under a directory it owns
-    * (named after its stage sibling), so the manifest points only at files
-    * no other session rewrites; a race loser's directory stays until the
-    * fixture root is reaped.
+  /** S14's browse-PNG export as a driver-oracled query: per doc, a REAL
+    * RGB PNG ([[graft.media.Media.pngBrowseUdf]]) flows through the media
+    * plane's one file sink ([[graft.media.Media.writeFiles]]: one
+    * `<doc_id>/browse.png` per doc, mapPartitions, no shuffle) and back
+    * through its one file source ([[graft.media.Media.readManifestFiles]])
+    * and the CRC-checked decode; roundtrip_ok compares the decoded bytes
+    * against the generator. Dims derive from the doc ref hash
+    * (DuckDB-computable); only a correct encoder → sink → source → decoder
+    * chain can set the boolean. Staging is fingerprint-keyed, and the
+    * manifest is published last ([[graft.Fs.publishOnce]]), so its
+    * existence marks a complete write and re-runs skip it. Each attempt
+    * writes its PNGs under a directory it owns (named after its stage
+    * sibling), so the manifest points only at files no other session
+    * rewrites; a race loser's directory stays until the fixture root is
+    * reaped.
     *
-    * The read-back is MANIFEST-driven ([[graft.media.Media.readManifestFiles]]
-    * over the manifest the sink returns), not a `binaryFile` glob: a glob
+    * The read-back is MANIFEST-driven, not a `binaryFile` glob: a glob
     * stats every per-doc directory on the driver — ~11 s for 5.5k files
     * here, unbounded at 100 TB — while the manifest read is ~1 s and fully
-    * parallel. (The binaryFile source itself is driver-oracled separately
-    * in media_decode and spec'd for PNG in PngNetcdfSpec.) */
+    * parallel. (The `binaryFile` glob over the same sink output is spec'd
+    * in PngNetcdfSpec.) */
   def mediaPng(s: SparkSession, d: String): DataFrame = {
     val root = graft.Fs.fixtureRoot("media_png", d, java.nio.file.Paths.get(d, "orders.parquet"))
     val manifest = graft.Fs.publishOnce(root.resolve("manifest.parquet")) { stage =>
+      val docId = col("doc_id").cast("string")
       val rows = graft.model.SynthCorpus.scenesFromOrders(s, d)
         .where(col("doc_id") % 30 === 0)
-        .select(col("doc_id").cast("string").as("doc_id"),
-          graft.media.Media.pngPixelsUdf(concat(col("doc_id").cast("string"), lit("_png"))).as("m"))
-        .select(col("doc_id"), col("m._1").as("width"), col("m._2").as("height"),
-          col("m._3").as("pixels"))
+        .select(docId.as("doc_id"), concat(docId, lit("/browse.png")).as("rel"),
+          graft.media.Media.pngBrowseUdf(concat(docId, lit("_png"))).as("bytes"))
       // the distributed write runs here; its manifest IS the read listing
-      graft.media.Media.writePngBrowse(rows, s"$root/png/${stage.getFileName.toString.drop(1)}")
+      graft.media.Media.writeFiles(rows, s"$root/png/${stage.getFileName.toString.drop(1)}")
         .write.parquet(stage.toString)
     }
     graft.media.Media.readManifestFiles(s.read.parquet(manifest.toString))

@@ -15,7 +15,7 @@ class FsSpec extends AnyFunSuite {
   }
 
   test("publishOnce: a write that throws leaves neither target nor sibling") {
-    val dir = Files.createTempDirectory("graft_fs_throw")
+    val dir = TestDirs.create("graft_fs_throw")
     for ((target, write) <- Seq[(Path, Path => Unit)](
         dir.resolve("f") -> (p => Files.writeString(p, "half")),
         dir.resolve("d") -> { p => Files.createDirectories(p); Files.writeString(p.resolve("x"), "half") })) {
@@ -52,9 +52,9 @@ class FsSpec extends AnyFunSuite {
           s"siblings left: ${names(target.getParent)}")
       } finally pool.shutdownNow()
     }
-    race(Files.createTempDirectory("graft_fs_race_f").resolve("marker"),
+    race(TestDirs.create("graft_fs_race_f").resolve("marker"),
       (p, i) => Files.writeString(p, s"writer $i"), p => Files.readString(p))
-    race(Files.createTempDirectory("graft_fs_race_d").resolve("fixture"),
+    race(TestDirs.create("graft_fs_race_d").resolve("fixture"),
       { (p, i) =>
         Files.createDirectories(p)
         Files.writeString(p.resolve("part-0"), s"writer $i")
@@ -70,7 +70,7 @@ class FsSpec extends AnyFunSuite {
   test("a crash-orphaned staging sibling: not reaped as a stale cache, never listed by Spark") {
     val spark = SparkTestSession.spark
     // a single-file parquet table to stage
-    val gen = Files.createTempDirectory("graft_fs_gen").resolve("t")
+    val gen = TestDirs.create("graft_fs_gen").resolve("t")
     spark.range(100).coalesce(1).write.parquet(gen.toString)
     val src = names(gen).find(n => n.startsWith("part-") && n.endsWith(".parquet"))
       .map(gen.resolve).get
@@ -87,7 +87,7 @@ class FsSpec extends AnyFunSuite {
 
     // fixture roots: a stale fingerprint is reaped, an orphaned (or live)
     // staging sibling of a root is not
-    val tmp = Files.createTempDirectory("graft_fs_reap")
+    val tmp = TestDirs.create("graft_fs_reap")
     val prefix = "graft_fs_key_"
     val stale = Fs.publishOnce(tmp.resolve(prefix + "1234"))(Files.createDirectories(_))
     val orphanRoot = orphanOf(tmp.resolve(prefix + "5678"))(Files.createDirectories(_))
@@ -97,7 +97,7 @@ class FsSpec extends AnyFunSuite {
 
     // a source directory: batch and streaming file sources list only the
     // published file, not the orphaned copy next to it
-    val dir = Files.createTempDirectory("graft_fs_src")
+    val dir = TestDirs.create("graft_fs_src")
     Fs.publishOnce(dir.resolve("events.parquet"))(Files.copy(src, _))
     val orphan = orphanOf(dir.resolve("more.parquet"))(Files.copy(src, _))
     assert(Files.size(orphan) == Files.size(src))

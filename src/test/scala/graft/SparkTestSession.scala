@@ -11,7 +11,7 @@ object SparkTestSession {
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.optimizer.excludedRules", graft.GraftSession.ExcludedRules)
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+        TestDirs.create("graft_wh").toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()

@@ -1,10 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.table.IcebergLite
@@ -14,7 +12,7 @@ import graft.table.IcebergLite
   * `orders.parquet`, so every fixture key is new and the staging code runs;
   * `QueryDigestSpec` usually finds the fixtures a previous run left behind.
   * Results are checked against the pinned `query_digest_sf0.001.tsv`. */
-class TableFixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TableFixtureSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private val sf = "/root/testdata/sf0.001"
@@ -24,12 +22,9 @@ class TableFixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def digest(q: String, d: String): String =
     QueryDigest.line(q, SparkEntry.queries(q)(spark, d))
 
-  private val dirs = scala.collection.mutable.Buffer.empty[Path]
-
   /** A new data dir holding a copy of sf0.001's orders. */
   private def freshDir(): String = {
-    val d = Files.createTempDirectory("graft_tblfix")
-    dirs += d
+    val d = TestDirs.create("graft_tblfix")
     Files.copy(Paths.get(sf, "orders.parquet"), d.resolve("orders.parquet"))
     d.toString
   }
@@ -95,16 +90,5 @@ class TableFixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(staged.head.parent == base.head.id, "w1's branch must fork from base")
     val mainBeforePick = IcebergLite.snapshotAt(table, picked.parent).get
     assert(mainBeforePick.commitIds.contains("madv") && !mainBeforePick.commitIds.contains("w1"))
-  }
-
-  /** Deletes the data dirs and every fixture root keyed by one of them. */
-  override def afterAll(): Unit = {
-    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
-    val keys = dirs.map(d => "_" + d.toString.replaceAll("[^a-zA-Z0-9]", "_") + "_")
-    val ls = Files.list(tmp)
-    try ls.iterator().asScala.filter(p => keys.exists(p.getFileName.toString.contains)).toSeq
-      .foreach(Fs.deleteRecursively)
-    finally ls.close()
-    dirs.foreach(Fs.deleteRecursively)
   }
 }

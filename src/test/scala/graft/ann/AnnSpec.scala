@@ -2,7 +2,7 @@ package graft.ann
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkTestSession
+import graft.{SparkTestSession, TestDirs}
 
 class AnnSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -205,7 +205,7 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("stored IVF layout: pruned probe ≡ inline ivfTopK; scan is partition-pruned") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val path = TestDirs.create("graft_ivf").toString
     val probes = embs.where($"vec_id" < 50)
     IvfIndex.write(embs, path, nlist = 16, seed = 42L)
     // posting lists physically partitioned by cell

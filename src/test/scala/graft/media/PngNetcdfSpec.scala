@@ -2,7 +2,7 @@ package graft.media
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkTestSession
+import graft.{SparkTestSession, TestDirs}
 
 /** S14 (PNG browse export) + S13 (NetCDF classic export): real-format
   * encoders verified by lossless round trips, checksum/structure
@@ -56,16 +56,22 @@ class PngNetcdfSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Png.decode(out.toByteArray))
   }
 
+  /** Browse PNGs for `docs` (doc_id, width, height, rgb pixels) through the
+    * one file sink, at the `<doc_id>/browse.png` layout `media_png` uses. */
+  private def writeBrowse(docs: Seq[(String, Int, Int, Array[Byte])], dir: String) =
+    Media.writeFiles(docs.map { case (doc, w, h, px) =>
+      (doc, s"$doc/browse.png", Png.encode(w, h, 3, px))
+    }.toDF("doc_id", "rel", "bytes"), dir)
+
   test("PNG browse sink: distributed write, binaryFile read-back decodes to the input") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_png").toString
+    val dir = TestDirs.create("graft_png").toString
     val docs = (0 until 6).map { i =>
       (s"scene$i", 12, 9, seededPixels(12 * 9 * 3, seed = i))
     }
-    val manifest = Media.writePngBrowse(
-      docs.toDF("doc_id", "width", "height", "pixels"), dir).collect()
+    val manifestDf = writeBrowse(docs, dir)
+    val manifest = manifestDf.as[(String, String, Long)].collect()
     assert(manifest.length == 6)
-    val back = spark.read.format("binaryFile").load(s"$dir/*/browse.png")
-      .select(col("path"), col("content")).as[(String, Array[Byte])].collect()
+    val back = Media.readManifestFiles(manifestDf).as[(String, Array[Byte])].collect()
     assert(back.length == 6)
     val byDoc = docs.map(d => d._1 -> d._4).toMap
     back.foreach { case (path, bytes) =>
@@ -74,14 +80,19 @@ class PngNetcdfSpec extends AnyFunSuite {
       assert((w, h, ch) == (12, 9, 3))
       assert(java.util.Arrays.equals(px, byDoc(doc)), s"$doc pixels drifted")
     }
+    // the manifest is the listing: a binaryFile glob finds the same files
+    val globbed = spark.read.format("binaryFile").load(s"$dir/*/browse.png")
+      .select($"path").as[String].collect().map(p => new java.net.URI(p).getPath)
+    assert(globbed.toSet == manifest.map(_._2).toSet)
   }
 
   test("real PNG media decode: binaryFile → Png.decode pipeline recovers pixels") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_png_src").toString
+    val dir = TestDirs.create("graft_png_src").toString
     val docs = (0 until 4).map(i => (s"d$i", 10, 6, seededPixels(10 * 6 * 3, seed = 50 + i)))
-    Media.writePngBrowse(docs.toDF("doc_id", "width", "height", "pixels"), dir).collect()
-    val decoded = Media.decodePngFiles(spark, s"$dir/*/browse.png")
-      .select($"path", $"width", $"height", $"channels", $"pixels")
+    writeBrowse(docs, dir).collect()
+    val decoded = spark.read.format("binaryFile").load(s"$dir/*/browse.png")
+      .select($"path", Media.decodePngUdf($"content").as("d"))
+      .select($"path", $"d._1", $"d._2", $"d._3", $"d._4")
       .as[(String, Int, Int, Int, Array[Byte])].collect()
     assert(decoded.length == 4)
     val byDoc = docs.map(d => d._1 -> d._4).toMap
@@ -162,7 +173,7 @@ class PngNetcdfSpec extends AnyFunSuite {
   test("NetCDF grid export: mean-composite grid round-trips through the file") {
     val px = graft.ops.Pixels.pixels(spark, "/root/testdata/sf0.001")
     val grid = graft.ops.Composites.meanComposite(px, Seq("py", "px"), "red2")
-    val path = java.nio.file.Files.createTempDirectory("graft_nc").resolve("grid.nc").toString
+    val path = TestDirs.create("graft_nc").resolve("grid.nc").toString
     Media.exportGridNetcdf(grid, "py", "px", Seq("mean_v"), path)
     val (dims, vars) = NetCdf.readClassic(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
     val (ny, nx) = (dims(0)._2, dims(1)._2)

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TestDirs}
 import org.apache.spark.ml.attribute.{Attribute, AttributeGroup, NominalAttribute}
 import org.apache.spark.ml.classification.{RandomForestClassificationModel, RandomForestClassifier}
 import org.apache.spark.ml.linalg.Vectors
@@ -58,7 +58,7 @@ object RfForestSpec {
     * continuous splits only: a categorical split's first category would
     * come back as its threshold. */
   def exported(spark: SparkSession, model: RandomForestClassificationModel): RfForest = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rf_export")
+    val tmp = TestDirs.create("graft_rf_export")
     try {
       model.write.overwrite().save(tmp.toString)
       val rows = spark.read.parquet(s"$tmp/data")

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkTestSession
+import graft.{SparkTestSession, TestDirs}
 
 /** `PixelQueries.summary` (builtin sum/count/min/max) against the
   * `udaf(WofsStatsAgg)` reference, over a lineitem split into several files
@@ -20,7 +20,7 @@ class SummarySpec extends AnyFunSuite {
     val rest = Seq.fill(3000)((rnd.nextInt(20000).toLong, rnd.nextInt(20000).toLong,
         rnd.nextInt(1000).toLong, rnd.nextInt(7) + 1))
       .filterNot { case (o, p, _, _) => o % 64 == 5 && p % 64 == 32 }
-    val dir = java.nio.file.Files.createTempDirectory("graft_summary").toString
+    val dir = TestDirs.create("graft_summary").toString
     (nodata ++ rest).toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
       .withColumn("l_shipdate", lit(java.sql.Date.valueOf("2020-01-01")))
       .repartition(6).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")

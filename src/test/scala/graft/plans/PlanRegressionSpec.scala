@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TestDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,7 +27,7 @@ class PlanRegressionSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private def corpus = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_planreg").toString
+    val dir = TestDirs.create("graft_planreg").toString
     graft.model.SynthCorpus.docs(spark, 300, seed = 3L).write.mode("overwrite").parquet(dir)
     dir
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.SparkTestSession
+import graft.{SparkTestSession, TestDirs}
 import graft.table.IcebergLite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -23,11 +23,11 @@ class CheckpointSpec extends AnyFunSuite {
     df.withColumn("out", $"k" * 2)
 
   test("resume recomputes only uncommitted keys; output identical to one-shot run") {
-    val base = Files.createTempDirectory("graft_ckpt").toString
+    val base = TestDirs.create("graft_ckpt").toString
     val input = (0L until 100L).map(k => Tuple1(k)).toDF("k")
 
     // full run in one shot (reference result)
-    val oneShotBase = Files.createTempDirectory("graft_ckpt_ref").toString
+    val oneShotBase = TestDirs.create("graft_ckpt_ref").toString
     Checkpoint.runStage(spark, oneShotBase, "s1", input, "k", "c0")(stageCompute)
     val expected = IcebergLite.read(spark, Checkpoint.outputTable(oneShotBase, "s1"))
       .select($"k", $"out").as[(Long, Long)].collect().toSet
@@ -64,7 +64,7 @@ class CheckpointSpec extends AnyFunSuite {
   }
 
   test("re-running a fully committed commitId never rewrites referenced data") {
-    val base = Files.createTempDirectory("graft_ckpt_retry").toString
+    val base = TestDirs.create("graft_ckpt_retry").toString
     val input = (0L until 30L).map(k => Tuple1(k)).toDF("k")
     Checkpoint.runStage(spark, base, "s", input, "k", "cA")(stageCompute)
     val before = IcebergLite.read(spark, Checkpoint.outputTable(base, "s"))
@@ -92,14 +92,14 @@ class CheckpointSpec extends AnyFunSuite {
   }
 
   test("crash between lineage write and output commit: the attempt stays invisible, retry commits it once") {
-    val base = Files.createTempDirectory("graft_ckpt_gap").toString
+    val base = TestDirs.create("graft_ckpt_gap").toString
     val input = (0L until 25L).map(k => Tuple1(k)).toDF("k")
-    val cleanBase = Files.createTempDirectory("graft_ckpt_gap_ref").toString
+    val cleanBase = TestDirs.create("graft_ckpt_gap_ref").toString
     Checkpoint.runStage(spark, cleanBase, "sg", input, "k", "cG")(stageCompute)
     // simulate the torn state: cG's output and lineage written (lineage of
     // a partial run, so a retry that appended instead of overwriting would
     // show), but the process died before the output pointer swap
-    val tornBase = Files.createTempDirectory("graft_ckpt_gap_torn").toString
+    val tornBase = TestDirs.create("graft_ckpt_gap_torn").toString
     Checkpoint.runStage(spark, tornBase, "sg", input.where($"k" < 10), "k", "cG")(stageCompute)
     IcebergLite.writeData(stageCompute(input), Checkpoint.outputTable(base, "sg"), "cG")
     copyTree(Paths.get(tornBase, "sg", "lineage"), Paths.get(base, "sg", "lineage"))
@@ -123,18 +123,18 @@ class CheckpointSpec extends AnyFunSuite {
   }
 
   test("checksum in lineage log detects key-set drift across equivalent runs") {
-    val base = Files.createTempDirectory("graft_ckpt2").toString
+    val base = TestDirs.create("graft_ckpt2").toString
     val input = (0L until 40L).map(k => Tuple1(k)).toDF("k").repartition(1)
     Checkpoint.runStage(spark, base, "s", input, "k", "c1")(stageCompute)
     val x1 = Checkpoint.log(spark, base, "s").agg(expr("bit_xor(checksum)")).as[Long].head()
-    val base2 = Files.createTempDirectory("graft_ckpt3").toString
+    val base2 = TestDirs.create("graft_ckpt3").toString
     Checkpoint.runStage(spark, base2, "s", input.repartition(8), "k", "c1")(stageCompute)
     val x2 = Checkpoint.log(spark, base2, "s").agg(expr("bit_xor(checksum)")).as[Long].head()
     assert(x1 == x2) // xor-of-xors is partition-layout independent
   }
 
   test("replay after compaction and snapshot expiry is a no-op, not a refusal") {
-    val base = Files.createTempDirectory("graft_ckpt_expired").toString
+    val base = TestDirs.create("graft_ckpt_expired").toString
     val input = (0L until 40L).map(k => Tuple1(k)).toDF("k")
     val out = Checkpoint.outputTable(base, "s")
     Checkpoint.runStage(spark, base, "s", input.where($"k" < 20), "k", "c1")(stageCompute)
@@ -149,7 +149,7 @@ class CheckpointSpec extends AnyFunSuite {
   }
 
   test("lineage of every commit stays listed after compaction and snapshot expiry") {
-    val base = Files.createTempDirectory("graft_ckpt_lineage").toString
+    val base = TestDirs.create("graft_ckpt_lineage").toString
     val input = (0L until 40L).map(k => Tuple1(k)).toDF("k")
     val out = Checkpoint.outputTable(base, "s")
     Checkpoint.runStage(spark, base, "s", input.where($"k" < 20), "k", "c1")(stageCompute)
@@ -163,7 +163,7 @@ class CheckpointSpec extends AnyFunSuite {
   }
 
   test("multi-file commit: one read-back, one lineage row per data file, no Spark lineage write") {
-    val base = Files.createTempDirectory("graft_ckpt_files").toString
+    val base = TestDirs.create("graft_ckpt_files").toString
     val table = Checkpoint.outputTable(base, "s")
     val input = (0L until 200L).map(k => Tuple1(k)).toDF("k").repartition(4)
     val seen = new QuerySpy
@@ -206,7 +206,7 @@ class CheckpointSpec extends AnyFunSuite {
   }
 
   test("log of a fresh base is empty with the lineage schema") {
-    val base = Files.createTempDirectory("graft_ckpt_fresh").toString
+    val base = TestDirs.create("graft_ckpt_fresh").toString
     val log = Checkpoint.log(spark, base, "s")
     assert(log.isEmpty)
     assert(log.schema == StructType.fromDDL(

@@ -1,6 +1,6 @@
 package graft.run
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TestDirs}
 import graft.model.SynthCorpus
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +15,7 @@ class PipelineSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshBase(tag: String) = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_pipe_$tag")
+    val d = TestDirs.create(s"graft_pipe_$tag")
     d.toString
   }
 

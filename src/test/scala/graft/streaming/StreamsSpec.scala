@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import graft.SparkTestSession
+import graft.{SparkTestSession, TestDirs}
 
 class StreamsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -11,7 +11,7 @@ class StreamsSpec extends AnyFunSuite {
 
   test("AvailableNow windowed counts == batch windowed counts on the events table") {
     // file streams need a directory; stage the single-file table into one
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = TestDirs.create("graft_stream").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       java.nio.file.Paths.get(dir, "events.parquet"))
@@ -36,7 +36,7 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("streaming tile assignment (stream-static broadcast join) ≡ batch flagship") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_docs").toString
+    val dir = TestDirs.create("graft_stream_docs").toString
     val docs = graft.model.SynthCorpus.docs(spark, 3000)
     docs.write.mode("overwrite").parquet(dir)
     val tiles = graft.model.SynthCorpus.tileGrid(spark).drop("path", "row")
@@ -55,8 +55,8 @@ class StreamsSpec extends AnyFunSuite {
 
   test("watermark drops late data; sliding windows count each event per hop") {
     import org.apache.spark.sql.streaming.Trigger
-    val in = java.nio.file.Files.createTempDirectory("graft_late_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_late_ck").toString
+    val in = TestDirs.create("graft_late_in").toString
+    val ckpt = TestDirs.create("graft_late_ck").toString
     def write(rows: Seq[(java.sql.Timestamp, String)]): Unit =
       rows.toDF("ts", "event_type").coalesce(1).write.mode("append").parquet(in)
     def t(min: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 10:$min%02d:00")
@@ -64,7 +64,7 @@ class StreamsSpec extends AnyFunSuite {
     // batch 1: events in [10:00, 10:10) plus one at 10:21 to advance the watermark
     write(Seq((t(1), "a"), (t(2), "a"), (t(7), "b"), (t(21), "c")))
     val schema = spark.read.parquet(in).schema
-    val outDir = java.nio.file.Files.createTempDirectory("graft_late_out").toString
+    val outDir = TestDirs.create("graft_late_out").toString
     def drain(): Unit = {
       val q = Streams.windowedCounts(
           Streams.parquetStream(spark, in, schema), "ts", "10 minutes", "5 minutes")
@@ -93,9 +93,9 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("durable sink: kill mid-drain, resume → table byte-identical to batch, exactly-once") {
-    val in = java.nio.file.Files.createTempDirectory("graft_durable_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_durable_ck").toString
-    val base = java.nio.file.Files.createTempDirectory("graft_durable_tbl").toString
+    val in = TestDirs.create("graft_durable_in").toString
+    val ckpt = TestDirs.create("graft_durable_ck").toString
+    val base = TestDirs.create("graft_durable_tbl").toString
     // 4 input files → 4 micro-batches under maxFilesPerTrigger=1
     val rows = (0L until 400L).map(k => (k, s"v$k"))
     rows.toDF("k", "v").repartition(4).write.mode("overwrite").parquet(in)
@@ -200,9 +200,9 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("durable sink survives CHECKPOINT LOSS: new epoch commitIds + anti-join, no loss, no dupes") {
-    val in = java.nio.file.Files.createTempDirectory("graft_ckloss_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckloss_ck").toString
-    val base = java.nio.file.Files.createTempDirectory("graft_ckloss_tbl").toString
+    val in = TestDirs.create("graft_ckloss_in").toString
+    val ckpt = TestDirs.create("graft_ckloss_ck").toString
+    val base = TestDirs.create("graft_ckloss_tbl").toString
     val first = (0L until 200L).map(k => (k, s"v$k"))
     first.toDF("k", "v").repartition(2).write.mode("overwrite").parquet(in)
     val schema = spark.read.parquet(in).schema

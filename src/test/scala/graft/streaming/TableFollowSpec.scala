@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkTestSession
+import graft.{SparkTestSession, TestDirs}
 import graft.table.IcebergLite
 import java.nio.file.Files
 
@@ -14,7 +14,7 @@ class TableFollowSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def tmp() = Files.createTempDirectory("graft_follow")
+  private def tmp() = TestDirs.create("graft_follow")
 
   test("follow delivers each commit once; idle drain is a no-op; multi-commit gap is one increment") {
     val root = tmp()

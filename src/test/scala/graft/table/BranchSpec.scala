@@ -2,8 +2,7 @@ package graft.table
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkTestSession
-import java.nio.file.Files
+import graft.{SparkTestSession, TestDirs}
 
 /** Writable branches = the write-audit-publish protocol: stage commits on a
   * branch (main readers never see them), audit the branch head, publish by
@@ -14,7 +13,7 @@ class BranchSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpTable(): String =
-    Files.createTempDirectory("graft_branch").resolve("t").toString
+    TestDirs.create("graft_branch").resolve("t").toString
 
   test("write-audit-publish on a partitioned, sort-ordered table") {
     val t = tmpTable()

@@ -2,7 +2,7 @@ package graft.table
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkTestSession
+import graft.{SparkTestSession, TestDirs}
 import java.nio.file.Files
 
 class IcebergLiteSpec extends AnyFunSuite {
@@ -10,7 +10,7 @@ class IcebergLiteSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpTable(): String =
-    Files.createTempDirectory("graft_iceberg").resolve("t").toString
+    TestDirs.create("graft_iceberg").resolve("t").toString
 
   test("append/read roundtrip with snapshot lineage") {
     val t = tmpTable()
@@ -1360,7 +1360,7 @@ class IcebergLiteSpec extends AnyFunSuite {
     assert(legacy.commitIds.isEmpty && legacy.manifests.isEmpty && legacy.deletes.isEmpty)
 
     // a manifest file is loaded through the snapshot that references it
-    val mf = Files.createTempDirectory("graft_codec").resolve("manifest-3-1.json")
+    val mf = TestDirs.create("graft_codec").resolve("manifest-3-1.json")
     Files.writeString(mf, manifestArray)
     val viaManifest = IcebergLite.parseSnapshot(
       s"""{"id":3,"parent":2,"schema":"{}","manifests":["$mf"]}""")

@@ -1,5 +1,7 @@
 package graft.table
 
+import graft.TestDirs
+
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -8,7 +10,7 @@ import java.nio.file.Files
   * double-entry shows up as a lost update. */
 class LockStressSpec extends AnyFunSuite {
   test("O_EXCL lock file pattern is mutually exclusive under contention") {
-    val dir = Files.createTempDirectory("graft_lockstress")
+    val dir = TestDirs.create("graft_lockstress")
     val lock = dir.resolve("COMMIT.lock")
     val staleMs = 60000L
     val inside = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -44,7 +46,7 @@ class LockStressSpec extends AnyFunSuite {
   }
 
   test("lock heartbeat: a live holder outlasting staleMs still excludes a contender") {
-    val lock = Files.createTempDirectory("graft_lockbeat").resolve("COMMIT.lock")
+    val lock = TestDirs.create("graft_lockbeat").resolve("COMMIT.lock")
     val staleMs = 400L
     val held = new java.util.concurrent.CountDownLatch(1)
     @volatile var releasedAt = 0L

@@ -3,9 +3,8 @@ package graft.table
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.SparkTestSession
+import graft.{SparkTestSession, TestDirs}
 import graft.table.IcebergLite.PartitionField
-import java.nio.file.Files
 
 /**
  * Hidden partitioning (Iceberg's partition spec) in IcebergLite: the spec
@@ -21,7 +20,7 @@ class PartitionSpecSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpTable(): String =
-    Files.createTempDirectory("graft_part").resolve("t").toString
+    TestDirs.create("graft_part").resolve("t").toString
 
   test("identity partition: hidden layout, appends follow, readWhere prunes by value first") {
     val t = tmpTable()
